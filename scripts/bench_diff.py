@@ -14,6 +14,10 @@ Prints queries slower by more than the flag factor (default 2x),
 new/gone queries, and totals. Exit code 1 if anything was flagged —
 cron-able as a regression tripwire.
 
+A query that failed in NEW (an {"query":...,"error":...} row, or a
+name on the record's "failed" list) is classed REGRESSED and exits 1
+whatever the canaries say: a failure is never host noise.
+
 Host-health canary: graft.Bench emits a constant CPU-bound probe's
 wall time at record start and end ("canary"/"canary_end" in the total
 line and the bench_full sidecar). This sandbox throttles progressively
@@ -38,8 +42,9 @@ longer needs a human to adjudicate sandbox contention spikes.
 
 --smoke runs a planted-pair self-test of the canary logic (no Spark):
 a >2x mover under mismatched canaries must downgrade to exit 0, the
-same mover under matching canaries must flag with exit 1, and a
-degrading-host record must print its warning. Exit 0 iff all hold.
+same mover under matching canaries must flag with exit 1, a
+degrading-host record must print its warning, and an error row must
+class REGRESSED. Exit 0 iff all hold.
 """
 import json
 import os
@@ -136,9 +141,21 @@ def shuffle_of(doc, blob):
     return start, end
 
 
+def errors_of(doc, blob):
+    """Names of the queries the record says failed: its "failed" list
+    (total line or sidecar) and its {"query":...,"error":...} rows."""
+    failed = set()
+    if isinstance(doc, dict) and isinstance(doc.get("failed"), list):
+        failed.update(doc["failed"])
+    for m in re.finditer(r'"failed":\[([^\]]*)\]', blob):
+        failed.update(re.findall(r'"([^"]+)"', m.group(1)))
+    failed.update(re.findall(r'\{"query":"([a-z0-9_]+)","error":', blob))
+    return failed
+
+
 def parse(path):
     """-> (per-query min seconds, (canary_start, canary_end), band,
-    (shuffle_start, shuffle_end), shuffle_band)."""
+    (shuffle_start, shuffle_end), shuffle_band, failed query names)."""
     times = {}
     text = open(path).read()
     try:
@@ -150,15 +167,18 @@ def parse(path):
         # a bare bench_full sidecar passed directly
         return ({k: float(v) for k, v in doc["queries"].items()},
                 canary_of(doc, text), band_of(doc, text),
-                shuffle_of(doc, text), band_of(doc, text, "canary_shuffle_band"))
+                shuffle_of(doc, text), band_of(doc, text, "canary_shuffle_band"),
+                errors_of(doc, ""))
     canary = (None, None)
     shuffle = (None, None)
     band = None
     sband = None
+    failed = set()
     if isinstance(doc, dict) and "tail" in doc:
         full = full_record(path)
         if full:
             times.update({k: float(v) for k, v in full["queries"].items()})
+            failed |= errors_of(full, "")
             canary = canary_of(full, "")
             band = band_of(full, "")
             shuffle = shuffle_of(full, "")
@@ -182,7 +202,10 @@ def parse(path):
         times[m.group(1)] = float(m.group(2))
     for m in re.finditer(r'"([a-z0-9_]+)":\[([0-9.]+),[0-9.]+\]', blob):
         times.setdefault(m.group(1), float(m.group(2)))
-    return times, canary, band, shuffle, sband
+    failed |= errors_of(None, blob)
+    for q in failed:
+        times.pop(q, None)
+    return times, canary, band, shuffle, sband, failed
 
 
 def adjudicate(flagged, sf_dir, repeat=3):
@@ -210,8 +233,8 @@ def adjudicate(flagged, sf_dir, repeat=3):
 def compare(old_path, new_path, flag, adj_dir, out=print):
     """The diff-and-classify core; returns the intended exit code."""
     old_parsed, new_parsed = parse(old_path), parse(new_path)
-    (old, old_canary, old_band, old_shuffle, old_sband) = old_parsed
-    (new, new_canary, new_band, new_shuffle, new_sband) = new_parsed
+    (old, old_canary, old_band, old_shuffle, old_sband, _) = old_parsed
+    (new, new_canary, new_band, new_shuffle, new_sband, new_failed) = new_parsed
     if not old or not new:
         sys.exit(f"no per-query data (old={len(old)}, new={len(new)} queries)")
     # the quiet band is read from the records themselves (r14+) — the
@@ -257,7 +280,9 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
             out(f"SLOWER  {q}: {o:.2f}s -> {n:.2f}s  (x{n / o:.1f})")
     for q in sorted(set(new) - set(old)):
         out(f"NEW     {q}: {new[q]:.2f}s")
-    for q in sorted(set(old) - set(new)):
+    for q in sorted(new_failed):
+        out(f"REGRESSED {q}: failed (error row)")
+    for q in sorted(set(old) - set(new) - new_failed):
         out(f"GONE    {q} (was {old[q]:.2f}s)")
     both = set(old) & set(new)
     out(f"totals over {len(both)} shared queries: "
@@ -280,6 +305,9 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
             f"across {len(both)} shared queries with {len(flagged)} flags — "
             "whole-record host-state shift (the cpu-canary is blind to "
             "this class; see the record's canary_shuffle probe)")
+    if new_failed:
+        out(f"exit 1: {len(new_failed)} failed queries are REGRESSED "
+            "whatever the host state")
     if flagged and adj_dir:
         out(f"adjudicating {len(flagged)} flagged queries: "
             f"k=3 fresh-JVM reruns against {adj_dir} ...")
@@ -297,7 +325,9 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
                     f"stable min {shown} (still >{flag}x)")
         out(f"adjudication: {len(regressed)} REGRESSED, "
             f"{len(flagged) - len(regressed)} NOISY")
-        return 1 if regressed else 0
+        return 1 if regressed or new_failed else 0
+    if new_failed:
+        return 1
     if flagged and mismatch:
         out("exit 0 (downgraded): canary mismatch means these flags are "
             "host-state artifacts until a comparable-canary record or an "
@@ -400,10 +430,26 @@ def smoke():
         rc_conc = compare(wide_old, wide_conc, 2.0, None, out=lines.append)
         assert rc_conc == 1, f"concentrated regression must flag, got {rc_conc}"
         assert not any(l.startswith("UNIFORM INFLATION") for l in lines), lines
-    print("canary smoke: 7/7 planted cases OK (mismatch downgrades, "
+        # an error row is REGRESSED even under a canary mismatch that
+        # downgrades every timing flag, and its query is not GONE
+        err_log = os.path.join(d, "new_error.log")
+        open(err_log, "w").write(
+            '{"canary_start":2.0000}\n'
+            '{"query":"q1","error":"java.lang.IllegalStateException: planted"}\n'
+            '{"query":"q2","sec":0.5000,"max":0.5000}\n'
+            '{"metric":"total","value":0.5,"unit":"sec","count":1,'
+            '"canary":2.0000,"failed":["q1"]}\n')
+        lines = []
+        rc_err = compare(base, err_log, 2.0, None, out=lines.append)
+        assert rc_err == 1, f"error row must fail the diff, got {rc_err}"
+        assert any(l.startswith("REGRESSED q1") for l in lines), lines
+        assert any(l.startswith("CANARY MISMATCH") for l in lines), lines
+        assert not any(l.startswith("GONE") for l in lines), lines
+    print("canary smoke: 8/8 planted cases OK (mismatch downgrades, "
           "quiet flags, legacy flags, record band overrides default, "
           "shuffle probe warns from its record band, "
-          "uniform inflation downgrades, concentrated regression flags)")
+          "uniform inflation downgrades, concentrated regression flags, "
+          "error row regresses)")
     return 0
 
 

@@ -13,6 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * capture). A driver timeout (rc=124) then costs only the un-run
   * tail, never the whole round's data.
   *
+  * A query that throws emits `{"query":name,"error":message}` instead
+  * of a timing: it is left out of `total`, `count` and the sidecar's
+  * per-query maps, named in the total line's `failed` list, and makes
+  * the bench exit 1 after the run — a failure never reads as a fast
+  * timing.
+  *
   * Contention robustness:
   *  - SPARK_GRAFT_BENCH_BUDGET (seconds, default 480): once the
   *    measured wall exceeds it, remaining queries run SINGLE-run mode
@@ -35,6 +41,87 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cost from `min`. A fresh-JVM per-query harness would re-pay the
   * build N times and overstate the family by (N-1) builds. */
 object Bench {
+  /** One bench pass: per query (min, max, runs, first-run seconds) in
+    * run order, plus the names of the queries that threw. */
+  final case class Record(
+      results: collection.mutable.LinkedHashMap[String, (Double, Double, Int, Double)],
+      failed: Seq[String]) {
+    /** The bench's exit status: 1 once any query failed. */
+    def status: Int = if (failed.isEmpty) 0 else 1
+    def failedField: String =
+      "\"failed\":" + failed.map(Verify.jsonString).mkString("[", ",", "]")
+  }
+
+  /** Times each query with a noop-sink write and `emit`s one JSON line
+    * per query: a timing row, or an error row when the query throws. */
+  def runQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      budgetSec: Double, forcedRepeat: Option[Int], emit: String => Unit): Record = {
+    val benchStart = System.nanoTime()
+    def elapsed(): Double = (System.nanoTime() - benchStart) / 1e9
+    // "first" = the query's FIRST-run wall: for memoized families the
+    // first run pays the shared cold build while min is the warm plan
+    // cost — emitting both lets bench_diff attribute a big max to the
+    // cold build mechanically instead of re-adjudicating it as noise.
+    // Emitted only when >1 run happened (single-run rows have
+    // first == sec == max by construction).
+    def line(name: String, mn: Double, mx: Double, first: Double,
+        runs: Int, remeasured: Boolean = false): String =
+      "{\"query\":\"" + name + "\",\"sec\":" + f"$mn%.4f" + ",\"max\":" + f"$mx%.4f" +
+        (if (runs > 1) ",\"first\":" + f"$first%.4f" else "") +
+        (if (remeasured) ",\"remeasured\":true" else "") + "}"
+    val results = collection.mutable.LinkedHashMap.empty[String, (Double, Double, Int, Double)]
+    val failed = collection.mutable.ArrayBuffer.empty[String]
+    def fail(name: String, e: Throwable): Unit = {
+      results.remove(name)
+      failed += name
+      emit("{\"query\":\"" + name + "\",\"error\":" + Verify.jsonString(e.toString) + "}")
+    }
+    def once(fn: (SparkSession, String) => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    for ((name, fn) <- queries)
+      try {
+        // Adaptive repeat: fast queries get a second run (min damps the
+        // first-run per-plan codegen cost); queries already past 2 s —
+        // or ANY query once the wall budget is spent — keep their single
+        // timing. min AND max are both reported so sandbox noise is
+        // distinguishable from regression without a rerun.
+        val t1 = once(fn)
+        val times = forcedRepeat match {
+          case Some(k) => t1 +: (2 to k).map(_ => once(fn))
+          case None if t1 > 2.0 || elapsed() > budgetSec => Seq(t1)
+          case None => Seq(t1, once(fn))
+        }
+        results(name) = (times.min, times.max, times.size, t1)
+        emit(line(name, times.min, times.max, t1, times.size))
+      } catch { case e: Throwable => fail(name, e) }
+    // Outlier re-measure pass: a contention spike or a memo-family
+    // cold build during a best-of-one query is indistinguishable from
+    // a regression in the record. Re-run (once) every single-run query
+    // that sits above 3.5× the run median and keep the better reading;
+    // bounded to 24 queries and the remaining budget so the pass can't
+    // itself blow the wall clock. 3.5×/24 covers the measured band of
+    // 2–4 s cold-hit rows (sec == first, 3.8–7.9× the median) that a
+    // 5×/top-8 pass left un-remeasured as false SLOWER flags.
+    if (results.nonEmpty) {
+      val median = results.values.map(_._1).toSeq.sorted.apply(results.size / 2)
+      val outliers = results.toSeq
+        .filter { case (_, (mn, _, runs, _)) => runs == 1 && mn > 3.5 * median }
+        .sortBy(-_._2._1).take(24)
+      val fns = queries.toMap
+      for ((name, (mn, mx, _, first)) <- outliers if elapsed() < 2.0 * budgetSec)
+        try {
+          val t = once(fns(name))
+          results(name) = (math.min(mn, t), math.max(mx, t), 2, first)
+          emit(line(name, math.min(mn, t), math.max(mx, t), first, 2, remeasured = true))
+        } catch { case e: Throwable => fail(name, e) }
+    }
+    Record(results, failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -152,26 +239,6 @@ object Bench {
         f""""canary_shuffle":$shuffleStart%.4f,"cpus":$cpus"""
     println(f"""{"canary_start":$canaryStart%.4f,$canaryFields}""")
     System.out.flush()
-    // Bench-scale variants for iterative-training queries: identical plan
-    // shape, fewer Lloyd iterations (each iteration pays fresh
-    // literal-centroid codegen — at bench scale that latency IS the wall
-    // time, not data volume; the registered 3-iteration form stays the
-    // Verify/production default).
-    val overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "ann_ivf_kmeans" -> ((s, d) => operators.Similarity.ivfTopKKmeans(s, d, iters = 2)),
-      // (the r9-r12 product_pagerank tolerance override is GONE: the
-      // r13 --ppr-ab probe showed 1e-6 never fires within 15 rounds —
-      // L1 delta 1.05e-4 at round 15 — so the override only added
-      // futile delta jobs; the registry's fixed-round form IS the
-      // honest bench form)
-      // the batched (node, seed)-grain walk is the production serving
-      // shape (one join + one rollup per round regardless of seed
-      // count, 3.1× at N=3); the sequential form stays REGISTERED and
-      // Verify-checked as the bit-identity reference the batched spec
-      // leans on — paying its 10.5 s in every bench run re-proves a
-      // spec, not a plan (r10 VERDICT "what's wrong" #2)
-      "ppr_related_products" -> ((s, d) =>
-        operators.Graph.pprServingTableBatched(s, d)))
     // Optional args restrict to the named queries (iteration aid; the
     // driver's no-arg invocation still benches everything).
     val wanted = args.toSet
@@ -180,82 +247,16 @@ object Bench {
     // adjudication mode scripts/bench_diff.py --adjudicate uses to
     // decide REGRESSED vs NOISY on a stable min instead of one sample.
     val forcedRepeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt)
-    val benchStart = System.nanoTime()
-    def elapsed(): Double = (System.nanoTime() - benchStart) / 1e9
-    // "first" = the query's FIRST-run wall (r15, r14 VERDICT #8): for
-    // memoized families the first run pays the shared cold build while
-    // min is the warm plan cost — emitting both lets bench_diff and
-    // the round survey attribute a big max to cold-build mechanically
-    // instead of re-adjudicating the same NOISY class every round.
-    // Emitted only when >1 run happened (single-run rows have
-    // first == sec == max by construction).
-    // "override":true marks the two bench-variant rows (ann_ivf_kmeans
-    // iters=2, ppr_related_products batched serving form) IN the
-    // record — r14 VERDICT carried this as a source-comment-only
-    // caveat; now every consumer of the record sees which rows measure
-    // a declared variant rather than the registered form.
-    def line(name: String, mn: Double, mx: Double, first: Double,
-        runs: Int, remeasured: Boolean = false, overridden: Boolean = false): String =
-      "{\"query\":\"" + name + "\",\"sec\":" + f"$mn%.4f" + ",\"max\":" + f"$mx%.4f" +
-        (if (runs > 1) ",\"first\":" + f"$first%.4f" else "") +
-        (if (overridden) ",\"override\":true" else "") +
-        (if (remeasured) ",\"remeasured\":true" else "") + "}"
-    val results = collection.mutable.LinkedHashMap.empty[String, (Double, Double, Int, Double)]
-    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
-    for ((name, registered) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if wanted.isEmpty || wanted(name)) {
-      val fn = overrides.getOrElse(name, registered)
-      // Adaptive repeat: fast queries get a second run (min damps the
-      // first-run per-plan codegen cost); queries already past 2 s —
-      // or ANY query once the wall budget is spent — keep their single
-      // timing. min AND max are both reported so sandbox noise is
-      // distinguishable from regression without a rerun.
-      val t1 = once(name, fn)
-      val times = forcedRepeat match {
-        case Some(k) => t1 +: (2 to k).map(_ => once(name, fn))
-        case None if t1 > 2.0 || elapsed() > budgetSec => Seq(t1)
-        case None => Seq(t1, once(name, fn))
-      }
-      results(name) = (times.min, times.max, times.size, t1)
-      println(line(name, times.min, times.max, t1, times.size,
-        overridden = overrides.contains(name)))
-      System.out.flush()
-    }
-    // Outlier re-measure pass: a contention spike or a memo-family
-    // cold build during a best-of-one query is indistinguishable from
-    // a regression in the record. Re-run (once) every single-run query
-    // that sits above 3.5× the run median and keep the better reading;
-    // bounded to 24 queries and the remaining budget so the pass can't
-    // itself blow the wall clock. (Was 5×/top-8: the first clean r15
-    // record left eight 2–4 s cold-hit rows — sec==first, 3.8–7.9×
-    // median — un-remeasured because the top-8 slots went to ≥4.3 s
-    // rows, producing eight false SLOWER flags vs the clean
-    // pre-record. 3.5×/24 covers that measured band.)
-    if (results.nonEmpty) {
-      val median = results.values.map(_._1).toSeq.sorted.apply(results.size / 2)
-      val outliers = results.toSeq
-        .filter { case (_, (mn, _, runs, _)) => runs == 1 && mn > 3.5 * median }
-        .sortBy(-_._2._1).take(24)
-      for ((name, (mn, mx, _, first)) <- outliers if elapsed() < 2.0 * budgetSec) {
-        val fn = overrides.getOrElse(name, SparkEntry.queries(name))
-        val t = once(name, fn)
-        results(name) = (math.min(mn, t), math.max(mx, t), 2, first)
-        println(line(name, math.min(mn, t), math.max(mx, t), first, 2,
-          remeasured = true, overridden = overrides.contains(name)))
-        System.out.flush()
-      }
-    }
+    val record = runQueries(spark, sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1).filter(q => wanted.isEmpty || wanted(q._1)),
+      budgetSec, forcedRepeat, { l => println(l); System.out.flush() })
+    val results = record.results
     val canaryEnd = Seq(canaryProbe(), canaryProbe()).min
     val shuffleEnd = Seq(shuffleProbe(), shuffleProbe()).min
     val total = results.values.map(_._1).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","count":${results.size},"sf":"$sfDir",""" +
       f""""canary":$canaryStart%.4f,"canary_end":$canaryEnd%.4f,""" +
-      f""""canary_shuffle_end":$shuffleEnd%.4f,$canaryFields}""")
+      f""""canary_shuffle_end":$shuffleEnd%.4f,$canaryFields,${record.failedField}}""")
     System.out.flush()
     // Full-record sidecar: the driver's BENCH_r{N}.json keeps only a
     // truncated stdout tail, so the cross-round regression tripwire
@@ -274,11 +275,12 @@ object Bench {
           "\"first\":{" + m(_._4) + "}," +
           f"""\"total\":$total%.4f,\"count\":${results.size},\"sf\":\"$sfDir\",""" +
           f"""\"canary\":$canaryStart%.4f,\"canary_end\":$canaryEnd%.4f,""" +
-          f"""\"canary_shuffle_end\":$shuffleEnd%.4f,$canaryFields}"""
+          f"""\"canary_shuffle_end\":$shuffleEnd%.4f,$canaryFields,${record.failedField}}"""
         java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
           doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         ()
       } catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
     spark.stop()
+    if (record.status != 0) sys.exit(record.status)
   }
 }

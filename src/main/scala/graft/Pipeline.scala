@@ -48,31 +48,12 @@ object Pipeline {
       // policy off, gate failed, no drift, or streak below N)
       contractPromoted: Option[String] = None)
 
-  /** All marts built by the daily run, keyed by output name. */
-  def marts(spark: SparkSession, sfDir: String): Map[String, DataFrame] =
-    martsFrom(EventMarts.enriched(spark, sfDir))
-
-  /** The session_date partition column (= session start date) — ONE
-    * definition shared by the full-run mart map and the date-scoped
-    * override so the partition grain cannot drift between the two
-    * write paths. */
+  /** The session_date partition column (= session start date), so
+    * per-date reruns replace only their own session partitions, like
+    * every other mart. */
   private def withSessionDate(sessions: DataFrame): DataFrame =
     sessions.withColumn("session_date",
       to_date(timestamp_seconds(col("session_start_epoch"))))
-
-  /** The mart set over one shared enriched-events projection.
-    * session_sequences gains a session_date (= session start date)
-    * partition column here so per-date reruns replace only their own
-    * partitions, like every other mart.
-    *
-    * NOTE: constructing this map runs the user_id skew census as an
-    * eager Spark job (the session mart's armed-path decision must pick
-    * a plan before the DataFrame exists). The census is memoized per
-    * (plan, inputs), so repeated map construction over the same frame
-    * pays once; callers that want full laziness (or already measured)
-    * pass a plan to [[martsArmed]] and no job runs. */
-  def martsFrom(e: DataFrame): Map[String, DataFrame] =
-    martsArmed(e)._1
 
   /** The five non-session marts — no census, fully lazy. */
   private def martsPlain(e: DataFrame): Map[String, DataFrame] = Map(
@@ -81,22 +62,6 @@ object Pipeline {
     "mart_product_daily" -> EventMarts.martProductDailyFrom(e),
     "mart_orders"        -> EventMarts.martOrdersFrom(e),
     "hourly_traffic"     -> EventMarts.hourlyTrafficFrom(e))
-
-  /** `martsFrom` with the session mart on the ARMED path: the user_id
-    * census (memoized per frame by `Skew.measure`) decides whether
-    * sessionization takes the plain or the hot-key-safe bucketed base.
-    * Output is identical either way (the bucketed twin is hash-checked
-    * against the same oracle); what changes is the plan — a planted
-    * bot/sentinel user no longer funnels its whole history through one
-    * window task. Returns the plan so `run` can surface what armed.
-    * `sessionPlan` skips the census with a caller-measured plan (the
-    * backfill-scope carry). */
-  def martsArmed(e: DataFrame,
-      sessionPlan: Option[operators.Skew.SkewPlan] = None)
-      : (Map[String, DataFrame], operators.Skew.SkewPlan) = {
-    val (sessions, plan) = Sessionize.sessionSequencesAuto(e, preplanned = sessionPlan)
-    (martsPlain(e) + ("session_sequences" -> withSessionDate(sessions)), plan)
-  }
 
   /** Partition spec per mart (the backfill grain). */
   private val partitioned = Map(
@@ -169,28 +134,28 @@ object Pipeline {
     *   any range/timestamp/integrity/duplicate/sequence violation.
     *   The gate summary (and check log) still reports over the RAW
     *   frame — quarantining is downstream of measurement, so the
-    *   trend/alert surface keeps seeing the defects. */
-  /** @param suggestionsPath when set, the persisted suggestion
+    *   trend/alert surface keeps seeing the defects.
+    * @param suggestionsPath when set, the persisted suggestion
     *   CONTRACT at this path (`Quality.writeSuggestions` — bounds and
     *   domains observed on a known-healthy run) is executed against
     *   the run's events alongside the seven hand-written checks: its
     *   summary rows union into the gate (same shape), so a
     *   contract violation fails the gate, rides the alert payload and
     *   trips failFast exactly like a built-in check. The data-derived
-    *   contract becomes part of the daily gate, not a side report. */
-  /** @param sessionPlan a caller-measured skew plan for the session
+    *   contract becomes part of the daily gate, not a side report.
+    * @param sessionPlan a caller-measured skew plan for the session
     *   mart's armed-path decision — the backfill-scope carry: a
     *   multi-date replay measures its widest frame ONCE and drives
     *   every scoped run with that plan instead of re-censusing each
-    *   date's widened frame. None (the default) measures here. */
-  /** @param driftLogDir when set (and a contract is wired), every
+    *   date's widened frame. None (the default) measures here.
+    * @param driftLogDir when set (and a contract is wired), every
     *   healthy run appends its FULL contract diff to the drift run
     *   log under the run date (idempotent per date) —
     *   `Quality.driftTrendFromLog` then reads drift VELOCITY off the
     *   log and `widenStreaksLatest` feeds the daily report's
     *   velocity section. No contract or a failed gate logs nothing
-    *   (a sick run's re-suggest would poison the trend). */
-  /** @param versionLogDir with `versionArtifacts` (logical name →
+    *   (a sick run's re-suggest would poison the trend).
+    * @param versionLogDir with `versionArtifacts` (logical name →
     *   stamped artifact dir), every COMPLETED run snapshots the
     *   artifacts' manifests into the version log under the run date
     *   (idempotent per date, same run_id/no-derivable-date-skip

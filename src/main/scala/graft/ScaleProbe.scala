@@ -371,11 +371,7 @@ object ScaleProbe {
     // (iteration aid, mirrors graft.Bench's named-query args)
     val only = flags.find(_.startsWith("--only="))
       .map(_.stripPrefix("--only=").split(",").toSet)
-    if (!flags.contains("--deep-only") && !flags.contains("--composed-only") &&
-        !flags.contains("--partition-ab") && !flags.contains("--kmeans-init-ab") &&
-        !flags.contains("--bot-ab") && !flags.contains("--bot-ab-deep") &&
-        !flags.contains("--memo-cold") && !flags.contains("--ppr-ab") &&
-        !flags.contains("--ann-deep") && !flags.contains("--rfm-ab"))
+    if (!Seq("--deep-only", "--composed-only", "--memo-cold", "--ann-deep").exists(flags))
       headline.filter(n => only.forall(_.contains(n))).foreach { name =>
         val s = (1 to 2).map(_ => run(name, small)).min
         val b = (1 to 2).map(_ => run(name, big)).min
@@ -438,44 +434,6 @@ object ScaleProbe {
         println("{\"query\":\"" + name + "\",\"sf01_sec\":" + f"$s%.3f" +
           ",\"sf1_sec\":" + f"$b%.3f" + ",\"sf10_sec\":" + f"$d%.3f" +
           ",\"f10\":" + f"${b / s}%.2f" + ",\"f100\":" + f"${d / b}%.2f" + "}")
-        System.out.flush()
-      }
-    }
-
-    // ---- shuffle-partition A/B (--partition-ab): tests the r8
-    // hypothesis that text_perplexity_bigram's f100 overshoot (13.95
-    // on its honest vocab-linear axis) is an artifact of pinning
-    // spark.sql.shuffle.partitions=32 while the bigram vocabulary
-    // grows ~10x per decade — i.e. the knob a real cluster WOULD turn
-    // (decade-proportional partitions, AQE coalescing the excess) but
-    // a fixed-32 probe can't. Each decade dir runs both ways: fixed 32
-    // vs decade-scaled (32/128/512 — x4 per decade, beyond the thread
-    // count so per-task state shrinks with the data). The conf is
-    // runtime-settable and read at plan time, so no session restart.
-    if (flags.contains("--partition-ab")) {
-      buildCorpus(deep, 100)
-      val legs = Seq((small, 32, "sf01"), (big, 128, "sf1"), (deep, 512, "sf10"))
-      val abQueries = only.map(_.toSeq.sorted)
-        .getOrElse(Seq("text_perplexity_bigram", "clean_dup_spans"))
-      for (name <- abQueries) {
-        val readings = legs.map { case (dir, scaled, tag) =>
-          def at(parts: Int): Double = {
-            System.err.println(s"[partition-ab] $name $tag parts=$parts")
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-            try (1 to 2).map(_ => run(name, dir)).min
-            finally spark.conf.set("spark.sql.shuffle.partitions", 32)
-          }
-          (tag, at(32), at(scaled), scaled)
-        }
-        val parts = readings.map { case (tag, fixed, scaled, n) =>
-          "\"" + tag + "_fixed32_sec\":" + f"$fixed%.3f" +
-            ",\"" + tag + s"_scaled${n}_sec" + "\":" + f"$scaled%.3f"
-        }.mkString(",")
-        val f100Fixed = readings(2)._2 / readings(1)._2
-        val f100Scaled = readings(2)._3 / readings(1)._3
-        println("{\"query\":\"" + name + "\"," + parts +
-          ",\"f100_fixed\":" + f"$f100Fixed%.2f" +
-          ",\"f100_scaled\":" + f"$f100Scaled%.2f" + "}")
         System.out.flush()
       }
     }
@@ -580,260 +538,6 @@ object ScaleProbe {
         println(f"""{"probe":"ann_deep","reps":$reps,"nlist":$nlist,""" +
           f""""kmeans_sec":$km%.2f,"knn_graph_sec":$graph%.2f,""" +
           f""""lpa_sec":$lpa%.2f,"clusters_found":$clusters}""")
-        System.out.flush()
-      }
-    }
-
-    // ---- PPR/pagerank round-budget probe (--ppr-ab, r13): the
-    // family's per-round cost is N-independent (one join + rollup +
-    // checkpoint), so wall time ∝ rounds run. The frames carry
-    // iterations_run/last_delta, so this reads where the tolerance
-    // ACTUALLY fires at registry defaults, what each form costs, and
-    // how stable the serving table's top-k is at reduced budgets —
-    // the evidence for (or against) an LPA-style budget re-pin.
-    if (flags.contains("--ppr-ab")) {
-      def t(f: => Any): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def meta(df: org.apache.spark.sql.DataFrame): (Int, Double) = {
-        val r = df.select("iterations_run", "last_delta").head()
-        (r.getInt(0), r.getDouble(1))
-      }
-      for ((name, mk) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "ppr_reg_15_tol1e6" -> (() => operators.Graph.productPpr(spark, small)),
-        "ppr_fixed15" -> (() =>
-          operators.Graph.productPpr(spark, small, tol = 0.0)),
-        "ppr_30_tol1e6" -> (() =>
-          operators.Graph.productPpr(spark, small, iterations = 30)),
-        "pagerank_reg_fixed15" -> (() =>
-          operators.Graph.productPagerank(spark, small)),
-        "pagerank_30_tol1e6" -> (() => operators.Graph.productPagerank(
-          spark, small, iterations = 30, tol = 1e-6, checkEvery = 3)))) {
-        val df = mk()
-        val sec = (1 to 2).map(_ => t(
-          df.write.format("noop").mode("overwrite").save())).min
-        val (it, dl) = meta(mk())
-        println(f"""{"probe":"ppr_ab","form":"$name","sec":$sec%.2f,""" +
-          f""""iterations_run":$it,"last_delta":$dl%.2e}""")
-        System.out.flush()
-      }
-      // serving-table ranking stability vs budget: overlap + exact
-      // rank agreement of (seed, related, rank) triples at reduced
-      // round budgets against the 15-round reference
-      val ref = operators.Graph.pprServingTableBatched(spark, small)
-        .select("seed_product", "related_product", "rank").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
-      for (iters <- Seq(12, 10, 8, 6)) {
-        val sec = t(operators.Graph.pprServingTableBatched(spark, small,
-          iterations = iters).write.format("noop").mode("overwrite").save())
-        val got = operators.Graph.pprServingTableBatched(spark, small,
-          iterations = iters)
-          .select("seed_product", "related_product", "rank").collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
-        println(f"""{"probe":"ppr_serving","iters":$iters,"sec":$sec%.2f,""" +
-          f""""exact_triples":${(got & ref).size},"of":${ref.size}}""")
-        System.out.flush()
-      }
-    }
-
-    // ---- k-means seeding A/B (--kmeans-init-ab): hash-sample seeds
-    // vs Gonzalez k-center picks (SURVEY §7o #6) — same Lloyd rounds,
-    // different starting spread. Read: lower mean cosine distance to
-    // the assigned centroid (cohesion) and a flatter max/mean cell
-    // occupancy both mean better-shaped IVF cells for the same
-    // training cost.
-    if (flags.contains("--kmeans-init-ab")) {
-      graft.functions.GraftFunctions.ensureRegistered(spark)
-      def centStats(cents: Seq[(Int, Array[Float])],
-                    e: org.apache.spark.sql.DataFrame): (Double, Double) = {
-        val centArr = array(cents.map { case (cell, vec) =>
-          struct(lit(cell).as("cell"), array(vec.toIndexedSeq.map(lit(_)): _*).as("vec"))
-        }: _*)
-        val best = element_at(array_sort(transform(centArr, c => struct(
-          (-call_function("cosine_sim", col("embedding"), c.getField("vec"))).as("neg"),
-          c.getField("cell").as("cell")))), 1)
-        val df = e.select(best.getField("cell").as("cell"),
-          (-best.getField("neg")).as("sim"))
-        val coh = df.agg(avg(lit(1.0) - col("sim"))).collect().head.getDouble(0)
-        val occ = df.groupBy("cell").count()
-          .agg(max("count").cast("double"), avg("count")).collect().head
-        (coh, occ.getDouble(0) / occ.getDouble(1))
-      }
-      for ((dir, tag) <- Seq((small, "sf01"), (big, "sf1"));
-           init <- Seq("hash", "kcenter")) {
-        val e = Tables.embeddings(spark, dir)
-        val t0 = System.nanoTime()
-        val cents = operators.Similarity.kmeansCentroidsFrom(e, nlist = 10,
-          iters = 3, init = init)
-        val trainSec = (System.nanoTime() - t0) / 1e9
-        val (coh, imb) = centStats(cents, e)
-        println("{\"probe\":\"kmeans_init\",\"dir\":\"" + tag +
-          "\",\"init\":\"" + init + "\",\"cohesion\":" + f"$coh%.6f" +
-          ",\"occ_imbalance\":" + f"$imb%.3f" +
-          ",\"train_sec\":" + f"$trainSec%.2f" + "}")
-        System.out.flush()
-      }
-    }
-
-    // ---- planted-bot A/B (--bot-ab): the round-10 session-family
-    // claim MEASURED, not argued — on a corpus where one sentinel user
-    // owns a large single-session slice (the straggler class the r9
-    // VERDICT flagged), time each family query's plain user_id-window
-    // form against its bucketed twin. The outputs are hash-equal (the
-    // gate proves that); this probe measures what the bucketing buys:
-    // the plain path's wall clock is the bot partition's sort+window,
-    // the bucketed path's is the even per-(user, day) spread. Also
-    // reports the measured arming census — the ratio the Auto door
-    // reads to take the bucketed path by itself.
-    if (flags.contains("--bot-ab")) {
-      val dir = "/tmp/graft_botskew"
-      if (!new java.io.File(s"$dir/events.parquet").exists()) {
-        // 1M organic rows over 10k users / 35 days + ONE sentinel
-        // firing every second for ~35 days: 3M rows, 75% of the
-        // corpus, one unbroken session crossing ~35 bucket boundaries
-        // — the sort/window of those 3M rows lands in ONE task on the
-        // plain path, ~86k per (user, day) task on the bucketed one
-        val base = sources.EventGenerator.events(spark, 1000000L,
-          days = 35, users = 10000L)
-        val bot = spark.range(3024000L).selectExpr(
-          "10000000 + id AS event_id",
-          "timestamp_seconds(unix_timestamp(DATE'2024-01-01') + id) AS ts",
-          "CAST(424242 AS BIGINT) AS user_id",
-          "CASE WHEN id % 3 = 0 THEN 'view' WHEN id % 3 = 1 THEN 'click' " +
-            "ELSE 'purchase' END AS event_type",
-          "CAST(1.0 AS DOUBLE) AS value", "'{}' AS props")
-        base.unionByName(bot).repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      }
-      val e = operators.EventMarts.enriched(spark, dir)
-      val armPlan = operators.Skew.measure(e, "user_id", 16.0)
-      def timed(f: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      import operators.Sessionize
-      val pairsAb: Seq[(String, () => org.apache.spark.sql.DataFrame,
-          () => org.apache.spark.sql.DataFrame)] = Seq(
-        ("session_sequences", () => Sessionize.sessionSequencesFrom(e),
-          () => Sessionize.sessionSequencesBucketedFrom(e)),
-        ("session_daily", () => Sessionize.sessionDailyFrom(e),
-          () => Sessionize.sessionDailyBucketedFrom(e)),
-        ("session_funnel", () => Sessionize.sessionFunnelFrom(e),
-          () => Sessionize.sessionFunnelBucketedFrom(e)),
-        ("session_transitions", () => Sessionize.sessionTransitionsFrom(e),
-          () => Sessionize.sessionTransitionsBucketedFrom(e)),
-        ("session_entry_exit", () => Sessionize.sessionEntryExitFrom(e),
-          () => Sessionize.sessionEntryExitBucketedFrom(e)))
-      pairsAb.filter(p => only.forall(_.contains(p._1))).foreach {
-        case (name, plainF, bucketedF) =>
-          val ps = (1 to 2).map(_ => timed(plainF())).min
-          val bs = (1 to 2).map(_ => timed(bucketedF())).min
-          println("{\"probe\":\"bot_ab\",\"query\":\"" + name + "\"" +
-            ",\"plain_sec\":" + f"$ps%.3f" + ",\"bucketed_sec\":" + f"$bs%.3f" +
-            ",\"speedup\":" + f"${ps / bs}%.2f" +
-            ",\"hot_ratio\":" + f"${armPlan.hotRatio}%.1f" +
-            ",\"armed\":" + armPlan.armed + "}")
-          System.out.flush()
-      }
-    }
-
-    // ---- third-decade bot A/B (--bot-ab-deep): the 100× leg the
-    // session family's 100 TB claim actually rests on — a 10^7-row
-    // SINGLE-USER sentinel (the r10 crossover curve had two points,
-    // 37%: 0.77× and 75%: 2.71×; this pins where the plain path's
-    // one-task sort/window stops being merely slow and starts
-    // spilling). 10M organic rows over 100k users/35 days + one
-    // sentinel firing 3×/sec for ~39 days ≈ 10.08M rows, ~50% of the
-    // corpus. k=1 per form (the walls here are tens of seconds — the
-    // signal is the ratio and the spill, not ±5% noise); the arming
-    // census is printed so the record carries the ratio the Auto door
-    // would read at this scale.
-    if (flags.contains("--bot-ab-deep")) {
-      val dir = "/tmp/graft_botskew_deep"
-      if (!new java.io.File(s"$dir/events.parquet").exists()) {
-        val base = sources.EventGenerator.events(spark, 10000000L,
-          days = 35, users = 100000L)
-        val bot = spark.range(10080000L).selectExpr(
-          "100000000 + id AS event_id",
-          "timestamp_seconds(unix_timestamp(DATE'2024-01-01') + id DIV 3) AS ts",
-          "CAST(424242 AS BIGINT) AS user_id",
-          "CASE WHEN id % 3 = 0 THEN 'view' WHEN id % 3 = 1 THEN 'click' " +
-            "ELSE 'purchase' END AS event_type",
-          "CAST(1.0 AS DOUBLE) AS value", "'{}' AS props")
-        base.unionByName(bot).repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      }
-      val e = operators.EventMarts.enriched(spark, dir)
-      val armPlan = operators.Skew.measure(e, "user_id", 16.0)
-      def timedDeep(f: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      import operators.Sessionize
-      val deepPairs: Seq[(String, () => org.apache.spark.sql.DataFrame,
-          () => org.apache.spark.sql.DataFrame)] = Seq(
-        ("session_sequences", () => Sessionize.sessionSequencesFrom(e),
-          () => Sessionize.sessionSequencesBucketedFrom(e)),
-        ("session_daily", () => Sessionize.sessionDailyFrom(e),
-          () => Sessionize.sessionDailyBucketedFrom(e)),
-        ("session_funnel", () => Sessionize.sessionFunnelFrom(e),
-          () => Sessionize.sessionFunnelBucketedFrom(e)),
-        ("session_transitions", () => Sessionize.sessionTransitionsFrom(e),
-          () => Sessionize.sessionTransitionsBucketedFrom(e)),
-        // round 12: the rest of the family at the same sentinel — the
-        // members sharing the partial shapes but with no deep-leg
-        // rows until now (VERDICT r11 next-round #5)
-        ("session_patterns", () => Sessionize.sessionPatternsFrom(e),
-          () => Sessionize.sessionPatternsBucketedFrom(e)),
-        ("session_entry_exit", () => Sessionize.sessionEntryExitFrom(e),
-          () => Sessionize.sessionEntryExitBucketedFrom(e)),
-        ("session_concurrency", () => Sessionize.sessionConcurrencyFrom(e),
-          () => Sessionize.sessionConcurrencyBucketedFrom(e)),
-        ("session_quality_gate", () => Sessionize.sessionQualityGateFrom(e),
-          () => Sessionize.sessionQualityGateBucketedFrom(e)),
-        ("session_surprise", () => Sessionize.sessionSurpriseFrom(e),
-          () => Sessionize.sessionSurpriseBucketedFrom(e)))
-      deepPairs.filter(p => only.forall(_.contains(p._1))).foreach {
-        case (name, plainF, bucketedF) =>
-          val bs = timedDeep(bucketedF())
-          val ps = timedDeep(plainF())
-          println("{\"probe\":\"bot_ab_deep\",\"query\":\"" + name + "\"" +
-            ",\"plain_sec\":" + f"$ps%.3f" + ",\"bucketed_sec\":" + f"$bs%.3f" +
-            ",\"speedup\":" + f"${ps / bs}%.2f" +
-            ",\"hot_ratio\":" + f"${armPlan.hotRatio}%.1f" +
-            ",\"armed\":" + armPlan.armed + "}")
-          System.out.flush()
-      }
-    }
-
-    // ---- rfm_transitions scan-diet A/B (--rfm-ab, r14 VERDICT #4):
-    // variant A (localCheckpoint the per-half customer rollup) was
-    // measured-and-rejected at sf0.1 where the re-scanned orders table
-    // is 2.6 MB; this measures the crossover on the sf1/sf10 replica
-    // relations (order/customer keys remapped per replica — per-
-    // customer frequencies unchanged, so the rollup grain scales
-    // honestly). Interleaved base→A→base→A, k=2 mins per leg.
-    if (flags.contains("--rfm-ab")) {
-      buildRelational(big, 10)
-      buildRelational(deep, 100)
-      def leg(dir: String, checkpoint: Boolean): Double =
-        (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          operators.Basket.rfmTransitionsFrom(
-            Tables.orders(spark, dir), checkpointUsers = checkpoint)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-      for ((dir, tag) <- Seq((small, "sf01"), (big, "sf1"), (deep, "sf10"))) {
-        val b1 = leg(dir, checkpoint = false)
-        val a1 = leg(dir, checkpoint = true)
-        val b2 = leg(dir, checkpoint = false)
-        val a2 = leg(dir, checkpoint = true)
-        println(f"""{"probe":"rfm_ab","dir":"$tag","base_sec":${math.min(b1, b2)}%.3f,""" +
-          f""""checkpoint_sec":${math.min(a1, a2)}%.3f,""" +
-          f""""base_legs":[$b1%.3f,$b2%.3f],"checkpoint_legs":[$a1%.3f,$a2%.3f]}""")
         System.out.flush()
       }
     }

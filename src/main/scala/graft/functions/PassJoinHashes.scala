@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The PassJoin hash pair (see docs/passjoin-candidate-diet.md and
-  * Dedup.editDistanceParts): both sides of the candidate equi-join
+  * Dedup.editDistancePairsFrom): both sides of the candidate equi-join
   * key on the SAME polynomial hash of a codepoint window, computed by
   * one native expression per document instead of
   * explode→substring→xxhash64 per window position.

@@ -251,22 +251,13 @@ object Basket {
   /** Per-customer RFM scores relative to the GIVEN order frame's own
     * quintiles (period-relative scoring — the helper both the static
     * grid and the transition matrix build on). */
-  private[graft] def rfmScoredFrom(orders: DataFrame, approx: Boolean = false,
-      checkpointUsers: Boolean = false): DataFrame = {
-    // checkpointUsers = the r14 "variant A" scan diet: materialize the
-    // customer rollup once so the thresholds leg and the score join
-    // read it instead of each re-deriving the orders scan. MEASURED
-    // AND REJECTED at three decades (r15 `ScaleProbe --rfm-ab`,
-    // interleaved base->A->base->A, k=2 mins): base/checkpoint =
-    // 1.21/1.49 s at sf0.1, 1.80/2.29 at sf1, 5.76/8.85 at sf10 — the
-    // eager materialization serializes what the duplicated legs run as
-    // parallel jobs, and the r15 window-total fix already removed the
-    // plan's dominant duplication (the matrix-total leg, 64->32 scan
-    // lines). No crossover in sight through 100x; kept parameterised
-    // (default false = the registered form) so a future corpus where
-    // the customer rollup itself is expensive can re-measure.
-    val users0 = rfmUsers(orders)
-    val users = if (checkpointUsers) users0.localCheckpoint() else users0
+  private[graft] def rfmScoredFrom(orders: DataFrame, approx: Boolean = false): DataFrame = {
+    // the customer rollup is deliberately NOT checkpointed for the
+    // thresholds leg and the score join to share: measured slower at
+    // sf0.1, 10× and 100× (1.21/1.49, 1.80/2.29, 5.76/8.85 s) — the
+    // eager materialization serializes what the duplicated legs run
+    // as parallel jobs
+    val users = rfmUsers(orders)
     val th = rfmThresholds(users, approx)
     def above(v: Column, q: String): Column =
       (1 to 4).map(i => when(v > element_at(col(q), i), 1).otherwise(0))
@@ -314,17 +305,14 @@ object Basket {
   def rfmTransitions(spark: SparkSession, dir: String): DataFrame =
     rfmTransitionsFrom(Tables.orders(spark, dir))
 
-  def rfmTransitionsFrom(orders: DataFrame,
-      checkpointUsers: Boolean = false): DataFrame = {
+  def rfmTransitionsFrom(orders: DataFrame): DataFrame = {
     val o = orders.filter(col("o_orderdate").isNotNull)
     val bounds = o.agg(min(col("o_orderdate")).as("d0"), max(col("o_orderdate")).as("d1"))
       .select(expr("date_add(d0, CAST(datediff(d1, d0) DIV 2 AS INT))").as("cutoff"))
     val withCutoff = o.join(broadcast(bounds))
-    val early = rfmScoredFrom(withCutoff.filter(col("o_orderdate") <= col("cutoff")),
-        checkpointUsers = checkpointUsers)
+    val early = rfmScoredFrom(withCutoff.filter(col("o_orderdate") <= col("cutoff")))
       .select(col("o_custkey"), tierCol.as("from_tier"))
-    val late = rfmScoredFrom(withCutoff.filter(col("o_orderdate") > col("cutoff")),
-        checkpointUsers = checkpointUsers)
+    val late = rfmScoredFrom(withCutoff.filter(col("o_orderdate") > col("cutoff")))
       .select(col("o_custkey"), tierCol.as("to_tier"))
     val matrix = early.join(late, Seq("o_custkey"), "full_outer")
       .select(coalesce(col("from_tier"), lit("new")).as("from_tier"),

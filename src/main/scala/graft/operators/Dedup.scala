@@ -564,37 +564,25 @@ object Dedup {
       maxD: Int = 16): DataFrame =
     editDistancePairsFrom(Tables.documents(spark, dir), maxD)
 
-  /** Experiment knob for the candidate join's physical strategy —
-    * package-private; the shipped default is whatever the measured
-    * A/B picked (see SURVEY §7v). Empty string = no hint (planner
-    * default, SMJ at this shape). */
-  @volatile private[graft] var candJoinHint: String = "shuffle_hash"
+  /** Physical strategy of the candidate join: shuffled-hash never
+    * sorts the probe side, 74 vs 86 s against the planner's sort-merge
+    * join on the 100× replica corpus (tied at 1× and 10×). */
+  private val CandJoinHint = "shuffle_hash"
 
-  /** Bloom prune fpp for the probe side (0 disables), and the doc
-    * count below which the prune is skipped (the adaptive floor; the
+  /** Bloom prune fpp for the probe side; see the filter construction
+    * below. */
+  private val CandBloomFpp = 0.02
+
+  /** Doc count below which the probe-side Bloom prune is skipped (the
     * recall spec zeroes it to exercise the bloomed path on its fuzz
-    * corpus). See the filter construction below for the rationale. */
-  @volatile private[graft] var candBloomFpp: Double = 0.02
-  // floor re-tuned r13 (EditAb --bloom-floor-ab): the 20k floor dated
-  // from the substring-hash era, when the bloom's build pass cost ~8%
-  // at the 5k-doc bench corpus; the rolling-hash diet made probe rows
-  // cheap to MAKE but they still ride the exchange, so the prune now
-  // wins at 5k docs too (interleaved k=3: armed 2.36-2.47 s vs
-  // unarmed 2.80-3.09 s at sf0.1). 2000 keeps gate-scale corpora
-  // (~500 docs, exchange-trivial) unarmed.
+    * corpus). The rolling-hash probe makes probe rows cheap to build,
+    * but they still ride the exchange, so the prune wins at the 5k-doc
+    * bench corpus too (interleaved k=3: armed 2.36-2.47 s vs unarmed
+    * 2.80-3.09 s at sf0.1). 2000 keeps gate-scale corpora (~500 docs,
+    * exchange-trivial) unarmed. */
   @volatile private[graft] var candBloomMinDocs: Long = 2000L
 
-  def editDistancePairsFrom(docs: DataFrame, maxD: Int = 16): DataFrame =
-    editDistanceParts(docs, maxD).result
-
-  /** The pipeline's intermediate frames, exposed for the stage-grain
-    * scale diagnostics (EditAb --stages) — one construction, every
-    * consumer sees the same plan. */
-  private[graft] final case class EditParts(t: DataFrame, idx: DataFrame,
-      probe: DataFrame, probeSide: DataFrame, cand: DataFrame,
-      result: DataFrame)
-
-  private[graft] def editDistanceParts(docs: DataFrame, maxD: Int = 16): EditParts = {
+  def editDistancePairsFrom(docs: DataFrame, maxD: Int = 16): DataFrame = {
     val n = maxD + 1
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val t = docs.select(col("doc_id"), col("text"))
@@ -642,24 +630,23 @@ object Dedup {
     // treeAggregate (linear, no shuffle) + |bits| per task binary;
     // sizing comes from the pre-filter doc count (metadata-cheap on a
     // bare table), so the filter never under-sizes.
-    // adaptive: below ~20k docs the probe side is exchange-cheap and
-    // the filter's build pass + count cost more than they save (~8%
-    // at the 5k-doc bench corpus); above it the prune wins decisively
-    val nDocs = if (candBloomFpp <= 0) 0L else docs.count()
+    // adaptive: below candBloomMinDocs the probe side is
+    // exchange-cheap and the filter's build pass + count cost more
+    // than they save
+    val nDocs = docs.count()
     val probeSide =
-      if (candBloomFpp <= 0 || nDocs < candBloomMinDocs) probe
+      if (nDocs < candBloomMinDocs) probe
       else {
         val nSegs = math.max(1024L, nDocs * n)
         val (bits, k) = graft.functions.LongBloom.build(idx, "hseg",
-          nSegs, candBloomFpp)
+          nSegs, CandBloomFpp)
         probe.filter(call_function("bloom_contains_long",
           typedlit(bits.toSeq), lit(k), col("hsub")))
       }
     // role convention halves the join: the SHORTER doc (ties by id) is
     // always the indexed side — the lemma holds for either role, so
     // fixing one loses nothing and removes the mirrored duplicates
-    val idxSide = if (candJoinHint.isEmpty) idx else idx.hint(candJoinHint)
-    val cand = idxSide
+    val cand = idx.hint(CandJoinHint)
       .join(probeSide,
         col("i") === col("pi") && col("w_s") === col("wp") &&
         col("hseg") === col("hsub") &&
@@ -672,14 +659,13 @@ object Dedup {
       .select(least(col("doc_s"), col("doc_r")).as("doc_a"),
         greatest(col("doc_s"), col("doc_r")).as("doc_b"))
       .distinct()
-    val result = cand
+    cand
       .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
       .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("ta"), col("tb"), maxD).as("edit_distance"))
       .filter(col("edit_distance") >= 0 && col("edit_distance") <= maxD)
       .orderBy("doc_a", "doc_b")
-    EditParts(t, idx, probe, probeSide, cand, result)
   }
 
   def editDistancePairsSql(maxD: Int = 16): String = {

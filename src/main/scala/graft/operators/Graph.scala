@@ -116,7 +116,7 @@ object Graph {
     * production "related to X" query. Same iteration plan as
     * `product_pagerank` (the restart column is the only change).
     *
-    * Round budget (r13, ScaleProbe --ppr-ab): the registry forms run
+    * Round budget (measured): the registry forms run
     * FIXED rounds (tol = 0 — one delta read at the final round, for
     * observability). A 1e-6 tolerance is unreachable inside any sane
     * budget — power iteration contracts at the damping rate, and the

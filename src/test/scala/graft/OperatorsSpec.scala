@@ -425,18 +425,6 @@ class BasketSpec extends SparkSpec {
         r.getAs[String]("to_tier") == "churned"))
     }
   }
-
-  test("RFM transitions: the checkpointUsers scan-diet variant is row-identical") {
-    // the r14 "variant A" stays parameterised after its three-decade
-    // measured rejection (ScaleProbe --rfm-ab); no oracle run
-    // exercises the non-default path, so THIS pins its equivalence —
-    // scores are integer comparisons against exact percentile
-    // thresholds, so the two paths must agree bit-for-bit
-    val base = operators.Basket.rfmTransitions(spark, Sf).collect().toSeq
-    val diet = operators.Basket.rfmTransitionsFrom(
-      Tables.orders(spark, Sf), checkpointUsers = true).collect().toSeq
-    assert(diet == base)
-  }
 }
 
 class BucketingSpec extends SparkSpec {

@@ -79,9 +79,9 @@ class RetrievalSpec extends SparkSpec {
         if (tf == 0) 0.0
         else {
           // Spark's log expression evaluates via StrictMath — the JVM
-          // intrinsic Math.log can differ in the last ulp; since r14
-          // the idf additionally quantizes to the 1e-7 grid (the
-          // oracle-parity model — see LibmProbe)
+          // intrinsic Math.log can differ in the last ulp; the idf
+          // additionally quantizes to the 1e-7 grid (the oracle-parity
+          // model — see TextAnalysis.textEntropy's Scaladoc)
           val idf = math.round(StrictMath.log(1.0 +
             (n.toDouble - df(t).toDouble + 0.5) / (df(t).toDouble + 0.5))
             * 10000000.0).toDouble / 10000000.0

@@ -3182,7 +3182,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("tuned query-time dials (nProbe/refine) hold their recall floors") {
-    // RecallProbe's tuned settings are the production recommendation —
+    // the measured tuned settings are the production recommendation —
     // pin them so a regression in the nProbe/refine plumbing is caught
     // (the default-setting floors above can't see a dial that stopped
     // doing anything). Two invariants per index: the tuned recall
@@ -3950,7 +3950,7 @@ class SimilaritySpec extends SparkSpec {
       }.toDF("vec_id", "embedding")
     }
     // lpaIters = 4 pins the SHIPPED budget (embeddingClusters'
-    // default): LpaProbe measured recovery from round 3 and stability
+    // default): recovery was measured from round 3 and stable over
     // 3-8, so the spec holding at 4 is the margin claim — a default
     // change that breaks recovery fails here, not in production
     def clusters(e: org.apache.spark.sql.DataFrame, nlist: Int, k: Int) = {
@@ -4015,17 +4015,6 @@ class SimilaritySpec extends SparkSpec {
     assert(k3.map(_.toString).toSeq == again.map(_.toString).toSeq)
     val ids = vecs.map(_._1).toSet
     k3.foreach(r => assert(ids.contains(r.getAs[Long]("center_vec_id"))))
-    // the shared greedy also seeds k-means: kcenter init yields nlist
-    // distinct deterministic centroids with seeds spread across the
-    // planted clusters (one per cluster at k=3)
-    val seeded = Similarity.kmeansCentroidsFrom(e, nlist = 3, iters = 1,
-      init = "kcenter")
-    assert(seeded.map(_._1).toSet == Set(0, 1, 2))
-    assert(seeded.map { case (c, v) => (c, v.toSeq) } ==
-      Similarity.kmeansCentroidsFrom(e, nlist = 3, iters = 1, init = "kcenter")
-        .map { case (c, v) => (c, v.toSeq) })
-    val axes = seeded.map { case (_, v) => v.indexOf(v.max) }.toSet
-    assert(axes.size == 3, s"kcenter seeds must spread across clusters: $axes")
   }
 }
 
