@@ -1,61 +1,88 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import java.util.concurrent.atomic.AtomicLong
 
-/** One switch for every session-grain memo in the library.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The session-grain memo policy of the library, in one place.
   *
-  * The operator families memoize shared deterministic artifacts per
-  * (SparkContext, corpus fingerprint): the dedup member-pair frame,
-  * the quality-LR trained model, the k-means quantizer and PQ
-  * codebooks, the ANN kNN graph, the two graph edge frames, and the
-  * skew census. Each memo
-  * is bounded, keyed so corpus rewrites and new contexts always MISS
-  * (dir + sorted input files + hyperparams + applicationId), and
-  * individually clearable next to its family.
-  *
-  * Storage semantics. The frame-valued memos (member pairs, kNN
-  * graph, session frames, graph edges) are localCheckpoint-backed,
-  * so their bytes live in executor block storage with NO lineage.
-  * The explicit clear functions unpersist those blocks eagerly
-  * (blocking), so `clearAll()` returns the executor storage at the
-  * call point — the long-lived-service hook, meant for BETWEEN
-  * tenants / after a corpus swap, when the caller asserts no
-  * consumer still holds one of the frames (an unpersisted
-  * checkpointed frame cannot recompute). Overflow eviction at each
-  * cache's bound, by contrast, only drops the driver references and
-  * lets the ContextCleaner reclaim blocks after GC — in-flight
-  * consumers of an evicted frame keep working.
-  *
-  * Executor loss. A lost executor takes its checkpoint blocks with
-  * it, and a no-lineage frame then fails PERMANENTLY on read. Every
-  * FRAME-valued memo (kNN graph, member pairs, graph edges, session
-  * frames) SELF-HEALS since r14: they serve through [[serveChecked]],
-  * which verifies the cached frame's blocks are all still registered
-  * (a driver-side storage-registry read, zero jobs) and invalidates +
-  * rebuilds on loss. The value-typed memos (k-means centroids, PQ
-  * codebooks, LR weights, skew census) hold driver-side collected
-  * values — no blocks to lose. `clearAll()` remains the eager
-  * between-tenants hook. Irrelevant in local mode, where executor
-  * death is JVM death. */
+  * Eight operator families memoize a deterministic intermediate that
+  * several registry queries share: the session frames, the two graph
+  * edge frames, the dedup member pairs, the k-means quantizer, the PQ
+  * codebooks, the kNN graph, the quality-LR model and the skew census.
+  * Each family holds one [[Memo]] and keeps its own key, built so a
+  * corpus rewrite or a new context always misses: dir + sorted input
+  * files + hyperparams + applicationId ([[dirKey]]); the skew census
+  * keys on plan + relation locations + files + key column instead.
+  * `*From` forms over arbitrary frames have no cheap identity and stay
+  * uncached. [[clearAll]] clears every memo. */
 object Caches {
-  def clearAll(): Unit = {
-    operators.Dedup.clearMemberPairCache()
-    operators.TextAnalysis.clearQualityLrCache()
-    operators.Similarity.clearKmeansCache()
-    operators.Similarity.clearKnnGraphCache()
-    operators.Similarity.clearPqBooksCache()
-    operators.Graph.clearEdgeCache()
-    operators.Sessionize.clearSessionCache()
-    operators.Skew.clearCensusCache()
+  private val memos = new CopyOnWriteArrayList[Memo[_]]()
+
+  /** A bounded memo whose values may hold localCheckpointed frames
+    * (`frames` lists them; for a frame memo that is the frame itself,
+    * for a driver-side value such as centroids it is empty).
+    *
+    * Bound: past `max` entries the memo clears all, not LRU. A session
+    * cycling more than `max` corpora thrashes, an accepted trade —
+    * real sessions touch a handful. The bound clear drops only the
+    * driver references, so in-flight consumers of an evicted frame
+    * keep working and the ContextCleaner reclaims its blocks after GC.
+    *
+    * Self-heal: a checkpointed frame has no lineage, so an executor
+    * loss that takes its blocks makes every later read fail
+    * permanently. Before serving, `apply` checks that every held
+    * frame's blocks are still registered (a driver-side storage
+    * registry read, no job) and rebuilds on loss. Moot in local mode,
+    * where executor death is JVM death.
+    *
+    * Clear: `clear()` unpersists the held frames' blocks (blocking),
+    * then drops the entries, so executor storage is back when it
+    * returns. It is the between-tenants / after-a-corpus-swap hook:
+    * the caller asserts no consumer still holds one of the frames (an
+    * unpersisted checkpointed frame cannot recompute). */
+  final class Memo[V](max: Int, frames: V => Seq[DataFrame]) {
+    private val cache = new ConcurrentHashMap[(String, String), V]()
+    private val built = new AtomicLong(0L)
+    memos.add(this)
+
+    /** Values built so far — what the cache-effectiveness specs read. */
+    def builds: Long = built.get()
+
+    /** The value at `key`, building it on a miss or a lost block. The
+      * remove is key+value conditional, so a concurrent rebuild that
+      * already replaced the entry is never clobbered. */
+    def apply(key: (String, String))(build: => V): V = {
+      if (cache.size() > max) cache.clear()
+      Option(cache.get(key)).foreach { v =>
+        if (!frames(v).forall(checkpointHealthy)) cache.remove(key, v)
+      }
+      cache.computeIfAbsent(key, _ => { built.incrementAndGet(); build })
+    }
+
+    def clear(): Unit = {
+      cache.values().forEach(v => frames(v).foreach(unpersistCheckpointed))
+      cache.clear()
+    }
   }
+
+  /** Clear every memo. A `Memo` registers itself when its family's
+    * object initializes, which is before it can hold an entry. */
+  def clearAll(): Unit = memos.forEach(_.clear())
+
+  /** The dir-grain memo key: (applicationId, fp of `parts`) — a new
+    * context always misses, since checkpoint blocks die with it. */
+  private[graft] def dirKey(spark: SparkSession, parts: Seq[String]): (String, String) =
+    (spark.sparkContext.applicationId,
+      sources.ArtifactManifest.fp(parts.mkString("\n")))
 
   /** Eagerly free a localCheckpointed frame's executor blocks. A
     * checkpointed Dataset's plan is a `LogicalRDD` over the persisted
     * internal RDD; `df.unpersist` only consults the CacheManager and
-    * never sees it, so the clear functions walk the analyzed plan and
-    * unpersist the RDD directly (blocking — the point is that storage
-    * is back when the call returns). Safe on non-checkpointed frames:
-    * no LogicalRDD, no-op. */
+    * never sees it, so this walks the analyzed plan and unpersists the
+    * RDD directly (blocking). Safe on non-checkpointed frames: no
+    * LogicalRDD, no-op. */
   private[graft] def unpersistCheckpointed(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -63,27 +90,11 @@ object Caches {
       case _ => ()
     }
 
-  /** The explicit-clear body shared by the frame-valued memo caches:
-    * unpersist every cached frame's checkpoint blocks (blocking),
-    * then drop the references. Overflow eviction inside the memos
-    * deliberately does NOT route here — see the eviction comments at
-    * each cache. */
-  private[graft] def drainFrameCache(
-      cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]): Unit = {
-    val it = cache.values().iterator()
-    while (it.hasNext) unpersistCheckpointed(it.next())
-    cache.clear()
-  }
-
   /** True iff every checkpoint-backed leaf of `df` still has ALL its
-    * blocks in executor storage. A localCheckpointed frame has no
-    * lineage — once an executor takes its blocks down, every read
-    * fails PERMANENTLY — so serving one from a memo without this
-    * check turns one executor loss into an unbounded failure streak.
-    * Driver-side only (persistentRdds + block-manager status via the
-    * public getRDDStorageInfo), no Spark job. Frames with no
-    * LogicalRDD leaf (never checkpointed) are trivially healthy. */
-  private[graft] def checkpointHealthy(df: DataFrame): Boolean = {
+    * blocks in executor storage. Driver-side only (persistentRdds +
+    * block-manager status via the public getRDDStorageInfo), no Spark
+    * job. Frames with no LogicalRDD leaf are trivially healthy. */
+  private def checkpointHealthy(df: DataFrame): Boolean = {
     val sc = df.sparkSession.sparkContext
     val rdds = df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -93,20 +104,5 @@ object Caches {
       rdds.forall(r => info.exists(i =>
         i.id == r.id && i.numCachedPartitions == r.getNumPartitions))
     }
-  }
-
-  /** Memo serve with invalidate-on-block-loss: a cached frame whose
-    * checkpoint blocks are gone (executor churn, an external
-    * unpersist) is dropped and rebuilt instead of served as a
-    * permanent failure. The remove is key+value conditional, so a
-    * concurrent rebuild that already replaced the entry is never
-    * clobbered. Healthy entries serve with zero jobs (the check is a
-    * driver-side storage-registry read). */
-  private[graft] def serveChecked(
-      cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame],
-      key: (String, String))(build: => DataFrame): DataFrame = {
-    val cached = cache.get(key)
-    if (cached != null && !checkpointHealthy(cached)) cache.remove(key, cached)
-    cache.computeIfAbsent(key, _ => build)
   }
 }

@@ -456,12 +456,12 @@ object ScaleProbe {
         def t(f: => Any): Double = {
           val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
         }
-        operators.TextAnalysis.clearQualityLrCache()
+        operators.TextAnalysis.qualityLrMemo.clear()
         val lr = t(operators.TextAnalysis.trainedQualityLr(spark, dir))
-        operators.Similarity.clearKmeansCache()
+        operators.Similarity.kmeansMemo.clear()
         val km = t(operators.Similarity.kmeansCentroids(spark, dir))
-        operators.Similarity.clearKnnGraphCache()
-        operators.Similarity.clearKmeansCache()
+        operators.Similarity.knnGraphMemo.clear()
+        operators.Similarity.kmeansMemo.clear()
         val knn = t(operators.Similarity.annKnnGraph(spark, dir,
           nlist = nlistGraph).count())
         // the member-pair frame carries the EVAL-grade exact members
@@ -474,7 +474,7 @@ object ScaleProbe {
         // its truth stage from replica probes.
         val mp = if (!memberPair) -1.0
           else {
-            operators.Dedup.clearMemberPairCache()
+            operators.Dedup.memberPairMemo.clear()
             t(operators.Dedup.memberPairFrame(spark, dir).count())
           }
         println("{\"probe\":\"memo_cold\",\"dir\":\"" + tag + "\"" +
@@ -525,10 +525,10 @@ object ScaleProbe {
         val dir = s"/tmp/graft_ann$reps"
         buildClustered(dir, reps)
         val nlist = 10 * reps
-        operators.Similarity.clearKmeansCache()
+        operators.Similarity.kmeansMemo.clear()
         val km = t(operators.Similarity.kmeansCentroids(spark, dir,
           nlist = nlist, iters = 3))
-        operators.Similarity.clearKnnGraphCache()
+        operators.Similarity.knnGraphMemo.clear()
         val graph = t(operators.Similarity.annKnnGraph(spark, dir,
           k = 5, nProbe = 2, nlist = nlist, iters = 3).count())
         val lpa = t(operators.Similarity.embeddingClusters(spark, dir,

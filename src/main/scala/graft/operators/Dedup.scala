@@ -744,41 +744,15 @@ object Dedup {
     * scratch (the 4-5 s PassJoin pairs ran in THREE registry entries
     * per cold session); now the first composite pays the build and
     * the rest filter the pinned frame — byte-identical outputs, the
-    * generators' semantics untouched. Cache discipline mirrors the
-    * Skew census memo: keyed by the documents table's dir + sorted
-    * input-file listing (a rewrite mints new part names → MISS, never
-    * a stale frame) + the SparkContext identity (checkpoint blocks
-    * die with their context), bounded, with an explicit clear hook.
-    * Off-default thresholds bypass the cache entirely. */
-  private val MemberPairCacheMax = 8
-  private val memberPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[graft] val memberPairBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearMemberPairCache(): Unit =
-    graft.Caches.drainFrameCache(memberPairCache)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    * generators' semantics untouched. Keyed by the documents table's
+    * dir + sorted input files (a rewrite mints new part names → MISS,
+    * never a stale frame); off-default thresholds bypass the memo
+    * entirely. */
+  private[graft] val memberPairMemo = new graft.Caches.Memo[DataFrame](8, Seq(_))
 
   private[graft] def memberPairFrame(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val fp = md5Hex(dir + "\n" + docs.inputFiles.sorted.mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    // clear-all at the bound, NOT LRU: a session cycling > Max corpora
-    // thrashes every family, an accepted trade — Max is generous and
-    // real sessions touch a handful of corpora. Eviction drops ONLY
-    // the driver references (no unpersist), so in-flight consumers of
-    // an evicted frame keep working; the ContextCleaner reclaims the
-    // blocks after GC. The explicit clear hooks are the eager path.
-    if (memberPairCache.size() > MemberPairCacheMax) memberPairCache.clear()
-    // serveChecked (r14): a cached frame whose checkpoint blocks died
-    // with an executor invalidates and rebuilds instead of serving a
-    // permanent read failure to the whole agreement/census family
-    graft.Caches.serveChecked(memberPairCache, key) {
-      memberPairBuilds.incrementAndGet()
+    memberPairMemo(graft.Caches.dirKey(spark, dir +: docs.inputFiles.sorted)) {
       val nul = lit(null).cast("double")
       Seq(
         ngramContainment(spark, dir)

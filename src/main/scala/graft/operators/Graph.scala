@@ -56,48 +56,28 @@ object Graph {
       .agg(count(lit(1)).as("weight"))
   }
 
-  // ---- dir-grain edge memos ----
+  // ---- dir-grain edge memo ----
   // Ten registry queries build one of TWO edge frames from the same
   // events table (product transitions: pagerank/ppr/serving tables/
   // communities; co-view: triangles/kcore/degree census/assortativity/
   // components) — each paid its own window + rollup + checkpoint per
   // call. Both frames are deterministic aggregates, so one session
-  // builds each ONCE: the memberPairFrame discipline — keyed by
-  // (applicationId, fp(kind + dir + events files)), localCheckpointed,
-  // bounded, clearable. `*From` forms (arbitrary event frames) stay
-  // uncached. Checkpointed memos have NO lineage, so entries serve
-  // through Caches.serveChecked (r14): blocks lost to executor churn
-  // invalidate the entry and the next call rebuilds (moot in local
-  // mode, where executor death is JVM death).
-  private val EdgeCacheMax = 8
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[graft] val edgeBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  // builds each ONCE, localCheckpointed. `*From` forms (arbitrary
+  // event frames) stay uncached.
+  private[graft] val edgeMemo = new graft.Caches.Memo[DataFrame](8, Seq(_))
 
-  def clearEdgeCache(): Unit = graft.Caches.drainFrameCache(edgeCache)
-
-  private def edgeMemo(spark: SparkSession, dir: String, kind: String)
-      (build: => DataFrame): DataFrame = {
-    val files = graft.Tables.events(spark, dir).inputFiles.sorted
-    val fp = graft.sources.ArtifactManifest.fp(
-      (kind +: dir +: files).mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    // clear-all at the bound, not LRU (reference-drop only) — trade
-    // documented at Dedup.memberPairFrame
-    if (edgeCache.size() > EdgeCacheMax) edgeCache.clear()
-    // serveChecked (r14): dead checkpoint blocks invalidate + rebuild
-    graft.Caches.serveChecked(edgeCache, key) {
-      edgeBuilds.incrementAndGet()
+  private def edgeFrame(spark: SparkSession, dir: String, kind: String)
+      (build: => DataFrame): DataFrame =
+    edgeMemo(graft.Caches.dirKey(spark,
+      kind +: dir +: graft.Tables.events(spark, dir).inputFiles.sorted)) {
       build.localCheckpoint()
     }
-  }
 
   private[graft] def productEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeMemo(spark, dir, "product")(productEdgesFrom(enriched(spark, dir)))
+    edgeFrame(spark, dir, "product")(productEdgesFrom(enriched(spark, dir)))
 
   private[graft] def coviewEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeMemo(spark, dir, "coview")(coviewEdgesFrom(enriched(spark, dir)))
+    edgeFrame(spark, dir, "coview")(coviewEdgesFrom(enriched(spark, dir)))
 
   def productPagerank(spark: SparkSession, dir: String,
       iterations: Int = 15, tol: Double = 0.0, checkEvery: Int = 1): DataFrame =

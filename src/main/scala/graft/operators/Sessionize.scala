@@ -129,46 +129,29 @@ object Sessionize {
       .select(cols.map(col) :+ col("bucket") :+ col("session_idx"): _*)
   }
 
-  /** One row per (user, session): ordered event sequence + stats. */
-  // ---- dir-grain session memos (the Graph edge-memo discipline) ----
+  // ---- dir-grain session memo ----
   // Two shared intermediates rebuild per call at dir grain: the
   // session-sequences frame (feeds session_sequences AND
   // session_patterns' rollup) and the per-session stats frame (feeds
   // session_daily, session_concurrency, error_impact). Both are
   // deterministic (window tiebreaks on (epoch, event_id), exact
-  // longs), so one session builds each ONCE — keyed by
-  // (applicationId, fp(kind + dir + events files)), localCheckpointed,
-  // bounded, clearable. `*From` forms stay uncached.
-  private val SessionCacheMax = 8
-  private val sessionCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[graft] val sessionBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  // longs), so one session builds each ONCE, localCheckpointed.
+  // `*From` forms stay uncached.
+  private[graft] val sessionMemo = new graft.Caches.Memo[DataFrame](8, Seq(_))
 
-  def clearSessionCache(): Unit = graft.Caches.drainFrameCache(sessionCache)
-
-  private def sessionMemo(spark: SparkSession, dir: String, kind: String)
-      (build: => DataFrame): DataFrame = {
-    val files = graft.Tables.events(spark, dir).inputFiles.sorted
-    val fp = graft.sources.ArtifactManifest.fp(
-      (kind +: dir +: files).mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    // clear-all at the bound, not LRU (reference-drop only, so
-    // in-flight consumers survive) — trade documented at
-    // Dedup.memberPairFrame
-    if (sessionCache.size() > SessionCacheMax) sessionCache.clear()
-    // serveChecked (r14): dead checkpoint blocks invalidate + rebuild
-    graft.Caches.serveChecked(sessionCache, key) {
-      sessionBuilds.incrementAndGet()
+  private def sessionFrame(spark: SparkSession, dir: String, kind: String)
+      (build: => DataFrame): DataFrame =
+    sessionMemo(graft.Caches.dirKey(spark,
+      kind +: dir +: graft.Tables.events(spark, dir).inputFiles.sorted)) {
       build.localCheckpoint()
     }
-  }
 
   private[graft] def sessionStats(spark: SparkSession, dir: String): DataFrame =
-    sessionMemo(spark, dir, "stats")(sessionStatsFrom(enriched(spark, dir)))
+    sessionFrame(spark, dir, "stats")(sessionStatsFrom(enriched(spark, dir)))
 
+  /** One row per (user, session): ordered event sequence + stats. */
   def sessionSequences(spark: SparkSession, dir: String): DataFrame =
-    sessionMemo(spark, dir, "sequences")(
+    sessionFrame(spark, dir, "sequences")(
       sessionSequencesFrom(enriched(spark, dir)))
 
   /** `sessionSequences` on the hot-key-safe base — identical output

@@ -309,33 +309,19 @@ object Similarity {
   // the SAME k-means quantizer at registry defaults; training is
   // bit-deterministic (hash-ordered seeding, per-dim sums as rounded
   // bigints — order-independent exact aggregates), so per-query
-  // retraining in one session is pure waste. Same memo discipline as
-  // Dedup.memberPairFrame / TextAnalysis.trainedQualityLr: keyed by
-  // (applicationId, fp(dir + sorted input files + hyperparams)) so a
-  // rewritten corpus or a new context always misses; bounded;
-  // explicitly clearable. The value is a driver-side Seq (no
-  // context-bound resources). `kmeansCentroidsFrom` (arbitrary
-  // frames) stays uncached.
-  private val KmeansCacheMax = 16
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(Int, Array[Float])]]()
-  private[graft] val kmeansTrainings =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearKmeansCache(): Unit = kmeansCache.clear()
+  // retraining in one session is pure waste. The value is a
+  // driver-side Seq (no checkpointed frame). `kmeansCentroidsFrom`
+  // (arbitrary frames) stays uncached.
+  private[graft] val kmeansMemo =
+    new graft.Caches.Memo[Seq[(Int, Array[Float])]](16, _ => Nil)
 
   def kmeansCentroids(spark: SparkSession, dir: String, nlist: Int = 10,
                       iters: Int = 3): Seq[(Int, Array[Float])] = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val fp = graft.sources.ArtifactManifest.fp(
-      (dir +: e.inputFiles.sorted :+ s"nlist=$nlist" :+ s"iters=$iters")
-        .mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    if (kmeansCache.size() > KmeansCacheMax) kmeansCache.clear()
-    kmeansCache.computeIfAbsent(key, _ => {
-      kmeansTrainings.incrementAndGet()
+    kmeansMemo(graft.Caches.dirKey(spark,
+      dir +: e.inputFiles.sorted :+ s"nlist=$nlist" :+ s"iters=$iters")) {
       kmeansCentroidsFrom(e, nlist, iters)
-    })
+    }
   }
 
   private[graft] def kmeansCentroidsFrom(e0: DataFrame, nlist: Int,
@@ -700,29 +686,20 @@ object Similarity {
   // PQ codebooks are the quantizer memo's sibling: pq_topk,
   // ivfpq_topk and saveIvfPqIndex all train the identical books at
   // dir grain (deterministic — hash-seeded init, integer-quantized
-  // sums, id tiebreaks). Same discipline, driver-side value.
-  private val PqBooksCacheMax = 8
-  private val pqBooksCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[Seq[(Int, Array[Float])]]]()
-  private[graft] val pqBookTrainings =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearPqBooksCache(): Unit = pqBooksCache.clear()
+  // sums, id tiebreaks). Driver-side value, like the quantizer.
+  private[graft] val pqBooksMemo =
+    new graft.Caches.Memo[Seq[Seq[(Int, Array[Float])]]](8, _ => Nil)
 
   private[graft] def pqBooks(spark: SparkSession, dir: String,
       numQueries: Int, m: Int, ksub: Int,
       iters: Int): Seq[Seq[(Int, Array[Float])]] = {
     val e = Tables.embeddings(spark, dir)
-    val fp = graft.sources.ArtifactManifest.fp(
-      (dir +: e.inputFiles.sorted :+ s"nq=$numQueries" :+ s"m=$m" :+
-        s"ksub=$ksub" :+ s"iters=$iters").mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    if (pqBooksCache.size() > PqBooksCacheMax) pqBooksCache.clear()
-    pqBooksCache.computeIfAbsent(key, _ => {
-      pqBookTrainings.incrementAndGet()
+    pqBooksMemo(graft.Caches.dirKey(spark,
+      dir +: e.inputFiles.sorted :+ s"nq=$numQueries" :+ s"m=$m" :+
+        s"ksub=$ksub" :+ s"iters=$iters")) {
       pqCodebooks(e.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") >= numQueries), m, ksub, iters)
-    })
+    }
   }
 
   /** PQ codebook training: M subspaces × ksub codewords via seeded
@@ -1286,34 +1263,17 @@ object Similarity {
   // The dir-grain graph is shared downstream (ann_knn_graph,
   // embedding_clusters' LPA, ann_knn_classify's vote join) and is
   // deterministic end-to-end (memoized quantizer, similarity rounded
-  // to 6 decimals, id tiebreaks), so one session builds it ONCE —
-  // the memberPairFrame discipline: localCheckpointed, keyed by
-  // (applicationId, fp(dir + files + params)), bounded, clearable.
-  // `annKnnGraphWith` (arbitrary frames/centroids) stays uncached.
-  private val KnnGraphCacheMax = 8
-  private val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private[graft] val knnGraphBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearKnnGraphCache(): Unit = graft.Caches.drainFrameCache(knnGraphCache)
+  // to 6 decimals, id tiebreaks), so one session builds it ONCE,
+  // localCheckpointed. `annKnnGraphWith` (arbitrary frames/centroids)
+  // stays uncached.
+  private[graft] val knnGraphMemo = new graft.Caches.Memo[DataFrame](8, Seq(_))
 
   def annKnnGraph(spark: SparkSession, dir: String, k: Int = 5,
                   nProbe: Int = 2, nlist: Int = 10, iters: Int = 3): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val fp = graft.sources.ArtifactManifest.fp(
-      (dir +: e.inputFiles.sorted :+
-        s"k=$k" :+ s"nProbe=$nProbe" :+ s"nlist=$nlist" :+ s"iters=$iters")
-        .mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    // clear-all at the bound, not LRU (reference-drop only) — trade
-    // documented at Dedup.memberPairFrame
-    if (knnGraphCache.size() > KnnGraphCacheMax) knnGraphCache.clear()
-    // serveChecked (r14): a cached graph whose checkpoint blocks died
-    // with an executor invalidates and rebuilds instead of serving a
-    // permanent read failure to every downstream consumer
-    graft.Caches.serveChecked(knnGraphCache, key) {
-      knnGraphBuilds.incrementAndGet()
+    knnGraphMemo(graft.Caches.dirKey(spark,
+      dir +: e.inputFiles.sorted :+
+        s"k=$k" :+ s"nProbe=$nProbe" :+ s"nlist=$nlist" :+ s"iters=$iters")) {
       annKnnGraphWith(spark, e,
         kmeansCentroids(spark, dir, nlist, iters), k, nProbe)
         .localCheckpoint()

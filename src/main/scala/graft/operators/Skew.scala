@@ -102,23 +102,10 @@ object Skew {
     * of serving a stale census; both signals are plan inspection only
     * — no job). Threshold and ceiling are applied per `measure` call
     * (they shape the plan, not the census), so one census serves
-    * consumers with different arming policies. Bounded: the map
-    * clears itself past `CensusCacheMax` entries, and
-    * [[clearCensusCache]] is the explicit invalidation hook.
-    * `censusRuns` counts ACTUAL censuses for the
-    * cache-effectiveness spec. */
-  private val CensusCacheMax = 256
-  private val censusCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Option[(Double, Long, Long)]]()
-  private[graft] val censusRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Explicit cache invalidation (e.g. after rewriting a source a
-    * long-lived session will re-read through the same plan). */
-  def clearCensusCache(): Unit = censusCache.clear()
-
-  private def md5(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    * consumers with different arming policies. The value is a
+    * driver-side tuple (no checkpointed frame). */
+  private[graft] val censusMemo =
+    new graft.Caches.Memo[Option[(Double, Long, Long)]](256, _ => Nil)
 
   private def censusOf(df: DataFrame, keyCol: String): Option[(Double, Long, Long)] = {
     // the canonicalized plan elides relation LOCATIONS (two frames
@@ -138,18 +125,15 @@ object Skew {
       case loc: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         s"local:${loc.output.map(_.name).mkString(",")}:${loc.data.hashCode}"
     }.mkString("\n")
-    val fp = md5(analyzed.canonicalized.toString +
+    val fp = graft.sources.ArtifactManifest.fp(analyzed.canonicalized.toString +
       "\n#loc\n" + locs +
       "\n#files\n" + df.inputFiles.sorted.mkString("\n"))
-    val key = (fp, keyCol)
-    if (censusCache.size() > CensusCacheMax) censusCache.clear()
-    censusCache.computeIfAbsent(key, _ => {
-      censusRuns.incrementAndGet()
+    censusMemo((fp, keyCol)) {
       Quality.keySkewFrom(df, keyCol, topK = 1).collect().headOption.map { r =>
         (r.getAs[Double]("ratio_to_avg"), r.getAs[Long]("n_keys"),
           r.getAs[Long]("total_rows"))
       }
-    })
+    }
   }
 
   /** `saltedJoin` with the salt factor MEASURED instead of guessed:

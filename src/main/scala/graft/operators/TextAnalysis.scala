@@ -4124,33 +4124,20 @@ object TextAnalysis {
   // deterministic given the corpus and (iters, step) — a fixed round
   // count of exact map-combined aggregates, no RNG — so three
   // trainings in one session are pure waste (~5-6 s apiece at sf0.1,
-  // three of the seven slowest bench entries). The memo is the
-  // Dedup.memberPairFrame discipline verbatim: keyed by
-  // (applicationId, fp(dir + sorted input files + hyperparams)) so a
-  // rewritten corpus or a new SparkContext always MISSES (the held
-  // LrModel carries a localCheckpointed feature frame valid only
-  // within its own context), bounded, explicitly clearable. `*From`
-  // forms (arbitrary frames — no cheap identity) stay uncached.
-  private val QualityLrCacheMax = 8
-  private val qualityLrCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), LrModel]()
-  private[graft] val qualityLrTrainings =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearQualityLrCache(): Unit = qualityLrCache.clear()
+  // three of the seven slowest bench entries). The held LrModel
+  // carries a localCheckpointed feature frame, which the memo checks
+  // before serving and unpersists on clear. `*From` forms (arbitrary
+  // frames — no cheap identity) stay uncached.
+  private[graft] val qualityLrMemo =
+    new graft.Caches.Memo[LrModel](8, m => Seq(m.features))
 
   private[graft] def trainedQualityLr(spark: SparkSession, dir: String,
       iters: Int = 40, step: Double = 1.0): LrModel = {
     val docs = Tables.documents(spark, dir)
-    val fp = graft.sources.ArtifactManifest.fp(
-      (dir +: docs.inputFiles.sorted :+ s"iters=$iters" :+ s"step=$step")
-        .mkString("\n"))
-    val key = (spark.sparkContext.applicationId, fp)
-    if (qualityLrCache.size() > QualityLrCacheMax) qualityLrCache.clear()
-    qualityLrCache.computeIfAbsent(key, _ => {
-      qualityLrTrainings.incrementAndGet()
+    qualityLrMemo(graft.Caches.dirKey(spark,
+      dir +: docs.inputFiles.sorted :+ s"iters=$iters" :+ s"step=$step")) {
       trainQualityLr(docs, iters, step)
-    })
+    }
   }
 
   private[graft] case class LrModel(wStd: Array[Double], bStd: Double,

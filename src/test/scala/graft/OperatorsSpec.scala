@@ -535,25 +535,25 @@ class SkewSpec extends SparkSpec {
     val hot = ((0 until 2000).map(i => ("census_bot", s"cc$i", "view", 1000L + i * 10L)) ++
       (0 until 40).map(i => (s"cu${i % 20}", s"cn$i", "view", 1000L + i * 5000L)))
       .toDF("user_id", "event_id", "event_type", "event_epoch")
-    val before = Skew.censusRuns.get()
+    val before = Skew.censusMemo.builds
     // a pipeline running THREE armed session operators over one frame
     val (_, p1) = Sessionize.sessionAuto(hot)(
       Sessionize.sessionDailyFrom, Sessionize.sessionDailyBucketedFrom(_))
     val (_, p2) = Sessionize.sessionAuto(hot)(
       Sessionize.sessionTransitionsFrom, Sessionize.sessionTransitionsBucketedFrom(_))
     val (_, p3) = Sessionize.sessionSequencesAuto(hot)
-    assert(Skew.censusRuns.get() - before == 1L,
-      s"expected ONE census for three armed consumers, got ${Skew.censusRuns.get() - before}")
+    assert(Skew.censusMemo.builds - before == 1L,
+      s"expected ONE census for three armed consumers, got ${Skew.censusMemo.builds - before}")
     assert(p1.armed && p1 == p2 && p2 == p3, s"plans diverged: $p1 / $p2 / $p3")
     // a DIFFERENT frame (extra filter) must miss the cache
     val (_, p4) = Sessionize.sessionSequencesAuto(hot.filter(col("event_epoch") > 0L))
-    assert(Skew.censusRuns.get() - before == 2L, "a semantically new frame must re-census")
+    assert(Skew.censusMemo.builds - before == 2L, "a semantically new frame must re-census")
     assert(p4.armed)
     // a caller-measured plan short-circuits the census entirely (the
     // backfill-scope carry): a THIRD distinct frame, zero new censuses
     val (_, p5) = Sessionize.sessionSequencesAuto(
       hot.filter(col("event_epoch") > 1L), preplanned = Some(p1))
-    assert(Skew.censusRuns.get() - before == 2L,
+    assert(Skew.censusMemo.builds - before == 2L,
       "a preplanned call must not census")
     assert(p5 == p1, "the carried plan is surfaced verbatim")
   }
@@ -902,16 +902,16 @@ class SessionizeSpec extends SparkSpec {
   }
 
   test("session memos: one sequences build serves patterns, one stats build serves three rollups, both match fresh") {
-    Sessionize.clearSessionCache()
-    val before = Sessionize.sessionBuilds.get()
+    Sessionize.sessionMemo.clear()
+    val before = Sessionize.sessionMemo.builds
     val seq = Sessionize.sessionSequences(spark, Sf).collect()
     Sessionize.sessionPatterns(spark, Sf).count()
-    assert(Sessionize.sessionBuilds.get() == before + 1,
+    assert(Sessionize.sessionMemo.builds == before + 1,
       "patterns must roll over the memoized sequences frame")
     val daily = Sessionize.sessionDaily(spark, Sf).collect()
     Sessionize.sessionConcurrency(spark, Sf).count()
     Sessionize.errorImpact(spark, Sf).count()
-    assert(Sessionize.sessionBuilds.get() == before + 2,
+    assert(Sessionize.sessionMemo.builds == before + 2,
       "daily/concurrency/error_impact must share ONE stats build")
     // memoized outputs equal fresh uncached builds exactly
     val e = EventMarts.enriched(spark, Sf)
@@ -921,7 +921,7 @@ class SessionizeSpec extends SparkSpec {
     assert(daily.map(_.toSeq).toSet ==
       Sessionize.sessionDailyFrom(e).collect().map(_.toSeq).toSet,
       "memoized daily drifted from a fresh build")
-    assert(Sessionize.sessionBuilds.get() == before + 2, "re-reads must HIT")
+    assert(Sessionize.sessionMemo.builds == before + 2, "re-reads must HIT")
   }
 
   test("session event counts sum to total events; gaps within a session ≤ 1800s") {

@@ -1463,16 +1463,16 @@ class ReportingSpec extends SparkSpec {
     val out1 = java.nio.file.Files.createTempDirectory("graft_carry_bf").toString
     val mf = java.nio.file.Files.createTempDirectory("graft_carry_mf")
       .resolve("manifest").toString
-    val before1 = operators.Skew.censusRuns.get()
+    val before1 = operators.Skew.censusMemo.builds
     val (_, r1) = Pipeline.backfill(spark, dir, out1, mf)
     assert(r1.exists(_.martsWritten.nonEmpty))
-    assert(operators.Skew.censusRuns.get() - before1 == 1L,
-      s"a backfill must census ONCE, got ${operators.Skew.censusRuns.get() - before1}")
+    assert(operators.Skew.censusMemo.builds - before1 == 1L,
+      s"a backfill must census ONCE, got ${operators.Skew.censusMemo.builds - before1}")
     assert(r1.flatMap(_.sessionSkew).exists(_.armed),
       "the planted bot must arm the carried plan")
     // 2. a per-date scheduler loop WITH the carry censuses once…
     val out2 = java.nio.file.Files.createTempDirectory("graft_carry_loop").toString
-    val before2 = operators.Skew.censusRuns.get()
+    val before2 = operators.Skew.censusMemo.builds
     val carried = operators.Skew.measure(
       operators.EventMarts.enriched(spark, dir), "user_id", armThreshold = 16.0)
     dates.foreach { d =>
@@ -1481,15 +1481,15 @@ class ReportingSpec extends SparkSpec {
       assert(r.passed && r.sessionSkew.contains(carried),
         "each scoped run must surface the carried plan it was driven by")
     }
-    assert(operators.Skew.censusRuns.get() - before2 == 1L,
-      s"carried loop must census once, got ${operators.Skew.censusRuns.get() - before2}")
+    assert(operators.Skew.censusMemo.builds - before2 == 1L,
+      s"carried loop must census once, got ${operators.Skew.censusMemo.builds - before2}")
     // …3. and an UNCARRIED loop pays one census per date (the cost the
     // carry removes), with row-identical marts either way
     val out3 = java.nio.file.Files.createTempDirectory("graft_carry_base").toString
-    val before3 = operators.Skew.censusRuns.get()
+    val before3 = operators.Skew.censusMemo.builds
     dates.foreach(d => Pipeline.run(spark, dir, out3, dates = Seq(d)))
-    assert(operators.Skew.censusRuns.get() - before3 == 3L,
-      s"uncarried per-date loop pays per-date censuses, got ${operators.Skew.censusRuns.get() - before3}")
+    assert(operators.Skew.censusMemo.builds - before3 == 3L,
+      s"uncarried per-date loop pays per-date censuses, got ${operators.Skew.censusMemo.builds - before3}")
     for (m <- Seq("mart_user_daily", "mart_funnel_daily", "mart_product_daily",
         "mart_orders", "session_sequences", "hourly_traffic")) {
       def canon(p: String) = spark.read.parquet(p).collect()

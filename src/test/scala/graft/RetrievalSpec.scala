@@ -530,20 +530,20 @@ class RetrievalSpec extends SparkSpec {
     // sf0.01: the sf0.001 slice has NO product transitions (the
     // vacuous-table story) and pagerank requires a non-empty graph
     val dir = "/root/testdata/sf0.01"
-    Graph.clearEdgeCache()
-    val before = Graph.edgeBuilds.get()
+    Graph.edgeMemo.clear()
+    val before = Graph.edgeMemo.builds
     Graph.productPagerank(spark, dir).count()
     Graph.productPpr(spark, dir).count()
     Graph.pprServingTable(spark, dir).count()
     Graph.productCommunities(spark, dir).count()
-    assert(Graph.edgeBuilds.get() == before + 1,
+    assert(Graph.edgeMemo.builds == before + 1,
       "the product-transition family must share ONE edge build")
     Graph.coviewTriangles(spark, dir).count()
     Graph.graphKcore(spark, dir).count()
     Graph.graphDegreeCensus(spark, dir).count()
     Graph.graphAssortativity(spark, dir).count()
     Graph.graphComponents(spark, dir).count()
-    assert(Graph.edgeBuilds.get() == before + 2,
+    assert(Graph.edgeMemo.builds == before + 2,
       "the co-view family must share ONE edge build")
     // memoized frames equal uncached fresh builds exactly — both edge
     // frames are integer aggregates, bit-deterministic
@@ -554,7 +554,7 @@ class RetrievalSpec extends SparkSpec {
     assert(Graph.coviewEdges(spark, dir).collect().map(_.toSeq).toSet ==
       Graph.coviewEdgesFrom(e).collect().map(_.toSeq).toSet,
       "memoized coview edges drifted from a fresh build")
-    assert(Graph.edgeBuilds.get() == before + 2, "accessors must HIT")
+    assert(Graph.edgeMemo.builds == before + 2, "accessors must HIT")
   }
 
   test("label propagation: a weighted barbell splits into its two cliques; the weak bridge cannot flip a side") {

@@ -565,12 +565,12 @@ class QualityClassifierSpec extends SparkSpec {
     import spark.implicits._
     def close(a: Double, b: Double): Boolean =
       (a - b).abs <= 1e-9 * math.max(1.0, math.max(a.abs, b.abs))
-    TextAnalysis.clearQualityLrCache()
-    val before = TextAnalysis.qualityLrTrainings.get()
+    TextAnalysis.qualityLrMemo.clear()
+    val before = TextAnalysis.qualityLrMemo.builds
     val model = TextAnalysis.qualityClassifier(spark, Sf).collect()
     val eval = TextAnalysis.qualityClassifierEval(spark, Sf).collect()
     val calib = TextAnalysis.qualityClassifierCalibration(spark, Sf).collect()
-    assert(TextAnalysis.qualityLrTrainings.get() == before + 1,
+    assert(TextAnalysis.qualityLrMemo.builds == before + 1,
       "the classifier family must share ONE training per corpus")
     // cached outputs match a FRESH training at registry defaults
     // (training is a fixed round count of exact aggregates; fresh
@@ -590,13 +590,13 @@ class QualityClassifierSpec extends SparkSpec {
       freshCalib.map(r => (r.getAs[Int]("bin"), r.getAs[Long]("n_docs"))).toSeq)
     // non-default hyperparams key separately: a iters=20 save must
     // train its own model, never serve the iters=40 one
-    val trained = TextAnalysis.qualityLrTrainings.get()
+    val trained = TextAnalysis.qualityLrMemo.builds
     val dir0 = java.nio.file.Files.createTempDirectory("graft_qlrm").toString
     TextAnalysis.saveQualityLr(spark, Sf, s"$dir0/qlr", iters = 20)
-    assert(TextAnalysis.qualityLrTrainings.get() == trained + 1)
+    assert(TextAnalysis.qualityLrMemo.builds == trained + 1)
     // ...and a repeat save at the same hyperparams HITS
     TextAnalysis.saveQualityLr(spark, Sf, s"$dir0/qlr", iters = 20)
-    assert(TextAnalysis.qualityLrTrainings.get() == trained + 1)
+    assert(TextAnalysis.qualityLrMemo.builds == trained + 1)
     // freshness: REWRITING the corpus under the same dir must MISS
     // (new part-file names), never serve the previous corpus's model
     def mk(tag: String, n: Int) = (1 to n).map(i =>
@@ -606,14 +606,14 @@ class QualityClassifierSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_qlrf").toString
     mk("v1", 12).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     TextAnalysis.qualityClassifier(spark, dir).collect()
-    val builds = TextAnalysis.qualityLrTrainings.get()
+    val builds = TextAnalysis.qualityLrMemo.builds
     mk("v2", 6).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     TextAnalysis.qualityClassifier(spark, dir).collect()
-    assert(TextAnalysis.qualityLrTrainings.get() == builds + 1,
+    assert(TextAnalysis.qualityLrMemo.builds == builds + 1,
       "a rewritten corpus must retrain, not serve the stale model")
     // and an unchanged dir HITS across family members
     TextAnalysis.qualityClassifierEval(spark, dir).collect()
-    assert(TextAnalysis.qualityLrTrainings.get() == builds + 1)
+    assert(TextAnalysis.qualityLrMemo.builds == builds + 1)
   }
 
   test("scorer artifact: save/load round-trip, batch == stream scores bit-for-bit, tamper fails loud") {
@@ -2053,13 +2053,13 @@ class DedupSpec extends SparkSpec {
   test("member-pair cache: one build serves the eval family, outputs match fresh generators, rewrites miss") {
     import spark.implicits._
     // ONE generator sweep serves all four composites in a session
-    Dedup.clearMemberPairCache()
-    val before = Dedup.memberPairBuilds.get()
+    Dedup.memberPairMemo.clear()
+    val before = Dedup.memberPairMemo.builds
     Dedup.methodAgreementFull(spark, Sf).collect()
     Dedup.methodAgreement(spark, Sf).collect()
     val recall = Dedup.lshRecall(spark, Sf).collect()
     Dedup.editClusters(spark, Sf).count()
-    assert(Dedup.memberPairBuilds.get() == before + 1,
+    assert(Dedup.memberPairMemo.builds == before + 1,
       "the eval family must share ONE member-pair build")
     // the cached lshRecall is bit-identical to deciles recomputed
     // from the FRESH generators (zero semantic change)
@@ -2093,14 +2093,14 @@ class DedupSpec extends SparkSpec {
     mk("v1").write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val v1 = Dedup.methodAgreementFull(spark, dir).collect()
       .map(r => r.toSeq).toSeq
-    val builds = Dedup.memberPairBuilds.get()
+    val builds = Dedup.memberPairMemo.builds
     mk("v2").limit(6).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Dedup.methodAgreementFull(spark, dir).collect()
-    assert(Dedup.memberPairBuilds.get() == builds + 1,
+    assert(Dedup.memberPairMemo.builds == builds + 1,
       "a rewritten corpus must rebuild, not serve the stale frame")
     // and an unchanged dir HITS
     Dedup.methodAgreement(spark, dir).collect()
-    assert(Dedup.memberPairBuilds.get() == builds + 1)
+    assert(Dedup.memberPairMemo.builds == builds + 1)
     assert(v1.nonEmpty)
   }
 
@@ -2172,27 +2172,44 @@ class DedupSpec extends SparkSpec {
   }
 
   test("Caches.clearAll drops every session memo: warmed families rebuild") {
-    // warm three cheap memo families at Sf, clearAll, re-touch each:
+    // warm all eight memo families at Sf, clearAll, re-touch each:
     // every build counter must advance (a stale frame surviving the
-    // aggregate clear would serve the wrong corpus to the next tenant)
-    Dedup.memberPairFrame(spark, Sf).count()
-    TextAnalysis.trainedQualityLr(spark, Sf)
-    Similarity.kmeansCentroids(spark, Sf)
-    val (p0, q0, k0) = (Dedup.memberPairBuilds.get(),
-      TextAnalysis.qualityLrTrainings.get(), Similarity.kmeansTrainings.get())
-    // warm hits: no rebuilds
-    Dedup.memberPairFrame(spark, Sf).count()
-    TextAnalysis.trainedQualityLr(spark, Sf)
-    Similarity.kmeansCentroids(spark, Sf)
-    assert((Dedup.memberPairBuilds.get(), TextAnalysis.qualityLrTrainings.get(),
-      Similarity.kmeansTrainings.get()) == ((p0, q0, k0)))
+    // aggregate clear would serve the wrong corpus to the next
+    // tenant), and no memo's checkpoint blocks may stay in storage
+    val memos = Seq(Dedup.memberPairMemo, TextAnalysis.qualityLrMemo,
+      Similarity.kmeansMemo, Similarity.pqBooksMemo, Similarity.knnGraphMemo,
+      operators.Graph.edgeMemo, operators.Sessionize.sessionMemo,
+      operators.Skew.censusMemo)
+    def touch(): Seq[org.apache.spark.sql.DataFrame] = {
+      Similarity.kmeansCentroids(spark, Sf)
+      Similarity.pqBooks(spark, Sf, 4, 8, 16, 2)
+      operators.Skew.measure(Tables.events(spark, Sf), "user_id")
+      Seq(Dedup.memberPairFrame(spark, Sf),
+        TextAnalysis.trainedQualityLr(spark, Sf).features,
+        Similarity.annKnnGraph(spark, Sf),
+        // coview, not product: the sf0.001 slice has no product
+        // transitions, and an empty frame holds no blocks to serve
+        operators.Graph.coviewEdges(spark, Sf),
+        operators.Sessionize.sessionStats(spark, Sf))
+    }
+    // start empty, so no bound clear can fire mid-test
     graft.Caches.clearAll()
-    Dedup.memberPairFrame(spark, Sf).count()
-    TextAnalysis.trainedQualityLr(spark, Sf)
-    Similarity.kmeansCentroids(spark, Sf)
-    assert(Dedup.memberPairBuilds.get() == p0 + 1, "member pairs must rebuild")
-    assert(TextAnalysis.qualityLrTrainings.get() == q0 + 1, "LR must retrain")
-    assert(Similarity.kmeansTrainings.get() == k0 + 1, "quantizer must retrain")
+    val frames = touch()
+    val b0 = memos.map(_.builds)
+    // warm hits: no rebuilds
+    touch()
+    assert(memos.map(_.builds) == b0)
+    val held = frames.flatMap(_.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }).toSet
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    assert(held.size == frames.size && held.subsetOf(stored),
+      "every frame memo must hold checkpoint blocks while warm")
+    graft.Caches.clearAll()
+    assert((held & stored).isEmpty,
+      s"clearAll must unpersist every memo checkpoint, left ${held & stored}")
+    touch()
+    assert(memos.map(_.builds) == b0.map(_ + 1), "every family must rebuild")
   }
 
   test("memo self-heal: killed checkpoint blocks invalidate and rebuild instead of failing forever") {
@@ -2200,44 +2217,56 @@ class DedupSpec extends SparkSpec {
     // backing blocks (executor-loss simulation — the frame has no
     // lineage, so a read would fail permanently) and observe a
     // rebuild that serves the same corpus
-    Dedup.clearMemberPairCache()
+    Dedup.memberPairMemo.clear()
     val served = Dedup.memberPairFrame(spark, Sf)
     val rows = served.count()
-    val p0 = Dedup.memberPairBuilds.get()
+    val p0 = Dedup.memberPairMemo.builds
     assert(Dedup.memberPairFrame(spark, Sf).count() == rows)
-    assert(Dedup.memberPairBuilds.get() == p0, "healthy re-serve must not rebuild")
+    assert(Dedup.memberPairMemo.builds == p0, "healthy re-serve must not rebuild")
     graft.Caches.unpersistCheckpointed(served)
     val healed = Dedup.memberPairFrame(spark, Sf)
-    assert(Dedup.memberPairBuilds.get() == p0 + 1, "block loss must rebuild")
+    assert(Dedup.memberPairMemo.builds == p0 + 1, "block loss must rebuild")
     assert(healed.count() == rows, "the healed frame must serve the same corpus")
     // kNN-graph memo: the same contract
-    Similarity.clearKnnGraphCache()
+    Similarity.knnGraphMemo.clear()
     val g = Similarity.annKnnGraph(spark, Sf)
     val gn = g.count()
-    val k0 = Similarity.knnGraphBuilds.get()
+    val k0 = Similarity.knnGraphMemo.builds
     assert(Similarity.annKnnGraph(spark, Sf).count() == gn)
-    assert(Similarity.knnGraphBuilds.get() == k0, "healthy re-serve must not rebuild")
+    assert(Similarity.knnGraphMemo.builds == k0, "healthy re-serve must not rebuild")
     graft.Caches.unpersistCheckpointed(g)
     assert(Similarity.annKnnGraph(spark, Sf).count() == gn)
-    assert(Similarity.knnGraphBuilds.get() == k0 + 1,
+    assert(Similarity.knnGraphMemo.builds == k0 + 1,
       "block loss must rebuild the graph")
     // the session and graph-edge frame memos carry the same contract
-    operators.Sessionize.clearSessionCache()
+    operators.Sessionize.sessionMemo.clear()
     val seq = operators.Sessionize.sessionSequences(spark, Sf)
     val sn = seq.count()
-    val s0 = operators.Sessionize.sessionBuilds.get()
+    val s0 = operators.Sessionize.sessionMemo.builds
     graft.Caches.unpersistCheckpointed(seq)
     assert(operators.Sessionize.sessionSequences(spark, Sf).count() == sn)
-    assert(operators.Sessionize.sessionBuilds.get() == s0 + 1,
+    assert(operators.Sessionize.sessionMemo.builds == s0 + 1,
       "block loss must rebuild the session frame")
-    operators.Graph.clearEdgeCache()
+    operators.Graph.edgeMemo.clear()
     val edges = operators.Graph.productEdges(spark, Sf)
     val en = edges.count()
-    val e0 = operators.Graph.edgeBuilds.get()
+    val e0 = operators.Graph.edgeMemo.builds
     graft.Caches.unpersistCheckpointed(edges)
     assert(operators.Graph.productEdges(spark, Sf).count() == en)
-    assert(operators.Graph.edgeBuilds.get() == e0 + 1,
+    assert(operators.Graph.edgeMemo.builds == e0 + 1,
       "block loss must rebuild the edge frame")
+    // the quality-LR model holds a checkpointed feature frame: the
+    // same contract through its eval consumer
+    TextAnalysis.qualityLrMemo.clear()
+    val lr = TextAnalysis.trainedQualityLr(spark, Sf)
+    def evalCells = TextAnalysis.qualityClassifierEval(spark, Sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("n_docs"))).toSeq
+    val cells = evalCells
+    val q0 = TextAnalysis.qualityLrMemo.builds
+    graft.Caches.unpersistCheckpointed(lr.features)
+    assert(evalCells == cells, "the healed model must score the same corpus")
+    assert(TextAnalysis.qualityLrMemo.builds == q0 + 1,
+      "block loss must retrain the model")
   }
 
   test("persisted member pairs: disk-served census byte-identical, tamper refuses") {
@@ -2285,7 +2314,7 @@ class DedupSpec extends SparkSpec {
     assert(rdds.nonEmpty, "memoized frame must be checkpoint-backed")
     assert(rdds.forall(_.getStorageLevel != StorageLevel.NONE),
       "blocks must be persisted while cached")
-    Dedup.clearMemberPairCache()
+    Dedup.memberPairMemo.clear()
     assert(rdds.forall(_.getStorageLevel == StorageLevel.NONE),
       "explicit clear must unpersist eagerly")
   }
@@ -2895,12 +2924,12 @@ class HashExpressionsSpec extends SparkSpec {
 class SimilaritySpec extends SparkSpec {
   test("quantizer memo: one training serves the ann family, matches fresh exactly, rewrites miss") {
     import spark.implicits._
-    Similarity.clearKmeansCache()
-    val before = Similarity.kmeansTrainings.get()
+    Similarity.kmeansMemo.clear()
+    val before = Similarity.kmeansMemo.builds
     val cached = Similarity.kmeansCentroids(spark, Sf)
     Similarity.ivfTopKKmeans(spark, Sf, numQueries = 4, k = 3).collect()
     Similarity.annKnnGraph(spark, Sf, k = 3).count()
-    assert(Similarity.kmeansTrainings.get() == before + 1,
+    assert(Similarity.kmeansMemo.builds == before + 1,
       "default-hyperparam queries must share ONE quantizer training")
     // training is bit-deterministic (rounded-bigint sums), so the
     // cached quantizer equals a FRESH one exactly
@@ -2912,7 +2941,7 @@ class SimilaritySpec extends SparkSpec {
       "cached quantizer drifted from a fresh training")
     // hyperparams key separately
     Similarity.kmeansCentroids(spark, Sf, nlist = 4)
-    assert(Similarity.kmeansTrainings.get() == before + 2)
+    assert(Similarity.kmeansMemo.builds == before + 2)
     // freshness: rewriting the corpus under the same dir must MISS
     def mk(tag: Int, n: Int) = (0 until n).map(i =>
       (i.toLong, Array.tabulate(8)(d => (i * 31 + d * 7 + tag).toFloat / 100f)))
@@ -2920,23 +2949,23 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_kmm").toString
     mk(1, 40).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val v1 = Similarity.kmeansCentroids(spark, dir)
-    val builds = Similarity.kmeansTrainings.get()
+    val builds = Similarity.kmeansMemo.builds
     mk(2, 24).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     Similarity.kmeansCentroids(spark, dir)
-    assert(Similarity.kmeansTrainings.get() == builds + 1,
+    assert(Similarity.kmeansMemo.builds == builds + 1,
       "a rewritten corpus must retrain, not serve the stale quantizer")
     // and an unchanged dir HITS
     Similarity.kmeansCentroids(spark, dir)
-    assert(Similarity.kmeansTrainings.get() == builds + 1)
+    assert(Similarity.kmeansMemo.builds == builds + 1)
     assert(v1.nonEmpty)
     // PQ codebooks memoize the same way: pq_topk and ivfpq_topk at
     // identical params share ONE training, and the cached books
     // equal a fresh uncached training exactly
-    Similarity.clearPqBooksCache()
-    val pqBefore = Similarity.pqBookTrainings.get()
+    Similarity.pqBooksMemo.clear()
+    val pqBefore = Similarity.pqBooksMemo.builds
     Similarity.pqTopK(spark, Sf, numQueries = 4, k = 3).count()
     Similarity.ivfpqTopK(spark, Sf, numQueries = 4, k = 3).count()
-    assert(Similarity.pqBookTrainings.get() == pqBefore + 1,
+    assert(Similarity.pqBooksMemo.builds == pqBefore + 1,
       "PQ consumers at identical params must share ONE codebook training")
     val cachedBooks = Similarity.pqBooks(spark, Sf, 4, 8, 16, 2)
     val freshBooks = Similarity.pqCodebooks(
@@ -2945,16 +2974,16 @@ class SimilaritySpec extends SparkSpec {
     assert(cachedBooks.map(_.map { case (c, v) => c -> v.toSeq }) ==
       freshBooks.map(_.map { case (c, v) => c -> v.toSeq }),
       "cached codebooks drifted from a fresh training")
-    assert(Similarity.pqBookTrainings.get() == pqBefore + 1)
+    assert(Similarity.pqBooksMemo.builds == pqBefore + 1)
     // the kNN graph memoizes at the same grain: the registered graph,
     // embedding_clusters' LPA input, and classify's vote join at
     // identical params share ONE localCheckpointed build
-    Similarity.clearKnnGraphCache()
-    val gBefore = Similarity.knnGraphBuilds.get()
+    Similarity.knnGraphMemo.clear()
+    val gBefore = Similarity.knnGraphMemo.builds
     val g1 = Similarity.annKnnGraph(spark, Sf).collect()
     Similarity.embeddingClusters(spark, Sf).count()
     Similarity.annKnnClassify(spark, Sf).count()
-    assert(Similarity.knnGraphBuilds.get() == gBefore + 1,
+    assert(Similarity.knnGraphMemo.builds == gBefore + 1,
       "default-param graph consumers must share ONE build")
     // cached graph equals an uncached fresh build exactly (rounded
     // similarities, id tiebreaks — bit-deterministic)
