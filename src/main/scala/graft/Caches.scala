@@ -93,11 +93,13 @@ object Caches {
   /** True iff every checkpoint-backed leaf of `df` still has ALL its
     * blocks in executor storage. Driver-side only (persistentRdds +
     * block-manager status via the public getRDDStorageInfo), no Spark
-    * job. Frames with no LogicalRDD leaf are trivially healthy. */
+    * job. Frames with no LogicalRDD leaf are trivially healthy, and so
+    * is a zero-partition leaf (an empty frame): it has no blocks to
+    * lose, and getRDDStorageInfo never lists it. */
   private def checkpointHealthy(df: DataFrame): Boolean = {
     val sc = df.sparkSession.sparkContext
     val rdds = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case lr: org.apache.spark.sql.execution.LogicalRDD if lr.rdd.getNumPartitions > 0 => lr.rdd
     }
     rdds.isEmpty || {
       val info = sc.getRDDStorageInfo

@@ -13,10 +13,13 @@ import graft.sources.MartSink
   * `load_events(dates)`).
   *
   * Orchestration differences are deliberate and Spark-native:
-  *   - "parallel mart tasks" are one Spark scheduler's jobs over ONE
-  *     persisted events projection (the reference likewise runs its
-  *     marts off one loaded table): the fact table is scanned once per
-  *     run, not once per mart — at 100 TB the scan IS the cost.
+  *   - "parallel mart tasks" are six concurrent driver-side chains
+  *     over ONE persisted events projection (the reference likewise
+  *     runs its marts off one loaded table): the fact table is scanned
+  *     once per run, not once per mart — at 100 TB the scan IS the
+  *     cost. Each chain materializes its mart once (localCheckpoint)
+  *     and feeds that to both sinks, the parquet write and the JDBC
+  *     merge, so no mart plan is built twice.
   *   - the PASS/FAIL branch is a driver-side decision over the tiny
   *     7-row quality summary — the only collect()s in the library are
   *     these few-row gate/report reads, by design.
@@ -88,6 +91,29 @@ object Pipeline {
     "mart_orders"        -> Seq("order_id"),
     "session_sequences"  -> Seq("user_id", "session_idx", "session_date"),
     "hourly_traffic"     -> Seq("event_date", "event_hour"))
+
+  /** One mart's chain: materialize the mart once, write its
+    * partitions, merge it into the warehouse when `martJdbc` is set,
+    * then free the materialized blocks whatever happened. Both sinks
+    * read the checkpoint, so the mart plan runs once, not once per
+    * sink job. The merge is incremental: only the delta crosses the
+    * wire, and vanished-key deletes stay inside the run's date scope
+    * (the dates are java.sql.Date-validated by `run`, so the predicate
+    * literals are safe ISO strings). */
+  private def martChain(name: String, df: DataFrame, outDir: String,
+      dates: Seq[String], martJdbc: Option[String]): Option[MartSink.MergeStats] = {
+    val mart = df.localCheckpoint()
+    try {
+      MartSink.writePartitioned(mart, s"$outDir/$name", partitioned(name))
+      martJdbc.map { url =>
+        val scope = Option.when(dates.nonEmpty)(
+          dates.sorted.map(d => s"DATE('$d')")
+            .mkString("\"" + partitioned(name).head + "\" IN (", ", ", ")"))
+        MartSink.mergeJdbc(mart, url, name, martKeys(name),
+          scopePredicate = scope, deleteVanished = true)
+      }
+    } finally Caches.unpersistCheckpointed(mart)
+  }
 
   /** validate → gate → build. Returns what was written and why (or
     * why not), plus the quality-alert payload when the gate failed.
@@ -341,36 +367,18 @@ object Pipeline {
           if (dates.isEmpty) withSessionDate(sessions)
           else withSessionDate(sessions)
             .filter(col("session_date").isin(runDates: _*))
-        val marts = martsPlain(martBase) + ("session_sequences" -> sessionMart)
-        val written = marts.map { case (name, df) =>
-          partitioned.get(name) match {
-            case Some(cols) => MartSink.writePartitioned(df, s"$outDir/$name", cols)
-            case None       => MartSink.writeSnapshot(df, s"$outDir/$name")
-          }
-          name
-        }.toSeq
-        // incremental warehouse leg: only the delta crosses the wire;
-        // vanished-key deletes stay inside the run's date scope (the
-        // dates are already java.sql.Date-validated above, so the
-        // predicate literals are safe ISO strings)
-        val merges = martJdbc.map { url =>
-          marts.map { case (name, df) =>
-            val dateCol = partitioned(name).head
-            val scope = Option.when(dates.nonEmpty)(
-              dates.sorted.map(d => s"DATE('$d')")
-                .mkString("\"" + dateCol + "\" IN (", ", ", ")"))
-            name -> MartSink.mergeJdbc(df, url, name, martKeys(name),
-              scopePredicate = scope, deleteVanished = true)
-          }
-        }.getOrElse(Map.empty[String, MartSink.MergeStats])
+        val marts = (martsPlain(martBase) + ("session_sequences" -> sessionMart)).toSeq
+        val merges = Concurrently.all(marts.map { case (name, df) =>
+          () => name -> martChain(name, df, outDir, dates, martJdbc)
+        }).collect { case (name, Some(stats)) => name -> stats }.toMap
         // cross-run artifact versioning (r14): a COMPLETED run
         // snapshots the registered stamped-artifact manifests under
         // this run's id; no derivable date → skip, mirroring the
         // drift log ("unknown" would permanently win max(run_id))
         for (vd <- versionLogDir; rd <- runDate; if versionArtifacts.nonEmpty)
           sources.VersionLog.snapshotAndAppend(spark, versionArtifacts, vd, rd)
-        Result(passed = failed.isEmpty, failed, written, runDate, alert,
-          martMerges = merges.toMap, sessionSkew = Some(skewPlan),
+        Result(passed = failed.isEmpty, failed, marts.map(_._1), runDate, alert,
+          martMerges = merges, sessionSkew = Some(skewPlan),
           contractDrift = contractDrift, contractPromoted = contractPromoted)
       }
     } finally {
@@ -382,18 +390,24 @@ object Pipeline {
   /** The daily business report for one date, assembled from the five
     * mart extracts (reference: llm_daily_report's extract+format
     * path; graft.Reporting renders the deterministic fallback
-    * template). All five aggregates are tiny; `e` should be the
-    * shared persisted projection when called inside a run. */
+    * template). All five aggregates are tiny and independent, so they
+    * are collected concurrently; `e` should be the shared persisted
+    * projection when called inside a run. */
   def dailyReportText(e: DataFrame, executionDate: String,
                       driftLogDir: Option[String] = None): String = {
     val day = e.filter(col("event_date") === java.sql.Date.valueOf(executionDate))
+    val Seq(users, funnel, top, orders, payments) = Concurrently.all(Seq(
+        EventMarts.reportUserSummaryFrom(day), EventMarts.martFunnelDailyFrom(day),
+        EventMarts.productTopNFrom(day, 10), EventMarts.reportOrderSummaryFrom(day),
+        EventMarts.reportPaymentDistFrom(day))
+      .map(df => () => df.collect().toSeq))
     Reporting.dailyReport(
       executionDate,
-      userSummary = EventMarts.reportUserSummaryFrom(day).collect().headOption,
-      funnel = EventMarts.martFunnelDailyFrom(day).collect().toSeq,
-      topProducts = EventMarts.productTopNFrom(day, 10).collect().toSeq,
-      orderSummary = EventMarts.reportOrderSummaryFrom(day).collect().headOption,
-      payments = EventMarts.reportPaymentDistFrom(day).collect().toSeq,
+      userSummary = users.headOption,
+      funnel = funnel,
+      topProducts = top,
+      orderSummary = orders.headOption,
+      payments = payments,
       // velocity section: streaks from the persisted drift log (the
       // run() side writes it under driftLogDir) — absent/empty log
       // keeps byte-parity with a report that never wired one. The

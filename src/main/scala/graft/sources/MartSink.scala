@@ -16,26 +16,16 @@ import org.apache.spark.sql.jdbc.JdbcDialects
 object MartSink {
 
   /** Overwrite exactly the partitions present in `df` (dynamic mode).
-    * `partitionCols` is typically Seq("event_date"). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      df.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
-  /** Full-refresh write for small, un-partitioned marts (summary
-    * tables): plain overwrite, coalesced to a handful of files. */
-  def writeSnapshot(df: DataFrame, path: String, files: Int = 4): Unit =
-    df.coalesce(files).write.mode(SaveMode.Overwrite).parquet(path)
+    * `partitionCols` is typically Seq("event_date"). The mode is a
+    * writer option, not the session conf, so concurrent writers (the
+    * pipeline's mart chains) cannot turn each other's write into a
+    * static overwrite that wipes every other partition. */
+  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 
   /** Dynamic-overwrite write with a SORTED data layout on `sortCols`
     * — the layout lever for downstream scans: parquet keeps min/max
@@ -334,9 +324,9 @@ object MartSink {
       try tableExists(conn, table) finally conn.close()
     }
     if (!exists) {
-      // first load: everything is the delta
-      val n = df.count()
-      writeJdbc(df, url, table, deletePredicate = None, batchSize = batchSize)
+      // first load: everything is the delta, and the swap's insert
+      // count is the frame's row count — no separate count job
+      val n = writeJdbc(df, url, table, deletePredicate = None, batchSize = batchSize)
       return MergeStats(upserted = n, deleted = 0L, total = n)
     }
     val props = new java.util.Properties()
@@ -517,10 +507,11 @@ object MartSink {
     * clears the previous attempt inside the same transaction. With
     * `deletePredicate = None` only the insert runs (first-load /
     * append-only mode). The target table is created from the staging
-    * table's dialect-mapped schema if absent. */
+    * table's dialect-mapped schema if absent. Returns the rows the swap
+    * inserted, i.e. the row count of `df`. */
   def writeJdbc(df: DataFrame, url: String, table: String,
                 deletePredicate: Option[String] = None,
-                batchSize: Int = 10000): Unit = {
+                batchSize: Int = 10000): Long = {
     val dialect = JdbcDialects.get(url)
     // Spark's JDBC writer emits the TABLE name raw (the DB folds its
     // case) but quotes COLUMN names exact-case — mirror both here or
@@ -538,7 +529,7 @@ object MartSink {
       val exists = tableExists(conn, table)
       conn.setAutoCommit(false)
       val st = conn.createStatement()
-      try {
+      val inserted = try {
         if (!exists)
           // empty clone of staging → target inherits the exact
           // dialect-mapped column types Spark just created
@@ -546,8 +537,9 @@ object MartSink {
             s"CREATE TABLE $table AS SELECT $cols FROM $staging WITH NO DATA")
         // leg 2: the atomic swap — delete + insert in one transaction
         deletePredicate.foreach(p => st.executeUpdate(s"DELETE FROM $table WHERE $p"))
-        st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
+        val n = st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
         conn.commit()
+        n.toLong
       } catch {
         case e: Throwable => conn.rollback(); throw e
       } finally st.close()
@@ -557,6 +549,7 @@ object MartSink {
         val drop = conn.createStatement()
         try drop.executeUpdate(s"DROP TABLE $staging") finally drop.close()
       } catch { case _: java.sql.SQLException => () }
+      inserted
     } finally conn.close()
   }
 

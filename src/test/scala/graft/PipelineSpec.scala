@@ -57,6 +57,27 @@ class SourcesSpec extends SparkSpec {
     assert(back.filter(col("event_date") === "2024-01-02").collect().head.getAs[Long]("n") == 99L)
   }
 
+  test("dynamic overwrite is a writer option: a static session conf cannot wipe other dates") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_mart_static").toString
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      MartSink.writePartitioned(Seq((1L, "2024-01-01", 5L), (2L, "2024-01-02", 7L))
+        .toDF("user_id", "event_date", "n"), out, Seq("event_date"))
+      MartSink.writePartitioned(Seq((2L, "2024-01-02", 99L))
+        .toDF("user_id", "event_date", "n"), out, Seq("event_date"))
+      val back = spark.read.parquet(out).collect()
+        .map(r => (r.getAs[Any]("event_date").toString, r.getAs[Long]("n"))).toSet
+      assert(back == Set(("2024-01-01", 5L), ("2024-01-02", 99L)))
+      assert(spark.conf.get(key) == "static", "the writer must leave the session conf alone")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("key erasure rewrites only hit partitions, drops emptied ones, leaves the rest byte-identical") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_erase").toString
@@ -231,6 +252,16 @@ class SourcesSpec extends SparkSpec {
       rs.close()
       assert(!names.exists(_.toLowerCase.contains("_mrg_")), s"staging leak: $names")
     } finally conn.close()
+  }
+
+  test("first-load MERGE counts the rows it inserts: stats equal the frame's row count") {
+    val url = s"jdbc:derby:memory:graft_first${System.nanoTime};create=true"
+    val df = spark.range(0, 2500, 1, 7).selectExpr("id AS k", "id % 13 AS v")
+    assert(MartSink.mergeJdbc(df, url, "m_first", Seq("k")) ==
+      MartSink.MergeStats(df.count(), 0, df.count()))
+    assert(spark.read.jdbc(url, "m_first", new java.util.Properties()).count() == 2500)
+    assert(MartSink.mergeJdbc(df.filter("k < 0"), url, "m_empty", Seq("k")) ==
+      MartSink.MergeStats(0, 0, 0))
   }
 
   test("scoped MERGE with a per-scope-restarting key never deletes other scopes' rows") {
@@ -829,6 +860,91 @@ class PipelineSpec extends SparkSpec {
       assert(s.upserted == 0 && s.deleted == 0, s"$name replay shipped $s")
     }
     assert(spark.read.jdbc(url, "mart_user_daily", new java.util.Properties()).count() == uCount)
+  }
+
+  /** Names of the RDDs in the storage registry whose ids are not in
+    * `before` — the blocks a run left behind. */
+  private def storedSince(before: Set[Int]): Seq[String] =
+    spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+      .map(i => s"${i.id}:${i.name}").toSeq
+
+  private val ChainDate = "2024-01-16"
+
+  test("dated mart chains release their blocks; a rerun keeps the marts and ships nothing") {
+    val out = Files.createTempDirectory("graft_chains").toString
+    val url = s"jdbc:derby:memory:graft_chains${System.nanoTime};create=true"
+    val stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val r1 = Pipeline.run(spark, Sf, out, failFast = false, dates = Seq(ChainDate),
+      martJdbc = Some(url))
+    assert(storedSince(stored).isEmpty, s"blocks left by the run: ${storedSince(stored)}")
+    // the order and the first-load stats of the sequential build
+    assert(r1.martsWritten == Seq("mart_user_daily", "hourly_traffic",
+      "mart_funnel_daily", "mart_product_daily", "session_sequences", "mart_orders"))
+    assert(r1.martMerges.map { case (m, s) => m -> (s.upserted, s.deleted, s.total) } ==
+      Map("hourly_traffic" -> (19L, 0L, 19L), "mart_funnel_daily" -> (3L, 0L, 3L),
+        "mart_orders" -> (7L, 0L, 7L), "mart_product_daily" -> (32L, 0L, 32L),
+        "mart_user_daily" -> (11L, 0L, 11L), "session_sequences" -> (33L, 0L, 33L)))
+    def snapshot(m: String) = {
+      spark.catalog.refreshByPath(s"$out/$m")
+      spark.read.parquet(s"$out/$m").collect().map(_.toString).sorted.toSeq
+    }
+    val marts1 = r1.martsWritten.map(m => m -> snapshot(m)).toMap
+    assert(marts1.map { case (m, rows) => m -> rows.size.toLong } ==
+      r1.martMerges.map { case (m, s) => m -> s.total })
+    val r2 = Pipeline.run(spark, Sf, out, failFast = false, dates = Seq(ChainDate),
+      martJdbc = Some(url))
+    assert(storedSince(stored).isEmpty, s"blocks left by the rerun: ${storedSince(stored)}")
+    assert(r2.martsWritten == r1.martsWritten)
+    assert(r2.martMerges == r1.martMerges.map { case (m, s) => m -> MartSink.MergeStats(0, 0, s.total) })
+    r2.martsWritten.foreach(m => assert(snapshot(m) == marts1(m), s"$m changed on rerun"))
+  }
+
+  test("a failing merge is rethrown only after every mart chain settles, with no blocks left") {
+    val out = Files.createTempDirectory("graft_chain_fail").toString
+    // no create=true: the warehouse does not exist, every merge fails
+    // on its first connection, after its chain's parquet write
+    val absent = s"jdbc:derby:memory:graft_absent${System.nanoTime}"
+    val stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val e = intercept[java.sql.SQLException] {
+      Pipeline.run(spark, Sf, out, failFast = false, dates = Seq(ChainDate),
+        martJdbc = Some(absent))
+    }
+    assert(e.getSuppressed.length == 5, "the other five chains' failures ride along")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a chain is still running")
+    Seq("hourly_traffic" -> "event_date", "mart_funnel_daily" -> "event_date",
+        "mart_orders" -> "order_date", "mart_product_daily" -> "event_date",
+        "mart_user_daily" -> "event_date", "session_sequences" -> "session_date").foreach {
+      case (m, dateCol) => assert(new java.io.File(s"$out/$m/$dateCol=$ChainDate").isDirectory,
+        s"$m was not written")
+    }
+    assert(storedSince(stored).isEmpty, s"blocks left by the failed run: ${storedSince(stored)}")
+  }
+
+  test("Concurrently.all: input order, at most six at once, every thunk settles before a failure") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val running, peak = new AtomicInteger(0)
+    val got = Concurrently.all((0 until 10).map { i => () =>
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(30L * (10 - i)) // later thunks finish first
+      running.decrementAndGet()
+      i
+    })
+    assert(got == (0 until 10))
+    assert(peak.get() >= 2 && peak.get() <= 6, s"peak concurrency ${peak.get()}")
+    val slowDone = new AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Concurrently.all(Seq(
+        () => { Thread.sleep(300); slowDone.set(true); 0 },
+        () => throw new IllegalStateException("first"),
+        () => throw new IllegalArgumentException("second")))
+    }
+    assert(e.getMessage == "first" && slowDone.get(), "rethrown before every thunk settled")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    // the threads carry the caller's Spark local properties
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.tag", "caller")
+    try assert(Concurrently.all(Seq(() => sc.getLocalProperty("graft.test.tag"))) == Seq("caller"))
+    finally sc.setLocalProperty("graft.test.tag", null)
   }
 
   test("Pipeline.erase removes a user from every user-keyed mart (parquet + warehouse) with a full manifest") {

@@ -2247,14 +2247,29 @@ class DedupSpec extends SparkSpec {
     assert(operators.Sessionize.sessionSequences(spark, Sf).count() == sn)
     assert(operators.Sessionize.sessionMemo.builds == s0 + 1,
       "block loss must rebuild the session frame")
+    // (the co-view frame: the product-transition frame is empty at
+    // sf0.001, see the empty-frame case below)
     operators.Graph.edgeMemo.clear()
-    val edges = operators.Graph.productEdges(spark, Sf)
+    val edges = operators.Graph.coviewEdges(spark, Sf)
     val en = edges.count()
+    assert(en > 0)
     val e0 = operators.Graph.edgeMemo.builds
     graft.Caches.unpersistCheckpointed(edges)
-    assert(operators.Graph.productEdges(spark, Sf).count() == en)
+    assert(operators.Graph.coviewEdges(spark, Sf).count() == en)
     assert(operators.Graph.edgeMemo.builds == e0 + 1,
       "block loss must rebuild the edge frame")
+    // an empty frame checkpoints to a zero-partition RDD, which has no
+    // blocks to lose and which the storage registry never lists: it is
+    // built once and then served from the memo
+    val empty = operators.Graph.productEdges(spark, Sf)
+    assert(empty.count() == 0)
+    assert(empty.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getNumPartitions
+    } == Seq(0))
+    val p1 = operators.Graph.edgeMemo.builds
+    assert(operators.Graph.productEdges(spark, Sf).count() == 0)
+    assert(operators.Graph.edgeMemo.builds == p1,
+      "an empty memo frame must be served, not rebuilt")
     // the quality-LR model holds a checkpointed feature frame: the
     // same contract through its eval consumer
     TextAnalysis.qualityLrMemo.clear()
