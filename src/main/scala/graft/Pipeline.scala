@@ -371,7 +371,7 @@ object Pipeline {
         val merges = Concurrently.all(marts.map { case (name, df) =>
           () => name -> martChain(name, df, outDir, dates, martJdbc)
         }).collect { case (name, Some(stats)) => name -> stats }.toMap
-        // cross-run artifact versioning (r14): a COMPLETED run
+        // cross-run artifact versioning: a COMPLETED run
         // snapshots the registered stamped-artifact manifests under
         // this run's id; no derivable date → skip, mirroring the
         // drift log ("unknown" would permanently win max(run_id))
@@ -710,7 +710,7 @@ object Pipeline {
       val sessionBase = if (quarantine) Sessionize.cleanEvents(scopeFrame)
                         else scopeFrame
       val carried = operators.Skew.measure(sessionBase, "user_id",
-        armThreshold = 16.0)
+        armThreshold = Sessionize.ArmThreshold)
       val result = run(spark, sfDir, outDir, failFast = failFast,
         dates = plan.stale, checkLogDir = checkLogDir,
         quarantine = quarantine, martJdbc = martJdbc,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.operators.EventMarts.enriched
 
@@ -11,20 +11,26 @@ import graft.operators.EventMarts.enriched
   * (/root/reference/scripts/spark_batch_processor.py:266-324) — the
   * testdata has no session_id, so sessions are derived with the classic
   * lag + cumulative-sum pattern: a new session starts after a
-  * `gapSeconds` silence per user.
+  * `GapSeconds` silence per user.
   *
-  * Scale notes: all three window functions share ONE partitioning —
-  * the per-session `row_number` clusters on (user_id, session_idx),
-  * which the existing HashPartitioning(user_id) already satisfies
-  * (subset rule), so it adds only a partition-local sort, and the
-  * subsequent groupBy(user_id, session_idx) is likewise co-located.
+  * Two sessionize forms feed every session query: the plain
+  * [[sessionized]] (one user_id exchange) and the segmented
+  * [[sessionizedBucketed]] (no per-user window; safe for a hot user).
+  * Both emit the same (user_id, session_idx) numbering plus `bucket`.
+  * Each query has ONE consumer over either base; its `_bucketed` entry
+  * point is that consumer over the segmented base. That is sound
+  * because Spark plans the consumers' aggregates (count / min / max /
+  * collect_list, and countDistinct's dedup on (user_id, session_idx,
+  * event_id)) as partial aggregates below the session-grain exchange
+  * of the segmented base, and adds no exchange over the plain base.
+  * Pairs (transitions / markov / surprise) and funnel keep two
+  * consumers: their plain consumer is a window over a whole session.
+  *
   * Sequences are HARD-CAPPED at `MaxSeqEvents` events: the
   * `collect_list` aggregates `when(rank <= cap, …)` so the aggregation
   * BUFFER is bounded, not just the output row — a bot user with a
-  * multi-million-event "session" costs `MaxSeqEvents` structs of state,
-  * with the tail surfaced as `overflow_events`. At 100 TB, user_id
-  * partitioning distributes evenly (no hot keys in behavioral data;
-  * were there any, AQE skew-join/salting applies).
+  * multi-million-event "session" costs `MaxSeqEvents` structs of state
+  * per bucket, with the tail surfaced as `overflow_events`.
   */
 object Sessionize {
 
@@ -35,46 +41,63 @@ object Sessionize {
     * output row width against pathological single-user sessions. */
   val MaxSeqEvents = 100
 
-  /** Event-level sessionized frame (user_id, event_id, event_type,
-    * event_epoch, session_idx) — the shared base of every session
-    * query. One hash partitioning on user_id; every downstream window
-    * keyed on (user_id, session_idx) is satisfied by the subset rule
-    * and adds only a partition-local sort. */
-  private[graft] def sessionized(e: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_epoch", "event_id")
-    e.select("user_id", "event_id", "event_type", "event_epoch")
-      .withColumn("prev_epoch", lag("event_epoch", 1).over(w))
+  /** Bucket width of the segmented sessionize and of the `bucket`
+    * column both forms emit: one day. Wider buckets mean fewer boundary
+    * merges, narrower ones more spread for a hot user. */
+  val BucketSeconds = 86400L
+  // the segmented form orders present buckets only: an empty bucket
+  // between two events must imply a gap > GapSeconds
+  require(BucketSeconds > GapSeconds, "BucketSeconds must exceed GapSeconds")
+
+  /** Hot-key ratio (top user's rows over the mean) at which
+    * [[sessionSequencesAuto]] and the backfill census take the segmented
+    * base. Higher than a join's 4: the segmented path costs an extra
+    * key-dimension window and a co-partitioned join, worth paying only
+    * for a real bot or sentinel, not mild behavioral imbalance. */
+  val ArmThreshold = 16.0
+
+  /** The columns the session queries carry through sessionize. */
+  private val SessionCols = Seq("user_id", "event_id", "event_type", "event_epoch")
+
+  private def bucketCol = floor(col("event_epoch") / BucketSeconds).as("bucket")
+
+  /** `e` gap-numbered into `idx` along `w` (ordered by (event_epoch,
+    * event_id)): a row opens a session when its previous row in `w` is
+    * absent or more than GapSeconds earlier. */
+  private def gapNumbered(e: DataFrame, w: WindowSpec, idx: String): DataFrame =
+    e.withColumn("prev_epoch", lag("event_epoch", 1).over(w))
       .withColumn("is_new",
         when(col("prev_epoch").isNull || col("event_epoch") - col("prev_epoch") > GapSeconds, 1)
           .otherwise(0))
-      .withColumn("session_idx",
+      .withColumn(idx,
         sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
 
-  /** Default bucket width for the hot-user-safe sessionize: one day.
-    * Any value works for correctness (boundary merges compare REAL
-    * epochs); wider buckets mean fewer merges, narrower buckets more
-    * spread for a pathological user. */
-  val BucketSeconds = 86400L
+  /** Plain sessionize: `cols` (which must include user_id, event_id and
+    * event_epoch) + bucket + session_idx. One hash partitioning on
+    * user_id; every downstream window or groupBy keyed on (user_id,
+    * session_idx[, bucket]) is satisfied by the subset rule and adds
+    * only a partition-local sort. `bucket` is derived after the
+    * exchange, so it is never shuffled. */
+  private[graft] def sessionized(e: DataFrame, cols: Seq[String] = SessionCols): DataFrame =
+    gapNumbered(e.select(cols.map(col): _*),
+        Window.partitionBy("user_id").orderBy("event_epoch", "event_id"), "session_idx")
+      .select(cols.map(col) :+ bucketCol :+ col("session_idx"): _*)
 
-  /** Hot-key-safe sessionization — identical (user_id, session_idx)
-    * assignment as `sessionized`, computed without ever funneling one
+  /** Segmented sessionize — the same rows and (user_id, session_idx)
+    * assignment as [[sessionized]], computed without ever funneling one
     * user's full history through one task. The plain path's window
     * partitions by user_id, so a bot/sentinel user with 10^8 events is
     * a straggler task no salt can fix (salting a WINDOW would break
-    * the lag semantics; `Skew.saltedJoin` only treats joins). This is
-    * the segmented form:
+    * the lag semantics; `Skew.saltedJoin` only treats joins):
     *
-    *  1. bucket = floor(epoch / bucketSeconds); sessionize LOCALLY
-    *     within (user, bucket) — the hot user's years of traffic now
-    *     spread over #buckets tasks;
+    *  1. sessionize LOCALLY within (user, bucket) — the hot user's
+    *     years of traffic now spread over #buckets tasks;
     *  2. per (user, bucket) boundary frame (first/last epoch, local
     *     session count) — KEY-dimension, ≤ active user-days rows; a
     *     lag over it decides which bucket-initial sessions MERGE into
     *     the previous bucket's last session (real epoch gap ≤
     *     GapSeconds — empty buckets in between imply a gap > bucket >
-    *     gap threshold, so ordering by present buckets is sound when
-    *     bucketSeconds > GapSeconds, which is required);
+    *     gap threshold, so ordering by present buckets is sound);
     *  3. global idx = base(b) + local_idx − merge(b), where base is
     *     the running sum of post-merge session counts of earlier
     *     buckets — joined back on (user, bucket), co-partitioned with
@@ -85,31 +108,9 @@ object Sessionize {
     * numbering telescopes to the plain cumsum — pinned by the
     * planted-bot equivalence spec. */
   private[graft] def sessionizedBucketed(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    sessionizedBucketedCols(e,
-      Seq("user_id", "event_id", "event_type", "event_epoch"), bucketSeconds)
-
-  /** The same segmented sessionize carrying an arbitrary column set
-    * through the windows (the `typedSessionized` counterpart) — the
-    * quality-gate path needs its per-event check flags alongside the
-    * session assignment. `cols` must include user_id, event_id and
-    * event_epoch (the ordering keys). */
-  private[graft] def sessionizedBucketedCols(e: DataFrame, cols: Seq[String],
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
-    require(bucketSeconds > GapSeconds,
-      s"bucketSeconds ($bucketSeconds) must exceed GapSeconds ($GapSeconds): " +
-        "an empty bucket between events must imply a session break")
-    val wLocal = Window.partitionBy("user_id", "bucket")
-      .orderBy("event_epoch", "event_id")
-    val local = e
-      .select(cols.map(col) :+
-        floor(col("event_epoch") / bucketSeconds).as("bucket"): _*)
-      .withColumn("prev_epoch", lag("event_epoch", 1).over(wLocal))
-      .withColumn("is_new",
-        when(col("prev_epoch").isNull ||
-          col("event_epoch") - col("prev_epoch") > GapSeconds, 1).otherwise(0))
-      .withColumn("local_idx",
-        sum("is_new").over(wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      cols: Seq[String] = SessionCols): DataFrame = {
+    val local = gapNumbered(e.select(cols.map(col) :+ bucketCol: _*),
+      Window.partitionBy("user_id", "bucket").orderBy("event_epoch", "event_id"), "local_idx")
     // boundary resolution on the tiny (user, bucket) frame
     val wUser = Window.partitionBy("user_id").orderBy("bucket")
     val resolved = local.groupBy("user_id", "bucket")
@@ -154,112 +155,48 @@ object Sessionize {
     sessionFrame(spark, dir, "sequences")(
       sessionSequencesFrom(enriched(spark, dir)))
 
-  /** `sessionSequences` on the hot-key-safe base — identical output
-    * (same oracle SQL), no per-user funnel anywhere in the plan:
-    *
-    *  - the per-session prefix rank runs within (user, bucket,
-    *    session) — satisfied by the (user, bucket) exchange, local
-    *    sort only;
-    *  - phase A aggregates per (user, session, bucket) — again the
-    *    subset rule, NO new exchange — into bounded partials: the
-    *    bucket-local first-`MaxSeqEvents` structs + algebraic stats;
-    *  - phase B merges partials per (user, session): flatten + sort +
-    *    slice reconstructs the global prefix exactly (an event in the
-    *    session's first 100 is in its bucket's first 100 — the top-k
-    *    merge property). The hot task's state is now
-    *    O(session_span_buckets × MaxSeqEvents) structs — a years-long
-    *    continuous bot session costs ~100 structs per DAY instead of
-    *    its raw event count.
-    *
-    * Registered as `session_sequences_bucketed` against the SAME
-    * DuckDB oracle as the plain path — the equivalence is
-    * hash-checked, not claimed. */
+  /** `sessionSequences` over the segmented base — same consumer, same
+    * oracle SQL. */
   def sessionSequencesBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionSequencesBucketedFrom(enriched(spark, dir))
 
-  def sessionSequencesBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
-    val s = sessionizedBucketed(e, bucketSeconds)
-    val wRank = Window.partitionBy("user_id", "bucket", "session_idx")
+  def sessionSequencesFrom(e: DataFrame): DataFrame = sequencesOf(sessionized(e))
+
+  def sessionSequencesBucketedFrom(e: DataFrame): DataFrame =
+    sequencesOf(sessionizedBucketed(e))
+
+  /** The census-armed choice between the two: census user_id with
+    * `Skew.measure` (bounded — one map-combined count + a
+    * TakeOrdered(1), memoized per frame) and take the segmented base
+    * only past [[ArmThreshold]]. `preplanned` skips the census with a
+    * plan the caller measured (the backfill-scope carry). Returns the
+    * plan so callers log what armed. */
+  def sessionSequencesAuto(e: DataFrame,
+      preplanned: Option[Skew.SkewPlan] = None): (DataFrame, Skew.SkewPlan) = {
+    val plan = preplanned.getOrElse(Skew.measure(e, "user_id", ArmThreshold))
+    (if (plan.armed) sessionSequencesBucketedFrom(e) else sessionSequencesFrom(e), plan)
+  }
+
+  /** One row per (user, session): the first `MaxSeqEvents` event types
+    * in (epoch, event_id) order + stats. The rank runs within (user,
+    * session, bucket), a clustering either base already provides, and
+    * each bucket contributes its first `MaxSeqEvents` structs; sorting
+    * the collected structs and slicing recovers the session's global
+    * prefix exactly (an event in the session's first 100 is in its
+    * bucket's first 100). On the segmented base the collect_list
+    * combines map-side, so a years-long bot session costs ~100 structs
+    * per day, not its raw event count. */
+  private def sequencesOf(s: DataFrame): DataFrame = {
+    val wRank = Window.partitionBy("user_id", "session_idx", "bucket")
       .orderBy("event_epoch", "event_id")
-    val partials = s
-      .withColumn("r", row_number().over(wRank))
-      .groupBy("user_id", "session_idx", "bucket")
-      .agg(
-        collect_list(when(col("r") <= MaxSeqEvents,
-          struct(col("event_epoch"), col("event_id"), col("event_type"))))
-          .as("prefix"),
-        count(lit(1)).as("n"),
-        min("event_epoch").as("first_epoch"),
-        max("event_epoch").as("last_epoch"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("has_p"))
-    partials
-      .groupBy("user_id", "session_idx")
-      .agg(
-        array_join(
-          transform(
-            slice(array_sort(flatten(collect_list(col("prefix")))),
-              1, MaxSeqEvents),
-            x => x.getField("event_type")),
-          " -> ").as("event_sequence"),
-        sum(col("n")).as("event_count"),
-        min(col("first_epoch")).as("session_start_epoch"),
-        max(col("last_epoch")).as("session_end_epoch"),
-        (max(col("last_epoch")) - min(col("first_epoch"))).as("duration_seconds"),
-        max(col("has_p")).as("has_purchase"),
-        greatest(sum(col("n")) - lit(MaxSeqEvents), lit(0L)).as("overflow_events"))
-      .orderBy("user_id", "session_idx")
-  }
-
-  /** The measured opt-in closing the loop end-to-end: census user_id
-    * with `Skew.measure` (bounded — one map-combined count + a
-    * TakeOrdered(1)) and take the bucketed base only when the hot-key
-    * ratio crosses `armThreshold`. The default threshold is higher
-    * than a join's (16 vs 4): the bucketed path costs an extra
-    * key-dimension window + co-partitioned join, worth paying only
-    * for a real bot/sentinel, not mild behavioral imbalance. Returns
-    * the plan so callers log what armed. */
-  def sessionSequencesAuto(e: DataFrame, armThreshold: Double = 16.0,
-      bucketSeconds: Long = BucketSeconds,
-      preplanned: Option[Skew.SkewPlan] = None): (DataFrame, Skew.SkewPlan) =
-    sessionAuto(e, armThreshold, preplanned)(
-      sessionSequencesFrom, sessionSequencesBucketedFrom(_, bucketSeconds))
-
-  /** Generic armed chooser for the whole session family: census
-    * user_id once (memoized — `Skew.measure` caches the census per
-    * (frame, key), so a pipeline arming several session queries over
-    * one enriched frame pays ONE key count), take the bucketed form
-    * only past `armThreshold`. Every family query has a bucketed twin
-    * hash-checked against the same oracle, so the switch is
-    * output-invariant by construction. `preplanned` short-circuits
-    * the census entirely with a plan the CALLER measured — the
-    * backfill-scope carry: a multi-date replay measures its widest
-    * frame once and drives every scoped run with that plan (the
-    * output is plan-invariant either way; only the census cost and
-    * the arming evidence move). */
-  def sessionAuto(e: DataFrame, armThreshold: Double = 16.0,
-      preplanned: Option[Skew.SkewPlan] = None)(
-      plain: DataFrame => DataFrame,
-      bucketed: DataFrame => DataFrame): (DataFrame, Skew.SkewPlan) = {
-    val plan = preplanned.getOrElse(Skew.measure(e, "user_id", armThreshold))
-    (if (plan.armed) bucketed(e) else plain(e), plan)
-  }
-
-  def sessionSequencesFrom(e: DataFrame): DataFrame = {
-    val withGap = sessionized(e)
-      // same user_id hash partitioning satisfies the (user_id,
-      // session_idx) clustering — only a local sort is added here
-      .withColumn("seq_rank",
-        row_number().over(Window.partitionBy("user_id", "session_idx")
-          .orderBy("event_epoch", "event_id")))
-    withGap
+    s.withColumn("r", row_number().over(wRank))
       .groupBy(col("user_id"), col("session_idx"))
       .agg(
         array_join(
           transform(
-            array_sort(collect_list(
-              when(col("seq_rank") <= MaxSeqEvents,
-                struct(col("event_epoch"), col("event_id"), col("event_type"))))),
+            slice(array_sort(collect_list(when(col("r") <= MaxSeqEvents,
+              struct(col("event_epoch"), col("event_id"), col("event_type"))))),
+              1, MaxSeqEvents),
             x => x.getField("event_type")),
           " -> ").as("event_sequence"),
         count(lit(1)).as("event_count"),
@@ -308,67 +245,39 @@ object Sessionize {
     * and purchase rate. An (entry='view', exit='error') cell with a
     * high count is the classic funnel-breakage signature that
     * `error_impact` (session grain) doesn't localize to an entry
-    * point.
-    *
-    * Scale shape: rides the ONE user_id exchange of `sessionized` —
-    * both row_number ranks and the session rollup are (user_id,
-    * session_idx)-clustered (subset rule, local sorts only), and the
-    * final census is a map-combined rollup to ≤ |event_types|² rows. */
+    * point. */
   def sessionEntryExit(spark: SparkSession, dir: String): DataFrame =
     sessionEntryExitFrom(enriched(spark, dir))
 
-  def sessionEntryExitFrom(e: DataFrame): DataFrame = {
-    val wAsc = Window.partitionBy("user_id", "session_idx")
-      .orderBy(col("event_epoch").asc, col("event_id").asc)
-    val wDesc = Window.partitionBy("user_id", "session_idx")
-      .orderBy(col("event_epoch").desc, col("event_id").desc)
-    entryExitCensus(sessionized(e)
-      .withColumn("rn_a", row_number().over(wAsc))
-      .withColumn("rn_d", row_number().over(wDesc))
-      .groupBy("user_id", "session_idx")
-      .agg(
-        max(when(col("rn_a") === 1, col("event_type"))).as("entry_type"),
-        max(when(col("rn_d") === 1, col("event_type"))).as("exit_type"),
-        count(lit(1)).as("n_events"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("has_p")))
-  }
+  def sessionEntryExitFrom(e: DataFrame): DataFrame = entryExitOf(sessionized(e))
 
-  /** session_entry_exit over the hot-key-safe base — same oracle. The
-    * per-session entry/exit picks become ALGEBRAIC min/max over
-    * (epoch, event_id, type) structs ((epoch, id) is unique per user,
-    * so struct ordering is total and tie-free): per-(user, session,
-    * bucket) partials ride the bucketed exchange, the session merge is
-    * a map-combined min/max of one struct per bucket — no row_number
-    * window over a whole hot session anywhere. */
+  /** session_entry_exit over the segmented base — same consumer, same
+    * oracle. */
   def sessionEntryExitBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionEntryExitBucketedFrom(enriched(spark, dir))
 
-  def sessionEntryExitBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
-    val ev = struct(col("event_epoch"), col("event_id"), col("event_type"))
-    val sessions = sessionizedBucketed(e, bucketSeconds)
-      .groupBy(col("user_id"), col("session_idx"), col("bucket"))
-      .agg(min(ev).as("first_ev"), max(ev).as("last_ev"),
-        count(lit(1)).as("n"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("b_p"))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(min(col("first_ev")).as("fe"), max(col("last_ev")).as("le"),
-        sum(col("n")).as("n_events"), max(col("b_p")).as("has_p"))
-      .select(col("fe.event_type").as("entry_type"),
-        col("le.event_type").as("exit_type"),
-        col("n_events"), col("has_p"))
-    entryExitCensus(sessions)
-  }
+  def sessionEntryExitBucketedFrom(e: DataFrame): DataFrame =
+    entryExitOf(sessionizedBucketed(e))
 
-  private def entryExitCensus(sessions: DataFrame): DataFrame =
-    sessions
-      .groupBy("entry_type", "exit_type")
+  /** The per-session entry/exit picks are ALGEBRAIC min/max over
+    * (epoch, event_id, type) structs ((epoch, id) is unique per user,
+    * so struct ordering is total and tie-free) — no row_number window
+    * over a session, so they combine map-side over either base. The
+    * census is a map-combined rollup to ≤ |event_types|² rows. */
+  private def entryExitOf(s: DataFrame): DataFrame = {
+    val ev = struct(col("event_epoch"), col("event_id"), col("event_type"))
+    s.groupBy(col("user_id"), col("session_idx"))
+      .agg(min(ev).as("fe"), max(ev).as("le"),
+        count(lit(1)).as("n_events"),
+        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("has_p"))
+      .groupBy(col("fe.event_type").as("entry_type"), col("le.event_type").as("exit_type"))
       .agg(
         count(lit(1)).as("n_sessions"),
         avg(col("n_events").cast("double")).as("avg_events"),
         (sum(col("has_p")).cast("double") / count(lit(1)).cast("double"))
           .as("purchase_rate"))
       .orderBy("entry_type", "exit_type")
+  }
 
   /** Same session CTE as `sessionSequencesSql`; entry/exit picked by
     * symmetric row_numbers so ties break identically to the Scala
@@ -412,22 +321,16 @@ object Sessionize {
   def sessionPatterns(spark: SparkSession, dir: String): DataFrame =
     patternsRollup(sessionSequences(spark, dir))
 
-  /** session_patterns over the hot-key-safe session rows — same
-    * oracle. Rides [[sessionSequencesBucketedFrom]]'s bounded
-    * top-k-merged sequences; the pattern rollup itself shuffles only
-    * (sequence, partial-count) rows either way. */
+  /** session_patterns over the segmented base's session rows — same
+    * oracle. */
   def sessionPatternsBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionPatternsBucketedFrom(enriched(spark, dir))
 
-  /** Frame-input plain form — the A/B counterpart of
-    * [[sessionPatternsBucketedFrom]] (the scale probes time both legs
-    * of the pair on the same enriched frame). */
   def sessionPatternsFrom(e: DataFrame): DataFrame =
     patternsRollup(sessionSequencesFrom(e))
 
-  def sessionPatternsBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    patternsRollup(sessionSequencesBucketedFrom(e, bucketSeconds))
+  def sessionPatternsBucketedFrom(e: DataFrame): DataFrame =
+    patternsRollup(sessionSequencesBucketedFrom(e))
 
   private def patternsRollup(sessions: DataFrame): DataFrame =
     sessions
@@ -504,7 +407,10 @@ object Sessionize {
 
   /** Within-session consecutive (from_type, to_type) pairs at
     * (user_id, session_idx) grain — the shared input of
-    * session_transitions / markov_next_event / session_surprise. */
+    * session_transitions / markov_next_event / session_surprise. Pairs
+    * keep two forms: this `lead` is a window over a whole session, so
+    * over the segmented base it would move a hot session's raw rows to
+    * one task. */
   private[graft] def sessionPairsFrom(e: DataFrame): DataFrame = {
     val wSess = Window.partitionBy("user_id", "session_idx")
       .orderBy("event_epoch", "event_id")
@@ -533,9 +439,8 @@ object Sessionize {
     * local pairs; one that does contributes exactly one boundary pair
     * per crossing — the union telescopes to the plain path's pair list
     * (pinned by the torture-set spec and the shared oracle hashes). */
-  private[graft] def sessionPairsBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
-    val s = sessionizedBucketed(e, bucketSeconds)
+  private[graft] def sessionPairsBucketedFrom(e: DataFrame): DataFrame = {
+    val s = sessionizedBucketed(e)
     val wLoc = Window.partitionBy("user_id", "bucket", "session_idx")
       .orderBy("event_epoch", "event_id")
     val local = s
@@ -561,13 +466,12 @@ object Sessionize {
   def sessionTransitionsFrom(e: DataFrame): DataFrame =
     transitionsRollup(sessionPairsFrom(e))
 
-  /** session_transitions over the hot-key-safe base — same oracle. */
+  /** session_transitions over the segmented pairs — same oracle. */
   def sessionTransitionsBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionTransitionsBucketedFrom(enriched(spark, dir))
 
-  def sessionTransitionsBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    transitionsRollup(sessionPairsBucketedFrom(e, bucketSeconds))
+  def sessionTransitionsBucketedFrom(e: DataFrame): DataFrame =
+    transitionsRollup(sessionPairsBucketedFrom(e))
 
   private def transitionsRollup(pairs: DataFrame): DataFrame =
     pairs
@@ -612,11 +516,15 @@ object Sessionize {
   /** Per-session stat frame shared by session_daily / error_impact /
     * session_concurrency: (user_id, session_idx, event_count,
     * session_start_epoch, session_end_epoch, has_purchase, has_error).
-    * Plain form: one groupBy riding the sessionize exchange (subset
-    * rule). Unused columns are pruned by Catalyst per consumer. */
-  private[graft] def sessionStatsFrom(e: DataFrame): DataFrame =
-    sessionized(e)
-      .groupBy(col("user_id"), col("session_idx"))
+    * One groupBy (user_id, session_idx): over the plain base it rides
+    * the sessionize exchange (subset rule); over the segmented base its
+    * count/min/max combine map-side below the session-grain exchange,
+    * so a bot's 10^8-event session crosses the wire as partial rows.
+    * Unused columns are pruned by Catalyst per consumer. */
+  private[graft] def sessionStatsFrom(e: DataFrame): DataFrame = statsOf(sessionized(e))
+
+  private def statsOf(s: DataFrame): DataFrame =
+    s.groupBy(col("user_id"), col("session_idx"))
       .agg(
         count(lit(1)).as("event_count"),
         min(col("event_epoch")).as("session_start_epoch"),
@@ -624,43 +532,16 @@ object Sessionize {
         max(when(col("event_type") === "purchase", 1).otherwise(0)).as("has_purchase"),
         max(when(col("event_type") === "error", 1).otherwise(0)).as("has_error"))
 
-  /** The hot-key-safe twin of [[sessionStatsFrom]] — identical rows,
-    * computed as per-(user, session, bucket) ALGEBRAIC partials riding
-    * the (user, bucket) exchange of [[sessionizedBucketed]], merged per
-    * session with map-combined sum/min/max. Nothing here ever holds one
-    * user's (or one session's) full event list in a task: the partial
-    * aggregation combines map-side BEFORE the session-grain shuffle, so
-    * a bot's 10^8-event session crosses the wire as one partial row per
-    * (bucket, map task), not 10^8 rows. */
-  private[graft] def sessionStatsBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    sessionizedBucketed(e, bucketSeconds)
-      .groupBy(col("user_id"), col("session_idx"), col("bucket"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("event_epoch")).as("b_start"),
-        max(col("event_epoch")).as("b_end"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("b_p"),
-        max(when(col("event_type") === "error", 1).otherwise(0)).as("b_e"))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(
-        sum(col("n")).as("event_count"),
-        min(col("b_start")).as("session_start_epoch"),
-        max(col("b_end")).as("session_end_epoch"),
-        max(col("b_p")).as("has_purchase"),
-        max(col("b_e")).as("has_error"))
-
   def sessionDailyFrom(e: DataFrame): DataFrame =
     sessionDailyRollup(sessionStatsFrom(e))
 
-  /** session_daily over the hot-key-safe base — same oracle SQL; the
+  /** session_daily over the segmented base — same oracle SQL; the
     * equivalence is hash-checked by the gate, not claimed. */
   def sessionDailyBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionDailyBucketedFrom(enriched(spark, dir))
 
-  def sessionDailyBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    sessionDailyRollup(sessionStatsBucketedFrom(e, bucketSeconds))
+  def sessionDailyBucketedFrom(e: DataFrame): DataFrame =
+    sessionDailyRollup(statsOf(sessionizedBucketed(e)))
 
   private def sessionDailyRollup(sessions: DataFrame): DataFrame = {
     sessions
@@ -705,16 +586,14 @@ object Sessionize {
   def sessionConcurrencyFrom(e: DataFrame): DataFrame =
     concurrencyRollup(sessionStatsFrom(e))
 
-  /** session_concurrency over the hot-key-safe base — same oracle SQL.
-    * The sweep-line itself was already key-dimension (session boundary
-    * rows, hour-bucketed prefix sums); only the per-session start/end
-    * rollup needed the bounded partial-merge form. */
+  /** session_concurrency over the segmented base — same oracle SQL.
+    * The sweep-line itself is key-dimension (session boundary rows,
+    * hour-bucketed prefix sums). */
   def sessionConcurrencyBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionConcurrencyBucketedFrom(enriched(spark, dir))
 
-  def sessionConcurrencyBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    concurrencyRollup(sessionStatsBucketedFrom(e, bucketSeconds))
+  def sessionConcurrencyBucketedFrom(e: DataFrame): DataFrame =
+    concurrencyRollup(statsOf(sessionizedBucketed(e)))
 
   private def concurrencyRollup(stats: DataFrame): DataFrame = {
     val sessions = stats.select(
@@ -799,7 +678,9 @@ object Sessionize {
     * provides (each consumes the previous one's column — same
     * partition spec, the sort is reused, zero extra exchanges); the
     * session rollup rides the same exchange; the day rollup sees only
-    * session rows. */
+    * session rows. The funnel keeps two forms: these windows span a
+    * whole session, so over the segmented base they would move a hot
+    * session's raw rows to one task. */
   def sessionFunnel(spark: SparkSession, dir: String): DataFrame =
     sessionFunnelFrom(enriched(spark, dir))
 
@@ -824,7 +705,7 @@ object Sessionize {
     funnelDayRollup(sessions)
   }
 
-  /** session_funnel over the hot-key-safe base — same oracle. The
+  /** session_funnel over the segmented base — same oracle. The
     * chained conditional mins (first view V → first click ≥ V → first
     * purchase ≥ that click) resolve in three grains, none of which
     * funnels a hot session's events into one task:
@@ -848,10 +729,9 @@ object Sessionize {
   def sessionFunnelBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionFunnelBucketedFrom(enriched(spark, dir))
 
-  def sessionFunnelBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
+  def sessionFunnelBucketedFrom(e: DataFrame): DataFrame = {
     val wB = Window.partitionBy("user_id", "session_idx", "bucket")
-    val staged = sessionizedBucketed(e, bucketSeconds)
+    val staged = sessionizedBucketed(e)
       .withColumn("l_mv",
         min(when(col("event_type") === "view", col("event_epoch"))).over(wB))
       .withColumn("l_mc_any",
@@ -875,7 +755,7 @@ object Sessionize {
         min(col("l_mp_any")).as("mp_any"),
         min(col("l_mp_ge_c")).as("mp_ge_c"), min(col("l_mp_ge_a")).as("mp_ge_a"))
     val wS = Window.partitionBy("user_id", "session_idx")
-    val bs = lit(bucketSeconds)
+    val bs = lit(BucketSeconds)
     val resolved = partials
       .withColumn("v", min(col("mv")).over(wS))
       .withColumn("cand_c",
@@ -980,11 +860,11 @@ object Sessionize {
     * view/click IN THE SAME SESSION — sharper than the user-day form).
     *
     * Scale shape: flags are narrow per-event projections computed
-    * BEFORE the sessionize exchange; the per-session rollup rides the
-    * one user_id hash partitioning (subset rule — zero extra
-    * exchanges); the single countDistinct plans as a two-level
-    * fixed-state aggregate, not an Expand; the day rollup sees only
-    * session rows. */
+    * BEFORE the sessionize exchange; over the plain base the
+    * per-session rollup, countDistinct included, rides the one user_id
+    * hash partitioning (subset rule — zero extra exchanges); the single
+    * countDistinct plans as a two-level fixed-state aggregate, not an
+    * Expand; the day rollup sees only session rows. */
   def sessionQualityGate(spark: SparkSession, dir: String): DataFrame =
     sessionQualityGateFrom(enriched(spark, dir))
 
@@ -1007,27 +887,25 @@ object Sessionize {
       (col("product_k").isNull || col("product_k") < 0 ||
        col("product_k") > 99 || col("value") <= 0)).cast("int")
 
-  /** Per-event check flags + gap sessionization over the typed
-    * (null-free) rows; carries `cols` through the window. */
-  private def typedSessionized(e: DataFrame, cols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_epoch", "event_id")
+  /** The typed (null-free) rows: `cols` + the per-event check flags. */
+  private def typedFlagged(e: DataFrame, cols: Seq[String]): DataFrame =
     e.filter(typedRowFilter)
       .select(cols.map(col) :+ fRange.as("f_range") :+ fTs.as("f_ts") :+
         fIntegrity.as("f_integrity"): _*)
-      .withColumn("prev_epoch", lag("event_epoch", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_epoch").isNull || col("event_epoch") - col("prev_epoch") > GapSeconds, 1)
-          .otherwise(0))
-      .withColumn("session_idx",
-        sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("prev_epoch", "is_new")
-  }
+
+  private val FlagCols = Seq("f_range", "f_ts", "f_integrity")
+
+  /** Typed rows with their check flags, plain-sessionized. */
+  private def typedSessionized(e: DataFrame, cols: Seq[String]): DataFrame =
+    sessionized(typedFlagged(e, cols), cols ++ FlagCols)
 
   /** Session verdict rows: one row per session with per-reason flags
     * and the overall `quarantined` bit. */
   private[graft] def gatedSessions(e: DataFrame): DataFrame =
-    typedSessionized(e, Seq("user_id", "event_id", "event_type", "event_epoch"))
-      .groupBy(col("user_id"), col("session_idx"))
+    verdictsOf(typedSessionized(e, SessionCols))
+
+  private def verdictsOf(s: DataFrame): DataFrame =
+    s.groupBy(col("user_id"), col("session_idx"))
       .agg(
         count(lit(1)).as("event_count"),
         countDistinct(col("event_id")).as("distinct_ids"),
@@ -1047,56 +925,17 @@ object Sessionize {
   def sessionQualityGateFrom(e: DataFrame): DataFrame =
     gateDayRollup(gatedSessions(e))
 
-  /** session_quality_gate over the hot-key-safe base — same oracle.
-    * The flag rollup is per-(user, session, bucket) algebraic partials
-    * merged map-combined at session grain. The one non-algebraic piece
-    * — exact distinct event_id per session (the q_dup premise) — runs
-    * as a dedup keyed on (user, session, event_id): the exchange
-    * spreads a hot session over its distinct ids (high cardinality, no
-    * hot reducer), and the follow-up per-session COUNT map-combines,
-    * so only partial-count rows reach the session reducer. The stats ×
-    * distinct join is session-grain on both sides (1 row each for the
-    * hot session). The sessionize recomputes once per consumer branch
-    * — two scans, both funnel-free; callers wanting one scan can
-    * localCheckpoint upstream. */
+  /** session_quality_gate over the segmented base — same consumer,
+    * same oracle, one scan. Over this base the countDistinct plans as
+    * a dedup exchange on (user_id, session_idx, event_id), which
+    * spreads a hot session over its distinct ids, then a per-session
+    * count that combines map-side. */
   def sessionQualityGateBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionQualityGateBucketedFrom(enriched(spark, dir))
 
-  def sessionQualityGateBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame = {
-    val typed = e.filter(typedRowFilter)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("event_epoch"),
-        fRange.as("f_range"), fTs.as("f_ts"), fIntegrity.as("f_integrity"))
-    val s = sessionizedBucketedCols(typed,
-      Seq("user_id", "event_id", "event_type", "event_epoch",
-        "f_range", "f_ts", "f_integrity"), bucketSeconds)
-    val stats = s
-      .groupBy(col("user_id"), col("session_idx"), col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("event_epoch")).as("b_start"),
-        max(col("f_range")).as("b_range"), max(col("f_ts")).as("b_ts"),
-        max(col("f_integrity")).as("b_integrity"),
-        min(when(col("event_type") === "purchase", col("event_epoch"))).as("b_fp"),
-        min(when(col("event_type").isin("view", "click"), col("event_epoch"))).as("b_ft"))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(sum(col("n")).as("event_count"),
-        min(col("b_start")).as("session_start_epoch"),
-        max(col("b_range")).as("q_range"), max(col("b_ts")).as("q_ts"),
-        max(col("b_integrity")).as("q_integrity"),
-        min(col("b_fp")).as("first_purchase"), min(col("b_ft")).as("first_touch"))
-    val distinctIds = s
-      .select("user_id", "session_idx", "event_id").distinct()
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(count(lit(1)).as("distinct_ids"))
-    val sessions = stats.join(distinctIds, Seq("user_id", "session_idx"))
-      .withColumn("q_dup", (col("event_count") > col("distinct_ids")).cast("int"))
-      .withColumn("q_seq",
-        (col("first_purchase").isNotNull &&
-          (col("first_touch").isNull || col("first_touch") > col("first_purchase"))).cast("int"))
-      .withColumn("quarantined",
-        greatest(col("q_range"), col("q_ts"), col("q_integrity"), col("q_dup"), col("q_seq")))
-    gateDayRollup(sessions)
-  }
+  def sessionQualityGateBucketedFrom(e: DataFrame): DataFrame =
+    gateDayRollup(verdictsOf(
+      sessionizedBucketed(typedFlagged(e, SessionCols), SessionCols ++ FlagCols)))
 
   /** Day rollup over session verdict rows — shared by the batch gate
     * query and the streaming verdict log's rescore
@@ -1248,13 +1087,12 @@ object Sessionize {
   def errorImpactFrom(e: DataFrame): DataFrame =
     errorImpactRollup(sessionStatsFrom(e))
 
-  /** error_impact over the hot-key-safe base — same oracle SQL. */
+  /** error_impact over the segmented base — same oracle SQL. */
   def errorImpactBucketed(spark: SparkSession, dir: String): DataFrame =
     errorImpactBucketedFrom(enriched(spark, dir))
 
-  def errorImpactBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    errorImpactRollup(sessionStatsBucketedFrom(e, bucketSeconds))
+  def errorImpactBucketedFrom(e: DataFrame): DataFrame =
+    errorImpactRollup(statsOf(sessionizedBucketed(e)))
 
   private def errorImpactRollup(stats: DataFrame): DataFrame = {
     val sessions = stats.select(
@@ -1320,24 +1158,22 @@ object Sessionize {
   def markovNextEventFrom(e: DataFrame): DataFrame =
     markovRollup(sessionPairsFrom(e))
 
-  /** markov_next_event over the hot-key-safe base — same oracle. */
+  /** markov_next_event over the segmented pairs — same oracle. */
   def markovNextEventBucketed(spark: SparkSession, dir: String): DataFrame =
     markovNextEventBucketedFrom(enriched(spark, dir))
 
-  def markovNextEventBucketedFrom(e: DataFrame,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    markovRollup(sessionPairsBucketedFrom(e, bucketSeconds))
+  def markovNextEventBucketedFrom(e: DataFrame): DataFrame =
+    markovRollup(sessionPairsBucketedFrom(e))
 
   private def markovRollup(pairFrame: DataFrame): DataFrame = {
     val pairs = pairFrame
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("pair_count"))
-    // r15 (guide §2.4): the modal row and the per-origin total both
-    // come from ONE window pass over the ≤|types|²-row aggregate —
-    // the previous argmax-filter + groupBy + self-JOIN re-derived the
-    // whole pair subtree (and the sessionized fact scan under it)
-    // twice; plans halved (markov_next_event_bucketed 16 → 8 scans).
-    // Both windows share the from_type partitioning, so one exchange.
+    // the modal row and the per-origin total both come from ONE window
+    // pass over the ≤|types|²-row aggregate — an argmax-filter +
+    // groupBy + self-JOIN would re-derive the whole pair subtree (and
+    // the sessionized fact scan under it) twice. Both windows share
+    // the from_type partitioning, so one exchange.
     val wArgmax = Window.partitionBy("from_type")
       .orderBy(desc("pair_count"), asc("to_type"))
     val wFrom = Window.partitionBy("from_type")
@@ -1381,8 +1217,8 @@ object Sessionize {
   def sessionSurpriseFrom(e: DataFrame, topN: Int = 100): DataFrame =
     surpriseRollup(sessionPairsFrom(e), topN)
 
-  /** session_surprise over the hot-key-safe base — full SQL like the
-    * plain form since r14 (same oracle: the spec pins bit-equality of
+  /** session_surprise over the segmented pairs — full SQL like the
+    * plain form (same oracle: the spec pins bit-equality of
     * the two paths' outputs, and the quantized-integer arc bits make
     * that equality exact by construction). The per-session score
     * aggregation is algebraic (count + sum of integer bits), so it
@@ -1391,9 +1227,8 @@ object Sessionize {
   def sessionSurpriseBucketed(spark: SparkSession, dir: String): DataFrame =
     sessionSurpriseBucketedFrom(enriched(spark, dir))
 
-  def sessionSurpriseBucketedFrom(e: DataFrame, topN: Int = 100,
-      bucketSeconds: Long = BucketSeconds): DataFrame =
-    surpriseRollup(sessionPairsBucketedFrom(e, bucketSeconds), topN)
+  def sessionSurpriseBucketedFrom(e: DataFrame, topN: Int = 100): DataFrame =
+    surpriseRollup(sessionPairsBucketedFrom(e), topN)
 
   private def surpriseRollup(pairFrame: DataFrame, topN: Int = 100): DataFrame = {
     val pairs = pairFrame.localCheckpoint()
@@ -1521,8 +1356,8 @@ object Sessionize {
       .groupBy("gap_bucket_min").agg(count(lit(1)).as("n_gaps"))
     val wc = Window.orderBy("gap_bucket_min")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // r15 (guide §2.4): window total over the ≤11-bucket histogram —
-    // the 1-row agg + crossJoin re-derived the gap subtree twice.
+    // window total over the ≤11-bucket histogram — a 1-row agg +
+    // crossJoin would re-derive the gap subtree twice.
     val wAllBuckets = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     hist

@@ -128,7 +128,8 @@ object EventStream {
     * express — ordered event sequences in the output; when plain
     * per-session aggregates suffice, THIS is the preferred form: no
     * user state code, and the engine can optimize the merge. */
-  def sessionStats(events: DataFrame, gap: String = "30 minutes",
+  def sessionStats(events: DataFrame,
+                   gap: String = s"${graft.operators.Sessionize.GapSeconds} seconds",
                    watermark: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", watermark)

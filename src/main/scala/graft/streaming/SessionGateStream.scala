@@ -43,7 +43,7 @@ object SessionGateStream {
                      q_range: Boolean, q_ts: Boolean, q_integrity: Boolean,
                      q_dup: Boolean, q_seq: Boolean, quarantined: Boolean)
 
-  val GapSeconds = 1800L
+  val GapSeconds: Long = Sessionize.GapSeconds
   /** Recent event-id window for bounded in-session dup detection. */
   val MaxDupWindow = 32
   val WatermarkDelay = "30 minutes"

@@ -34,7 +34,7 @@ object SessionizeStream {
       user_id: Long, session_start_epoch: Long, session_end_epoch: Long,
       event_count: Int, has_purchase: Boolean, event_sequence: String)
 
-  val GapSeconds = 1800L
+  val GapSeconds: Long = graft.operators.Sessionize.GapSeconds
   /** Bound the per-session sequence tail kept in state. */
   val MaxSeq = 32
 

@@ -536,11 +536,10 @@ class SkewSpec extends SparkSpec {
       (0 until 40).map(i => (s"cu${i % 20}", s"cn$i", "view", 1000L + i * 5000L)))
       .toDF("user_id", "event_id", "event_type", "event_epoch")
     val before = Skew.censusMemo.builds
-    // a pipeline running THREE armed session operators over one frame
-    val (_, p1) = Sessionize.sessionAuto(hot)(
-      Sessionize.sessionDailyFrom, Sessionize.sessionDailyBucketedFrom(_))
-    val (_, p2) = Sessionize.sessionAuto(hot)(
-      Sessionize.sessionTransitionsFrom, Sessionize.sessionTransitionsBucketedFrom(_))
+    // a pipeline arming THREE consumers over one frame at the session
+    // threshold: two direct censuses and the session-sequences chooser
+    val p1 = Skew.measure(hot, "user_id", Sessionize.ArmThreshold)
+    val p2 = Skew.measure(hot, "user_id", Sessionize.ArmThreshold)
     val (_, p3) = Sessionize.sessionSequencesAuto(hot)
     assert(Skew.censusMemo.builds - before == 1L,
       s"expected ONE census for three armed consumers, got ${Skew.censusMemo.builds - before}")
@@ -1116,8 +1115,15 @@ class SessionizeSpec extends SparkSpec {
     // purchase between view and first qualified click — must NOT count
     val fmid = Seq(("u_fmid", "q1", "view", B - 500L), ("u_fmid", "q2", "purchase", B - 400L),
       ("u_fmid", "q3", "click", B + 10L))
+    // shifted by whole buckets into the gate's valid years, with the
+    // columns its typed filter needs; one u_multi event is out of range
     (bot ++ edge ++ break_ ++ skip ++ tie ++ multi ++ fx ++ fpre ++ fmid)
       .toDF("user_id", "event_id", "event_type", "event_epoch")
+      .withColumn("event_epoch", col("event_epoch") + 19700L * B)
+      .withColumn("ts", timestamp_seconds(col("event_epoch")))
+      .withColumn("value", when(col("event_id") === "m3", -5.0).otherwise(10.0))
+      .withColumn("props", lit("""{"k":1}"""))
+      .withColumn("product_k", lit(1))
   }
 
   test("the whole bucketed session family equals its plain twin on the torture set") {
@@ -1134,10 +1140,18 @@ class SessionizeSpec extends SparkSpec {
       ("markov", Sessionize.markovNextEventFrom(e), Sessionize.markovNextEventBucketedFrom(e)),
       ("entry_exit", Sessionize.sessionEntryExitFrom(e),
         Sessionize.sessionEntryExitBucketedFrom(e)),
-      ("funnel", Sessionize.sessionFunnelFrom(e), Sessionize.sessionFunnelBucketedFrom(e)))
+      ("funnel", Sessionize.sessionFunnelFrom(e), Sessionize.sessionFunnelBucketedFrom(e)),
+      ("quality_gate", Sessionize.sessionQualityGateFrom(e),
+        Sessionize.sessionQualityGateBucketedFrom(e)))
     pairs.foreach { case (name, plain, bucketed) =>
       assert(canon(plain) == canon(bucketed), s"$name diverged on the torture set")
     }
+    // the gate saw every torture row and judged some sessions: u_multi's
+    // out-of-range event, u_tie's purchase-only second session
+    val gate = Sessionize.sessionQualityGateBucketedFrom(e).collect()
+    def total(c: String) = gate.map(_.getAs[Long](c)).sum
+    assert(total("events_total") == e.count())
+    assert(total("q_range_sessions") == 1L && total("q_seq_sessions") == 1L)
     // pair multiset equality (the transitions/markov/surprise base):
     // boundary pairs really are recovered, not just aggregate-equal
     val pPlain = canon(Sessionize.sessionPairsFrom(e))

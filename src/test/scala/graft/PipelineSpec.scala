@@ -1590,7 +1590,8 @@ class ReportingSpec extends SparkSpec {
     val out2 = java.nio.file.Files.createTempDirectory("graft_carry_loop").toString
     val before2 = operators.Skew.censusMemo.builds
     val carried = operators.Skew.measure(
-      operators.EventMarts.enriched(spark, dir), "user_id", armThreshold = 16.0)
+      operators.EventMarts.enriched(spark, dir), "user_id",
+      armThreshold = operators.Sessionize.ArmThreshold)
     dates.foreach { d =>
       val r = Pipeline.run(spark, dir, out2, dates = Seq(d),
         sessionPlan = Some(carried))

@@ -452,6 +452,71 @@ class PlanAuditSpec extends SparkSpec {
       m = 8, k = 5, refine = 32)
   }
 
+  /** Hash exchanges that move RAW event rows by user: keyed on
+    * `user_id` without a spreading key (`bucket`, or `event_id` for a
+    * distinct-id dedup), with some path down to a leaf that meets no
+    * aggregate. Such an exchange sends a hot user's (or hot session's)
+    * whole history to one task. The exchanges EnsureRequirements adds
+    * are not in `inputPlan`: under AQE they first appear in the initial
+    * plan, which an unexecuted frame's `executedPlan` still is. */
+  private def rawUserExchanges(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def rawBelow(p: SparkPlan): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case leaf if leaf.children.isEmpty => true
+      case other => other.children.exists(rawBelow)
+    }
+    val prepared = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = prepared.collect { case x: ShuffleExchangeExec => x }
+    assert(exchanges.nonEmpty, s"no exchange in the prepared plan:\n$prepared")
+    exchanges.collect {
+      case x if rawBelow(x.child) && (x.outputPartitioning match {
+        case h: HashPartitioning =>
+          val keys = h.expressions.flatMap(_.references.map(_.name)).toSet
+          keys("user_id") && !keys("bucket") && !keys("event_id")
+        case _ => false
+      }) => x.outputPartitioning.toString
+    }
+  }
+
+  test("hot-key lint: no bucketed session query shuffles raw rows on user_id alone") {
+    import operators.Sessionize._
+    val e = operators.EventMarts.enriched(spark, Sf)
+    // each bucketed query's registered plan, plus surprise's pair
+    // subtree (its registered tail reads a localCheckpoint of it)
+    val bucketed = SessionTwins.map(n => s"${n}_bucketed")
+      .map(n => n -> SparkEntry.queries(n)(spark, Sf)) :+
+      ("session_surprise_bucketed[pairs]" -> sessionPairsBucketedFrom(e))
+    val offenders = bucketed.flatMap { case (n, df) => rawUserExchanges(df).map(x => s"$n: $x") }
+    assert(offenders.isEmpty, s"raw-row user_id exchanges:\n${offenders.mkString("\n")}")
+    // not vacuous: every plain twin (frame-input form, un-memoized)
+    // sessionizes through exactly such an exchange
+    val plain = Seq(
+      "session_sequences" -> sessionSequencesFrom(e),
+      "session_patterns" -> sessionPatternsFrom(e),
+      "session_transitions" -> sessionTransitionsFrom(e),
+      "session_daily" -> sessionDailyFrom(e),
+      "session_concurrency" -> sessionConcurrencyFrom(e),
+      "session_quality_gate" -> sessionQualityGateFrom(e),
+      "session_funnel" -> sessionFunnelFrom(e),
+      "session_entry_exit" -> sessionEntryExitFrom(e),
+      "error_impact" -> errorImpactFrom(e),
+      "markov_next_event" -> markovNextEventFrom(e),
+      "session_surprise[pairs]" -> sessionPairsFrom(e))
+    val clean = plain.collect { case (n, df) if rawUserExchanges(df).isEmpty => n }
+    assert(clean.isEmpty, s"the lint passes plain twins, so it checks nothing: $clean")
+  }
+
+  /** The session queries registered in a plain and a `_bucketed` form. */
+  private val SessionTwins = Seq("session_sequences", "session_patterns",
+    "session_transitions", "session_daily", "session_concurrency", "session_quality_gate",
+    "session_funnel", "session_entry_exit", "error_impact", "markov_next_event",
+    "session_surprise")
+
   test("approx latency marts plan fixed-state sketches, never the group-buffering exact percentile") {
     // the whole point of the *_approx siblings: no aggregate in their
     // plans may buffer a group's every value. Exact `percentile` is
