@@ -251,9 +251,11 @@ object Pipeline {
           // it against a full-history contract would report spurious
           // narrowed/domain_shrank rows on every healthy dated run
           // and bury the widening trend this feature exists to
-          // surface. Cost: one profile-grain aggregate pass over
-          // history per HEALTHY run (≤ columns × check-types rows
-          // out), same order as the pin itself.
+          // surface. Cost per HEALTHY run: the pin's own suggestion
+          // build over history up to the run date — one exact profile
+          // pass per events column (each column profiled once), one
+          // capped isin distinct and one fused range aggregate. It
+          // grows with the history, not with the day.
           val refreshScope =
             if (dates.isEmpty) e
             else base.filter(col("event_date") <=

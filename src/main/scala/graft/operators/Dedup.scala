@@ -1597,8 +1597,8 @@ object Dedup {
     * bounded by the banding; never a second all-pairs pass). The
     * rollup is a ≤10-row frame.
     *
-    * rows-only (est and err are float means over shuffle-ordered
-    * sums); the spec plants identical docs (est = exact = 1, err = 0)
+    * rows-only (est and err are float means, not oracle-hashed); the
+    * spec plants identical docs (est = exact = 1, err = 0)
     * and near-dup pairs with hand-computed exact Jaccard, and pins
     * the 64-perm estimator's global error bound at sf. */
   def minhashCalibration(spark: SparkSession, dir: String): DataFrame =
@@ -1627,15 +1627,18 @@ object Dedup {
         when(col("a_n") + col("b_n") - inter === 0, lit(1.0))
           .otherwise(inter.cast("double") /
             (col("a_n") + col("b_n") - inter).cast("double")))
+    // the means sum in decimal: a decimal sum is exact, so the result
+    // does not depend on the order the shuffle delivers the pairs in
+    def mean(x: Column) =
+      sum(x.cast("decimal(38,18)")).cast("double") / count(lit(1)).cast("double")
     joined
       .select(least(floor(col("est_jaccard") * 10).cast("int"), lit(9)).as("est_decile"),
         col("est_jaccard"), col("exact_jaccard"))
       .groupBy("est_decile")
       .agg(count(lit(1)).as("n_pairs"),
-        (sum(col("est_jaccard")) / count(lit(1)).cast("double")).as("mean_est"),
-        (sum(col("exact_jaccard")) / count(lit(1)).cast("double")).as("mean_exact"),
-        (sum(abs(col("est_jaccard") - col("exact_jaccard")))
-          / count(lit(1)).cast("double")).as("mean_abs_err"),
+        mean(col("est_jaccard")).as("mean_est"),
+        mean(col("exact_jaccard")).as("mean_exact"),
+        mean(abs(col("est_jaccard") - col("exact_jaccard"))).as("mean_abs_err"),
         sum(when(col("exact_jaccard") >= 0.4, 1).otherwise(0)).as("n_exact_ge_04"))
       .orderBy("est_decile")
   }

@@ -980,9 +980,9 @@ object Quality {
     val byBucket = hist.groupBy(col("bucket")).agg(sum(col("n_events")).as("c"))
     val wc = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // r15 (guide §2.4): n_total rides a global window over the
-    // ≤16-bucket frame — the 1-row agg + crossJoin re-derived the
-    // whole histogram subtree a second time.
+    // n_total rides a global window over the ≤16-bucket frame — the
+    // 1-row agg + crossJoin re-derived the whole histogram subtree a
+    // second time.
     val wAllBuckets = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val cum = byBucket.withColumn("cum", sum(col("c")).over(wc))
@@ -1206,23 +1206,53 @@ object Quality {
     * fixed-state paths); each per-column pass reads exactly one
     * parquet column and its distinct is a two-stage hash aggregate.
     * An HLL variant (approx_count_distinct per column, ONE scan, no
-    * Expand) is the 100-column-wide-table alternative; with 6
-    * columns the exact per-column passes win and stay oracle-exact.
-    * ts profiles at MICROSECOND grain in both engines (the oracle
-    * casts TIMESTAMP_NS to TIMESTAMP, matching Tables.events'
-    * nanos→micros read). */
+    * Expand) is the wide-table alternative, but not oracle-exact.
+    * The per-column passes stay because they are exact AND
+    * Expand-free at every width profiled here (6 events columns, 11
+    * lineitem columns); a one-scan exact form has not been measured
+    * against them. ts profiles at MICROSECOND grain in both engines
+    * (the oracle casts TIMESTAMP_NS to TIMESTAMP, matching
+    * Tables.events' nanos→micros read). */
   def columnProfile(spark: SparkSession, dir: String): DataFrame =
     columnProfileFrom(graft.Tables.events(spark, dir))
 
   def columnProfileFrom(e: DataFrame): DataFrame =
-    profileColumns(e, Seq("event_id", "ts", "user_id", "event_type",
-      "value", "props").filter(e.columns.contains))
+    profileColumns(e, EventsProfile.map(_._1).filter(e.columns.contains))
+      .orderBy("column_name")
 
   /** The same profile over EVERY column of any frame — the
     * documents/orders surfaces and injected-frame profiling. */
   def profileAllFrom(df: DataFrame): DataFrame =
-    profileColumns(df, df.columns.toSeq)
+    profileColumns(df, df.columns.toSeq).orderBy("column_name")
 
+  /** The largest categorical domain an `isin` suggestion carries; the
+    * oracle mirrors read the same bound. */
+  private val MaxSet = 20
+
+  /** A profile's null_share or distinct_ratio moving by more than this
+    * is drift, in [[profileDrift]] and [[profileDriftFromLog]] alike. */
+  private val MaxShareDelta = 0.05
+
+  /** The events table's rule lists: the profiled columns, each with
+    * its oracle SQL expression, the `isin` column and the `range`
+    * column. The other tables derive theirs from the schema. */
+  private val EventsProfile = Seq("event_id" -> "event_id",
+    "ts" -> "CAST(ts AS TIMESTAMP)", "user_id" -> "user_id",
+    "event_type" -> "event_type", "value" -> "value", "props" -> "props")
+  private val EventsIsin = Seq("event_type")
+  private val EventsRange = Seq("value")
+
+  /** The oracle's column lists for the per-table profiles and
+    * suggestions (each column profiles as itself). */
+  private val DocumentsProfile =
+    Seq("doc_id", "text", "lang", "source", "n_chars").map(c => c -> c)
+  private val OrdersProfile = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+    "o_totalprice", "o_orderdate", "o_orderpriority").map(c => c -> c)
+  private val LineitemProfile = Seq("l_orderkey", "l_partkey", "l_suppkey",
+    "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+    "l_returnflag", "l_linestatus", "l_shipdate").map(c => c -> c)
+
+  /** One profile row per column, unordered. */
   private def profileColumns(e: DataFrame, cols: Seq[String]): DataFrame =
     cols.map { c =>
       e.select(col(c))
@@ -1236,7 +1266,7 @@ object Quality {
             .as("null_share"),
           (col("n_distinct").cast("double") / col("n_rows").cast("double"))
             .as("distinct_ratio"))
-    }.reduce(_ unionByName _).orderBy("column_name")
+    }.reduce(_ unionByName _)
 
   /** Documents-table profile (every column) — the corpus-side
     * onboarding census beside `dq_corpus_coverage`'s cross-table
@@ -1266,8 +1296,7 @@ object Quality {
     * outer join on column_name so added/removed columns surface as
     * drift rows too; deltas are plain double subtractions of the
     * profiles' own ratios. */
-  def profileDrift(before: DataFrame, after: DataFrame,
-                   maxShareDelta: Double = 0.05): DataFrame = {
+  def profileDrift(before: DataFrame, after: DataFrame): DataFrame = {
     val b = before.select(col("column_name"), col("n_rows").as("rows_before"),
       col("null_share").as("null_before"), col("distinct_ratio").as("dr_before"))
     val a = after.select(col("column_name"), col("n_rows").as("rows_after"),
@@ -1279,8 +1308,8 @@ object Quality {
         col("dr_before"), col("dr_after"),
         (col("dr_after") - col("dr_before")).as("distinct_ratio_delta"),
         (col("rows_before").isNull || col("rows_after").isNull ||
-          abs(col("null_after") - col("null_before")) > maxShareDelta ||
-          abs(col("dr_after") - col("dr_before")) > maxShareDelta)
+          abs(col("null_after") - col("null_before")) > MaxShareDelta ||
+          abs(col("dr_after") - col("dr_before")) > MaxShareDelta)
           .as("drift_flag"))
       .orderBy("column_name")
   }
@@ -1293,8 +1322,7 @@ object Quality {
     * first batch has no predecessor and never flags. The window
     * partitions on column_name over the dimension-sized log
     * (|columns| × |batches| rows) — nothing fact-sized. */
-  def profileDriftFromLog(spark: SparkSession, logDir: String,
-                          maxShareDelta: Double = 0.05): DataFrame = {
+  def profileDriftFromLog(spark: SparkSession, logDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("column_name")).orderBy(col("batch_id"))
     spark.read.parquet(logDir)
@@ -1310,8 +1338,8 @@ object Quality {
         (col("null_share") - col("prev_null")).as("null_share_delta"),
         (col("distinct_ratio") - col("prev_dr")).as("distinct_ratio_delta"),
         coalesce(
-          abs(col("null_share") - col("prev_null")) > maxShareDelta ||
-            abs(col("distinct_ratio") - col("prev_dr")) > maxShareDelta,
+          abs(col("null_share") - col("prev_null")) > MaxShareDelta ||
+            abs(col("distinct_ratio") - col("prev_dr")) > MaxShareDelta,
           lit(false)).as("drift_flag"))
       .orderBy("batch_id", "column_name")
   }
@@ -1330,28 +1358,13 @@ object Quality {
     cols.map { case (n, ex) => profileColumnSql(table, n, ex) }
       .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY column_name")
 
-  private val profileUnionSql: String = Seq(
-    profileColumnSql("events", "event_id", "event_id"),
-    profileColumnSql("events", "ts", "CAST(ts AS TIMESTAMP)"),
-    profileColumnSql("events", "user_id", "user_id"),
-    profileColumnSql("events", "event_type", "event_type"),
-    profileColumnSql("events", "value", "value"),
-    profileColumnSql("events", "props", "props")).mkString("\nUNION ALL\n")
+  val columnProfileSql: String = profileTableSql("events", EventsProfile)
 
-  val columnProfileSql: String =
-    s"SELECT * FROM (\n$profileUnionSql\n) ORDER BY column_name"
+  val columnProfileDocumentsSql: String = profileTableSql("documents", DocumentsProfile)
 
-  val columnProfileDocumentsSql: String = profileTableSql("documents",
-    Seq("doc_id", "text", "lang", "source", "n_chars").map(c => c -> c))
+  val columnProfileOrdersSql: String = profileTableSql("orders", OrdersProfile)
 
-  val columnProfileOrdersSql: String = profileTableSql("orders",
-    Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-      "o_orderdate", "o_orderpriority").map(c => c -> c))
-
-  val columnProfileLineitemSql: String = profileTableSql("lineitem",
-    Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-      "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-      "l_returnflag", "l_linestatus", "l_shipdate").map(c => c -> c))
+  val columnProfileLineitemSql: String = profileTableSql("lineitem", LineitemProfile)
 
   /** Constraint suggestion over the column profile — the Deequ
     * suggestion loop, and the repo's tuning-closure pattern once more
@@ -1359,20 +1372,23 @@ object Quality {
     * → salt factor; here: measured statistics → the check configs a
     * team SHOULD be running). Rules, each full-SQL-mirrored:
     * zero observed nulls → `not_null`; zero nulls AND distinct ==
-    * rows → `unique`; a ≤maxSet-cardinality categorical
-    * (event_type) → `isin` with the observed sorted value set; the
-    * numeric value column → `range` with observed [min, max].
-    * `value_set` is comma-joined, so a domain containing the `,`
-    * delimiter is UNSUGGESTABLE under this encoding and the isin
-    * suggestion is dropped for that column (like an exploded
-    * domain) — never emitted with a corrupted allowed-set that
-    * would false-fail rows of the very table it was built from.
+    * rows → `unique`; a categorical (event_type) whose domain fits
+    * `MaxSet` → `isin` with the observed sorted value set; the
+    * numeric value column → `range` with observed [min, max], and no
+    * range at all while every value is null (a [null, null] bound
+    * checks nothing, and would hide the arrival of values from
+    * [[contractDrift]]). `value_set` is comma-joined, so a domain
+    * containing the `,` delimiter is UNSUGGESTABLE under this
+    * encoding and the isin suggestion is dropped for that column
+    * (like an exploded domain) — never emitted with a corrupted
+    * allowed-set that would false-fail rows of the very table it was
+    * built from.
     *
-    * Scale shape: the profile's per-column pruned passes plus two
-    * fixed aggregates; the isin value set collects over a DISTINCT
-    * frame capped at maxSet+1 rows BY CONSTRUCTION (the limit runs
+    * Scale shape: one profile pass per column plus the isin and
+    * range aggregates; the isin value set collects over a DISTINCT
+    * frame capped at MaxSet+1 rows BY CONSTRUCTION (the limit runs
     * before the collect, so a category column that exploded can
-    * never materialize more than maxSet+1 values — and the ≤maxSet
+    * never materialize more than MaxSet+1 values — and the ≤MaxSet
     * filter then drops the suggestion entirely, which is the right
     * answer for an exploded domain). Suggestions are data-derived
     * floors, not proofs — the check runner enforcing them is what
@@ -1380,150 +1396,70 @@ object Quality {
   def suggestedChecks(spark: SparkSession, dir: String): DataFrame =
     suggestedChecksFrom(graft.Tables.events(spark, dir))
 
-  def suggestedChecksFrom(e: DataFrame, maxSet: Int = 20): DataFrame = {
-    val noBounds = Seq(
-      lit(null).cast("double").as("lo"), lit(null).cast("double").as("hi"))
-    val noSet = lit(null).cast("string").as("value_set")
-    val prof = columnProfileFrom(e)
-    val notNull = prof.filter(col("n_null") === 0)
-      .select(Seq(col("column_name"), lit("not_null").as("check_type")) ++
-        noBounds :+ noSet: _*)
-    val unique = prof
-      .filter(col("n_null") === 0 && col("n_distinct") === col("n_rows"))
-      .select(Seq(col("column_name"), lit("unique").as("check_type")) ++
-        noBounds :+ noSet: _*)
-    val parts = Seq(notNull, unique) ++
-      (if (e.columns.contains("event_type"))
-        Seq(e.filter(col("event_type").isNotNull)
-          .select(col("event_type")).distinct().limit(maxSet + 1)
-          .agg(count(lit(1)).as("n"),
-            max(when(col("event_type").contains(","), 1).otherwise(0))
-              .as("has_delim"),
-            concat_ws(",", sort_array(collect_list(col("event_type")))).as("vs"))
-          .filter(col("n") > 0 && col("n") <= maxSet &&
-            col("has_delim") === 0)
-          .select(Seq(lit("event_type").as("column_name"),
-            lit("isin").as("check_type")) ++ noBounds :+
-            col("vs").as("value_set"): _*))
-      else Nil) ++
-      (if (e.columns.contains("value"))
-        Seq(e.agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-          .select(lit("value").as("column_name"), lit("range").as("check_type"),
-            col("lo"), col("hi"), noSet))
-      else Nil)
-    parts.reduce(_ unionByName _).orderBy("column_name", "check_type")
+  def suggestedChecksFrom(e: DataFrame): DataFrame = {
+    def present(cols: Seq[String]) = cols.filter(e.columns.contains)
+    suggestFrom(e, present(EventsProfile.map(_._1)), present(EventsIsin),
+      present(EventsRange))
   }
-
-  /** The events suggestion oracle parameterized on the source relation
-    * (the plain table, or a date-filtered subquery for the
-    * contract-drift pinned side). */
-  private def suggestedEventsSqlFor(rel: String): String = {
-    val prof = Seq(
-      profileColumnSql(rel, "event_id", "event_id"),
-      profileColumnSql(rel, "ts", "CAST(ts AS TIMESTAMP)"),
-      profileColumnSql(rel, "user_id", "user_id"),
-      profileColumnSql(rel, "event_type", "event_type"),
-      profileColumnSql(rel, "value", "value"),
-      profileColumnSql(rel, "props", "props")).mkString("\nUNION ALL\n")
-    s"""WITH prof AS (
-       |$prof
-       |)
-       |SELECT * FROM (
-       |  SELECT column_name, 'not_null' AS check_type,
-       |    CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
-       |    CAST(NULL AS VARCHAR) AS value_set
-       |  FROM prof WHERE n_null = 0
-       |  UNION ALL
-       |  SELECT column_name, 'unique' AS check_type,
-       |    CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
-       |    CAST(NULL AS VARCHAR) AS value_set
-       |  FROM prof WHERE n_null = 0 AND n_distinct = n_rows
-       |  UNION ALL
-       |  SELECT 'event_type' AS column_name, 'isin' AS check_type,
-       |    CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
-       |    array_to_string(array_agg(x ORDER BY x), ',') AS value_set
-       |  FROM (SELECT DISTINCT event_type AS x FROM $rel
-       |        WHERE event_type IS NOT NULL)
-       |  HAVING COUNT(*) BETWEEN 1 AND 20
-       |     AND COUNT(*) FILTER (WHERE contains(x, ',')) = 0
-       |  UNION ALL
-       |  SELECT 'value' AS column_name, 'range' AS check_type,
-       |    MIN(value) AS lo, MAX(value) AS hi, CAST(NULL AS VARCHAR) AS value_set
-       |  FROM $rel
-       |) ORDER BY column_name, check_type""".stripMargin
-  }
-
-  val suggestedChecksSql: String = suggestedEventsSqlFor("events")
 
   /** The suggestion loop GENERALIZED to any frame — the relational/
-    * corpus-side Deequ loop the r9 VERDICT asked for (`profileAllFrom`
-    * already profiles documents/orders/lineitem; this turns those
-    * profiles into runnable check configs for `runChecks`). Rules are
-    * type-driven: zero observed nulls → `not_null`; zero nulls AND
-    * distinct == rows → `unique`; any STRING column whose domain fits
-    * `maxSet` → `isin` with the observed sorted set (a text column's
+    * corpus-side Deequ loop (`profileAllFrom` already profiles
+    * documents/orders/lineitem; this turns those profiles into
+    * runnable check configs for `runChecks`). Rules are type-driven:
+    * every column is profiled for `not_null`/`unique`; any STRING
+    * column whose domain fits `MaxSet` → `isin` (a text column's
     * exploded domain is dropped by the post-limit filter — the right
     * answer, and the absence of `unique` on it is itself the
-    * duplicate-rate signal; a domain containing the `,` join
-    * delimiter is likewise dropped rather than emitted ambiguously —
-    * `runChecks`/`contractFlags` split on `,`, so a comma-bearing
-    * value would corrupt the allowed-set and false-fail the source
-    * table itself); any NUMERIC column → `range` with
-    * observed [min, max] cast to double in BOTH engines. The events
-    * table keeps its hand-shaped [[suggestedChecksFrom]] (fixed
-    * column semantics, fixed oracle); this is the every-table door.
-    *
-    * Scale shape: inherits the profile's per-column pruned passes;
-    * each isin candidate's distinct is LIMIT-capped at maxSet+1
-    * before any collect; each range is one min/max aggregate. */
-  def suggestedChecksAllFrom(df: DataFrame, maxSet: Int = 20): DataFrame = {
+    * duplicate-rate signal); any NUMERIC column → `range`. The events
+    * table passes fixed lists to the same builder instead. */
+  def suggestedChecksAllFrom(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{NumericType, StringType}
+    val fields = df.schema.fields.toSeq
+    suggestFrom(df, df.columns.toSeq,
+      fields.filter(_.dataType == StringType).map(_.name),
+      fields.filter(_.dataType.isInstanceOf[NumericType]).map(_.name))
+  }
+
+  /** The one suggestion builder: `not_null`/`unique` for the `profiled`
+    * columns, `isin` for the `isinCols`, `range` for the `rangeCols`. */
+  private def suggestFrom(df: DataFrame, profiled: Seq[String],
+      isinCols: Seq[String], rangeCols: Seq[String]): DataFrame = {
     val noBounds = Seq(
       lit(null).cast("double").as("lo"), lit(null).cast("double").as("hi"))
     val noSet = lit(null).cast("string").as("value_set")
-    val prof = profileAllFrom(df)
-    val notNull = prof.filter(col("n_null") === 0)
-      .select(Seq(col("column_name"), lit("not_null").as("check_type")) ++
-        noBounds :+ noSet: _*)
-    val unique = prof
-      .filter(col("n_null") === 0 && col("n_distinct") === col("n_rows"))
-      .select(Seq(col("column_name"), lit("unique").as("check_type")) ++
-        noBounds :+ noSet: _*)
-    val isin = df.schema.fields.toSeq
-      .filter(_.dataType == StringType).map(_.name).map { c =>
-        df.filter(col(c).isNotNull).select(col(c)).distinct().limit(maxSet + 1)
-          .agg(count(lit(1)).as("n"),
-            max(when(col(c).contains(","), 1).otherwise(0)).as("has_delim"),
-            concat_ws(",", sort_array(collect_list(col(c)))).as("vs"))
-          .filter(col("n") > 0 && col("n") <= maxSet &&
-            col("has_delim") === 0)
-          .select(Seq(lit(c).as("column_name"), lit("isin").as("check_type")) ++
-            noBounds :+ col("vs").as("value_set"): _*)
-      }
-    // r14 optimization: the per-column min/max legs fuse into ONE
-    // aggregate pass (guide §1.2/§2.4 — N column-pruned scans → one
-    // scan, N global-agg exchanges → one). The per-column separation
-    // is only load-bearing for countDistinct (fusing THOSE plans an
-    // Expand — the documented §7y rejection); min/max fuse with no
-    // plan penalty. The fused row unpivots via stack (codegen'd), and
-    // the per-column NULL-lo drop is the same filter applied after
-    // the unpivot — values and rows identical to the per-column form
-    // (oracle unchanged and still green).
-    val numericCols = df.schema.fields.toSeq
-      .filter(_.dataType.isInstanceOf[NumericType]).map(_.name)
-    val range = if (numericCols.isEmpty) Nil else {
-      val aggs = numericCols.flatMap(c => Seq(
+    // both checks read ONE profile frame, so each column is profiled
+    // once: the projection emits a row per check that holds
+    val complete = col("n_null") === 0
+    val profiledChecks = profileColumns(df, profiled)
+      .select(col("column_name"), explode(array_compact(array(
+        when(complete, lit("not_null")),
+        when(complete && col("n_distinct") === col("n_rows"), lit("unique")))))
+        .as("check_type"))
+      .select(Seq(col("column_name"), col("check_type")) ++ noBounds :+ noSet: _*)
+    val isin = isinCols.map { c =>
+      df.filter(col(c).isNotNull).select(col(c)).distinct().limit(MaxSet + 1)
+        .agg(count(lit(1)).as("n"),
+          max(when(col(c).contains(","), 1).otherwise(0)).as("has_delim"),
+          concat_ws(",", sort_array(collect_list(col(c)))).as("vs"))
+        .filter(col("n") > 0 && col("n") <= MaxSet && col("has_delim") === 0)
+        .select(Seq(lit(c).as("column_name"), lit("isin").as("check_type")) ++
+          noBounds :+ col("vs").as("value_set"): _*)
+    }
+    // every range column's [min, max] comes from ONE fused aggregate
+    // (min/max fuse with no Expand, unlike countDistinct), unpivoted
+    // via stack; an all-null column's NULL lo drops its row
+    val range = if (rangeCols.isEmpty) Nil else {
+      val aggs = rangeCols.flatMap(c => Seq(
         min(col(c)).cast("double").as(s"lo_$c"),
         max(col(c)).cast("double").as(s"hi_$c")))
-      val stacked = numericCols
-        .map(c => s"'$c', `lo_$c`, `hi_$c`").mkString(", ")
+      val stacked = rangeCols.map(c => s"'$c', `lo_$c`, `hi_$c`").mkString(", ")
       Seq(df.agg(aggs.head, aggs.tail: _*)
-        .selectExpr(s"stack(${numericCols.size}, $stacked) AS (column_name, lo, hi)")
+        .selectExpr(s"stack(${rangeCols.size}, $stacked) AS (column_name, lo, hi)")
         .filter(col("lo").isNotNull)
         .select(Seq(col("column_name"), lit("range").as("check_type"),
           col("lo"), col("hi")) :+ noSet: _*))
     }
-    (Seq(notNull, unique) ++ isin ++ range).reduce(_ unionByName _)
+    (profiledChecks +: (isin ++ range)).reduce(_ unionByName _)
       .orderBy("column_name", "check_type")
   }
 
@@ -1536,23 +1472,25 @@ object Quality {
   def suggestedChecksLineitem(spark: SparkSession, dir: String): DataFrame =
     suggestedChecksAllFrom(graft.Tables.lineitem(spark, dir))
 
-  /** Oracle mirror of [[suggestedChecksAllFrom]] for one table. */
-  private def suggestedAllSql(table: String, cols: Seq[String],
-      stringCols: Seq[String], numericCols: Seq[String]): String = {
-    val prof = cols.map(c => profileColumnSql(table, c, c))
+  /** Oracle mirror of the suggestion builder over one relation (a
+    * table, or the date-filtered subquery of the contract-drift pinned
+    * side); `profiled` pairs each column with its SQL expression. */
+  private def suggestedSql(rel: String, profiled: Seq[(String, String)],
+      isinCols: Seq[String], rangeCols: Seq[String]): String = {
+    val prof = profiled.map { case (n, ex) => profileColumnSql(rel, n, ex) }
       .mkString("\nUNION ALL\n")
-    val isin = stringCols.map(c =>
+    val isin = isinCols.map(c =>
       s"""  SELECT '$c' AS column_name, 'isin' AS check_type,
          |    CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
          |    array_to_string(array_agg(x ORDER BY x), ',') AS value_set
-         |  FROM (SELECT DISTINCT $c AS x FROM $table WHERE $c IS NOT NULL)
-         |  HAVING COUNT(*) BETWEEN 1 AND 20
+         |  FROM (SELECT DISTINCT $c AS x FROM $rel WHERE $c IS NOT NULL)
+         |  HAVING COUNT(*) BETWEEN 1 AND $MaxSet
          |     AND COUNT(*) FILTER (WHERE contains(x, ',')) = 0""".stripMargin)
-    val range = numericCols.map(c =>
+    val range = rangeCols.map(c =>
       s"""  SELECT '$c' AS column_name, 'range' AS check_type,
          |    CAST(MIN($c) AS DOUBLE) AS lo, CAST(MAX($c) AS DOUBLE) AS hi,
          |    CAST(NULL AS VARCHAR) AS value_set
-         |  FROM $table HAVING MIN($c) IS NOT NULL""".stripMargin)
+         |  FROM $rel HAVING MIN($c) IS NOT NULL""".stripMargin)
     val heads = Seq(
       s"""  SELECT column_name, 'not_null' AS check_type,
          |    CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
@@ -1570,24 +1508,35 @@ object Quality {
        |) ORDER BY column_name, check_type""".stripMargin
   }
 
-  val suggestedChecksDocumentsSql: String = suggestedAllSql("documents",
-    Seq("doc_id", "text", "lang", "source", "n_chars"),
-    stringCols = Seq("text", "lang", "source"),
-    numericCols = Seq("doc_id", "n_chars"))
+  val suggestedChecksSql: String =
+    suggestedSql("events", EventsProfile, EventsIsin, EventsRange)
 
-  val suggestedChecksOrdersSql: String = suggestedAllSql("orders",
-    Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-      "o_orderdate", "o_orderpriority"),
-    stringCols = Seq("o_orderstatus", "o_orderpriority"),
-    numericCols = Seq("o_orderkey", "o_custkey", "o_totalprice"))
+  val suggestedChecksDocumentsSql: String = suggestedSql("documents",
+    DocumentsProfile, isinCols = Seq("text", "lang", "source"),
+    rangeCols = Seq("doc_id", "n_chars"))
 
-  val suggestedChecksLineitemSql: String = suggestedAllSql("lineitem",
-    Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-      "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-      "l_returnflag", "l_linestatus", "l_shipdate"),
-    stringCols = Seq("l_returnflag", "l_linestatus"),
-    numericCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-      "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+  val suggestedChecksOrdersSql: String = suggestedSql("orders", OrdersProfile,
+    isinCols = Seq("o_orderstatus", "o_orderpriority"),
+    rangeCols = Seq("o_orderkey", "o_custkey", "o_totalprice"))
+
+  val suggestedChecksLineitemSql: String = suggestedSql("lineitem",
+    LineitemProfile, isinCols = Seq("l_returnflag", "l_linestatus"),
+    rangeCols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+      "l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+
+  /** A row's violation of one not_null / range / isin suggestion on
+    * column `c` — the one rule [[runChecks]] counts and
+    * [[contractFlags]] flags. */
+  private def violation(c: Column, check: org.apache.spark.sql.Row): Column =
+    check.getAs[String]("check_type") match {
+      case "not_null" => c.isNull
+      case "range" =>
+        c < lit(check.getAs[Double]("lo")) || c > lit(check.getAs[Double]("hi"))
+      case "isin" =>
+        c.isNotNull && !c.isin(check.getAs[String]("value_set").split(",").toSeq: _*)
+      case other =>
+        throw new IllegalArgumentException(s"unknown check_type: $other")
+    }
 
   /** Execute a suggestion frame's constraints against any target
     * frame — the EXECUTION closure of `dq_suggested_checks` (suggest
@@ -1596,12 +1545,11 @@ object Quality {
     * suggestions against their own source table is all-pass by
     * construction, so the value is cross-date/cross-table).
     *
-    * Shape: the suggestion frame is ≤ 2·|columns|+2 rows BY
-    * CONSTRUCTION (the profile emits at most not_null+unique per
-    * column plus one isin and one range), so collecting it is
-    * dimension-sized; per COLUMN the executor runs one column-pruned
-    * aggregation computing every violation count for that column's
-    * checks in a single pass (one countDistinct per pass at most —
+    * Shape: the suggestion frame is ≤ 4·|columns| rows BY
+    * CONSTRUCTION (at most not_null, unique, isin and range per
+    * column), so collecting it is dimension-sized; per COLUMN the
+    * executor runs one column-pruned aggregation computing every
+    * violation count for that column's checks in a single pass (one countDistinct per pass at most —
     * never the fused multi-distinct Expand the profile lint forbids),
     * then stacks the ≤4 counts to check rows. A column the target
     * frame lacks fails structurally (NULL violations, pass = false) —
@@ -1634,22 +1582,10 @@ object Quality {
           resultSchema)
       else {
         val aggs = checks.toSeq.map { r =>
-          r.getAs[String]("check_type") match {
-            case "not_null" =>
-              count(when(col(c).isNull, 1)).as("v_not_null")
-            case "unique" =>
-              (count(when(col(c).isNotNull, 1)) - countDistinct(col(c)))
-                .as("v_unique")
-            case "range" =>
-              count(when(col(c) < lit(r.getAs[Double]("lo")) ||
-                col(c) > lit(r.getAs[Double]("hi")), 1)).as("v_range")
-            case "isin" =>
-              val allowed = r.getAs[String]("value_set").split(",").toSeq
-              count(when(col(c).isNotNull && !col(c).isin(allowed: _*), 1))
-                .as("v_isin")
-            case other =>
-              throw new IllegalArgumentException(s"unknown check_type: $other")
-          }
+          val kind = r.getAs[String]("check_type")
+          (if (kind == "unique")
+            count(when(col(c).isNotNull, 1)) - countDistinct(col(c))
+          else count(when(violation(col(c), r), 1))).as(s"v_$kind")
         }
         val stack = checks.toSeq.map(r =>
           s"'${r.getAs[String]("check_type")}', v_${r.getAs[String]("check_type")}")
@@ -1767,16 +1703,7 @@ object Quality {
       val kind = r.getAs[String]("check_type")
       val name = lit(s"${c}_$kind")
       if (!frame.columns.contains(c)) name // structural: every row fails
-      else kind match {
-        case "not_null" => when(col(c).isNull, name)
-        case "range" => when(col(c) < lit(r.getAs[Double]("lo")) ||
-          col(c) > lit(r.getAs[Double]("hi")), name)
-        case "isin" =>
-          val allowed = r.getAs[String]("value_set").split(",").toSeq
-          when(col(c).isNotNull && !col(c).isin(allowed: _*), name)
-        case other =>
-          throw new IllegalArgumentException(s"unknown check_type: $other")
-      }
+      else when(violation(col(c), r), name)
     }
     val out = frame
       .withColumn("contract_violations",
@@ -1861,9 +1788,9 @@ object Quality {
     val pinnedRel = "(SELECT * FROM events WHERE CAST(ts AS DATE) < " +
       "(SELECT MAX(CAST(ts AS DATE)) FROM events))"
     s"""WITH pinned AS (
-       |${suggestedEventsSqlFor(pinnedRel)}
+       |${suggestedSql(pinnedRel, EventsProfile, EventsIsin, EventsRange)}
        |), fresh AS (
-       |${suggestedEventsSqlFor("events")}
+       |$suggestedChecksSql
        |), p AS (
        |  SELECT column_name, check_type, lo AS lo_pinned, hi AS hi_pinned,
        |    value_set AS set_pinned, TRUE AS in_pinned FROM pinned
@@ -2148,7 +2075,7 @@ object Quality {
     val expected = BenfordExpected.foldLeft(lit(0.0)) { case (acc, (d, x)) =>
       when(col("digit") === d, lit(x)).otherwise(acc)
     }
-    // r15 (guide §2.4): window total over the ≤9-digit census — the
+    // a window total over the ≤9-digit census — the
     // 1-row agg + crossJoin re-derived the value-scan subtree twice.
     val wAllDigits = org.apache.spark.sql.expressions.Window.partitionBy()
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,

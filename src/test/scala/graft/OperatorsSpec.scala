@@ -1962,6 +1962,26 @@ class QualitySpec extends SparkSpec {
     assert(Set("view", "purchase").subsetOf(vs), s"got $vs")
   }
 
+  test("suggested checks: an all-null value column suggests no range; its first values read as added") {
+    import spark.implicits._
+    def frame(rows: Seq[(Long, String, Option[Double])]) =
+      rows.toDF("event_id", "event_type", "value")
+    val allNull = Quality.suggestedChecksFrom(
+      frame(Seq((1L, "view", None), (2L, "click", None))))
+    // a [null, null] bound checks nothing: no range row at all
+    assert(!allNull.collect().exists(r => r.getAs[String]("column_name") == "value" &&
+      r.getAs[String]("check_type") == "range"))
+    // pinned on the all-null day, refreshed once values arrive: the
+    // new range is a contract change, not 'unchanged'
+    val valued = Quality.suggestedChecksFrom(
+      frame(Seq((3L, "view", Some(1.5)), (4L, "click", Some(4.0)))))
+    val drift = Quality.contractDrift(allNull, valued).collect()
+      .map(r => (r.getAs[String]("column_name"), r.getAs[String]("check_type")) -> r)
+      .toMap
+    assert(drift(("value", "range")).getAs[String]("change") == "added")
+    assert(drift(("value", "range")).getAs[Double]("lo_fresh") == 1.5)
+  }
+
   test("per-table suggestions cover the reconcile premises; text flags non-unique; runChecks closes the loop") {
     // lineitem: the reconcile checks' premises must be SUGGESTED from
     // the data alone — non-null join keys and the bounded discount
@@ -2046,10 +2066,10 @@ class QualitySpec extends SparkSpec {
   }
 
   test("fused range suggestions: one aggregate pass, all-null numeric dropped, mixed types exact") {
-    // r14 optimization pins: suggestedChecksAllFrom computes every
-    // numeric column's [min, max] in ONE fused aggregate (unpivoted
-    // via stack) instead of a per-column job each. This spec covers
-    // the two edges the fusion must preserve: an ALL-NULL numeric
+    // suggestedChecksAllFrom computes every numeric column's
+    // [min, max] in ONE fused aggregate (unpivoted via stack) instead
+    // of a per-column job each. This spec covers the two edges the
+    // fusion must preserve: an ALL-NULL numeric
     // column yields NO range row (the per-column form dropped it via
     // its own filter; the fused form must drop it post-unpivot), and
     // mixed numeric types (int/long/double/decimal) come through the
@@ -2068,17 +2088,12 @@ class QualitySpec extends SparkSpec {
     assert(ranges("l") == (-3.0, 10.0))
     assert(ranges("d") == (0.25, 1.5))
     assert(ranges("dec") == (2.25, 9.5))
-    // plan shape: the range legs contribute ONE aggregate subtree —
-    // the final plan holds exactly one stack/Expand-free fused agg,
-    // observable as: at most one scan per union leg class. Cheap,
-    // robust proxy: the full plan's scan count for a 5-column frame
-    // stays below the per-column form's (which would be ≥ 4 extra).
-    // (profile legs scan once per consumer: notNull + unique = 10 for
-    // five columns; the fused range adds ONE more — the per-column
-    // form added five)
+    // plan shape: one scan per profiled column (not_null and unique
+    // share the profile) and ONE for the fused range — the per-column
+    // range form would add four more, a per-check profile five more
     val scans = Quality.suggestedChecksAllFrom(f).queryExecution.executedPlan
       .toString.split('\n').count(_.contains("LocalTableScan"))
-    assert(scans <= 12, s"range fusion regressed: $scans local scans in plan")
+    assert(scans <= 6, s"profile or range fusion regressed: $scans local scans in plan")
   }
 
   test("suggestion contract: persists, verifies, gates a drifted arrival; tampering refuses to load") {

@@ -282,6 +282,14 @@ class PlanAuditSpec extends SparkSpec {
       case p => p
     }
 
+  /** The AQE initial plan: `executedPlan` of the unexecuted wrapper,
+    * which holds the exchanges EnsureRequirements inserts. */
+  private def initialPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
   private def offendersIn(name: String, df: DataFrame): Seq[String] = {
     val plan = physical(df)
     val cartesian = plan.collect { case c: CartesianProductExec => c }
@@ -467,10 +475,7 @@ class PlanAuditSpec extends SparkSpec {
       case leaf if leaf.children.isEmpty => true
       case other => other.children.exists(rawBelow)
     }
-    val prepared = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val prepared = initialPlan(df)
     val exchanges = prepared.collect { case x: ShuffleExchangeExec => x }
     assert(exchanges.nonEmpty, s"no exchange in the prepared plan:\n$prepared")
     exchanges.collect {
@@ -536,16 +541,39 @@ class PlanAuditSpec extends SparkSpec {
     // N countDistincts over one groupBy plan an Expand that multiplies
     // every pre-shuffle row ×(N+1) — the per-(keys…, user) pre-aggregate
     // form must keep all four queries Expand-free (order_cube and the
-    // dq grouping-sets plans are the only INTENDED Expands in the repo)
+    // dq grouping-sets plans are the only INTENDED Expands in the repo).
+    // The dq profile/suggest/drift family profiles one countDistinct
+    // per column pass for the same reason.
     import org.apache.spark.sql.execution.ExpandExec
-    Seq("mart_funnel_daily" -> operators.EventMarts.martFunnelDaily(spark, Sf),
+    (Seq("mart_funnel_daily" -> operators.EventMarts.martFunnelDaily(spark, Sf),
         "funnel_conversion" -> operators.EventMarts.funnelConversion(spark, Sf),
         "mart_product_daily" -> operators.EventMarts.martProductDaily(spark, Sf),
-        "product_top_n" -> operators.EventMarts.productTopN(spark, Sf))
+        "product_top_n" -> operators.EventMarts.productTopN(spark, Sf)) ++
+      DqProfileFamily.map(n => n -> SparkEntry.queries(n)(spark, Sf)))
       .foreach { case (n, df) =>
         assert(physical(df).collect { case e: ExpandExec => e }.isEmpty,
           s"$n plans an Expand")
       }
+  }
+
+  /** The dq profile → suggest → drift queries. */
+  private val DqProfileFamily = Seq("dq_column_profile", "dq_profile_documents",
+    "dq_profile_orders", "dq_profile_lineitem", "dq_suggested_checks",
+    "dq_suggested_documents", "dq_suggested_orders", "dq_suggested_lineitem",
+    "dq_contract_drift")
+
+  test("suggestions profile each column once: scan leaves per query in the AQE initial plan") {
+    // one scan per profiled column (not_null and unique share it), one
+    // per isin column, one for the fused range; the drift's pinned
+    // side adds the max-date scan under each of its legs. Counted in
+    // the initial plan, before AQE reuses any exchange.
+    def scanLeaves(df: DataFrame): Int =
+      initialPlan(df).collectLeaves().count(_.nodeName.contains("Scan"))
+    val expected = Seq("dq_suggested_checks" -> 8, "dq_suggested_documents" -> 9,
+      "dq_suggested_orders" -> 9, "dq_suggested_lineitem" -> 14,
+      "dq_contract_drift" -> 24)
+    val got = expected.map { case (n, _) => n -> scanLeaves(SparkEntry.queries(n)(spark, Sf)) }
+    assert(got == expected)
   }
 
   test("runtime bloom-filter pruning arms the fact-fact join at the no-broadcast scale point") {

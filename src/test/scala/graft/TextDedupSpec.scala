@@ -1744,6 +1744,23 @@ class DedupSpec extends SparkSpec {
     assert(werr < 0.25, s"weighted calibration error too high: $werr")
   }
 
+  test("minhash calibration: rows are bit-identical across shuffle partitionings") {
+    // the decile means must not depend on the order the shuffle
+    // delivers a decile's pairs in
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def run(partitions: Int, inputParts: Int) = {
+      Caches.clearAll()
+      spark.conf.set(key, partitions.toString)
+      try Dedup.minhashCalibrationFrom(spark,
+          Tables.documents(spark, Sf).repartition(inputParts)).collect().toSeq
+      finally spark.conf.set(key, prev)
+    }
+    val one = run(1, 3)
+    assert(one.nonEmpty)
+    assert(run(7, 5) == one)
+  }
+
   test("simhash pairs respect the hamming bound") {
     val bad = Dedup.simhash(spark, Sf).filter(col("hamming") > 7).count()
     assert(bad == 0)
