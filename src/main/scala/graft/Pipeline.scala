@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{EventMarts, Quality, Sessionize}
@@ -477,26 +477,23 @@ object Pipeline {
     * Three tiny extracts — each query reduces to ≤2 driver rows; the
     * shared `armCol` guarantees all three describe the SAME split. */
   def experimentReportText(spark: SparkSession, dir: String,
-                           asOf: String, experiment: String = "exp1"): String = {
-    val e = EventMarts.enriched(spark, dir)
-    Reporting.experimentReport(asOf,
-      srm = operators.UserAnalytics.abSrmCheckFrom(e, experiment).collect().headOption,
-      summary = operators.UserAnalytics.abTestSummaryFrom(e, experiment).collect().toSeq,
-      cuped = operators.UserAnalytics.abCupedFrom(e, experiment).collect().toSeq,
-      sequential = operators.UserAnalytics.abSequentialFrom(e, experiment)
-        .collect().toSeq)
-  }
+                           asOf: String, experiment: String = "exp1"): String =
+    experimentReadout(spark, dir, experiment)(Reporting.experimentReport(asOf, _, _, _, _))
 
   /** The Block Kit form of the same readout. */
   def experimentReportPayload(spark: SparkSession, dir: String,
-                              asOf: String, experiment: String = "exp1"): String = {
+                              asOf: String, experiment: String = "exp1"): String =
+    experimentReadout(spark, dir, experiment)(Reporting.experimentReportPayload(asOf, _, _, _, _))
+
+  /** The readout's four collects (srm, summary, cuped, sequential),
+    * handed to one renderer. */
+  private def experimentReadout(spark: SparkSession, dir: String, experiment: String)(
+      render: (Option[Row], Seq[Row], Seq[Row], Seq[Row]) => String): String = {
     val e = EventMarts.enriched(spark, dir)
-    Reporting.experimentReportPayload(asOf,
-      srm = operators.UserAnalytics.abSrmCheckFrom(e, experiment).collect().headOption,
-      summary = operators.UserAnalytics.abTestSummaryFrom(e, experiment).collect().toSeq,
-      cuped = operators.UserAnalytics.abCupedFrom(e, experiment).collect().toSeq,
-      sequential = operators.UserAnalytics.abSequentialFrom(e, experiment)
-        .collect().toSeq)
+    render(operators.UserAnalytics.abSrmCheckFrom(e, experiment).collect().headOption,
+      operators.UserAnalytics.abTestSummaryFrom(e, experiment).collect().toSeq,
+      operators.UserAnalytics.abCupedFrom(e, experiment).collect().toSeq,
+      operators.UserAnalytics.abSequentialFrom(e, experiment).collect().toSeq)
   }
 
   /** Gate-verdict dashboard days from the streaming verdict log

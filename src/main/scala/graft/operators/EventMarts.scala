@@ -348,7 +348,7 @@ object EventMarts {
       |ORDER BY repeat_rate DESC, product_k ASC""".stripMargin
 
   /** productTopN over the STREAM-built product-count log (see
-    * streaming.EventStream.productCounts/productLogSink): the stream
+    * streaming.EventStream.productCounts/windowLogSink): the stream
     * appends finalized (window, product, event_type) partial counts +
     * decimal value sums; this rollup re-ranks from that compact log —
     * |windows|×|products| rows, never raw events — and matches the

@@ -23,16 +23,54 @@ object Quality {
     def aggAll(cols: Seq[Column]): DataFrame = df.agg(cols.head, cols.tail: _*)
   }
 
+  /** The row rules of the seven-check suite, one Spark definition
+    * each. The single-check ops, `perDateChecks`, `summaryFrom`, the
+    * session gates (`Sessionize.typedRowFilter`/`fRange`/`fTs`/
+    * `fIntegrity`) and the live check log
+    * (`EventStream.qualityCountsOn`) all read these; the SQL strings
+    * restate them for the oracle. */
+  private[graft] val nullFailed: Column =
+    col("event_id").isNull || col("ts").isNull || col("user_id").isNull ||
+      col("event_type").isNull || col("value").isNull || col("props").isNull
+
+  private[graft] val rangeFailed: Column =
+    col("value") < 0 || col("value") > 1000000 ||
+      !col("event_type").isin("view", "click", "purchase", "signup", "error")
+
+  /** timestamp_check: `ts` null or its year outside [2020, 2030].
+    * `typed` leaves out the null leg, for rows already past
+    * `Sessionize.typedRowFilter`. */
+  private[graft] def tsFailed(typed: Boolean = false): Column = {
+    val early = year(col("ts")) < 2020
+    (if (typed) early else col("ts").isNull || early) || year(col("ts")) > 2030
+  }
+
+  /** integrity_check, on purchase rows. */
+  private[graft] val integrityFailed: Column =
+    col("product_k").isNull || col("product_k") < 0 ||
+      col("product_k") > 99 || col("value") <= 0
+
+  /** The reference's pass rate (percent of rows passing) and its
+    * PASS/FAIL line at 99 %. */
+  private[graft] def passRate(total: Column, failed: Column): Column =
+    (lit(1.0) - failed.cast("double") / greatest(total, lit(1L)).cast("double")) * lit(100)
+
+  private[graft] def passStatus(rate: Column): Column =
+    when(rate >= 99.0, "PASS").otherwise("FAIL")
+
+  /** `pass_rate` and `status` over (total_records, failed_records). */
+  private[graft] def rated(df: DataFrame): DataFrame =
+    df.withColumn("pass_rate", passRate(col("total_records"), col("failed_records")))
+      .withColumn("status", passStatus(col("pass_rate")))
+
   private def result(checkName: String, checkType: String,
                      total: Column, failed: Column): Seq[Column] = Seq(
     lit(checkName).as("check_name"),
     lit(checkType).as("check_type"),
     total.as("total_records"),
     failed.as("failed_records"),
-    ((lit(1.0) - failed.cast("double") / greatest(total, lit(1L)).cast("double")) * lit(100))
-      .as("pass_rate"),
-    when((lit(1.0) - failed.cast("double") / greatest(total, lit(1L)).cast("double")) * lit(100) >= 99.0,
-      "PASS").otherwise("FAIL").as("status"))
+    passRate(total, failed).as("pass_rate"),
+    passStatus(passRate(total, failed)).as("status"))
 
   private def sqlResult(checkName: String, checkType: String,
                         totalExpr: String, failedExpr: String, from: String): String =
@@ -47,8 +85,7 @@ object Quality {
   def nullCheck(spark: SparkSession, dir: String): DataFrame =
     enriched(spark, dir).aggAll(result("null_check", "null_check",
         count(lit(1)),
-        count(when(col("event_id").isNull || col("ts").isNull || col("user_id").isNull ||
-                   col("event_type").isNull || col("value").isNull || col("props").isNull, 1))))
+        count(when(nullFailed, 1))))
 
   val nullCheckSql: String = sqlResult("null_check", "null_check",
     "COUNT(*)",
@@ -68,9 +105,7 @@ object Quality {
   def rangeCheck(spark: SparkSession, dir: String): DataFrame =
     enriched(spark, dir).aggAll(result("range_check", "range_check",
         count(lit(1)),
-        count(when(
-          col("value") < 0 || col("value") > 1000000 ||
-          !col("event_type").isin("view", "click", "purchase", "signup", "error"), 1))))
+        count(when(rangeFailed, 1))))
 
   val rangeCheckSql: String = sqlResult("range_check", "range_check",
     "COUNT(*)",
@@ -108,7 +143,7 @@ object Quality {
   def timestampCheck(spark: SparkSession, dir: String): DataFrame =
     enriched(spark, dir).aggAll(result("timestamp_check", "range_check",
         count(lit(1)),
-        count(when(col("ts").isNull || year(col("ts")) < 2020 || year(col("ts")) > 2030, 1))))
+        count(when(tsFailed(), 1))))
 
   val timestampCheckSql: String = sqlResult("timestamp_check", "range_check",
     "COUNT(*)",
@@ -123,8 +158,7 @@ object Quality {
       .filter(col("event_type") === "purchase")
       .aggAll(result("integrity_check", "integrity_check",
           count(lit(1)),
-          count(when(col("product_k").isNull || col("product_k") < 0 ||
-                     col("product_k") > 99 || col("value") <= 0, 1))))
+          count(when(integrityFailed, 1))))
 
   val integrityCheckSql: String = sqlResult("integrity_check", "integrity_check",
     "COUNT(*)",
@@ -365,11 +399,8 @@ object Quality {
         |) AS (check_name, total_records, failed_records)""".stripMargin)
       .select(
         col("check_name"), lit("integrity_check").as("check_type"),
-        col("total_records"), col("failed_records"),
-        ((lit(1.0) - col("failed_records").cast("double")
-          / greatest(col("total_records"), lit(1L)).cast("double")) * lit(100))
-          .as("pass_rate"))
-      .withColumn("status", when(col("pass_rate") >= 99.0, "PASS").otherwise("FAIL"))
+        col("total_records"), col("failed_records"))
+      .transform(rated)
       .orderBy("check_name")
   }
 
@@ -467,11 +498,8 @@ object Quality {
     cov.unionByName(dimRow)
       .select(
         col("check_name"), lit("integrity_check").as("check_type"),
-        col("total_records"), col("failed_records"),
-        ((lit(1.0) - col("failed_records").cast("double")
-          / greatest(col("total_records"), lit(1L)).cast("double")) * lit(100))
-          .as("pass_rate"))
-      .withColumn("status", when(col("pass_rate") >= 99.0, "PASS").otherwise("FAIL"))
+        col("total_records"), col("failed_records"))
+      .transform(rated)
       .orderBy("check_name")
   }
 
@@ -535,8 +563,7 @@ object Quality {
         count(lit(1)).as("days"),
         sum(col("total_records")).as("total_records"),
         sum(col("failed_records")).as("failed_records"),
-        ((lit(1.0) - sum(col("failed_records")).cast("double") /
-          greatest(sum(col("total_records")), lit(1L)).cast("double")) * lit(100))
+        passRate(sum(col("total_records")), sum(col("failed_records")))
           .as("overall_pass_rate"),
         min(col("pass_rate")).as("min_daily_pass_rate"))
       .orderBy("check_name")
@@ -556,20 +583,13 @@ object Quality {
       .agg(
         grouping_id().as("gid"),
         count(lit(1)).as("total"),
-        count(when(col("event_id").isNull || col("ts").isNull || col("user_id").isNull ||
-                   col("event_type").isNull || col("value").isNull || col("props").isNull, 1))
-          .as("null_failed"),
+        count(when(nullFailed, 1)).as("null_failed"),
         (count(lit(1)) - countDistinct(col("event_id"))).as("dup_failed"),
-        count(when(
-          col("value") < 0 || col("value") > 1000000 ||
-          !col("event_type").isin("view", "click", "purchase", "signup", "error"), 1))
-          .as("range_failed"),
-        count(when(col("ts").isNull || year(col("ts")) < 2020 || year(col("ts")) > 2030, 1))
-          .as("ts_failed"),
+        count(when(rangeFailed, 1)).as("range_failed"),
+        count(when(tsFailed(), 1)).as("ts_failed"),
         count(when(col("event_type") === "purchase", 1)).as("purchase_total"),
-        count(when(col("event_type") === "purchase" &&
-                   (col("product_k").isNull || col("product_k") < 0 ||
-                    col("product_k") > 99 || col("value") <= 0), 1)).as("integrity_failed"),
+        count(when(col("event_type") === "purchase" && integrityFailed, 1))
+          .as("integrity_failed"),
         count(when(col("event_type") === "signup", 1)).as("signups"),
         min(when(col("event_type") === "purchase", col("event_epoch"))).as("first_purchase"),
         min(when(col("event_type").isin("view", "click"), col("event_epoch"))).as("first_touch"))
@@ -600,10 +620,7 @@ object Quality {
           |  'sequence_check', 'sequence_check', ud_total, seq_failed,
           |  'consistency_check', 'consistency_check', ud_total, cons_failed
           |) as (check_name, check_type, total_records, failed_records)""".stripMargin))
-      .withColumn("pass_rate",
-        (lit(1.0) - col("failed_records").cast("double") /
-          greatest(col("total_records"), lit(1L)).cast("double")) * lit(100))
-      .withColumn("status", when(col("pass_rate") >= 99.0, "PASS").otherwise("FAIL"))
+      .transform(rated)
   }
 
   val dailyTrendSql: String =
@@ -662,20 +679,13 @@ object Quality {
     import org.apache.spark.sql.functions.{expr => sqlExpr}
     val row = e.agg(
       count(lit(1)).as("total"),
-      count(when(col("event_id").isNull || col("ts").isNull || col("user_id").isNull ||
-                 col("event_type").isNull || col("value").isNull || col("props").isNull, 1))
-        .as("null_failed"),
+      count(when(nullFailed, 1)).as("null_failed"),
       (count(lit(1)) - countDistinct(col("event_id"))).as("dup_failed"),
-      count(when(
-        col("value") < 0 || col("value") > 1000000 ||
-        !col("event_type").isin("view", "click", "purchase", "signup", "error"), 1))
-        .as("range_failed"),
-      count(when(col("ts").isNull || year(col("ts")) < 2020 || year(col("ts")) > 2030, 1))
-        .as("ts_failed"),
+      count(when(rangeFailed, 1)).as("range_failed"),
+      count(when(tsFailed(), 1)).as("ts_failed"),
       count(when(col("event_type") === "purchase", 1)).as("purchase_total"),
-      count(when(col("event_type") === "purchase" &&
-                 (col("product_k").isNull || col("product_k") < 0 ||
-                  col("product_k") > 99 || col("value") <= 0), 1)).as("integrity_failed"))
+      count(when(col("event_type") === "purchase" && integrityFailed, 1))
+        .as("integrity_failed"))
     val rowChecks = row.select(sqlExpr(
       """stack(5,
         |  'null_check', 'null_check', total, null_failed,
@@ -684,12 +694,6 @@ object Quality {
         |  'timestamp_check', 'range_check', total, ts_failed,
         |  'integrity_check', 'integrity_check', purchase_total, integrity_failed
         |) as (check_name, check_type, total_records, failed_records)""".stripMargin))
-    def rated(df: DataFrame): DataFrame = {
-      val rate = (lit(1.0) - col("failed_records").cast("double") /
-        greatest(col("total_records"), lit(1L)).cast("double")) * lit(100)
-      df.withColumn("pass_rate", rate)
-        .withColumn("status", when(col("pass_rate") >= 99.0, "PASS").otherwise("FAIL"))
-    }
     // ROLLUP(user_id, event_date) computes the user-day grain (gid=0,
     // feeds sequence) AND the per-user subtotals (gid=1, feeds
     // consistency: per-user signups = sum of per-user-day signups) in
@@ -765,16 +769,13 @@ object Quality {
 
   private def trendFrom(log: DataFrame): DataFrame =
     log
-      .withColumn("day_pass_rate",
-        (lit(1.0) - col("failed_records").cast("double") /
-          greatest(col("total_records"), lit(1L)).cast("double")) * lit(100))
+      .withColumn("day_pass_rate", passRate(col("total_records"), col("failed_records")))
       .groupBy(col("check_name"))
       .agg(
         count(lit(1)).as("days"),
         sum(col("total_records")).as("total_records"),
         sum(col("failed_records")).as("failed_records"),
-        ((lit(1.0) - sum(col("failed_records")).cast("double") /
-          greatest(sum(col("total_records")), lit(1L)).cast("double")) * lit(100))
+        passRate(sum(col("total_records")), sum(col("failed_records")))
           .as("overall_pass_rate"),
         min(col("day_pass_rate")).as("min_daily_pass_rate"))
       .orderBy("check_name")
@@ -871,7 +872,7 @@ object Quality {
     * spikes. The log is tiny (windows × types) regardless of the
     * event volume behind it. */
   /** Value-distribution drift over the STREAM-built bucket log (see
-    * streaming.EventStream.valueBucketCounts/valueLogSink): the
+    * streaming.EventStream.valueBucketCounts/windowLogSink): the
     * stream appends watermark-finalized per-window (bucket, count)
     * rows; this rolls windows up to the day grain (max per window key
     * absorbs any duplicate batch replay, like the volume path) and
@@ -1104,7 +1105,7 @@ object Quality {
   }
 
   /** Percentile serving straight from the STREAMING value-bucket log
-    * (`EventStream.valueBucketCounts` + `valueLogSink`): the same
+    * (`EventStream.valueBucketCounts` + `windowLogSink`): the same
     * replay-dedup (max per (window_start, bucket) — an idempotent
     * re-emit can only repeat a window, never split it) and daily
     * rollup as `valueDriftFromLog`, feeding the shared serving core —
@@ -1615,8 +1616,7 @@ object Quality {
   def runChecksSummary(target: DataFrame, suggestions: DataFrame): DataFrame = {
     val total = coalesce(col("n_rows"), lit(0L))
     val failed = coalesce(col("n_violations"), lit(1L))
-    val rate = (lit(1.0) - failed.cast("double") /
-      greatest(total, lit(1L)).cast("double")) * lit(100)
+    val rate = passRate(total, failed)
     runChecks(target, suggestions).select(
       concat(lit("suggested_"), col("column_name"), lit("_"),
         col("check_type")).as("check_name"),
@@ -1624,7 +1624,7 @@ object Quality {
       total.as("total_records"),
       failed.as("failed_records"),
       rate.as("pass_rate"),
-      when(rate >= 99.0, "PASS").otherwise("FAIL").as("status"))
+      passStatus(rate).as("status"))
   }
 
   /** Persist a suggestion frame as the CHECK-CONTRACT artifact — the
@@ -1642,25 +1642,36 @@ object Quality {
     val frame = suggestions
       .select(col("column_name"), col("check_type"), col("lo"), col("hi"),
         col("value_set"))
-    val fp = suggestionsFp(frame)
+    val fp = suggestionsFp(frame.collect())
     frame.coalesce(1).write.mode("overwrite").parquet(path)
     graft.sources.ArtifactManifest.write(path,
       graft.sources.ArtifactManifest.Stamp("dq_suggestions", fp, builtFrom))
   }
 
   /** Load + verify a persisted suggestion contract (strict on a
-    * present manifest, like every loader in the artifact family). */
+    * present manifest, like every loader in the artifact family). A
+    * `range` row with a null bound does not enforce that side (a
+    * comparison with NULL never flags a row), so such a contract
+    * refuses to load. */
   def loadSuggestions(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
       .select(col("column_name"), col("check_type"), col("lo"), col("hi"),
         col("value_set"))
+    val rows = df.collect()
     graft.sources.ArtifactManifest.verifyContent(path, "dq_suggestions",
-      suggestionsFp(df))
+      suggestionsFp(rows))
+    rows.find(r => r.getString(1) == "range" && (r.isNullAt(2) || r.isNullAt(3)))
+      .foreach { r =>
+        throw new IllegalStateException(
+          s"suggestion contract $path: the range check on ${r.getString(0)} has a null " +
+            "bound and cannot enforce anything — re-pin the contract from a healthy run " +
+            "(writeSuggestions)")
+      }
     df
   }
 
-  private def suggestionsFp(suggestions: DataFrame): String = {
-    val canonical = suggestions.collect()
+  private def suggestionsFp(suggestions: Array[org.apache.spark.sql.Row]): String = {
+    val canonical = suggestions
       .map { r =>
         def d(i: Int) = if (r.isNullAt(i)) "null" else r.getDouble(i).toString
         Seq(r.getString(0), r.getString(1), d(2), d(3),
@@ -2091,7 +2102,7 @@ object Quality {
   }
 
   /** Benford rescore over the streaming digit log
-    * (`EventStream.digitCounts` + `digitLogSink`): replay-safe window
+    * (`EventStream.digitCounts` + `windowLogSink`): replay-safe window
     * dedup (max per (window, digit) — an at-least-once re-append of
     * the same finalized window cannot double-count), then the SAME
     * census core as the batch `dq_benford`. The third live drift

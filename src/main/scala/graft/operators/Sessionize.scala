@@ -871,21 +871,13 @@ object Sessionize {
   /** Event-level check-flag expressions — ONE definition shared by the
     * batch gate and the streaming gate (SessionGateStream), so the two
     * surfaces cannot drift. Each expects the enriched column set
-    * (ts, value, event_type, product_k) and mirrors the corresponding
-    * Quality check exactly. */
-  private[graft] def typedRowFilter: org.apache.spark.sql.Column =
-    col("event_id").isNotNull && col("ts").isNotNull &&
-      col("user_id").isNotNull && col("event_type").isNotNull &&
-      col("value").isNotNull && col("props").isNotNull
-  private[graft] def fRange: org.apache.spark.sql.Column =
-    (col("value") < 0 || col("value") > 1000000 ||
-      !col("event_type").isin("view", "click", "purchase", "signup", "error")).cast("int")
-  private[graft] def fTs: org.apache.spark.sql.Column =
-    (year(col("ts")) < 2020 || year(col("ts")) > 2030).cast("int")
+    * (ts, value, event_type, product_k) and reads the corresponding
+    * Quality row rule. */
+  private[graft] def typedRowFilter: org.apache.spark.sql.Column = !Quality.nullFailed
+  private[graft] def fRange: org.apache.spark.sql.Column = Quality.rangeFailed.cast("int")
+  private[graft] def fTs: org.apache.spark.sql.Column = Quality.tsFailed(typed = true).cast("int")
   private[graft] def fIntegrity: org.apache.spark.sql.Column =
-    (col("event_type") === "purchase" &&
-      (col("product_k").isNull || col("product_k") < 0 ||
-       col("product_k") > 99 || col("value") <= 0)).cast("int")
+    (col("event_type") === "purchase" && Quality.integrityFailed).cast("int")
 
   /** The typed (null-free) rows: `cols` + the per-event check flags. */
   private def typedFlagged(e: DataFrame, cols: Seq[String]): DataFrame =

@@ -248,6 +248,39 @@ object MartSink {
         batchSize = batchSize)
   }
 
+  /** The parquet leg of the same idempotency rule, for one streaming
+    * micro-batch: an empty `batch` is skipped (the check is one Spark
+    * job, run on the batch itself), otherwise `shape(batch)` is tagged
+    * with `batch_id` and dynamic-overwritten under
+    * `partitionCols :+ "batch_id"`. `foreachBatch` replays a failed
+    * micro-batch under the same id, so the replay rewrites exactly the
+    * partitions of its first attempt. Returns whether it wrote. */
+  private[graft] def writeBatch(batch: DataFrame, batchId: Long, dir: String,
+      partitionCols: Seq[String])(shape: DataFrame => DataFrame): Boolean = {
+    val nonEmpty = !batch.isEmpty
+    if (nonEmpty)
+      writePartitioned(
+        shape(batch).withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)),
+        dir, partitionCols :+ "batch_id")
+    nonEmpty
+  }
+
+  /** A checkpointed `foreachBatch` query that lands every micro-batch
+    * of `stream` through [[writeBatch]]. `outputMode` is the stream's
+    * own: append for watermark-finalized windows, update for
+    * state-carrying scores. */
+  private[graft] def batchSink(stream: DataFrame, dir: String, checkpointDir: String,
+      partitionCols: Seq[String], outputMode: String = "append")(
+      shape: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatch(batch, batchId, dir, partitionCols)(shape)
+        ()
+      }
+      .start()
+
   /** What a `mergeJdbc` run actually moved: `upserted` rows staged and
     * swapped in (new + changed), `deleted` vanished-key rows removed,
     * `total` rows in the incoming frame. `upserted == 0` means the

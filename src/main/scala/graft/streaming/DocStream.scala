@@ -111,27 +111,18 @@ object DocStream {
     // counts taken under different merge tables are different UNITS,
     // and the readout refuses to sum across them
     val vocabFp = TextAnalysis.bpeVocabFp(merges)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // left join FROM the batch side: a doc that tokenizes to
-          // nothing still arrived — n_docs must count every ingested
-          // doc, not just the ones with token rows
-          val rows = batch.select(col("doc_id"), col("source"))
-            .join(TextAnalysis.bpeTokensFrom(batch, merges), Seq("doc_id"), "left")
-            .groupBy(col("source"))
-            .agg(count(lit(1)).as("n_docs"),
-              sum(coalesce(col("word_count"), lit(0L))).cast("long").as("word_count"),
-              sum(coalesce(col("bpe_tokens"), lit(0L))).cast("long").as("bpe_tokens"))
-            .withColumn("vocab_fp", lit(vocabFp))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(docs, logDir, checkpointDir, Nil) { batch =>
+      // left join FROM the batch side: a doc that tokenizes to
+      // nothing still arrived — n_docs must count every ingested
+      // doc, not just the ones with token rows
+      batch.select(col("doc_id"), col("source"))
+        .join(TextAnalysis.bpeTokensFrom(batch, merges), Seq("doc_id"), "left")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(coalesce(col("word_count"), lit(0L))).cast("long").as("word_count"),
+          sum(coalesce(col("bpe_tokens"), lit(0L))).cast("long").as("bpe_tokens"))
+        .withColumn("vocab_fp", lit(vocabFp))
+    }
   }
 
   /** Budget readout over the token log: per-source totals since the
@@ -221,16 +212,7 @@ object DocStream {
           .withColumnRenamed("clean_text", "text"),
         scorer, minP),
       ratio, minLwPerToken)
-    admitted.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.MartSink.writePartitioned(
-            batch.withColumn("batch_id", lit(batchId)), outDir, Seq("batch_id"))
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(admitted, outDir, checkpointDir, Nil)(identity)
   }
 
   /** Live re-crawl/revision flagging against the PERSISTED chunk
@@ -246,20 +228,10 @@ object DocStream {
     * foreachBatch — the stream never reshuffles it. */
   def revisionLogSink(docs: DataFrame, index: DataFrame, indexFp: String,
       logDir: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = graft.operators.Dedup
-            .incrementalCdcFrom(batch.sparkSession, batch, index)
-            .withColumn("index_fp", lit(indexFp))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(docs, logDir, checkpointDir, Nil) { batch =>
+      graft.operators.Dedup.incrementalCdcFrom(batch.sparkSession, batch, index)
+        .withColumn("index_fp", lit(indexFp))
+    }
 
   /** Per-batch revision-rate readout over the log — the live "how
     * much of today's crawl is already in the corpus" dial. Unit

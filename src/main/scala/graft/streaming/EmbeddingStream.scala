@@ -54,21 +54,11 @@ object EmbeddingStream {
     * change shows up as the batch's norm mass leaving the corpus's
     * bins — hours before recall degrades at the index. State is ZERO
     * (stateless per-batch rollup to ≤41 rows); the raw vectors never
-    * persist. */
+    * persist. Written through `MartSink.batchSink`. */
   def normLogSink(vecs: DataFrame, logDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = Similarity.embeddingNormCensusFrom(batch)
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(vecs, logDir, checkpointDir, Nil)(
+      Similarity.embeddingNormCensusFrom)
 
   /** Norm-drift readout over the log: each batch's binned norm
     * distribution vs the PREVIOUS batch's, scored by total-variation

@@ -147,7 +147,10 @@ object EventStream {
     * row-grain checks (null / range / timestamp), the continuous
     * flavor of graft.operators.Quality — alerting-oriented (the batch
     * suite is the gate; this feeds a live dashboard the way the
-    * reference's Slack alert watches the daily run). */
+    * reference's Slack alert watches the daily run). The rules are
+    * the batch suite's own (`Quality.nullFailed`, `rangeFailed`,
+    * `tsFailed`), so a window's counts equal `Quality.perDateChecks`'
+    * over the same rows. */
   def qualityCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     qualityCountsOn(events.withWatermark("ts", watermark))
 
@@ -156,12 +159,9 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"))
       .agg(
         count(lit(1)).as("total"),
-        count(when(col("event_id").isNull || col("user_id").isNull ||
-                   col("event_type").isNull || col("value").isNull, 1)).as("null_failed"),
-        count(when(col("value") < 0 || col("value") > 1000000 ||
-                   !col("event_type").isin("view", "click", "purchase", "signup", "error"), 1))
-          .as("range_failed"),
-        count(when(year(col("ts")) < 2020 || year(col("ts")) > 2030, 1)).as("ts_failed"))
+        count(when(graft.operators.Quality.nullFailed, 1)).as("null_failed"),
+        count(when(graft.operators.Quality.rangeFailed, 1)).as("range_failed"),
+        count(when(graft.operators.Quality.tsFailed(), 1)).as("ts_failed"))
 
   /** Persist the streaming quality monitor as a continuously-written
     * check log: each watermark-FINALIZED window's counts are unpivoted
@@ -170,37 +170,22 @@ object EventStream {
     * (`Quality.trendFromLog` reads either: it needs check_name/
     * total_records/failed_records).
     *
-    * foreachBatch is at-least-once (a batch replays if the stream dies
-    * before its offsets commit), so the write must be idempotent, not
-    * a blind append: rows land under (run_date, batch_id) partitions
-    * via dynamic overwrite, and a replayed batch rewrites exactly its
-    * own partitions — effectively-once output, the standard
-    * batchId-keyed foreachBatch pattern. */
+    * Rows land under (run_date, batch_id) partitions through
+    * `MartSink.batchSink`, so a replayed micro-batch rewrites exactly
+    * its own partitions. */
   def qualityLogSink(quality: DataFrame, logDir: String,
                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    quality.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rate = (lit(1.0) - col("failed_records").cast("double") /
-            greatest(col("total_records"), lit(1L)).cast("double")) * lit(100)
-          val rows = batch.select(
-              col("window.start").as("window_start"),
-              expr("""stack(3,
-                |  'null_check', total, null_failed,
-                |  'range_check', total, range_failed,
-                |  'timestamp_check', total, ts_failed
-                |) as (check_name, total_records, failed_records)""".stripMargin))
-            .withColumn("pass_rate", rate)
-            .withColumn("status", when(col("pass_rate") >= 99.0, "PASS").otherwise("FAIL"))
-            .withColumn("run_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("run_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(quality, logDir, checkpointDir, Seq("run_date")) {
+      _.select(
+          col("window.start").as("window_start"),
+          expr("""stack(3,
+            |  'null_check', total, null_failed,
+            |  'range_check', total, range_failed,
+            |  'timestamp_check', total, ts_failed
+            |) as (check_name, total_records, failed_records)""".stripMargin))
+        .transform(graft.operators.Quality.rated)
+        .withColumn("run_date", to_date(col("window_start")))
+    }
 
   /** Per-window per-type event-volume counts — the feed for the
     * streaming flavor of `Quality.volumeAnomaly`. Append mode: a
@@ -211,29 +196,21 @@ object EventStream {
       .groupBy(window(col("ts"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
 
-  /** foreachBatch sink appending finalized volume windows to a
-    * parquet log (idempotent per batch via the batch_id partition,
-    * like `qualityLogSink`). `Quality.volumeAnomalyFromLog` z-scores
-    * the log; together they are the continuous alerting path: counts
-    * stream in, the tiny log is rescored on whatever cadence alerts
-    * are wanted. */
-  def volumeLogSink(counts: DataFrame, logDir: String,
+  /** The log sink of the windowed counts (`volumeCounts`,
+    * `productCounts`, `valueBucketCounts`, `digitCounts`): each
+    * watermark-finalized row lands as `window.start` AS `window_start`,
+    * its other columns in order, and `run_date`, under (run_date,
+    * batch_id) partitions through `MartSink.batchSink`. The `*FromLog`
+    * rescorers (`Quality.volumeAnomalyFromLog`, `valueDriftFromLog`,
+    * `benfordFromLog`, `EventMarts.productTopNFromLog`) read the log on
+    * whatever cadence alerts are wanted. */
+  def windowLogSink(counts: DataFrame, logDir: String,
                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch.select(
-              col("window.start").as("window_start"),
-              col("event_type"), col("n_events"))
-            .withColumn("run_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("run_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(counts, logDir, checkpointDir, Seq("run_date")) { b =>
+      b.select(col("window.start").as("window_start") +:
+          b.columns.filter(_ != "window").toSeq.map(col): _*)
+        .withColumn("run_date", to_date(col("window_start")))
+    }
 
   /** Watermark-finalized per-window PRODUCT counts — the streaming
     * half of continuous top-product maintenance. The stream never
@@ -244,7 +221,7 @@ object EventStream {
     * (`EventMarts.productTopNFromLog` below mirrors batch
     * product_top_n; the fixed-state `freq_items_sketch` is the
     * further-compressed alternative when even the product grain is too
-    * wide). Same log/sink contract as volumeCounts/volumeLogSink. */
+    * wide). Logged through `windowLogSink`. */
   def productCounts(events: DataFrame, windowLen: String = "1 hour",
                     watermark: String = "2 hours"): DataFrame =
     events
@@ -256,24 +233,6 @@ object EventStream {
       // final rollup is bit-identical to the batch mart's decimal sum
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(12,2)")).as("value_dec"))
-
-  def productLogSink(counts: DataFrame, logDir: String,
-                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch.select(
-              col("window.start").as("window_start"),
-              col("product_k"), col("event_type"), col("n_events"), col("value_dec"))
-            .withColumn("run_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("run_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
 
   /** Watermark-finalized per-window VALUE-BUCKET counts — the
     * streaming half of the continuous distribution-drift loop (the
@@ -289,24 +248,6 @@ object EventStream {
       .groupBy(window(col("ts"), windowLen),
         graft.operators.Quality.bucketOf(col("value")).as("bucket"))
       .agg(count(lit(1)).as("n_events"))
-
-  def valueLogSink(counts: DataFrame, logDir: String,
-                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch.select(
-              col("window.start").as("window_start"),
-              col("bucket"), col("n_events"))
-            .withColumn("run_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("run_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
 
   /** Watermark-finalized per-window FIRST-DIGIT counts — the streaming
     * half of the Benford conformance loop (`Quality.dqBenford`'s live
@@ -325,28 +266,6 @@ object EventStream {
         graft.operators.Quality.firstDigitCol.as("digit"))
       .agg(count(lit(1)).as("n_values"))
 
-  /** foreachBatch sink appending finalized digit windows to a tiny
-    * parquet log (idempotent per batch via the batch_id partition,
-    * the volumeLogSink pattern); `Quality.benfordFromLog` rescores it
-    * with the batch census' own arithmetic on the alerting cadence. */
-  def digitLogSink(counts: DataFrame, logDir: String,
-                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch.select(
-              col("window.start").as("window_start"),
-              col("digit"), col("n_values"))
-            .withColumn("run_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("run_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
-
   /** Per-arrival-batch column profile appended to a tiny parquet log —
     * the streaming half of the statistics-grain drift loop
     * (`Quality.profileDrift` diffs two batch profiles; this keeps the
@@ -360,25 +279,20 @@ object EventStream {
     * Scale shape: the profile passes are column-pruned scans of the
     * one arriving batch (persisted once, O(batch) per trigger, no
     * state); the log grows |columns| rows per batch — dimension-sized
-    * forever. Idempotent per batch via the batch_id partition (the
-    * volumeLogSink at-least-once pattern). */
+    * forever. Idempotent per batch via the batch_id partition
+    * (`MartSink.writeBatch`). */
   def profileLogSink(events: DataFrame, logDir: String,
                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the profile runs one pruned pass per column — persist the
-          // micro-batch so a re-readable source isn't re-scanned per
-          // column
-          val b = batch.persist()
-          try {
-            val rows = graft.operators.Quality.columnProfileFrom(b)
-              .withColumn("batch_id", lit(batchId))
-            graft.sources.MartSink.writePartitioned(rows, logDir, Seq("batch_id"))
-          } finally { b.unpersist(); () }
-        }
+        // the profile runs one pruned pass per column — persist the
+        // micro-batch so a re-readable source isn't re-scanned per
+        // column
+        try graft.sources.MartSink.writeBatch(batch, batchId, logDir, Nil) { b =>
+          graft.operators.Quality.columnProfileFrom(b.persist())
+        } finally { batch.unpersist(); () }
         ()
       }
       .start()

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Sessionize
+import SessionizeStream.{GapEvent, gapSessions}
 
 /** Streaming session QUALITY GATE — the continuous counterpart of
   * `Sessionize.sessionQualityGate` (reference: validate_quality.py's
@@ -25,13 +25,13 @@ import graft.operators.Sessionize
   * window of 32 catches; the exact batch gate remains the authority
   * for pathological far-apart replays. State per live user is O(1),
   * so the operator survives an unbounded firehose; timeouts are
-  * event-time (watermark-driven) for deterministic replay, exactly
-  * like SessionizeStream. */
+  * event-time (watermark-driven) for deterministic replay: both
+  * operators here run SessionizeStream's one gap-session loop. */
 object SessionGateStream {
 
   case class GEv(user_id: Long, event_id: Long, event_type: String,
                  epoch: Long, ts: java.sql.Timestamp,
-                 f_range: Int, f_ts: Int, f_integrity: Int)
+                 f_range: Int, f_ts: Int, f_integrity: Int) extends GapEvent
 
   case class GState(start: Long, last: Long, count: Int,
                     qRange: Boolean, qTs: Boolean, qInteg: Boolean, qDup: Boolean,
@@ -43,10 +43,8 @@ object SessionGateStream {
                      q_range: Boolean, q_ts: Boolean, q_integrity: Boolean,
                      q_dup: Boolean, q_seq: Boolean, quarantined: Boolean)
 
-  val GapSeconds: Long = Sessionize.GapSeconds
   /** Recent event-id window for bounded in-session dup detection. */
   val MaxDupWindow = 32
-  val WatermarkDelay = "30 minutes"
 
   /** Typed gate-event stream from a raw events frame: drop rows
     * failing null_check, compute the shared event-level flags. */
@@ -63,40 +61,9 @@ object SessionGateStream {
 
   def gateSessions(events: Dataset[GEv]): Dataset[GateOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[GState, GateOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, evs, state: GroupState[GState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(s => finish(uid, s))
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = evs.toSeq.sortBy(e => (e.epoch, e.event_id))
-            var cur = state.getOption
-            val closed = scala.collection.mutable.ListBuffer.empty[GateOut]
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.epoch - s.last <= GapSeconds =>
-                  cur = Some(fold(s, e))
-                case Some(s) =>
-                  closed += finish(uid, s)
-                  cur = Some(fresh(e))
-                case None =>
-                  cur = Some(fresh(e))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(
-                math.max((s.last + GapSeconds) * 1000L + 1,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            closed.iterator
-          }
-      }
+    gapSessions[GEv, GState, GateOut](events, _.last)(
+      open = fresh, fold = (s, e) => (fold(s, e), Iterator.empty),
+      close = (uid, s) => Iterator.single(finish(uid, s)))
   }
 
   private def fresh(e: GEv): GState =
@@ -122,29 +89,18 @@ object SessionGateStream {
   /** Persist the verdict stream as a continuously-written session
     * quarantine log: one row per CLOSED session with its per-reason
     * flags. foreachBatch is at-least-once, so rows land under
-    * (session_date, batch_id) partitions via dynamic overwrite — a
-    * replayed batch rewrites exactly its own partitions
-    * (effectively-once, the qualityLogSink pattern). The log is the
-    * review queue quarantined sessions route into, and
+    * (session_date, batch_id) partitions through `MartSink.batchSink`
+    * — a replayed batch rewrites exactly its own partitions. The log
+    * is the review queue quarantined sessions route into, and
     * `gateDailyFromLog` rescores it with the batch gate's OWN day
     * rollup. */
   def gateLogSink(gated: Dataset[GateOut], logDir: String,
                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    gated.toDF().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch
-            .withColumn("session_date",
-              date_add(lit("1970-01-01").cast("date"),
-                (col("session_start_epoch") / lit(86400)).cast("int")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, logDir, Seq("session_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(gated.toDF(), logDir, checkpointDir, Seq("session_date")) {
+      _.withColumn("session_date",
+        date_add(lit("1970-01-01").cast("date"),
+          (col("session_start_epoch") / lit(86400)).cast("int")))
+    }
 
   /** Day-grain quarantine census from the persisted verdict log —
     * byte-identical shape to the batch `session_quality_gate` query on
@@ -186,7 +142,7 @@ object SessionGateStream {
   /** Gate event + the payload columns the routed sinks carry. */
   case class REv(user_id: Long, event_id: Long, event_type: String,
                  epoch: Long, ts: java.sql.Timestamp, value: Double, props: String,
-                 f_range: Int, f_ts: Int, f_integrity: Int)
+                 f_range: Int, f_ts: Int, f_integrity: Int) extends GapEvent
 
   case class RState(gate: GState, buf: List[REv], bufN: Int, overflowed: Boolean)
 
@@ -217,14 +173,25 @@ object SessionGateStream {
     RoutedEvent(e.user_id, e.event_id, e.event_type, e.ts, e.value, e.props, start, q)
 
   private def freshRoute(e: REv): RState =
-    RState(fold(GState(e.epoch, e.epoch, 0, qRange = false, qTs = false,
-      qInteg = false, qDup = false, Long.MaxValue, Long.MaxValue, Nil), gev(e)),
-      List(e), 1, overflowed = false)
+    RState(fresh(gev(e)), List(e), 1, overflowed = false)
 
   private def closeRoute(uid: Long, s: RState): Iterator[RoutedEvent] = {
     val v = finish(uid, s.gate)
     val q = v.quarantined || s.overflowed
     s.buf.reverse.iterator.map(e => routedRow(e, s.gate.start, q))
+  }
+
+  /** Fold one event into an open routed session. A session past
+    * `MaxBufEvents` emits here: the overflowing event flushes the
+    * whole buffer to review, and every later event passes through. */
+  private def foldRoute(s: RState, e: REv): (RState, Iterator[RoutedEvent]) = {
+    val g = fold(s.gate, gev(e))
+    if (s.overflowed)
+      (RState(g, Nil, 0, overflowed = true), Iterator.single(routedRow(e, g.start, q = true)))
+    else if (s.bufN + 1 > MaxBufEvents)
+      (RState(g, Nil, 0, overflowed = true),
+        (e :: s.buf).reverse.iterator.map(x => routedRow(x, g.start, q = true)))
+    else (RState(g, e :: s.buf, s.bufN + 1, overflowed = false), Iterator.empty)
   }
 
   /** Per-session event routing: buffers a session's events in state
@@ -237,73 +204,26 @@ object SessionGateStream {
     * review in full, emitted incrementally so state stays bounded. */
   def routeSessions(events: Dataset[REv]): Dataset[RoutedEvent] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RState, RoutedEvent](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, evs, state: GroupState[RState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(s => closeRoute(uid, s))
-              .getOrElse(Iterator.empty)
-            state.remove()
-            out
-          } else {
-            val sorted = evs.toSeq.sortBy(e => (e.epoch, e.event_id))
-            var cur = state.getOption
-            val emitted = scala.collection.mutable.ListBuffer.empty[RoutedEvent]
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.epoch - s.gate.last <= GapSeconds =>
-                  val g = fold(s.gate, gev(e))
-                  if (s.overflowed) {
-                    // session already flushed to review — pass through
-                    emitted += routedRow(e, g.start, q = true)
-                    cur = Some(RState(g, Nil, 0, overflowed = true))
-                  } else if (s.bufN + 1 > MaxBufEvents) {
-                    // overflow: flush the WHOLE session to review now
-                    emitted ++= (e :: s.buf).reverse.map(x => routedRow(x, g.start, q = true))
-                    cur = Some(RState(g, Nil, 0, overflowed = true))
-                  } else cur = Some(RState(g, e :: s.buf, s.bufN + 1, overflowed = false))
-                case Some(s) =>
-                  emitted ++= closeRoute(uid, s)
-                  cur = Some(freshRoute(e))
-                case None =>
-                  cur = Some(freshRoute(e))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(
-                math.max((s.gate.last + GapSeconds) * 1000L + 1,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            emitted.iterator
-          }
-      }
+    gapSessions[REv, RState, RoutedEvent](events, _.gate.last)(
+      open = freshRoute, fold = foldRoute, close = closeRoute)
   }
 
   /** One micro-batch of the routing sink: split the routed rows on
     * the verdict and land each side under (event_date, batch_id)
     * partitions via dynamic overwrite — a replayed micro-batch (same
     * batchId) rewrites exactly its own partitions on BOTH sides, so
-    * at-least-once delivery becomes effectively-once table state (the
-    * qualityLogSink construction, applied twice). Exposed separately
+    * at-least-once delivery becomes effectively-once table state
+    * (`MartSink.writeBatch`, once per side). Exposed separately
     * from `routingSink` so replay semantics are directly testable. */
   def routeBatch(batch: DataFrame, batchId: Long,
                  cleanDir: String, reviewDir: String): Unit = {
     if (!batch.isEmpty) {
-      val rows = batch
-        .withColumn("event_date", to_date(col("ts")))
-        .withColumn("batch_id", lit(batchId))
-        .persist()
+      val rows = batch.withColumn("event_date", to_date(col("ts"))).persist()
       try {
-        val clean = rows.filter(!col("quarantined")).drop("quarantined")
-        val review = rows.filter(col("quarantined")).drop("quarantined")
-        if (!clean.isEmpty)
-          graft.sources.MartSink.writePartitioned(clean, cleanDir, Seq("event_date", "batch_id"))
-        if (!review.isEmpty)
-          graft.sources.MartSink.writePartitioned(review, reviewDir, Seq("event_date", "batch_id"))
+        for ((dir, quarantined) <- Seq(cleanDir -> false, reviewDir -> true))
+          graft.sources.MartSink.writeBatch(
+            rows.filter(col("quarantined") === quarantined).drop("quarantined"),
+            batchId, dir, Seq("event_date"))(identity)
       } finally {
         rows.unpersist()
         ()

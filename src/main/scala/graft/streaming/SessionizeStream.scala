@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -24,8 +24,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object SessionizeStream {
 
+  /** What the gap-session loop reads of an event: its key, its order
+    * (epoch, event_id) and its epoch for the gap test. The loop also
+    * watermarks on the event's `ts` column. */
+  private[streaming] trait GapEvent {
+    def user_id: Long
+    def event_id: Long
+    def epoch: Long
+  }
+
   case class Ev(user_id: Long, event_id: Long, event_type: String,
-                epoch: Long, ts: java.sql.Timestamp)
+                epoch: Long, ts: java.sql.Timestamp) extends GapEvent
 
   case class SessionState(
       start: Long, last: Long, count: Int, hasPurchase: Boolean, seq: List[String])
@@ -42,54 +51,73 @@ object SessionizeStream {
     * session may close. */
   val WatermarkDelay = "30 minutes"
 
-  def sessionize(events: Dataset[Ev]): Dataset[SessionOut] = {
+  /** The one event-time gap-session loop, behind `sessionize`,
+    * `SessionGateStream.gateSessions` and `routeSessions`. Per user,
+    * each batch's events fold in (epoch, event_id) order into the open
+    * session while `epoch - last <= GapSeconds`; a wider gap closes it
+    * and opens the next. An open session times out in event time: once
+    * the watermark passes `last + gap` it is closed and its state
+    * removed. The operator supplies only its steps: `open` a session
+    * on an event, `fold` an event in (with any rows to emit now),
+    * `close` a session into rows, and `last`, its latest epoch — which
+    * a fold must keep as a max, so a late event cannot rewind it. */
+  private[streaming] def gapSessions[E <: GapEvent, S: Encoder, O: Encoder](
+      events: Dataset[E], last: S => Long)(
+      open: E => S, fold: (S, E) => (S, Iterator[O]),
+      close: (Long, S) => Iterator[O]): Dataset[O] = {
     import events.sparkSession.implicits._
     events
       .withWatermark("ts", WatermarkDelay)
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
+      .flatMapGroupsWithState[S, O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, evs, state: GroupState[SessionState]) =>
+        (uid: Long, evs: Iterator[E], state: GroupState[S]) =>
           if (state.hasTimedOut) {
             // watermark passed last_event + gap → the session is final
-            val out = state.getOption.map(s => finish(uid, s))
+            val out = state.getOption.map(close(uid, _)).getOrElse(Iterator.empty)
             state.remove()
-            out.iterator
+            out
           } else {
-            val sorted = evs.toSeq.sortBy(e => (e.epoch, e.event_id))
             var cur = state.getOption
-            val closed = scala.collection.mutable.ListBuffer.empty[SessionOut]
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.epoch - s.last <= GapSeconds =>
-                  cur = Some(s.copy(
-                    last = e.epoch, count = s.count + 1,
-                    hasPurchase = s.hasPurchase || e.event_type == "purchase",
-                    seq = (e.event_type :: s.seq).take(MaxSeq)))
+            val out = scala.collection.mutable.ListBuffer.empty[O]
+            evs.toSeq.sortBy(e => (e.epoch, e.event_id)).foreach { e =>
+              cur = Some(cur match {
+                case Some(s) if e.epoch - last(s) <= GapSeconds =>
+                  val (next, emitted) = fold(s, e)
+                  out ++= emitted
+                  next
                 case Some(s) =>
-                  closed += finish(uid, s)
-                  cur = Some(fresh(e))
-                case None =>
-                  cur = Some(fresh(e))
-              }
+                  out ++= close(uid, s)
+                  open(e)
+                case None => open(e)
+              })
             }
             cur.foreach { s =>
               state.update(s)
               // close when the watermark passes the gap horizon; the
               // timestamp must exceed the current watermark, so clamp
               state.setTimeoutTimestamp(
-                math.max((s.last + GapSeconds) * 1000L + 1,
+                math.max((last(s) + GapSeconds) * 1000L + 1,
                   state.getCurrentWatermarkMs() + 1))
             }
-            closed.iterator
+            out.iterator
           }
       }
   }
 
-  private def fresh(e: Ev) = SessionState(e.epoch, e.epoch, 1, e.event_type == "purchase", List(e.event_type))
-
-  private def finish(uid: Long, s: SessionState) = SessionOut(
-    uid, s.start, s.last, s.count, s.hasPurchase, s.seq.reverse.mkString(" -> "))
+  def sessionize(events: Dataset[Ev]): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    gapSessions[Ev, SessionState, SessionOut](events, _.last)(
+      open = e => SessionState(e.epoch, e.epoch, 1, e.event_type == "purchase",
+        List(e.event_type)),
+      fold = (s, e) => (SessionState(
+        start = math.min(s.start, e.epoch), last = math.max(s.last, e.epoch),
+        count = s.count + 1,
+        hasPurchase = s.hasPurchase || e.event_type == "purchase",
+        seq = (e.event_type :: s.seq).take(MaxSeq)), Iterator.empty),
+      close = (uid, s) => Iterator.single(SessionOut(uid, s.start, s.last, s.count,
+        s.hasPurchase, s.seq.reverse.mkString(" -> "))))
+  }
 
   /** Typed event stream from the raw events DataFrame. */
   def asEvents(events: DataFrame): Dataset[Ev] = {

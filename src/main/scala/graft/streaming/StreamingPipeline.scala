@@ -26,22 +26,13 @@ object StreamingPipeline {
     * parquet mart partitioned by (event_date, batch_id). */
   private def windowedMartSink(df: DataFrame, path: String,
                                checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .outputMode("append") // watermark-finalized windows only
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch
-            .withColumn("window_start", col("window.start"))
-            .withColumn("window_end", col("window.end"))
-            .drop("window")
-            .withColumn("event_date", to_date(col("window_start")))
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.MartSink.writePartitioned(rows, path, Seq("event_date", "batch_id"))
-        }
-        ()
-      }
-      .start()
+    // append: watermark-finalized windows only
+    graft.sources.MartSink.batchSink(df, path, checkpointDir, Seq("event_date")) {
+      _.withColumn("window_start", col("window.start"))
+        .withColumn("window_end", col("window.end"))
+        .drop("window")
+        .withColumn("event_date", to_date(col("window_start")))
+    }
 
   /** Start the continuous pipeline over a JSONL ingest directory.
     * Returns the running queries (funnel mart, traffic mart, quality

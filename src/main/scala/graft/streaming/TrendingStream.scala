@@ -85,21 +85,13 @@ object TrendingStream {
       }
   }
 
-  /** Append-log sink: batchId-keyed dynamic overwrite (replaying a
-    * micro-batch rewrites its own partition — idempotent), same
-    * contract as productLogSink. */
+  /** Append-log sink: `MartSink.batchSink`'s batchId-keyed dynamic
+    * overwrite (replaying a micro-batch rewrites its own partition —
+    * idempotent), in the operator's update mode. */
   def trendLogSink(scores: Dataset[TrendOut], logDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    scores.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.MartSink.writePartitioned(
-            batch.withColumn("batch_id", lit(batchId)), logDir, Seq("batch_id"))
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(scores.toDF(), logDir, checkpointDir, Nil,
+      outputMode = "update")(identity)
 
   /** Full aged-score frame from the persisted log AS OF `asOfEpoch`:
     * latest state row per product among rows written at or before the
@@ -220,10 +212,8 @@ object TrendingStream {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        if (graft.sources.MartSink.writeBatch(batch, batchId, logDir, Nil)(identity)) {
           val spark = batch.sparkSession
-          graft.sources.MartSink.writePartitioned(
-            batch.withColumn("batch_id", lit(batchId)), logDir, Seq("batch_id"))
           spark.catalog.refreshByPath(logDir)
           val asOf = batch.agg(max(col("last_epoch"))).collect().head.getLong(0)
           val changes = changesBetween(spark, logDir, n, halfLife,

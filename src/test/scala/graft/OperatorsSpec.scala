@@ -2123,6 +2123,22 @@ class QualitySpec extends SparkSpec {
     }
   }
 
+  test("suggestion contract: a range row with a null bound refuses to load and to gate") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_nullbound").toString + "/contract"
+    val contract = Seq[(String, String, Option[Double], Option[Double], String)](
+        ("value", "not_null", None, None, null),
+        ("value", "range", None, Some(10.0), null))
+      .toDF("column_name", "check_type", "lo", "hi", "value_set")
+    Quality.writeSuggestions(contract, path, builtFrom = "pinned-before-any-value")
+    val load = intercept[IllegalStateException](Quality.loadSuggestions(spark, path))
+    assert(load.getMessage.contains("range check on value") &&
+      load.getMessage.contains("re-pin"), load.getMessage)
+    intercept[IllegalStateException] {
+      Quality.suggestionGate(Seq(1.5, 20.0).toDF("value"), path).collect()
+    }
+  }
+
   test("contract drift: a widening range surfaces BEFORE any check fails; gate stays pinned until promoted") {
     import spark.implicits._
     def frame(rows: Seq[(Long, Option[Long], String, Double)]) =

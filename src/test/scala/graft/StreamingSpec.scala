@@ -563,6 +563,37 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming quality log counts null props and ts like the batch per-date checks") {
+    implicit val sqlCtx = spark.sqlContext
+    implicit val enc = Encoders.product[(Long, java.sql.Timestamp, Long, String, Double, String)]
+    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
+    val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    def at(min: Int) = new java.sql.Timestamp(base.getTime + min * 60000L)
+    val window = Seq(
+      (1L, at(0), 1L, "view", 1.0, "{}"),
+      (2L, at(1), 1L, "view", 1.0, null: String), // null_check failure
+      (3L, at(2), 2L, "bogus_type", 1.0, "{}"))  // range failure
+    mem.addData(window :+ ((4L, at(75), 1L, "view", 1.0, "{}")): _*) // finalizes 10:00
+    val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val log = java.nio.file.Files.createTempDirectory("graft_nlog").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_nckpt").toString
+    val q = EventStream.qualityLogSink(
+      EventStream.qualityCounts(df, watermark = "10 minutes"), log, ckpt)
+    try {
+      q.processAllAvailable()
+      def counts(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+        r.getAs[String]("check_name") ->
+          (r.getAs[Long]("total_records"), r.getAs[Long]("failed_records"))).toMap
+      val streamed = counts(spark.read.parquet(log).collect())
+      import spark.implicits._
+      val batch = counts(operators.Quality.perDateChecks(operators.EventMarts.enrich(
+          window.toDF("event_id", "ts", "user_id", "event_type", "value", "props")))
+        .filter(col("check_name").isin(streamed.keys.toSeq: _*)).collect())
+      assert(streamed("null_check") == ((3L, 1L)), s"stream log: $streamed")
+      assert(streamed == batch, s"stream $streamed vs batch $batch")
+    } finally q.stop()
+  }
+
   test("streaming volume log + batch rescore flags an injected traffic spike") {
     implicit val sqlCtx = spark.sqlContext
     implicit val enc = Encoders.product[(Long, java.sql.Timestamp, Long, String, Double, String)]
@@ -579,7 +610,7 @@ class StreamingSpec extends SparkSpec {
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val log = java.nio.file.Files.createTempDirectory("graft_vlog").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_vckpt").toString
-    val q = EventStream.volumeLogSink(
+    val q = EventStream.windowLogSink(
       EventStream.volumeCounts(df, watermark = "1 hour"), log, ckpt)
     try {
       q.processAllAvailable()
@@ -657,7 +688,7 @@ class StreamingSpec extends SparkSpec {
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val log = java.nio.file.Files.createTempDirectory("graft_blog").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_bckpt").toString
-    val q = EventStream.digitLogSink(
+    val q = EventStream.windowLogSink(
       EventStream.digitCounts(df, watermark = "1 hour"), log, ckpt)
     try q.processAllAvailable() finally q.stop()
     def census(df2: org.apache.spark.sql.DataFrame) = df2.collect()
@@ -679,7 +710,7 @@ class StreamingSpec extends SparkSpec {
     // window dedup keeps counts identical
     val mem2 = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
     mem2.addData(rows: _*)
-    val q2 = EventStream.digitLogSink(
+    val q2 = EventStream.windowLogSink(
       EventStream.digitCounts(
         mem2.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
         watermark = "1 hour"),
@@ -708,7 +739,7 @@ class StreamingSpec extends SparkSpec {
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val log = java.nio.file.Files.createTempDirectory("graft_dlog").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_dckpt").toString
-    val q = EventStream.valueLogSink(
+    val q = EventStream.windowLogSink(
       EventStream.valueBucketCounts(df, watermark = "1 hour"), log, ckpt)
     try {
       q.processAllAvailable()
@@ -758,7 +789,7 @@ class StreamingSpec extends SparkSpec {
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val log = java.nio.file.Files.createTempDirectory("graft_plog").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pckpt").toString
-    val q = EventStream.productLogSink(
+    val q = EventStream.windowLogSink(
       EventStream.productCounts(df, watermark = "1 hour"), log, ckpt)
     try {
       q.processAllAvailable()
@@ -909,6 +940,37 @@ class StreamingSpec extends SparkSpec {
       assert(rows2.length == 2)
       assert(rows2.map(_.getAs[Long]("session_start_epoch")).toSet == Set(1000L, 99999L))
     } finally q.stop()
+  }
+
+  test("a late in-watermark event never rewinds a streamed session: sessionize equals the gate") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // one user, one micro-batch per line: 100000 and 101000, a late
+    // 100500 (inside the 30-minute watermark), then 102500 — within
+    // the gap of 101000, so all four are one session; 999999 closes it
+    val batches = Seq(Seq(100000L, 101000L), Seq(100500L), Seq(102500L), Seq(999999L))
+    def run[E](mem: MemoryStream[E], out: org.apache.spark.sql.DataFrame, name: String,
+               ev: (Long, Long) => E): Set[(Long, Long, Int)] = {
+      val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        var id = 0L
+        batches.foreach { b =>
+          mem.addData(b.map { t => id += 1; ev(id, t) }: _*)
+          q.processAllAvailable()
+        }
+        spark.table(name).collect().map(r => (r.getAs[Long]("session_start_epoch"),
+          r.getAs[Long]("session_end_epoch"), r.getAs[Int]("event_count"))).toSet
+      } finally q.stop()
+    }
+    def ts(epoch: Long) = new java.sql.Timestamp(epoch * 1000L)
+    val sMem = MemoryStream[SessionizeStream.Ev]
+    val sessions = run(sMem, SessionizeStream.sessionize(sMem.toDS()).toDF(), "late_sess",
+      (id, t) => SessionizeStream.Ev(7L, id, "view", t, ts(t)))
+    val gMem = MemoryStream[SessionGateStream.GEv]
+    val gated = run(gMem, SessionGateStream.gateSessions(gMem.toDS()).toDF(), "late_gate",
+      (id, t) => SessionGateStream.GEv(7L, id, "view", t, ts(t), 0, 0, 0))
+    assert(sessions == Set((100000L, 102500L, 4)), s"sessionize: $sessions")
+    assert(sessions == gated, s"sessionize $sessions vs gate $gated")
   }
 
   test("streaming session gate verdicts match the batch gate on finalized sessions") {
