@@ -3,9 +3,10 @@ package graft
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 /** Runs independent driver-side thunks at once — the fan-out of
-  * `Pipeline.run`'s six mart chains and of the daily report's five
-  * collects, whose one-task jobs otherwise wait on each other while
-  * the executor cores sit idle.
+  * `Pipeline.run`'s six mart chains, of the daily report's five
+  * collects and of a micro-batch's outputs (`MartSink.writeBatches`),
+  * whose one-task jobs otherwise wait on each other while the
+  * executor cores sit idle.
   *
   * One thread per thunk, at most six, from a pool made for the call
   * and shut down before it returns. The threads are created by the

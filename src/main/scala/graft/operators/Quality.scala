@@ -1562,6 +1562,7 @@ object Quality {
       .select(col("column_name"), col("check_type"), col("lo"), col("hi"),
         col("value_set"))
       .collect()
+    requireBoundedRanges(sugg.toSeq, "(suggestion frame)")
     val byCol = sugg.groupBy(_.getAs[String]("column_name")).toSeq.sortBy(_._1)
     val resultSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("column_name",
@@ -1660,15 +1661,25 @@ object Quality {
     val rows = df.collect()
     graft.sources.ArtifactManifest.verifyContent(path, "dq_suggestions",
       suggestionsFp(rows))
-    rows.find(r => r.getString(1) == "range" && (r.isNullAt(2) || r.isNullAt(3)))
-      .foreach { r =>
-        throw new IllegalStateException(
-          s"suggestion contract $path: the range check on ${r.getString(0)} has a null " +
-            "bound and cannot enforce anything — re-pin the contract from a healthy run " +
-            "(writeSuggestions)")
-      }
+    requireBoundedRanges(rows.toSeq, path)
     df
   }
+
+  /** Refuse a contract with a `range` row whose bound is null: a
+    * comparison with NULL never flags a row, so that side (or both)
+    * enforces nothing. [[loadSuggestions]], [[runChecks]] and
+    * [[contractFlags]] all check through here; `source` names the
+    * contract (its path, or a hand-built frame). */
+  private def requireBoundedRanges(suggestions: Seq[org.apache.spark.sql.Row],
+                                   source: String): Unit =
+    suggestions.find(r => r.getAs[String]("check_type") == "range" &&
+        (r.isNullAt(r.fieldIndex("lo")) || r.isNullAt(r.fieldIndex("hi"))))
+      .foreach { r =>
+        throw new IllegalStateException(
+          s"suggestion contract $source: the range check on ${r.getAs[String]("column_name")} " +
+            "has a null bound and cannot enforce anything — re-pin the contract from a " +
+            "healthy run (writeSuggestions)")
+      }
 
   private def suggestionsFp(suggestions: Array[org.apache.spark.sql.Row]): String = {
     val canonical = suggestions
@@ -1707,6 +1718,7 @@ object Quality {
     val sugg = suggestions
       .select(col("column_name"), col("check_type"), col("lo"), col("hi"),
         col("value_set")).collect().toSeq
+    requireBoundedRanges(sugg, "(suggestion frame)")
     val (rowLocal, skipped) = sugg.partition(
       _.getAs[String]("check_type") != "unique")
     val flags: Seq[org.apache.spark.sql.Column] = rowLocal.map { r =>

@@ -248,38 +248,63 @@ object MartSink {
         batchSize = batchSize)
   }
 
+  /** One parquet output of a streaming micro-batch: its rows are
+    * `shape(batch)`, landed under `dir` partitioned by
+    * `partitionCols :+ "batch_id"`. */
+  private[graft] final case class BatchOutput(dir: String, partitionCols: Seq[String],
+      shape: DataFrame => DataFrame)
+
   /** The parquet leg of the same idempotency rule, for one streaming
-    * micro-batch: an empty `batch` is skipped (the check is one Spark
-    * job, run on the batch itself), otherwise `shape(batch)` is tagged
-    * with `batch_id` and dynamic-overwritten under
-    * `partitionCols :+ "batch_id"`. `foreachBatch` replays a failed
-    * micro-batch under the same id, so the replay rewrites exactly the
-    * partitions of its first attempt. Returns whether it wrote. */
-  private[graft] def writeBatch(batch: DataFrame, batchId: Long, dir: String,
-      partitionCols: Seq[String])(shape: DataFrame => DataFrame): Boolean = {
-    val nonEmpty = !batch.isEmpty
-    if (nonEmpty)
-      writePartitioned(
-        shape(batch).withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)),
-        dir, partitionCols :+ "batch_id")
-    nonEmpty
+    * micro-batch and any number of outputs: an empty `batch` is
+    * skipped (the check is one Spark job, run on the batch itself),
+    * otherwise every output's rows are tagged with `batch_id` and
+    * dynamic-overwritten under its `partitionCols :+ "batch_id"`, all
+    * outputs at once. The batch is persisted for the check and the
+    * writes, so its plan runs once however many outputs read it.
+    * `foreachBatch` replays a failed micro-batch under the same id,
+    * so the replay rewrites exactly the partitions of its first
+    * attempt in every output. Returns whether it wrote. */
+  private[graft] def writeBatches(batch: DataFrame, batchId: Long,
+      outputs: Seq[BatchOutput]): Boolean = {
+    batch.persist()
+    try {
+      val nonEmpty = !batch.isEmpty
+      if (nonEmpty)
+        graft.Concurrently.all(outputs.map { o => () =>
+          writePartitioned(
+            o.shape(batch).withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)),
+            o.dir, o.partitionCols :+ "batch_id")
+        })
+      nonEmpty
+    } finally { batch.unpersist(); () }
   }
 
+  /** [[writeBatches]] with one output. */
+  private[graft] def writeBatch(batch: DataFrame, batchId: Long, dir: String,
+      partitionCols: Seq[String])(shape: DataFrame => DataFrame): Boolean =
+    writeBatches(batch, batchId, Seq(BatchOutput(dir, partitionCols, shape)))
+
   /** A checkpointed `foreachBatch` query that lands every micro-batch
-    * of `stream` through [[writeBatch]]. `outputMode` is the stream's
-    * own: append for watermark-finalized windows, update for
-    * state-carrying scores. */
-  private[graft] def batchSink(stream: DataFrame, dir: String, checkpointDir: String,
-      partitionCols: Seq[String], outputMode: String = "append")(
-      shape: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    * of `stream` in `outputs` through [[writeBatches]]. `outputMode`
+    * is the stream's own: append for watermark-finalized windows,
+    * update for state-carrying scores. */
+  private[graft] def batchesSink(stream: DataFrame, checkpointDir: String,
+      outputs: Seq[BatchOutput],
+      outputMode: String = "append"): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, dir, partitionCols)(shape)
+        writeBatches(batch, batchId, outputs)
         ()
       }
       .start()
+
+  /** [[batchesSink]] with one output. */
+  private[graft] def batchSink(stream: DataFrame, dir: String, checkpointDir: String,
+      partitionCols: Seq[String], outputMode: String = "append")(
+      shape: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    batchesSink(stream, checkpointDir, Seq(BatchOutput(dir, partitionCols, shape)), outputMode)
 
   /** What a `mergeJdbc` run actually moved: `upserted` rows staged and
     * swapped in (new + changed), `deleted` vanished-key rows removed,

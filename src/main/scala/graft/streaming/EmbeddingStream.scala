@@ -53,8 +53,8 @@ object EmbeddingStream {
     * partitions (idempotent replay). An un-L2'd deploy or a pooling
     * change shows up as the batch's norm mass leaving the corpus's
     * bins — hours before recall degrades at the index. State is ZERO
-    * (stateless per-batch rollup to ≤41 rows); the raw vectors never
-    * persist. Written through `MartSink.batchSink`. */
+    * (stateless per-batch rollup to ≤41 rows); the raw vectors are
+    * never logged. Written through `MartSink.batchSink`. */
   def normLogSink(vecs: DataFrame, logDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     graft.sources.MartSink.batchSink(vecs, logDir, checkpointDir, Nil)(

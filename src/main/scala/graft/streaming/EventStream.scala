@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,26 +43,46 @@ object EventStream {
   /** Core over an ALREADY-watermarked stream (a watermark may only be
     * defined once per query — e.g. upstream of `dedupEvents`). */
   def funnelCountsOn(events: DataFrame): DataFrame =
-    events
-      .withColumn("segment", (col("user_id") % 3).cast("int"))
-      .groupBy(window(col("ts"), "1 hour"), col("segment"))
-      .agg(
-        count(when(col("event_type") === "view", 1)).as("views"),
-        count(when(col("event_type") === "click", 1)).as("clicks"),
-        count(when(col("event_type") === "purchase", 1)).as("purchases"),
-        approx_count_distinct(when(col("event_type") === "purchase", col("user_id"))).as("purchasers_approx"),
-        sum(when(col("event_type") === "purchase", col("value")).otherwise(lit(0.0))).as("revenue"))
+    aggregated(events.withColumn("segment", segment)
+      .groupBy(window(col("ts"), "1 hour"), col("segment")), funnelAggs)
+
+  /** The funnel mart's segment: `user_id` mod 3 (null for a null user). */
+  private def segment: Column = (col("user_id") % 3).cast("int")
+
+  /** The named aggregates of each windowed mart, written once for the
+    * standalone streams and for [[windowedMartsOn]]. Defs, so every
+    * plan gets its own aliases. */
+  private def funnelAggs: Seq[(String, Column)] = Seq(
+    "views" -> count(when(col("event_type") === "view", 1)),
+    "clicks" -> count(when(col("event_type") === "click", 1)),
+    "purchases" -> count(when(col("event_type") === "purchase", 1)),
+    "purchasers_approx" ->
+      approx_count_distinct(when(col("event_type") === "purchase", col("user_id"))),
+    "revenue" ->
+      sum(when(col("event_type") === "purchase", col("value")).otherwise(lit(0.0))))
+
+  private def trafficAggs: Seq[(String, Column)] = Seq(
+    "event_count" -> count(lit(1)),
+    "unique_users_approx" -> approx_count_distinct(col("user_id")))
+
+  private def qualityAggs: Seq[(String, Column)] = Seq(
+    "total" -> count(lit(1)),
+    "null_failed" -> count(when(graft.operators.Quality.nullFailed, 1)),
+    "range_failed" -> count(when(graft.operators.Quality.rangeFailed, 1)),
+    "ts_failed" -> count(when(graft.operators.Quality.tsFailed(), 1)))
+
+  private def aggregated(grouped: org.apache.spark.sql.RelationalGroupedDataset,
+                         aggs: Seq[(String, Column)]): DataFrame = {
+    val named = aggs.map { case (name, agg) => agg.as(name) }
+    grouped.agg(named.head, named.tail: _*)
+  }
 
   /** Hourly traffic mart, streaming flavor. */
   def hourlyTraffic(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     hourlyTrafficOn(events.withWatermark("ts", watermark))
 
   def hourlyTrafficOn(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(
-        count(lit(1)).as("event_count"),
-        approx_count_distinct(col("user_id")).as("unique_users_approx"))
+    aggregated(events.groupBy(window(col("ts"), "1 hour")), trafficAggs)
 
   /** Live level-shift watch: `traffic_changepoint`'s scaled-integer
     * CUSUM over the hourly-traffic log's finalized windows — the
@@ -155,13 +175,7 @@ object EventStream {
     qualityCountsOn(events.withWatermark("ts", watermark))
 
   def qualityCountsOn(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(
-        count(lit(1)).as("total"),
-        count(when(graft.operators.Quality.nullFailed, 1)).as("null_failed"),
-        count(when(graft.operators.Quality.rangeFailed, 1)).as("range_failed"),
-        count(when(graft.operators.Quality.tsFailed(), 1)).as("ts_failed"))
+    aggregated(events.groupBy(window(col("ts"), "1 hour")), qualityAggs)
 
   /** Persist the streaming quality monitor as a continuously-written
     * check log: each watermark-FINALIZED window's counts are unpivoted
@@ -175,17 +189,70 @@ object EventStream {
     * its own partitions. */
   def qualityLogSink(quality: DataFrame, logDir: String,
                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.MartSink.batchSink(quality, logDir, checkpointDir, Seq("run_date")) {
-      _.select(
-          col("window.start").as("window_start"),
-          expr("""stack(3,
-            |  'null_check', total, null_failed,
-            |  'range_check', total, range_failed,
-            |  'timestamp_check', total, ts_failed
-            |) as (check_name, total_records, failed_records)""".stripMargin))
-        .transform(graft.operators.Quality.rated)
-        .withColumn("run_date", to_date(col("window_start")))
-    }
+    graft.sources.MartSink.batchSink(quality, logDir, checkpointDir, Seq("run_date"))(
+      qualityLogShape)
+
+  /** A [[qualityCountsOn]] batch in the check log's row shape: one
+    * rated row per check and window, dated by the window start. */
+  private def qualityLogShape(quality: DataFrame): DataFrame =
+    quality.select(
+        col("window.start").as("window_start"),
+        expr("""stack(3,
+          |  'null_check', total, null_failed,
+          |  'range_check', total, range_failed,
+          |  'timestamp_check', total, ts_failed
+          |) as (check_name, total_records, failed_records)""".stripMargin))
+      .transform(graft.operators.Quality.rated)
+      .withColumn("run_date", to_date(col("window_start")))
+
+  /** A windowed mart batch (funnel or traffic) in its parquet row
+    * shape: the `window` struct flattened to `window_start` and
+    * `window_end`, dated by the window start. */
+  private def windowedMartShape(marts: DataFrame): DataFrame =
+    marts
+      .withColumn("window_start", col("window.start"))
+      .withColumn("window_end", col("window.end"))
+      .drop("window")
+      .withColumn("event_date", to_date(col("window_start")))
+
+  /** The windowed marts of one watermarked stream as ONE stateful
+    * aggregate: [[funnelCountsOn]]'s aggregates per (1-hour window,
+    * segment) and [[hourlyTrafficOn]]'s and [[qualityCountsOn]]'s per
+    * window, as two grouping sets over the same `window`. A query over
+    * it keeps one window state where a query per mart keeps one each.
+    * [[funnelMart]], [[trafficMart]] and [[qualityLog]] cut a batch
+    * of it into the rows the standalone streams land: the per-window set
+    * sees every event of its window, so even the HLL estimates equal
+    * the standalone ones. */
+  private[streaming] def windowedMartsOn(events: DataFrame): DataFrame =
+    aggregated(
+      events
+        .withColumn("window", window(col("ts"), "1 hour"))
+        .withColumn("segment", segment)
+        .groupingSets(Seq(Seq(col("window"), col("segment")), Seq(col("window"))),
+          col("window"), col("segment")),
+      ("grouping_id" -> grouping_id()) +: (funnelAggs ++ trafficAggs ++ qualityAggs))
+
+  /** One grouping set's rows of a [[windowedMartsOn]] batch, in the
+    * standalone stream's columns (grouping_id 1 = segment rolled up). */
+  private def groupingSetRows(marts: DataFrame, perWindow: Boolean,
+                              aggs: Seq[(String, Column)]): DataFrame = {
+    val keys = if (perWindow) Seq("window") else Seq("window", "segment")
+    marts.filter(col("grouping_id") === (if (perWindow) 1 else 0))
+      .select((keys ++ aggs.map(_._1)).map(col): _*)
+  }
+
+  /** The funnel mart's rows of a [[windowedMartsOn]] batch. */
+  private[streaming] def funnelMart(marts: DataFrame): DataFrame =
+    windowedMartShape(groupingSetRows(marts, perWindow = false, funnelAggs))
+
+  /** The traffic mart's rows of a [[windowedMartsOn]] batch. */
+  private[streaming] def trafficMart(marts: DataFrame): DataFrame =
+    windowedMartShape(groupingSetRows(marts, perWindow = true, trafficAggs))
+
+  /** The check log's rows of a [[windowedMartsOn]] batch. */
+  private[streaming] def qualityLog(marts: DataFrame): DataFrame =
+    qualityLogShape(groupingSetRows(marts, perWindow = true, qualityAggs))
 
   /** Per-window per-type event-volume counts — the feed for the
     * streaming flavor of `Quality.volumeAnomaly`. Append mode: a
@@ -277,25 +344,15 @@ object EventStream {
     * hours before any event-time window finalizes.
     *
     * Scale shape: the profile passes are column-pruned scans of the
-    * one arriving batch (persisted once, O(batch) per trigger, no
-    * state); the log grows |columns| rows per batch — dimension-sized
-    * forever. Idempotent per batch via the batch_id partition
-    * (`MartSink.writeBatch`). */
+    * one arriving batch (persisted once by `MartSink.writeBatches`,
+    * so a re-readable source is not re-scanned per column; O(batch)
+    * per trigger, no state); the log grows |columns| rows per batch —
+    * dimension-sized forever. Idempotent per batch via the batch_id
+    * partition. */
   def profileLogSink(events: DataFrame, logDir: String,
                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the profile runs one pruned pass per column — persist the
-        // micro-batch so a re-readable source isn't re-scanned per
-        // column
-        try graft.sources.MartSink.writeBatch(batch, batchId, logDir, Nil) { b =>
-          graft.operators.Quality.columnProfileFrom(b.persist())
-        } finally { batch.unpersist(); () }
-        ()
-      }
-      .start()
+    graft.sources.MartSink.batchSink(events, logDir, checkpointDir, Nil)(
+      graft.operators.Quality.columnProfileFrom)
 
   /** Stream-stream interval self-join: attribute each purchase to the
     * same user's views in the preceding hour. Both sides carry a

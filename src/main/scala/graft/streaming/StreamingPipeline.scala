@@ -1,13 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.sources.MartSink
+
 /** The continuous flavor of graft.Pipeline: one deduped event stream
-  * feeds the windowed funnel/traffic marts and the quality check log,
-  * each with its own checkpointed sink.
+  * feeds the windowed funnel/traffic marts and the quality check log
+  * through ONE query — one dedup state, one hourly-window aggregate
+  * (`EventStream.windowedMartsOn`) and one `foreachBatch` that lands
+  * all three outputs — beside the duplicate-audit query.
   *
   * Reference parity: the Airflow DAG re-runs the batch pipeline per
   * execution date (dags/event_pipeline_dag.py); this is the same mart
@@ -16,42 +19,63 @@ import org.apache.spark.sql.types._
   * ON CONFLICT DO NOTHING, and the check log written per finalized
   * window instead of per run.
   *
-  * Every sink is an idempotent batchId-keyed dynamic overwrite
-  * (foreachBatch is at-least-once; a replayed batch rewrites exactly
-  * its own partitions), so crash/restart never duplicates mart rows.
+  * The marts sink is an idempotent batchId-keyed dynamic overwrite
+  * (`MartSink.writeBatches`: foreachBatch is at-least-once; a replayed
+  * batch rewrites exactly its own partitions), and the violation leg
+  * is a parquet file sink (exactly-once through its manifest), so
+  * crash/restart never duplicates rows.
   */
 object StreamingPipeline {
 
-  /** Flatten a windowed aggregate and write it as an idempotent
-    * parquet mart partitioned by (event_date, batch_id). */
-  private def windowedMartSink(df: DataFrame, path: String,
-                               checkpointDir: String): StreamingQuery =
-    // append: watermark-finalized windows only
-    graft.sources.MartSink.batchSink(df, path, checkpointDir, Seq("event_date")) {
-      _.withColumn("window_start", col("window.start"))
-        .withColumn("window_end", col("window.end"))
-        .drop("window")
-        .withColumn("event_date", to_date(col("window_start")))
-    }
+  /** The one query of a flavor's windowed marts: every micro-batch of
+    * `events` (already watermarked) aggregated once and landed as the
+    * funnel mart, the traffic mart and, when `qualityDir` is given,
+    * the quality check log. The marts are partitioned by
+    * (event_date, batch_id), the log by (run_date, batch_id). Append:
+    * watermark-finalized windows only. */
+  private def windowedMartsSink(events: DataFrame, funnelDir: String, trafficDir: String,
+      qualityDir: Option[String], checkpointDir: String): StreamingQuery =
+    MartSink.batchesSink(EventStream.windowedMartsOn(events), checkpointDir,
+      Seq(MartSink.BatchOutput(funnelDir, Seq("event_date"), EventStream.funnelMart),
+        MartSink.BatchOutput(trafficDir, Seq("event_date"), EventStream.trafficMart)) ++
+        qualityDir.map(MartSink.BatchOutput(_, Seq("run_date"), EventStream.qualityLog)))
+
+  /** Refuse an `outDir` that holds a checkpoint of the one-query-per-
+    * mart layout: the merged query's own checkpoint would start from
+    * offset 0 beside it and re-emit every finalized window under new
+    * batch ids, so the mart dirs would count those windows twice. */
+  private def refuseSplitCheckpoints(spark: SparkSession, outDir: String,
+                                     names: Seq[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    names.map(n => new org.apache.hadoop.fs.Path(s"$outDir/_checkpoints/$n"))
+      .find(p => p.getFileSystem(conf).exists(p))
+      .foreach { p =>
+        throw new IllegalStateException(
+          s"$p is a checkpoint of the per-mart query layout, which the single windowed-marts " +
+            "query cannot resume: it would re-emit every finalized window and the marts would " +
+            "count them twice. Start on a fresh outDir, or delete the old checkpoints together " +
+            "with the mart and log outputs they wrote.")
+      }
+  }
 
   /** Start the continuous pipeline over a JSONL ingest directory.
-    * Returns the running queries (funnel mart, traffic mart, quality
-    * log) — callers own their lifecycle (`processAllAvailable` in
-    * tests, `awaitTermination` in production). */
+    * Returns the running queries: the windowed marts (funnel mart,
+    * traffic mart and quality log, checkpointed under
+    * `_checkpoints/marts`) and the duplicate audit — callers own their
+    * lifecycle (`processAllAvailable` in tests, `awaitTermination` in
+    * production). Throws `IllegalStateException` when `outDir` holds
+    * a checkpoint of the earlier one-query-per-mart layout. */
   def start(spark: SparkSession, inDir: String, outDir: String,
             watermark: String = "2 hours"): Seq[StreamingQuery] = {
+    refuseSplitCheckpoints(spark, outDir, Seq("funnel", "traffic", "quality"))
     // the watermark is defined ONCE, upstream of the dedup (a query
-    // may not redefine it past a stateful operator) — the downstream
-    // marts consume the already-watermarked deduped stream
+    // may not redefine it past a stateful operator) — the marts
+    // consume the already-watermarked deduped stream
     val raw = EventStream.readJsonl(spark, inDir)
-    val events = EventStream.dedupEvents(raw, watermark)
     Seq(
-      windowedMartSink(EventStream.funnelCountsOn(events),
-        s"$outDir/funnel_hourly", s"$outDir/_checkpoints/funnel"),
-      windowedMartSink(EventStream.hourlyTrafficOn(events),
-        s"$outDir/hourly_traffic", s"$outDir/_checkpoints/traffic"),
-      EventStream.qualityLogSink(EventStream.qualityCountsOn(events),
-        s"$outDir/quality_check_log", s"$outDir/_checkpoints/quality"),
+      windowedMartsSink(EventStream.dedupEvents(raw, watermark),
+        s"$outDir/funnel_hourly", s"$outDir/hourly_traffic",
+        Some(s"$outDir/quality_check_log"), s"$outDir/_checkpoints/marts"),
       // the dedup's EVIDENCE leg: dedupEvents silently drops in-horizon
       // re-arrivals from the mart path; this sink RECORDS each drop as
       // a violation row (the at-least-once delivery audit the batch
@@ -111,22 +135,25 @@ object StreamingPipeline {
 
   /** Start the routed pipeline over an already-streaming raw event
     * frame (tests drive this with MemoryStream; `startRouted` wraps it
-    * for the JSONL ingest dir). Returns (router, clean funnel mart,
-    * clean traffic mart) — the marts read `outDir/clean_events`, so on
-    * restart they resume from the router's durable output, not from
-    * the raw feed (no double-gating, no re-ingest). */
+    * for the JSONL ingest dir). Returns (router, clean marts): the
+    * clean marts query lands `funnel_hourly_clean` and
+    * `hourly_traffic_clean`, checkpointed under
+    * `_checkpoints/marts_clean`. It reads `outDir/clean_events`, so on
+    * restart it resumes from the router's durable output, not from
+    * the raw feed (no double-gating, no re-ingest). Throws
+    * `IllegalStateException` when `outDir` holds a checkpoint of the
+    * earlier one-query-per-mart layout. */
   def startRoutedOn(spark: SparkSession, rawEvents: DataFrame, outDir: String,
                     martWatermark: String = "6 hours"): Seq[StreamingQuery] = {
+    refuseSplitCheckpoints(spark, outDir, Seq("funnel_clean", "traffic_clean"))
     val router = SessionGateStream.routingSink(
       SessionGateStream.routeSessions(SessionGateStream.asRouteEvents(rawEvents)),
       s"$outDir/clean_events", s"$outDir/review_events",
       s"$outDir/_checkpoints/router")
-    val clean = routedCleanStream(spark, s"$outDir/clean_events", martWatermark)
     Seq(router,
-      windowedMartSink(EventStream.funnelCountsOn(clean),
-        s"$outDir/funnel_hourly_clean", s"$outDir/_checkpoints/funnel_clean"),
-      windowedMartSink(EventStream.hourlyTrafficOn(clean),
-        s"$outDir/hourly_traffic_clean", s"$outDir/_checkpoints/traffic_clean"))
+      windowedMartsSink(routedCleanStream(spark, s"$outDir/clean_events", martWatermark),
+        s"$outDir/funnel_hourly_clean", s"$outDir/hourly_traffic_clean", None,
+        s"$outDir/_checkpoints/marts_clean"))
   }
 
   /** Routed pipeline over a JSONL ingest directory: live marts that
@@ -139,7 +166,8 @@ object StreamingPipeline {
     startRoutedOn(spark, EventStream.readJsonl(spark, inDir), outDir, martWatermark)
 
   /** Standalone runner: `runMain graft.streaming.StreamingPipeline
-    * <jsonlInDir> <outDir>` — starts the three sinks and blocks. */
+    * <jsonlInDir> <outDir>` — starts the flavor's two queries and
+    * blocks. */
   def main(args: Array[String]): Unit = {
     val flags = args.filter(_.startsWith("--"))
     val pos = args.filterNot(_.startsWith("--"))

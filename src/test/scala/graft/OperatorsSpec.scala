@@ -2139,6 +2139,23 @@ class QualitySpec extends SparkSpec {
     }
   }
 
+  test("suggestion frame: a hand-built range row with a null bound refuses to gate and to flag") {
+    import spark.implicits._
+    val target = Seq(-3.0, 1.5, 20.0).toDF("value")
+    for (hi <- Seq(Some(10.0), None)) {
+      val frame = Seq[(String, String, Option[Double], Option[Double], String)](
+          ("value", "range", None, hi, null))
+        .toDF("column_name", "check_type", "lo", "hi", "value_set")
+      for (entry <- Seq[() => Any](
+          () => Quality.runChecks(target, frame).collect(),
+          () => Quality.contractFlags(target, frame)._1.collect())) {
+        val e = intercept[IllegalStateException](entry())
+        assert(e.getMessage.contains("range check on value") && e.getMessage.contains("re-pin"),
+          e.getMessage)
+      }
+    }
+  }
+
   test("contract drift: a widening range surfaces BEFORE any check fails; gate stays pinned until promoted") {
     import spark.implicits._
     def frame(rows: Seq[(Long, Option[Long], String, Double)]) =

@@ -57,6 +57,45 @@ class SourcesSpec extends SparkSpec {
     assert(back.filter(col("event_date") === "2024-01-02").collect().head.getAs[Long]("n") == 99L)
   }
 
+  test("writeBatches: a replayed batch id rewrites exactly its own partitions in every output") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_batches").toString
+    val (events, daily) = (s"$root/events", s"$root/daily")
+    // two outputs of one batch: its rows by event_date, and a per-date
+    // count by run_date
+    val outputs = Seq(
+      MartSink.BatchOutput(events, Seq("event_date"), identity),
+      MartSink.BatchOutput(daily, Seq("run_date"),
+        _.groupBy(col("event_date").as("run_date")).agg(count(lit(1)).as("n"))))
+    def batch(rows: (Long, String)*) = rows.toDF("event_id", "event_date")
+    def land(): Set[String] =
+      Seq(events, daily).flatMap(d => spark.read.parquet(d).collect().map(r => s"$d:$r")).toSet
+    assert(MartSink.writeBatches(batch(1L -> "2024-01-01", 2L -> "2024-01-02"), 0L, outputs))
+    assert(MartSink.writeBatches(batch(3L -> "2024-01-02"), 1L, outputs))
+    val first = land()
+    // an at-least-once replay of batch 1: the same rows land once
+    assert(MartSink.writeBatches(batch(3L -> "2024-01-02"), 1L, outputs))
+    assert(land() == first)
+    assert(spark.read.parquet(events).count() == 3 && spark.read.parquet(daily).count() == 3)
+    // a replay whose rows differ rewrites batch 1's partition, not
+    // batch 0's rows of the same date, in both outputs
+    assert(MartSink.writeBatches(batch(5L -> "2024-01-02", 6L -> "2024-01-02"), 1L, outputs))
+    def batchOf(r: org.apache.spark.sql.Row) = r.getAs[Number]("batch_id").longValue
+    val ids = spark.read.parquet(events).collect()
+      .map(r => r.getAs[Long]("event_id") -> batchOf(r)).toSet
+    assert(ids == Set(1L -> 0L, 2L -> 0L, 5L -> 1L, 6L -> 1L), ids)
+    val perDate = spark.read.parquet(daily).collect()
+      .map(r => (r.getAs[Any]("run_date").toString, batchOf(r), r.getAs[Long]("n"))).toSet
+    assert(perDate == Set(("2024-01-01", 0L, 1L), ("2024-01-02", 0L, 1L), ("2024-01-02", 1L, 2L)),
+      perDate)
+    // an empty batch writes no output at all, not even its directory
+    val (e2, d2) = (s"$root/empty_events", s"$root/empty_daily")
+    assert(!MartSink.writeBatches(batch(), 2L, outputs.zip(Seq(e2, d2)).map {
+      case (o, d) => o.copy(dir = d)
+    }))
+    assert(!new java.io.File(e2).exists() && !new java.io.File(d2).exists())
+  }
+
   test("dynamic overwrite is a writer option: a static session conf cannot wipe other dates") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_mart_static").toString

@@ -908,6 +908,90 @@ class StreamingSpec extends SparkSpec {
     } finally queries.foreach(_.stop())
   }
 
+  test("one windowed-marts query lands the standalone funnel, traffic and quality rows") {
+    val tmp = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+    val (in, out, alone) = (tmp("graft_marts_in"), tmp("graft_marts_out"), tmp("graft_marts_alone"))
+    val wm = "10 minutes"
+    // two hours of events; revenue in quarters, so every sum is exact
+    val lines = (0 until 90).map { m =>
+      val t = f"2024-01-01 ${10 + m / 45}%02d:${m % 45}%02d:00"
+      val et = Seq("view", "click", "purchase")(m % 3)
+      s"""{"event_id":$m,"ts":"$t","user_id":${m % 7},"event_type":"$et","value":${m % 40}.25,"props":"{}"}"""
+    } ++ Seq(
+      // a null user: its funnel row has a null segment
+      """{"event_id":200,"ts":"2024-01-01 10:30:00","event_type":"purchase","value":3.5,"props":"{}"}""",
+      // a null props: the null check fails on it
+      """{"event_id":201,"ts":"2024-01-01 11:10:00","user_id":2,"event_type":"view","value":1.0}""",
+      // out of range: the range check fails on it
+      """{"event_id":202,"ts":"2024-01-01 11:20:00","user_id":3,"event_type":"view","value":-5.0,"props":"{}"}""",
+      // pushes the watermark past both windows
+      """{"event_id":999,"ts":"2024-01-01 14:00:00","user_id":1,"event_type":"view","value":1.0,"props":"{}"}""")
+    val w = new java.io.PrintWriter(s"$in/events.jsonl")
+    lines.foreach(w.println)
+    w.close()
+    val raw = EventStream.readJsonl(spark, in)
+    val standalone = Seq(
+      EventStream.funnelCounts(raw, wm).writeStream.format("memory")
+        .queryName("marts_alone_funnel").outputMode("append").start(),
+      EventStream.hourlyTraffic(raw, wm).writeStream.format("memory")
+        .queryName("marts_alone_traffic").outputMode("append").start(),
+      EventStream.qualityLogSink(EventStream.qualityCounts(raw, wm),
+        s"$alone/quality_check_log", s"$alone/_checkpoints/quality"))
+    val queries = StreamingPipeline.start(spark, in, out, watermark = wm)
+    try {
+      (standalone ++ queries).foreach(_.processAllAvailable())
+      // one query for the three marts beside the duplicate audit; it
+      // keeps one dedup state and one window state
+      assert(queries.length == 2)
+      assert(queries.head.lastProgress.stateOperators.map(_.operatorName).sorted.toSeq ==
+        Seq("dedupeWithinWatermark", "stateStoreSave"))
+      def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+        df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      def flat(table: String) = spark.table(table)
+        .withColumn("window_start", col("window.start"))
+        .withColumn("window_end", col("window.end"))
+      val funnelCols = Seq("window_start", "window_end", "segment", "views", "clicks",
+        "purchases", "purchasers_approx", "revenue")
+      val funnel = rows(spark.read.parquet(s"$out/funnel_hourly"), funnelCols)
+      assert(funnel.length == 7 && funnel == rows(flat("marts_alone_funnel"), funnelCols),
+        funnel.mkString("\n"))
+      assert(spark.read.parquet(s"$out/funnel_hourly").filter(col("segment").isNull).count() == 1)
+      val trafficCols = Seq("window_start", "window_end", "event_count", "unique_users_approx")
+      val traffic = rows(spark.read.parquet(s"$out/hourly_traffic"), trafficCols)
+      assert(traffic.length == 2 && traffic == rows(flat("marts_alone_traffic"), trafficCols),
+        traffic.mkString("\n"))
+      val qlog = spark.read.parquet(s"$out/quality_check_log").drop("batch_id")
+      val qlogCols = qlog.columns.toSeq
+      assert(rows(qlog, qlogCols) ==
+        rows(spark.read.parquet(s"$alone/quality_check_log"), qlogCols))
+      assert(qlog.filter(col("failed_records") > 0).select("check_name").distinct()
+        .collect().map(_.getString(0)).toSet == Set("null_check", "range_check"))
+    } finally (standalone ++ queries).foreach(_.stop())
+  }
+
+  test("a per-mart checkpoint of the earlier layout refuses to start instead of double-counting") {
+    val tmp = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+    val in = tmp("graft_guard_in")
+    def planted(name: String): String = {
+      val out = tmp("graft_guard_out")
+      new java.io.File(s"$out/_checkpoints/$name/offsets").mkdirs()
+      out
+    }
+    def refused(name: String)(startOn: String => Seq[org.apache.spark.sql.streaming.StreamingQuery]) = {
+      val e = intercept[IllegalStateException](startOn(planted(name)))
+      assert(e.getMessage.contains(s"_checkpoints/$name") && e.getMessage.contains("fresh outDir"),
+        e.getMessage)
+    }
+    for (name <- Seq("funnel", "traffic", "quality"))
+      refused(name)(StreamingPipeline.start(spark, in, _))
+    val (_, df) = eventsDf()
+    for (name <- Seq("funnel_clean", "traffic_clean"))
+      refused(name)(StreamingPipeline.startRoutedOn(spark, df, _))
+    // a fresh outDir starts the router and one clean-marts query
+    val queries = StreamingPipeline.startRoutedOn(spark, df, tmp("graft_guard_fresh"))
+    try assert(queries.length == 2) finally queries.foreach(_.stop())
+  }
+
   test("streaming sessionization closes sessions on gap and keeps order") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
