@@ -40,11 +40,20 @@ NOISY otherwise (a contended-run artifact, not a code regression).
 Exit code 1 only for REGRESSED queries, so a cron invocation no
 longer needs a human to adjudicate sandbox contention spikes.
 
+Work counters: graft.Bench rows (and the bench_full sidecar's "jobs",
+"stages" and "tasks" maps) carry each query's first-run Spark job,
+stage and task counts. They do not move with the host, so when both
+records ran over the same data ("sf"), a counter delta is reported as
+COUNTERS and is a code change (exit 1 whatever the canaries say), and
+a wall-time flag on a query whose counters are unchanged is advisory
+only. Records without the fields are compared on wall time alone.
+
 --smoke runs a planted-pair self-test of the canary logic (no Spark):
 a >2x mover under mismatched canaries must downgrade to exit 0, the
 same mover under matching canaries must flag with exit 1, a
 degrading-host record must print its warning, and an error row must
-class REGRESSED. Exit 0 iff all hold.
+class REGRESSED; a counter delta must exit 1 and a wall-only delta
+with unchanged counters must stay advisory. Exit 0 iff all hold.
 """
 import json
 import os
@@ -208,6 +217,42 @@ def parse(path):
     return times, canary, band, shuffle, sband, failed
 
 
+def counters_of(path):
+    """-> ({query: (jobs, stages, tasks)}, sf) from a bench_full
+    sidecar, a driver record (its sidecar, then its tail) or a raw
+    log; ({}, sf) for records that predate the counters."""
+    text = open(path).read()
+    try:
+        doc = json.loads(text)
+    except ValueError:
+        doc = None
+    counts, sf, lines = {}, None, text.splitlines()
+    if isinstance(doc, dict):
+        if "tail" in doc:
+            full = full_record(path) or {}
+            lines = (doc.get("tail") or "").splitlines()
+        else:
+            full, lines = doc, []
+        maps = [full.get(k) for k in ("jobs", "stages", "tasks")]
+        if all(isinstance(m, dict) for m in maps):
+            counts = {q: tuple(int(m[q]) for m in maps)
+                      for q in maps[0] if all(q in m for m in maps)}
+        sf = full.get("sf")
+    for line in lines:
+        try:
+            row = json.loads(line)
+        except ValueError:
+            continue  # a truncated or non-JSON line
+        if not isinstance(row, dict):
+            continue
+        if "sf" in row and row.get("metric") == "total":
+            sf = row["sf"]
+        if "query" in row and all(isinstance(row.get(k), int)
+                                  for k in ("jobs", "stages", "tasks")):
+            counts[row["query"]] = (row["jobs"], row["stages"], row["tasks"])
+    return counts, sf
+
+
 def adjudicate(flagged, sf_dir, repeat=3):
     """Re-run the flagged queries in one fresh JVM, k runs each, and
     return {query: stable_min_seconds}. A query missing from the rerun
@@ -271,11 +316,22 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
             "in different host states — per-query flags are ADVISORY"
             + (", adjudicating with fresh current-host reruns"
                if adj_dir else "; rerun on a quiet host or use --adjudicate"))
+    (old_c, old_sf), (new_c, new_sf) = counters_of(old_path), counters_of(new_path)
+    counted = set(old_c) & set(new_c) if old_sf == new_sf else set()
+    changed = sorted(q for q in counted if old_c[q] != new_c[q])
+    for q in changed:
+        out(f"COUNTERS {q}: jobs/stages/tasks "
+            f"{'/'.join(map(str, old_c[q]))} -> {'/'.join(map(str, new_c[q]))} "
+            "on the same data: a code change")
     flagged = []
     for q in sorted(set(old) & set(new)):
         o, n = old[q], new[q]
         # ignore sub-100ms noise: a 0.02->0.05s "regression" is jitter
         if n > flag * o and n - o > 0.1:
+            if q in counted and q not in changed:
+                out(f"SLOWER  {q}: {o:.2f}s -> {n:.2f}s  (x{n / o:.1f}; advisory: "
+                    "jobs/stages/tasks unchanged)")
+                continue
             flagged.append((q, o, n))
             out(f"SLOWER  {q}: {o:.2f}s -> {n:.2f}s  (x{n / o:.1f})")
     for q in sorted(set(new) - set(old)):
@@ -308,6 +364,9 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
     if new_failed:
         out(f"exit 1: {len(new_failed)} failed queries are REGRESSED "
             "whatever the host state")
+    if changed:
+        out(f"exit 1: {len(changed)} queries changed their work counters, "
+            "whatever the host state")
     if flagged and adj_dir:
         out(f"adjudicating {len(flagged)} flagged queries: "
             f"k=3 fresh-JVM reruns against {adj_dir} ...")
@@ -325,8 +384,8 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
                     f"stable min {shown} (still >{flag}x)")
         out(f"adjudication: {len(regressed)} REGRESSED, "
             f"{len(flagged) - len(regressed)} NOISY")
-        return 1 if regressed or new_failed else 0
-    if new_failed:
+        return 1 if regressed or new_failed or changed else 0
+    if new_failed or changed:
         return 1
     if flagged and mismatch:
         out("exit 0 (downgraded): canary mismatch means these flags are "
@@ -445,11 +504,52 @@ def smoke():
         assert any(l.startswith("REGRESSED q1") for l in lines), lines
         assert any(l.startswith("CANARY MISMATCH") for l in lines), lines
         assert not any(l.startswith("GONE") for l in lines), lines
-    print("canary smoke: 8/8 planted cases OK (mismatch downgrades, "
+        # work counters: a planted extra job on the same data is a code
+        # change from counters alone, and a wall-only delta with
+        # unchanged counters stays advisory; counter-less records parse
+        def counted(path, q1_sec, q1_counts, sf="planted"):
+            json.dump({"queries": {"q1": q1_sec, "q2": 0.5},
+                       "jobs": {"q1": q1_counts[0], "q2": 1},
+                       "stages": {"q1": q1_counts[1], "q2": 1},
+                       "tasks": {"q1": q1_counts[2], "q2": 4},
+                       "total": q1_sec + 0.5, "count": 2, "sf": sf,
+                       "canary": 0.5}, open(path, "w"))
+        c_old = os.path.join(d, "c_old.json")
+        c_job = os.path.join(d, "c_job.json")
+        c_wall = os.path.join(d, "c_wall.log")
+        counted(c_old, 1.0, (3, 4, 16))
+        counted(c_job, 1.0, (4, 5, 17))
+        open(c_wall, "w").write(
+            '{"query":"q1","sec":2.5000,"max":2.6000,'
+            '"jobs":3,"stages":4,"tasks":16}\n'
+            '{"query":"q2","sec":0.5000,"max":0.5000,'
+            '"jobs":1,"stages":1,"tasks":4}\n'
+            '{"metric":"total","value":3.0,"unit":"sec","count":2,'
+            '"sf":"planted","canary":0.5000,"failed":[]}\n')
+        lines = []
+        rc_job = compare(c_old, c_job, 2.0, None, out=lines.append)
+        assert rc_job == 1, f"a counter delta must fail the diff, got {rc_job}"
+        assert any(l.startswith("COUNTERS q1: jobs/stages/tasks 3/4/16 -> 4/5/17")
+                   for l in lines), lines
+        assert not any(l.startswith("COUNTERS q2") for l in lines), lines
+        lines = []
+        rc_wall = compare(c_old, c_wall, 2.0, None, out=lines.append)
+        assert rc_wall == 0, f"a wall-only delta must stay advisory, got {rc_wall}"
+        assert any(l.startswith("SLOWER  q1") and "advisory" in l
+                   for l in lines), lines
+        assert not any(l.startswith("COUNTERS") for l in lines), lines
+        other_sf = os.path.join(d, "c_other_sf.json")
+        counted(other_sf, 1.0, (9, 9, 90), sf="elsewhere")
+        lines = []
+        assert compare(c_old, other_sf, 2.0, None, out=lines.append) == 0, lines
+        assert counters_of(base) == ({}, "planted")
+        assert counters_of(legacy) == ({}, None)
+    print("canary smoke: 10/10 planted cases OK (mismatch downgrades, "
           "quiet flags, legacy flags, record band overrides default, "
           "shuffle probe warns from its record band, "
           "uniform inflation downgrades, concentrated regression flags, "
-          "error row regresses)")
+          "error row regresses, counter delta is a code change, "
+          "wall-only delta with unchanged counters is advisory)")
     return 0
 
 

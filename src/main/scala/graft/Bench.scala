@@ -1,5 +1,11 @@
 package graft
+
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR. Results are forced with a noop-sink write (full
@@ -7,11 +13,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Catalyst prune the aggregates away).
   *
   * Output protocol (timeout-proof): ONE flushed JSON line per query as
-  * it completes — `{"query":name,"sec":min,"max":max}` — followed by a
-  * short total line (count + seconds only; the per-query lines carry
-  * the data, and a fat total line got truncated in the round-5
-  * capture). A driver timeout (rc=124) then costs only the un-run
-  * tail, never the whole round's data.
+  * it completes — `{"query":name,"sec":min,"max":max,"jobs":j,
+  * "stages":s,"tasks":t}` — followed by a short total line (count +
+  * seconds only; the per-query lines carry the data, and a fat total
+  * line got truncated in the round-5 capture). A driver timeout
+  * (rc=124) then costs only the un-run tail, never the whole round's
+  * data. `jobs`, `stages` and `tasks` count the query's first run,
+  * the eager jobs that run while `fn(spark, dir)` builds the frame
+  * included. They do not move with the host, so on the same data a
+  * counter delta means a code change.
+  *
+  * Scale mode (`SPARK_GRAFT_SCALE_REPS=10[,100]`, see `scaleQueries`)
+  * times the same queries over the base dir and over R× replicas of
+  * it built under /tmp (`replicate`), one row per query and decade
+  * with `reps` and `factor`.
   *
   * A query that throws emits `{"query":name,"error":message}` instead
   * of a timing: it is left out of `total`, `count` and the sidecar's
@@ -41,10 +56,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cost from `min`. A fresh-JVM per-query harness would re-pay the
   * build N times and overstate the family by (N-1) builds. */
 object Bench {
-  /** One bench pass: per query (min, max, runs, first-run seconds) in
-    * run order, plus the names of the queries that threw. */
+  /** Jobs, stages and tasks Spark ran for one query's first run. */
+  final case class Counts(jobs: Int, stages: Int, tasks: Int) {
+    def fields: String = s""","jobs":$jobs,"stages":$stages,"tasks":$tasks"""
+  }
+
+  /** One query's min, max and first-run seconds over `runs` runs, and
+    * the counters of its first run. */
+  final case class Timing(min: Double, max: Double, runs: Int, first: Double, counts: Counts)
+
+  /** One bench pass: per query timing in run order, plus the names of
+    * the queries that threw. */
   final case class Record(
-      results: collection.mutable.LinkedHashMap[String, (Double, Double, Int, Double)],
+      results: collection.mutable.LinkedHashMap[String, Timing],
       failed: Seq[String]) {
     /** The bench's exit status: 1 once any query failed. */
     def status: Int = if (failed.isEmpty) 0 else 1
@@ -52,11 +76,28 @@ object Bench {
       "\"failed\":" + failed.map(Verify.jsonString).mkString("[", ",", "]")
   }
 
+  /** Counts the jobs, stages and tasks between [[begin]] and [[end]].
+    * Both drain the listener bus first, so the counts cover exactly the
+    * work submitted in between; the bench runs one query at a time, so
+    * that work is the query's own, eager construction jobs included. */
+  private final class Counter(sc: SparkContext) extends SparkListener {
+    private var jobs, stages, tasks = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized { tasks += 1 }
+    def begin(): Unit = { ListenerBus.drain(sc); synchronized { jobs = 0; stages = 0; tasks = 0 } }
+    def end(): Counts = { ListenerBus.drain(sc); synchronized(Counts(jobs, stages, tasks)) }
+  }
+
   /** Times each query with a noop-sink write and `emit`s one JSON line
-    * per query: a timing row, or an error row when the query throws. */
+    * per query: a timing row with the first run's counters, or an error
+    * row when the query throws. `tag(name, min)` appends fields to the
+    * query's row (`min` is None on an error row). */
   def runQueries(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      budgetSec: Double, forcedRepeat: Option[Int], emit: String => Unit): Record = {
+      budgetSec: Double, forcedRepeat: Option[Int], emit: String => Unit,
+      tag: (String, Option[Double]) => String = (_, _) => ""): Record = {
     val benchStart = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - benchStart) / 1e9
     // "first" = the query's FIRST-run wall: for memoized families the
@@ -65,39 +106,46 @@ object Bench {
     // cold build mechanically instead of re-adjudicating it as noise.
     // Emitted only when >1 run happened (single-run rows have
     // first == sec == max by construction).
-    def line(name: String, mn: Double, mx: Double, first: Double,
-        runs: Int, remeasured: Boolean = false): String =
-      "{\"query\":\"" + name + "\",\"sec\":" + f"$mn%.4f" + ",\"max\":" + f"$mx%.4f" +
-        (if (runs > 1) ",\"first\":" + f"$first%.4f" else "") +
-        (if (remeasured) ",\"remeasured\":true" else "") + "}"
-    val results = collection.mutable.LinkedHashMap.empty[String, (Double, Double, Int, Double)]
+    def line(name: String, t: Timing, remeasured: Boolean = false): String =
+      "{\"query\":\"" + name + "\",\"sec\":" + f"${t.min}%.4f" + ",\"max\":" + f"${t.max}%.4f" +
+        (if (t.runs > 1) ",\"first\":" + f"${t.first}%.4f" else "") +
+        (if (remeasured) ",\"remeasured\":true" else "") +
+        t.counts.fields + tag(name, Some(t.min)) + "}"
+    val results = collection.mutable.LinkedHashMap.empty[String, Timing]
     val failed = collection.mutable.ArrayBuffer.empty[String]
     def fail(name: String, e: Throwable): Unit = {
       results.remove(name)
       failed += name
-      emit("{\"query\":\"" + name + "\",\"error\":" + Verify.jsonString(e.toString) + "}")
+      emit("{\"query\":\"" + name + "\",\"error\":" + Verify.jsonString(e.toString) +
+        tag(name, None) + "}")
     }
     def once(fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    for ((name, fn) <- queries)
-      try {
-        // Adaptive repeat: fast queries get a second run (min damps the
-        // first-run per-plan codegen cost); queries already past 2 s —
-        // or ANY query once the wall budget is spent — keep their single
-        // timing. min AND max are both reported so sandbox noise is
-        // distinguishable from regression without a rerun.
-        val t1 = once(fn)
-        val times = forcedRepeat match {
-          case Some(k) => t1 +: (2 to k).map(_ => once(fn))
-          case None if t1 > 2.0 || elapsed() > budgetSec => Seq(t1)
-          case None => Seq(t1, once(fn))
-        }
-        results(name) = (times.min, times.max, times.size, t1)
-        emit(line(name, times.min, times.max, t1, times.size))
-      } catch { case e: Throwable => fail(name, e) }
+    val counter = new Counter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      for ((name, fn) <- queries)
+        try {
+          // Adaptive repeat: fast queries get a second run (min damps the
+          // first-run per-plan codegen cost); queries already past 2 s —
+          // or ANY query once the wall budget is spent — keep their single
+          // timing. min AND max are both reported so sandbox noise is
+          // distinguishable from regression without a rerun.
+          counter.begin()
+          val t1 = once(fn)
+          val counts = counter.end()
+          val times = forcedRepeat match {
+            case Some(k) => t1 +: (2 to k).map(_ => once(fn))
+            case None if t1 > 2.0 || elapsed() > budgetSec => Seq(t1)
+            case None => Seq(t1, once(fn))
+          }
+          results(name) = Timing(times.min, times.max, times.size, t1, counts)
+          emit(line(name, results(name)))
+        } catch { case e: Throwable => fail(name, e) }
+    } finally spark.sparkContext.removeSparkListener(counter)
     // Outlier re-measure pass: a contention spike or a memo-family
     // cold build during a best-of-one query is indistinguishable from
     // a regression in the record. Re-run (once) every single-run query
@@ -107,19 +155,148 @@ object Bench {
     // 2–4 s cold-hit rows (sec == first, 3.8–7.9× the median) that a
     // 5×/top-8 pass left un-remeasured as false SLOWER flags.
     if (results.nonEmpty) {
-      val median = results.values.map(_._1).toSeq.sorted.apply(results.size / 2)
+      val median = results.values.map(_.min).toSeq.sorted.apply(results.size / 2)
       val outliers = results.toSeq
-        .filter { case (_, (mn, _, runs, _)) => runs == 1 && mn > 3.5 * median }
-        .sortBy(-_._2._1).take(24)
+        .filter { case (_, t) => t.runs == 1 && t.min > 3.5 * median }
+        .sortBy(-_._2.min).take(24)
       val fns = queries.toMap
-      for ((name, (mn, mx, _, first)) <- outliers if elapsed() < 2.0 * budgetSec)
+      for ((name, t) <- outliers if elapsed() < 2.0 * budgetSec)
         try {
-          val t = once(fns(name))
-          results(name) = (math.min(mn, t), math.max(mx, t), 2, first)
-          emit(line(name, math.min(mn, t), math.max(mx, t), first, 2, remeasured = true))
+          val r = once(fns(name))
+          results(name) = t.copy(min = math.min(t.min, r), max = math.max(t.max, r), runs = 2)
+          emit(line(name, results(name), remeasured = true))
         } catch { case e: Throwable => fail(name, e) }
     }
     Record(results, failed.toSeq)
+  }
+
+  /** Skipped on replica decades: each is an in-cell pair enumerator
+    * over every vector, and the replicas copy vectors exactly, so R
+    * replicas put R² pairs in every cell. Their time there would
+    * measure that densification, not scale. */
+  val ReplicaSkips: Set[String] =
+    Set("ann_knn_graph", "ann_knn_classify", "embedding_clusters", "semdedup")
+
+  /** Scale mode: times `queries` over `base` and then over its replica
+    * for each entry of `reps`, one decade after the other. Every
+    * decade starts from `Caches.clearAll()`, so its first memo consumer
+    * pays the cold build. Each row gains `reps` and `factor` (the
+    * decade's min over the base's); a [[ReplicaSkips]] query gets a
+    * `skipped` row on each replica decade. */
+  def scaleQueries(spark: SparkSession, base: String, reps: Seq[Int], root: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      budgetSec: Double, forcedRepeat: Option[Int], emit: String => Unit): Seq[(Int, Record)] = {
+    var baseMin = Map.empty[String, Double]
+    for (r <- (1 +: reps).distinct) yield {
+      val dir = if (r == 1) base else replicate(spark, base, r, root)
+      val (run, skip) = queries.partition { case (n, _) => r == 1 || !ReplicaSkips(n) }
+      for ((n, _) <- skip)
+        emit(s"""{"query":"$n","reps":$r,"skipped":"in-cell pair enumerator on exact vector replicas"}""")
+      Caches.clearAll()
+      def tag(n: String, min: Option[Double]): String = s""","reps":$r""" +
+        min.flatMap(m => if (r == 1) Some(1.0) else baseMin.get(n).map(m / _))
+          .fold("")(f => f""","factor":$f%.2f""")
+      val record = runQueries(spark, dir, run, budgetSec, forcedRepeat, emit, tag)
+      if (r == 1) baseMin = record.results.map { case (n, t) => n -> t.min }.toMap
+      r -> record
+    }
+  }
+
+  private val CipherBase = "abcdefghijklmnopqrstuvwxyz"
+
+  /** One a-z permutation per replica (replica 0 the identity), each
+    * re-seeded until its image of `vocab`'s words of 3 or more chars is
+    * disjoint from the base's and every earlier replica's.
+    *
+    * Why a cipher: a bijective char map preserves every within-replica
+    * structure the dedup family measures — token equality (the
+    * jaccard/minhash axes), document lengths and exact character edit
+    * distances (the PassJoin axis) — so each replica carries exactly
+    * the base corpus's pair structure, and duplicate density is
+    * unchanged by construction. A naive copy would give every doc R
+    * exact twins and measure densification, not scale; per-token
+    * suffixes keep only the token-level part and inject a shared
+    * substring into every token, which densified PassJoin candidates
+    * 1.9× at 10 replicas and 8.9× at 100. Cross-replica token
+    * collisions would re-couple replicas, and replica pairs grow
+    * quadratically (a first cipher without rejection gave 74k
+    * cross-replica candidates at 10 replicas, about 17 % of the pair
+    * space), hence the rejection. Words under 3 chars are exempt: a
+    * 1-char word has only 26 images, and a shared ≤2-char token is
+    * below every measured threshold. The vocabulary still grows about
+    * R×, which keeps the tf-idf, perplexity and vocab-growth axes
+    * honest. */
+  private[graft] def cipherAlphabets(reps: Int, vocab0: Set[String]): Seq[String] = {
+    val vocab = vocab0.filter(_.length >= 3)
+    val out = collection.mutable.ArrayBuffer(CipherBase)
+    val seen = collection.mutable.Set[String]() ++ vocab
+    for (r <- 1 until reps) {
+      var attempt = 0
+      var alpha = ""
+      var mapped = Set.empty[String]
+      do {
+        alpha = new scala.util.Random(7919L * r + 17 + attempt * 1000003L)
+          .shuffle(CipherBase.toList).mkString
+        val m = CipherBase.zip(alpha).toMap
+        mapped = vocab.map(_.map(c => m.getOrElse(c, c)))
+        attempt += 1
+      } while (mapped.exists(seen.contains) && attempt < 1000)
+      require(!mapped.exists(seen.contains), s"no collision-free cipher found for rep $r")
+      seen ++= mapped
+      out += alpha
+    }
+    out.toSeq
+  }
+
+  /** The `reps`× replica of the tables under `base`, at
+    * `root/graft_scale_<base name>_x<reps>`; each table is written
+    * once and reused by later runs. The replicas scale, they do not
+    * densify:
+    *  - events: generator events at the base's count × `reps`, one
+    *    user per 100 events;
+    *  - documents: one copy per replica under that replica's
+    *    [[cipherAlphabets]] cipher, doc ids shifted per replica;
+    *  - embeddings: vectors copied unchanged with vec ids shifted, so
+    *    [[ReplicaSkips]] stay off them;
+    *  - orders, lineitem, customer: order and customer keys shifted
+    *    per replica, so order sizes and per-customer frequencies are
+    *    unchanged (an unreplicated customer table would inner-join
+    *    away every replica's revenue); part and supplier keys stay
+    *    shared, so basket pair counts grow R× at constant support;
+    *  - nation, region, part, supplier: copied. */
+  def replicate(spark: SparkSession, base: String, reps: Int, root: String): String = {
+    val dir = s"$root/graft_scale_${new java.io.File(base).getName}_x$reps"
+    def build(table: String, parts: Int)(df: => DataFrame): Unit =
+      if (!new java.io.File(s"$dir/$table.parquet/_SUCCESS").exists())
+        df.drop("rep", "alphas").repartition(parts)
+          .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+    /** `df` once per replica (column `rep`), each key in `shift` moved
+      * by `rep` × its step */
+    def replicated(df: DataFrame, shift: Map[String, Long]): DataFrame =
+      df.withColumn("rep", explode(sequence(lit(0), lit(reps - 1))))
+        .select(df.columns.toIndexedSeq.map(c => shift.get(c).fold(col(c))(step =>
+          (col(c) + col("rep").cast("long") * step).as(c))) :+ col("rep"): _*)
+    build("events", 32) {
+      val n = Tables.events(spark, base).count() * reps
+      sources.EventGenerator.events(spark, n, days = 30, users = math.max(1L, n / 100))
+    }
+    build("documents", 32) {
+      val docs = Tables.documents(spark, base)
+      val vocab = docs.select(explode(split(col("text"), " ")).as("tok"))
+        .filter(col("tok") =!= "").distinct()
+        .collect().map(_.getString(0)).toSet
+      replicated(docs, Map("doc_id" -> 10000000L))
+        .withColumn("alphas", typedlit(cipherAlphabets(reps, vocab)))
+        .withColumn("text", expr(s"translate(text, '$CipherBase', element_at(alphas, rep + 1))"))
+    }
+    build("embeddings", 32)(replicated(Tables.embeddings(spark, base), Map("vec_id" -> 10000000L)))
+    build("orders", 32)(replicated(Tables.orders(spark, base),
+      Map("o_orderkey" -> 100000000L, "o_custkey" -> 10000000L)))
+    build("lineitem", 32)(replicated(Tables.lineitem(spark, base), Map("l_orderkey" -> 100000000L)))
+    build("customer", 8)(replicated(Tables.customer(spark, base), Map("c_custkey" -> 10000000L)))
+    for (t <- Seq("nation", "region", "part", "supplier"))
+      build(t, 1)(spark.read.parquet(s"$base/$t.parquet"))
+    dir
   }
 
   def main(args: Array[String]): Unit = {
@@ -213,8 +390,13 @@ object Bench {
     // one mistakes it for a clean measurement.
     // named-query iteration runs aren't records (they skip the sidecar
     // write below) — don't make them pay the cooldown
+    // SPARK_GRAFT_SCALE_REPS=10[,100] selects scale mode
+    // (scaleQueries): the base and its replicas under /tmp, one
+    // decade after the other. Like a named-query run it is no record.
+    val scaleReps = sys.env.get("SPARK_GRAFT_SCALE_REPS")
+      .map(_.split(",").map(_.trim.toInt).toSeq)
     val waitBudget =
-      if (args.nonEmpty) 0.0
+      if (args.nonEmpty || scaleReps.nonEmpty) 0.0
       else sys.env.getOrElse("SPARK_GRAFT_CANARY_WAIT", "300").toDouble
     var canaryStart = Seq(canaryProbe(), canaryProbe()).min
     var shuffleStart = Seq(shuffleProbe(), shuffleProbe()).min
@@ -247,32 +429,44 @@ object Bench {
     // adjudication mode scripts/bench_diff.py --adjudicate uses to
     // decide REGRESSED vs NOISY on a stable min instead of one sample.
     val forcedRepeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt)
-    val record = runQueries(spark, sfDir,
-      SparkEntry.queries.toSeq.sortBy(_._1).filter(q => wanted.isEmpty || wanted(q._1)),
-      budgetSec, forcedRepeat, { l => println(l); System.out.flush() })
-    val results = record.results
+    val named = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => wanted.isEmpty || wanted(q._1))
+    val emit = { (l: String) => println(l); System.out.flush() }
+    val records = scaleReps match {
+      case None => Seq(1 -> runQueries(spark, sfDir, named, budgetSec, forcedRepeat, emit))
+      case Some(reps) =>
+        scaleQueries(spark, sfDir, reps, "/tmp", named, budgetSec, forcedRepeat, emit)
+    }
     val canaryEnd = Seq(canaryProbe(), canaryProbe()).min
     val shuffleEnd = Seq(shuffleProbe(), shuffleProbe()).min
-    val total = results.values.map(_._1).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","count":${results.size},"sf":"$sfDir",""" +
-      f""""canary":$canaryStart%.4f,"canary_end":$canaryEnd%.4f,""" +
-      f""""canary_shuffle_end":$shuffleEnd%.4f,$canaryFields,${record.failedField}}""")
+    for ((reps, record) <- records) {
+      val total = record.results.values.map(_.min).sum
+      println(s"""{"metric":"total","value":$total,"unit":"sec","count":${record.results.size},""" +
+        s""""sf":"$sfDir",""" + scaleReps.fold("")(_ => s""""reps":$reps,""") +
+        f""""canary":$canaryStart%.4f,"canary_end":$canaryEnd%.4f,""" +
+        f""""canary_shuffle_end":$shuffleEnd%.4f,$canaryFields,${record.failedField}}""")
+    }
     System.out.flush()
+    val record = records.head._2
+    val results = record.results
     // Full-record sidecar: the driver's BENCH_r{N}.json keeps only a
     // truncated stdout tail, so the cross-round regression tripwire
     // (scripts/bench_diff.py) would otherwise diff just the tail's
     // queries. Write the COMPLETE per-query map to a local file the
     // tripwire prefers (copied to bench_full_r{N}.json per round).
-    // Partial runs (named-query iteration aid) skip the write so they
+    // Partial runs (named queries or scale mode) skip the write so they
     // can't clobber a complete record; failure to write (read-only
     // cwd) must never fail the bench itself.
-    if (wanted.isEmpty)
+    if (wanted.isEmpty && scaleReps.isEmpty)
       try {
         val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
-        def m(sel: ((Double, Double, Int, Double)) => Double) =
-          results.map { case (n, v) => "\"" + n + "\":" + f"${sel(v)}%.4f" }.mkString(",")
-        val doc = "{\"queries\":{" + m(_._1) + "},\"max\":{" + m(_._2) + "}," +
-          "\"first\":{" + m(_._4) + "}," +
+        def m(sel: Timing => String) =
+          results.map { case (n, t) => "\"" + n + "\":" + sel(t) }.mkString("{", ",", "}")
+        def sec(d: Double) = f"$d%.4f"
+        val total = results.values.map(_.min).sum
+        val doc = "{\"queries\":" + m(t => sec(t.min)) + ",\"max\":" + m(t => sec(t.max)) +
+          ",\"first\":" + m(t => sec(t.first)) + ",\"jobs\":" + m(_.counts.jobs.toString) +
+          ",\"stages\":" + m(_.counts.stages.toString) +
+          ",\"tasks\":" + m(_.counts.tasks.toString) + "," +
           f"""\"total\":$total%.4f,\"count\":${results.size},\"sf\":\"$sfDir\",""" +
           f"""\"canary\":$canaryStart%.4f,\"canary_end\":$canaryEnd%.4f,""" +
           f"""\"canary_shuffle_end\":$shuffleEnd%.4f,$canaryFields,${record.failedField}}"""
@@ -281,6 +475,6 @@ object Bench {
         ()
       } catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
     spark.stop()
-    if (record.status != 0) sys.exit(record.status)
+    if (records.exists(_._2.status != 0)) sys.exit(1)
   }
 }

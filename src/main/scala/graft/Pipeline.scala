@@ -169,11 +169,6 @@ object Pipeline {
     *   contract violation fails the gate, rides the alert payload and
     *   trips failFast exactly like a built-in check. The data-derived
     *   contract becomes part of the daily gate, not a side report.
-    * @param sessionPlan a caller-measured skew plan for the session
-    *   mart's armed-path decision — the backfill-scope carry: a
-    *   multi-date replay measures its widest frame ONCE and drives
-    *   every scoped run with that plan instead of re-censusing each
-    *   date's widened frame. None (the default) measures here.
     * @param driftLogDir when set (and a contract is wired), every
     *   healthy run appends its FULL contract diff to the drift run
     *   log under the run date (idempotent per date) —
@@ -197,7 +192,6 @@ object Pipeline {
           quarantine: Boolean = false,
           martJdbc: Option[String] = None,
           suggestionsPath: Option[String] = None,
-          sessionPlan: Option[operators.Skew.SkewPlan] = None,
           autoPromoteAfter: Option[Int] = None,
           driftLogDir: Option[String] = None,
           versionLogDir: Option[String] = None,
@@ -362,9 +356,7 @@ object Pipeline {
         // census runs on — and the reported plan describes — the frame
         // the mart is actually written from; dated runs no longer pay a
         // martBase census only to discard its session frame.
-        // `sessionPlan` (the backfill-scope carry) short-circuits it.
-        val (sessions, skewPlan) =
-          Sessionize.sessionSequencesAuto(sessionBase, preplanned = sessionPlan)
+        val (sessions, skewPlan) = Sessionize.sessionSequencesAuto(sessionBase)
         val sessionMart =
           if (dates.isEmpty) withSessionDate(sessions)
           else withSessionDate(sessions)
@@ -690,31 +682,13 @@ object Pipeline {
     val plan = planBackfill(spark, sfDir, manifestDir)
     if (plan.stale.isEmpty) (plan, None)
     else {
-      // ONE census per backfill, not per date: measure the user_id
-      // skew once over the full stale scope (± the sessionize
-      // neighbor days — the widest frame any scoped run will
-      // sessionize) and carry the plan through every run. Per-date
-      // widened frames differ semantically, so without the carry the
-      // memo misses on every date of a driver that loops run() per
-      // date; arming on the widest scope is also the conservative
-      // choice (a bot hot on any stale date arms the whole replay,
-      // and the bucketed twin is output-identical by construction).
-      val neighbors = plan.stale.flatMap { d =>
-        val ld = java.sql.Date.valueOf(d).toLocalDate
-        Seq(ld.minusDays(1).toString, ld.plusDays(1).toString)
-      }
-      val scope = (plan.stale ++ neighbors).distinct.map(java.sql.Date.valueOf)
-      val scopeFrame = EventMarts.enriched(spark, sfDir)
-        .filter(col("event_date").isin(scope: _*))
-      val sessionBase = if (quarantine) Sessionize.cleanEvents(scopeFrame)
-                        else scopeFrame
-      val carried = operators.Skew.measure(sessionBase, "user_id",
-        armThreshold = Sessionize.ArmThreshold)
+      // one scoped run over every stale date: its persisted ±1-day
+      // frame is the backfill's widest sessionize scope, so the run's
+      // own census is the one census of the backfill
       val result = run(spark, sfDir, outDir, failFast = failFast,
         dates = plan.stale, checkLogDir = checkLogDir,
         quarantine = quarantine, martJdbc = martJdbc,
         suggestionsPath = suggestionsPath,
-        sessionPlan = Some(carried),
         autoPromoteAfter = autoPromoteAfter, driftLogDir = driftLogDir)
       if (result.martsWritten.nonEmpty)
         recordBuildManifest(spark, sfDir, manifestDir, plan.stale)

@@ -50,10 +50,10 @@ object Sessionize {
   require(BucketSeconds > GapSeconds, "BucketSeconds must exceed GapSeconds")
 
   /** Hot-key ratio (top user's rows over the mean) at which
-    * [[sessionSequencesAuto]] and the backfill census take the segmented
-    * base. Higher than a join's 4: the segmented path costs an extra
-    * key-dimension window and a co-partitioned join, worth paying only
-    * for a real bot or sentinel, not mild behavioral imbalance. */
+    * [[sessionSequencesAuto]] takes the segmented base. Higher than a
+    * join's 4: the segmented path costs an extra key-dimension window
+    * and a co-partitioned join, worth paying only for a real bot or
+    * sentinel, not mild behavioral imbalance. */
   val ArmThreshold = 16.0
 
   /** The columns the session queries carry through sessionize. */
@@ -168,12 +168,10 @@ object Sessionize {
   /** The census-armed choice between the two: census user_id with
     * `Skew.measure` (bounded — one map-combined count + a
     * TakeOrdered(1), memoized per frame) and take the segmented base
-    * only past [[ArmThreshold]]. `preplanned` skips the census with a
-    * plan the caller measured (the backfill-scope carry). Returns the
-    * plan so callers log what armed. */
-  def sessionSequencesAuto(e: DataFrame,
-      preplanned: Option[Skew.SkewPlan] = None): (DataFrame, Skew.SkewPlan) = {
-    val plan = preplanned.getOrElse(Skew.measure(e, "user_id", ArmThreshold))
+    * only past [[ArmThreshold]]. Returns the plan so callers log what
+    * armed. */
+  def sessionSequencesAuto(e: DataFrame): (DataFrame, Skew.SkewPlan) = {
+    val plan = Skew.measure(e, "user_id", ArmThreshold)
     (if (plan.armed) sessionSequencesBucketedFrom(e) else sessionSequencesFrom(e), plan)
   }
 

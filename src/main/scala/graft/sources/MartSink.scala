@@ -424,10 +424,6 @@ object MartSink {
       if (doVanish) vanished.write.mode(SaveMode.Append).jdbc(url, vStaging, props)
       val conn = java.sql.DriverManager.getConnection(url)
       try {
-        def stagedCount(st: java.sql.Statement, t: String): Long = {
-          val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t")
-          try { rs.next(); rs.getLong(1) } finally rs.close()
-        }
         conn.setAutoCommit(false)
         val st = conn.createStatement()
         val (nUp, nDel) =
@@ -448,12 +444,11 @@ object MartSink {
                   s"DELETE FROM $table t WHERE EXISTS (SELECT 1 FROM $vStaging s WHERE $corr)" +
                     scopePredicate.map(p => s" AND $p").getOrElse(""))
               else 0
-            val nu = stagedCount(st, staging)
-            st.executeUpdate(
+            val nu = st.executeUpdate(
               s"INSERT INTO $table (${cols.map(qid).mkString(", ")}) " +
                 s"SELECT ${cols.map(qid).mkString(", ")} FROM $staging")
             conn.commit()
-            (nu, nd.toLong)
+            (nu.toLong, nd.toLong)
           } catch {
             case e: Throwable => conn.rollback(); throw e
           } finally st.close()

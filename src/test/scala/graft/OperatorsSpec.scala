@@ -548,13 +548,6 @@ class SkewSpec extends SparkSpec {
     val (_, p4) = Sessionize.sessionSequencesAuto(hot.filter(col("event_epoch") > 0L))
     assert(Skew.censusMemo.builds - before == 2L, "a semantically new frame must re-census")
     assert(p4.armed)
-    // a caller-measured plan short-circuits the census entirely (the
-    // backfill-scope carry): a THIRD distinct frame, zero new censuses
-    val (_, p5) = Sessionize.sessionSequencesAuto(
-      hot.filter(col("event_epoch") > 1L), preplanned = Some(p1))
-    assert(Skew.censusMemo.builds - before == 2L,
-      "a preplanned call must not census")
-    assert(p5 == p1, "the carried plan is surfaced verbatim")
   }
 }
 

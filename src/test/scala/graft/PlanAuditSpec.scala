@@ -16,7 +16,9 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * whose TreeNode children are empty — a plain `.collect` on it finds
   * nothing and silently lints an empty tree. The physical plan to
   * audit is its `inputPlan` (the pre-adaptive plan; AQE only ever
-  * improves on it at runtime). */
+  * improves on it at runtime). The shuffle cap reads the AQE initial
+  * plan instead, which also holds the exchanges EnsureRequirements
+  * inserts. */
 class PlanAuditSpec extends SparkSpec {
 
   /** Queries whose broadcast nested-loop join is the intended plan:
@@ -266,15 +268,55 @@ class PlanAuditSpec extends SparkSpec {
       // (whose registered rollup tails stay in the main lint)
       "session_sequences")
 
-  /** Shuffle-exchange budget per query (pre-AQE plan). The default
-    * bound catches shuffle explosions; queries listed here carry a
-    * deliberate higher count (multi-stage aggregates over distinct
-    * user-day sets, grouping-set rollups, fused multi-check plans). */
+  /** Shuffle-exchange budget per query: distinct exchanges in the AQE
+    * initial plan ([[shuffleCount]]). The default bound catches shuffle
+    * explosions; queries listed here carry a deliberate higher count,
+    * each at its measured count at sf0.001 with the reason. */
   private val DefaultMaxShuffles = 6
   private val MaxShuffles = Map(
-    "dq_daily_trend" -> 8,
-    "session_patterns" -> 8,
-    "retention_curve" -> 7)
+    // one scan and one two-stage distinct aggregate per profiled
+    // column, unioned (6, 5 and 11 columns)
+    "dq_column_profile" -> 12,
+    "dq_profile_orders" -> 12,
+    "dq_profile_documents" -> 10,
+    "dq_profile_lineitem" -> 22,
+    // the per-column profile passes plus the fused range aggregate and
+    // the isin distinct
+    "dq_suggested_checks" -> 15,
+    "dq_suggested_orders" -> 17,
+    "dq_suggested_documents" -> 17,
+    "dq_suggested_lineitem" -> 27,
+    // the suggestions built twice, pinned and fresh, then diffed
+    "dq_contract_drift" -> 32,
+    // the segmented sessionize derives its local (user_id, bucket)
+    // windows twice, once per consumer
+    "markov_next_event_bucketed" -> 7,
+    "session_concurrency_bucketed" -> 7,
+    "session_quality_gate_bucketed" -> 7,
+    "session_transitions_bucketed" -> 7,
+    // one user rollup, then day-grain cumulative windows per arm
+    "ab_sequential" -> 7,
+    // exact and truncated-dimension top-k windows per query over
+    // numQueries·k·|dims|-row pools
+    "embedding_recall_vs_dim" -> 7,
+    // one user rollup, then two span-bounded histograms exploded into
+    // their offsets and joined back
+    "retention_survival" -> 10,
+    // two RFM scorings (one customer shuffle each, percentile
+    // thresholds) and a customer-grain full-outer join
+    "rfm_transitions" -> 9,
+    // one hourly fact rollup, then hour-of-week and day-grain windows
+    // over it
+    "traffic_forecast" -> 8,
+    // the forecast's fact rollup twice (train and holdout legs) plus
+    // its day-grain windows
+    "forecast_backtest" -> 11,
+    // the full (gram, doc) stage with its three consumers, audited
+    // uncheckpointed
+    "dedup_substring" -> 7,
+    // the coview edge build plus one contraction round (two min
+    // rollups, two equi-joins)
+    "graph_components" -> 9)
 
   private def physical(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan match {
@@ -290,11 +332,18 @@ class PlanAuditSpec extends SparkSpec {
       case p => p
     }
 
+  /** Distinct shuffle exchanges in the AQE initial plan. The ones
+    * EnsureRequirements inserts are not in `inputPlan`, and AQE's stage
+    * cache reuses an exchange whose canonical plan is equal, so the
+    * distinct canonical forms are the shuffles that run. */
+  private def shuffleCount(df: DataFrame): Int =
+    initialPlan(df).collect { case e: ShuffleExchangeExec => e.canonicalized }.distinct.size
+
   private def offendersIn(name: String, df: DataFrame): Seq[String] = {
     val plan = physical(df)
     val cartesian = plan.collect { case c: CartesianProductExec => c }
     val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }.size
+    val shuffles = shuffleCount(df)
     // partition-less windows single-partition their input; each one in
     // a registered plan must be an AUDITED bounded post-aggregation
     // frame (top-k-limited / day-grain / ≤k rows). The runtime WARN for
@@ -604,5 +653,14 @@ class PlanAuditSpec extends SparkSpec {
     val bf = operators.Similarity.bruteForceTopK(spark, Sf)
     assert(physical(bf).collect { case j: BroadcastNestedLoopJoinExec => j }.nonEmpty,
       "expected the brute-force scorer's BNLJ to be visible to the lint")
+    // the shuffle cap reads the initial plan: a grouped count's
+    // exchange is inserted by EnsureRequirements, so inputPlan lacks
+    // it, and a planted extra repartition raises the count by one
+    import org.apache.spark.sql.functions.col
+    val grouped = Tables.events(spark, Sf).groupBy("user_id").count()
+    assert(physical(grouped).collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"inputPlan is expected to hold no inserted exchange:\n${physical(grouped)}")
+    assert(shuffleCount(grouped) == 1, initialPlan(grouped).toString)
+    assert(shuffleCount(grouped.repartition(7, col("count"))) == 2)
   }
 }
