@@ -47,13 +47,19 @@ records ran over the same data ("sf"), a counter delta is reported as
 COUNTERS and is a code change (exit 1 whatever the canaries say), and
 a wall-time flag on a query whose counters are unchanged is advisory
 only. Records without the fields are compared on wall time alone.
+A query declared in INEXACT (its counters differ between two healthy
+same-code runs, for the reason given there) prints a counter delta as
+an INEXACT advisory line instead, and its wall time is judged like a
+query without counters.
 
 --smoke runs a planted-pair self-test of the canary logic (no Spark):
 a >2x mover under mismatched canaries must downgrade to exit 0, the
 same mover under matching canaries must flag with exit 1, a
 degrading-host record must print its warning, and an error row must
 class REGRESSED; a counter delta must exit 1 and a wall-only delta
-with unchanged counters must stay advisory. Exit 0 iff all hold.
+with unchanged counters must stay advisory; a counter delta on an
+INEXACT query must stay advisory while its wall-time flag still
+exits 1. Exit 0 iff all hold.
 """
 import json
 import os
@@ -66,6 +72,21 @@ CANARY_FACTOR = 2.0
 # Fallback quiet band for records predating r14 (which emit their own
 # "canary_band" field — the record's band always wins this default).
 DEFAULT_BAND = (0.21, 0.27)
+
+# Queries whose jobs/stages/tasks differ between two healthy records of
+# the same code over the same data, each with its reason. Two full
+# graft.Bench records at sf0.001 agreed on every other query.
+_SEGMENTED_TWICE = ("derives its segmented session base twice (ROADMAP item 9): "
+                    "AQE may reuse either of two identical concurrent shuffle stages")
+INEXACT = {
+    "graph_kcore": "iterative peeling: the number of eager rounds it runs varies",
+    "markov_next_event_bucketed": _SEGMENTED_TWICE,
+    "session_concurrency_bucketed": _SEGMENTED_TWICE,
+    "session_funnel_bucketed": _SEGMENTED_TWICE,
+    "session_patterns_bucketed": _SEGMENTED_TWICE,
+    "session_surprise_bucketed": _SEGMENTED_TWICE,
+    "session_transitions_bucketed": _SEGMENTED_TWICE,
+}
 
 
 def full_record(path):
@@ -318,17 +339,23 @@ def compare(old_path, new_path, flag, adj_dir, out=print):
                if adj_dir else "; rerun on a quiet host or use --adjudicate"))
     (old_c, old_sf), (new_c, new_sf) = counters_of(old_path), counters_of(new_path)
     counted = set(old_c) & set(new_c) if old_sf == new_sf else set()
-    changed = sorted(q for q in counted if old_c[q] != new_c[q])
-    for q in changed:
-        out(f"COUNTERS {q}: jobs/stages/tasks "
-            f"{'/'.join(map(str, old_c[q]))} -> {'/'.join(map(str, new_c[q]))} "
-            "on the same data: a code change")
+    moved = sorted(q for q in counted if old_c[q] != new_c[q])
+    changed = [q for q in moved if q not in INEXACT]
+    for q in moved:
+        delta = (f"jobs/stages/tasks {'/'.join(map(str, old_c[q]))} -> "
+                 f"{'/'.join(map(str, new_c[q]))}")
+        if q in INEXACT:
+            out(f"INEXACT  {q}: {delta}; advisory: {INEXACT[q]}")
+        else:
+            out(f"COUNTERS {q}: {delta} on the same data: a code change")
+    # the queries whose unchanged counters vouch for the code
+    exact = counted - set(moved) - set(INEXACT)
     flagged = []
     for q in sorted(set(old) & set(new)):
         o, n = old[q], new[q]
         # ignore sub-100ms noise: a 0.02->0.05s "regression" is jitter
         if n > flag * o and n - o > 0.1:
-            if q in counted and q not in changed:
+            if q in exact:
                 out(f"SLOWER  {q}: {o:.2f}s -> {n:.2f}s  (x{n / o:.1f}; advisory: "
                     "jobs/stages/tasks unchanged)")
                 continue
@@ -544,12 +571,39 @@ def smoke():
         assert compare(c_old, other_sf, 2.0, None, out=lines.append) == 0, lines
         assert counters_of(base) == ({}, "planted")
         assert counters_of(legacy) == ({}, None)
-    print("canary smoke: 10/10 planted cases OK (mismatch downgrades, "
+        # a declared inexact query: its counter delta is advisory, but
+        # its wall-time flag counts as for a query without counters
+        def kcore(path, sec, jobs):
+            json.dump({"queries": {"graph_kcore": sec, "q2": 0.5},
+                       "jobs": {"graph_kcore": jobs, "q2": 1},
+                       "stages": {"graph_kcore": jobs, "q2": 1},
+                       "tasks": {"graph_kcore": jobs + 3, "q2": 4},
+                       "total": sec + 0.5, "count": 2, "sf": "planted",
+                       "canary": 0.5}, open(path, "w"))
+        k_old = os.path.join(d, "k_old.json")
+        k_jobs = os.path.join(d, "k_jobs.json")
+        k_slow = os.path.join(d, "k_slow.json")
+        kcore(k_old, 1.0, 28)
+        kcore(k_jobs, 1.0, 26)
+        kcore(k_slow, 2.5, 26)
+        lines = []
+        rc_inexact = compare(k_old, k_jobs, 2.0, None, out=lines.append)
+        assert rc_inexact == 0, f"an inexact counter delta must stay advisory, got {rc_inexact}"
+        assert any(l.startswith("INEXACT  graph_kcore: jobs/stages/tasks 28/28/31 -> 26/26/29")
+                   for l in lines), lines
+        assert not any(l.startswith("COUNTERS") for l in lines), lines
+        lines = []
+        rc_kslow = compare(k_old, k_slow, 2.0, None, out=lines.append)
+        assert rc_kslow == 1, f"an inexact query's wall flag must count, got {rc_kslow}"
+        assert any(l.startswith("SLOWER  graph_kcore") and "advisory" not in l
+                   for l in lines), lines
+    print("canary smoke: 11/11 planted cases OK (mismatch downgrades, "
           "quiet flags, legacy flags, record band overrides default, "
           "shuffle probe warns from its record band, "
           "uniform inflation downgrades, concentrated regression flags, "
           "error row regresses, counter delta is a code change, "
-          "wall-only delta with unchanged counters is advisory)")
+          "wall-only delta with unchanged counters is advisory, "
+          "inexact counter delta is advisory but its wall flag counts)")
     return 0
 
 

@@ -318,24 +318,31 @@ object Pipeline {
       // rows with a null ts have no run date to log under (they would
       // land in a __HIVE_DEFAULT_PARTITION__ that trendFromLog counts
       // as an extra "day"); they stay visible through the corpus-wide
-      // null/timestamp checks in the gate summary above
-      lazy val logFrame = Quality.perDateChecks(e)
-        .filter(col("event_date").isNotNull)
-        .withColumnRenamed("event_date", "run_date")
-      checkLogDir.foreach { dir =>
-        MartSink.writePartitioned(logFrame, dir, Seq("run_date"))
-      }
-      checkLogJdbc.foreach { case (url, table) =>
-        // the DB leg of the log (the reference's quality_check_log in
-        // PostgreSQL): one staged-atomic upsert scoped to the run's
-        // dates — rerun-idempotent exactly like the parquet partition
-        // overwrite above
-        val ds = logFrame.select("run_date").distinct()
-          .collect().map(_.getDate(0).toString).sorted
-        if (ds.nonEmpty)
-          MartSink.writeJdbc(logFrame, url, table,
-            deletePredicate =
-              Some(ds.map(d => s"'$d'").mkString("\"run_date\" IN (", ", ", ")")))
+      // null/timestamp checks in the gate summary above. The per-date
+      // aggregate is materialized once and feeds both logs and the
+      // date scope of the DB leg.
+      if (checkLogDir.nonEmpty || checkLogJdbc.nonEmpty) {
+        val logFrame = Quality.perDateChecks(e)
+          .filter(col("event_date").isNotNull)
+          .withColumnRenamed("event_date", "run_date")
+          .localCheckpoint()
+        try {
+          checkLogDir.foreach { dir =>
+            MartSink.writePartitioned(logFrame, dir, Seq("run_date"))
+          }
+          checkLogJdbc.foreach { case (url, table) =>
+            // the DB leg of the log (the reference's quality_check_log
+            // in PostgreSQL): one staged-atomic upsert scoped to the
+            // run's dates — rerun-idempotent exactly like the parquet
+            // partition overwrite above
+            val ds = logFrame.select("run_date").distinct()
+              .collect().map(_.getDate(0).toString).sorted
+            if (ds.nonEmpty)
+              MartSink.writeJdbc(logFrame, url, table,
+                deletePredicate =
+                  Some(ds.map(d => s"'$d'").mkString("\"run_date\" IN (", ", ", ")")))
+          }
+        } finally Caches.unpersistCheckpointed(logFrame)
       }
       val alert = Option.when(failed.nonEmpty)(
         Reporting.qualityAlertPayload(runDate.getOrElse("unknown"), checks))

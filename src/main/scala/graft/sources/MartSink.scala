@@ -237,15 +237,13 @@ object MartSink {
     *
     * Usage: `stream.writeStream.foreachBatch(MartSink.jdbcEpochSink(
     * url, "mart_live")).start()`. */
-  def jdbcEpochSink(url: String, table: String,
-                    batchSize: Int = 10000): (DataFrame, Long) => Unit = {
+  def jdbcEpochSink(url: String, table: String): (DataFrame, Long) => Unit = {
     val epochCol = JdbcDialects.get(url).quoteIdentifier("_epoch")
     (batch: DataFrame, epochId: Long) =>
       writeJdbc(
         batch.withColumn("_epoch", org.apache.spark.sql.functions.lit(epochId)),
         url, table,
-        deletePredicate = Some(s"$epochCol = $epochId"),
-        batchSize = batchSize)
+        deletePredicate = Some(s"$epochCol = $epochId"))
   }
 
   /** One parquet output of a streaming micro-batch: its rows are
@@ -306,11 +304,19 @@ object MartSink {
       shape: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
     batchesSink(stream, checkpointDir, Seq(BatchOutput(dir, partitionCols, shape)), outputMode)
 
-  /** What a `mergeJdbc` run actually moved: `upserted` rows staged and
-    * swapped in (new + changed), `deleted` vanished-key rows removed,
+  /** What a `mergeJdbc` run actually moved: `upserted` rows inserted
+    * by the swap (new + changed), `deleted` vanished-key rows removed,
     * `total` rows in the incoming frame. `upserted == 0` means the
     * replay cost zero DB writes beyond the current-state read. */
   final case class MergeStats(upserted: Long, deleted: Long, total: Long)
+
+  /** Rows per JDBC batch insert of every staging write. */
+  private val BatchSize = 10000
+  /** Parallel range scans of a merge's current-state read-back. */
+  private val ReadPartitions = 8
+  /** The staging column that marks a merge's vanished-key rows (1)
+    * apart from its upsert rows (0). */
+  private val VanishedTag = "__vanished"
 
   /** Delta-aware incremental MERGE — the upsert sibling of
     * `writeJdbc`. `writeJdbc` replays a whole date scope through the
@@ -323,19 +329,26 @@ object MartSink {
     *      the rows `scopePredicate` selects — the warehouse mart is
     *      orders of magnitude smaller than the fact table that built
     *      `df`), cast to `df`'s exact schema so JDBC type drift can't
-    *      fake differences;
+    *      fake differences. The read runs as parallel range scans on
+    *      the leading key column (boundaries sampled from `df`, which
+    *      shares the key domain) instead of one connection funneling
+    *      the whole scope;
     *   2. `upserts = df EXCEPT ALL current` — only new or changed rows
     *      survive (a hash set-difference, one shuffle on the full row);
     *      `vanished = current keys EXCEPT df keys` — rows the rebuild
     *      no longer produces;
-    *   3. stage ONLY the upsert rows (the wire now carries the delta,
-    *      not the date), then ONE driver transaction: key-correlated
-    *      DELETE of the upserted keys + (optionally) the vanished
-    *      keys, INSERT from staging, commit — readers see the old or
-    *      the new mart, never a hole, exactly like `writeJdbc`.
+    *   3. ONE staging table holds both, told apart by a 0/1
+    *      `__vanished` tag: the upsert rows (tag 0) and, with
+    *      `deleteVanished`, the vanished keys (tag 1, null payload).
+    *      Then the staged swap every warehouse write shares: one
+    *      transaction runs a key-correlated DELETE of the upserted
+    *      keys, one of the vanished keys, and INSERTs the tag-0 rows —
+    *      readers see the old or the new mart, never a hole, exactly
+    *      like `writeJdbc`.
     *
-    * Rerunning the same build is a no-op upsert (0 rows staged) — the
-    * idempotency `writeJdbc` gets from delete+insert, this gets for
+    * A first merge into an absent table is a plain `writeJdbc` load.
+    * Rerunning the same build is a no-op upsert (0 rows inserted) —
+    * the idempotency `writeJdbc` gets from delete+insert, this gets for
     * free from the empty delta. Determinism caveat: a mart whose
     * float columns aren't bit-reproducible would re-ship rows that
     * only differ in ulps (never corrupts — the swap still lands the
@@ -359,21 +372,12 @@ object MartSink {
     *                       drop prior dates).
     * @param deleteVanished also delete in-scope keys absent from `df`
     *                       (full-scope rebuilds); leave false for
-    *                       partial/append-style builds.
-    * @param readPartitions fan-out of the current-state read-back:
-    *                       the target scope is ranged on the leading
-    *                       key column (boundaries sampled from `df`,
-    *                       which shares the key domain) so the JDBC
-    *                       read runs as N parallel partition scans
-    *                       instead of one connection funneling the
-    *                       whole scope — the leg that would serialize
-    *                       an unscoped merge of a year-deep mart. */
+    *                       partial/append-style builds. */
   def mergeJdbc(df: DataFrame, url: String, table: String, keyCols: Seq[String],
                 scopePredicate: Option[String] = None,
-                deleteVanished: Boolean = false,
-                batchSize: Int = 10000,
-                readPartitions: Int = 8): MergeStats = {
+                deleteVanished: Boolean = false): MergeStats = {
     require(keyCols.nonEmpty, "mergeJdbc needs at least one key column")
+    import org.apache.spark.sql.functions.{col, lit}
     val spark = df.sparkSession
     val dialect = JdbcDialects.get(url)
     def qid(s: String) = dialect.quoteIdentifier(s)
@@ -384,11 +388,10 @@ object MartSink {
     if (!exists) {
       // first load: everything is the delta, and the swap's insert
       // count is the frame's row count — no separate count job
-      val n = writeJdbc(df, url, table, deletePredicate = None, batchSize = batchSize)
+      val n = writeJdbc(df, url, table)
       return MergeStats(upserted = n, deleted = 0L, total = n)
     }
-    val props = new java.util.Properties()
-    val cols = df.schema.fieldNames
+    val cols = df.schema.fieldNames.toSeq
     val select = s"SELECT ${cols.map(qid).mkString(", ")} FROM $table" +
       scopePredicate.map(p => s" WHERE $p").getOrElse("")
     // distribute the read-back: range the scope on the leading key
@@ -397,71 +400,43 @@ object MartSink {
     // sampled range, the IS NULL arm covers null keys). Falls back to
     // the single-query read when df has too few distinct keys to
     // range on — at that size one connection IS the right plan.
-    val preds = rangePredicates(df, keyCols.head, url, readPartitions)
+    val preds = rangePredicates(df, keyCols.head, url, ReadPartitions)
       .map(p => scopePredicate.map(s => s"($p) AND ($s)").getOrElse(p))
     val raw =
       if (preds.isEmpty)
         spark.read.format("jdbc")
           .option("url", url).option("query", select).load()
-      else spark.read.jdbc(url, table, preds.toArray, props)
+      else spark.read.jdbc(url, table, preds.toArray, new java.util.Properties())
     val current = raw
       // JDBC round-trip type drift (VARCHAR/CLOB, DECIMAL scale) must
       // not fake row differences — compare in df's exact types
-      .select(df.schema.fields.map(f => org.apache.spark.sql.functions
-        .col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+      .select(df.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val total = df.count()
-      val upserts = df.exceptAll(current)
+      val upserts = df.exceptAll(current).withColumn(VanishedTag, lit(0))
       val keyed = (d: DataFrame) => d.select(keyCols.map(d.col): _*)
-      val vanished =
-        if (deleteVanished) keyed(current).except(keyed(df)) else spark.emptyDataFrame
-      val staging = table + "_mrg_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val vStaging = staging + "_del"
-      props.setProperty("batchsize", batchSize.toString)
-      upserts.write.mode(SaveMode.Append).jdbc(url, staging, props)
-      val doVanish = deleteVanished && !vanished.isEmpty
-      if (doVanish) vanished.write.mode(SaveMode.Append).jdbc(url, vStaging, props)
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
-        conn.setAutoCommit(false)
-        val st = conn.createStatement()
-        val (nUp, nDel) =
-          try {
-            val corr = keyCols.map(k => s"s.${qid(k)} = t.${qid(k)}").mkString(" AND ")
-            // key-correlated delete of rows being replaced, then the
-            // vanished keys, then the insert — one atomic swap. BOTH
-            // deletes stay inside the scope: without the AND, a key
-            // that restarts per scope (session_idx per date) would
-            // make a scoped run delete other scopes' colliding rows
-            // and never reinsert them — permanent warehouse loss.
-            st.executeUpdate(
-              s"DELETE FROM $table t WHERE EXISTS (SELECT 1 FROM $staging s WHERE $corr)" +
-                scopePredicate.map(p => s" AND $p").getOrElse(""))
-            val nd =
-              if (doVanish)
-                st.executeUpdate(
-                  s"DELETE FROM $table t WHERE EXISTS (SELECT 1 FROM $vStaging s WHERE $corr)" +
-                    scopePredicate.map(p => s" AND $p").getOrElse(""))
-              else 0
-            val nu = st.executeUpdate(
-              s"INSERT INTO $table (${cols.map(qid).mkString(", ")}) " +
-                s"SELECT ${cols.map(qid).mkString(", ")} FROM $staging")
-            conn.commit()
-            (nu.toLong, nd.toLong)
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally st.close()
-        try {
-          conn.setAutoCommit(true)
-          val drop = conn.createStatement()
-          try {
-            drop.executeUpdate(s"DROP TABLE $staging")
-            if (doVanish) drop.executeUpdate(s"DROP TABLE $vStaging")
-          } finally drop.close()
-        } catch { case _: java.sql.SQLException => () }
-        MergeStats(upserted = nUp, deleted = nDel, total = total)
-      } finally conn.close()
+      val staged =
+        if (!deleteVanished) upserts
+        else upserts.unionByName(
+          keyed(current).except(keyed(df)).withColumn(VanishedTag, lit(1)),
+          allowMissingColumns = true)
+      val corr = keyCols.map(k => s"s.${qid(k)} = t.${qid(k)}").mkString(" AND ")
+      // key-correlated delete of the rows being replaced (tag 0), then
+      // of the vanished keys (tag 1). BOTH stay inside the scope:
+      // without the AND, a key that restarts per scope (session_idx
+      // per date) would make a scoped run delete other scopes' colliding
+      // rows and never reinsert them — permanent warehouse loss.
+      def delete(staging: String, tag: Int) =
+        s"DELETE FROM $table t WHERE EXISTS (SELECT 1 FROM $staging s " +
+          s"WHERE s.${qid(VanishedTag)} = $tag AND $corr)" +
+          scopePredicate.map(p => s" AND $p").getOrElse("")
+      val (nUp, nDel) = swap(staged, url, table, cols, createIfAbsent = false,
+          keep = Some(s"${qid(VanishedTag)} = 0")) { staging =>
+        delete(staging, 0) +: Option.when(deleteVanished)(delete(staging, 1)).toSeq
+      }
+      // the first DELETE only clears the rows the INSERT replaces
+      MergeStats(upserted = nUp, deleted = nDel.drop(1).sum, total = total)
     } finally {
       current.unpersist()
       ()
@@ -483,22 +458,6 @@ object MartSink {
     finally rs.close()
   }
 
-  /** Disjoint, complete range predicates over `keyCol` for a
-    * partitioned JDBC read of the merge target. Boundaries are
-    * sampled from the REBUILD frame (`df` shares the target's key
-    * domain), so this works for any orderable key type — string,
-    * date, numeric — without a dialect hash function. The boundary
-    * job is fixed-state: a deterministic hash-ordered TakeOrdered
-    * sample of the distinct keys (per-partition top-N + driver
-    * merge — NO single-partition global sort, the RangePartitioner
-    * shape), sorted on the driver to pick equi-spaced cut points.
-    * Cut exactness is irrelevant: the predicates only need to be
-    * disjoint and complete, which driver-side dedup plus the
-    * open-ended first/last arms (and the NULL arm) already
-    * guarantee — target keys outside the sampled range (vanished
-    * keys) are still read. Literals render through the dialect's own
-    * `compileValue`. Empty when there are too few distinct keys to
-    * be worth ranging. */
   /** The boundary job's frame, exposed for the plan lint: a
     * hash-ordered TakeOrderedAndProject over the distinct keys —
     * per-partition top-N merged on the driver; ~64 sample keys per
@@ -515,9 +474,24 @@ object MartSink {
       .select(col(keyCol))
   }
 
+  /** Disjoint, complete range predicates over `keyCol` for a
+    * partitioned JDBC read of the merge target. Boundaries are
+    * sampled from the REBUILD frame (`df` shares the target's key
+    * domain), so this works for any orderable key type — string,
+    * date, numeric — without a dialect hash function. The boundary
+    * job is fixed-state: a deterministic hash-ordered TakeOrdered
+    * sample of the distinct keys (per-partition top-N + driver
+    * merge — NO single-partition global sort, the RangePartitioner
+    * shape), sorted on the driver to pick equi-spaced cut points.
+    * Cut exactness is irrelevant: the predicates only need to be
+    * disjoint and complete, which driver-side dedup plus the
+    * open-ended first/last arms (and the NULL arm) already
+    * guarantee — target keys outside the sampled range (vanished
+    * keys) are still read. Literals render through the dialect's own
+    * `compileValue`. Empty when there are too few distinct keys to
+    * be worth ranging. */
   private[graft] def rangePredicates(df: DataFrame, keyCol: String, url: String,
                                      parts: Int): Seq[String] = {
-    import org.apache.spark.sql.functions._
     if (parts <= 1) return Nil
     val dialect = JdbcDialects.get(url)
     val k = dialect.quoteIdentifier(keyCol)
@@ -540,21 +514,10 @@ object MartSink {
     * of `writePartitioned` (the reference loads its marts into
     * PostgreSQL with per-date DELETE + INSERT:
     * dags/event_pipeline_dag.py load task, docker/init-db.sh,
-    * sql/create_tables.sql).
-    *
-    * A naive driver-side DELETE followed by executor-side appends is
-    * retry-safe but not atomic: readers see the hole between the two,
-    * and a mid-insert failure leaves a partial date visible. Instead:
-    *
-    *   1. executors append `df` into a fresh STAGING table — the
-    *      distributed leg, full cluster insert bandwidth, each task
-    *      its own batched connection;
-    *   2. ONE driver transaction runs `DELETE FROM target WHERE
-    *      deletePredicate` + `INSERT INTO target SELECT … FROM
-    *      staging` and commits — readers see the old date or the new
-    *      date, never the hole or a prefix;
-    *   3. staging is dropped (best-effort — an orphan staging table
-    *      is garbage, not corruption).
+    * sql/create_tables.sql). It is the staged swap with one delete,
+    * `DELETE FROM target WHERE deletePredicate`: readers see the old
+    * date or the new date, never the hole between a delete and its
+    * appends or a prefix of a failed insert.
     *
     * Re-running the same load is idempotent: the predicate delete
     * clears the previous attempt inside the same transaction. With
@@ -563,46 +526,58 @@ object MartSink {
     * table's dialect-mapped schema if absent. Returns the rows the swap
     * inserted, i.e. the row count of `df`. */
   def writeJdbc(df: DataFrame, url: String, table: String,
-                deletePredicate: Option[String] = None,
-                batchSize: Int = 10000): Long = {
-    val dialect = JdbcDialects.get(url)
+                deletePredicate: Option[String] = None): Long =
+    swap(df, url, table, df.schema.fieldNames.toSeq, createIfAbsent = true)(_ =>
+      deletePredicate.map(p => s"DELETE FROM $table WHERE $p").toSeq)._1
+
+  /** The one staged swap behind every warehouse write:
+    *
+    *   1. executors append `rows` into a fresh staging table — the
+    *      distributed leg, each task its own batched connection (Spark
+    *      creates the table with the dialect's type mapping);
+    *   2. ONE driver transaction creates the target from staging's
+    *      `cols` if `createIfAbsent` and it is absent, runs the
+    *      `deletes` built for the staging name, and inserts the staged
+    *      rows that match `keep` (all of them when None) into `cols`;
+    *   3. commit — on any failure, roll back and rethrow;
+    *   4. drop staging whatever happened (an orphan staging table is
+    *      garbage, not corruption, so a failed drop is ignored).
+    *
+    * Returns the INSERT's row count and each DELETE's. */
+  private def swap(rows: DataFrame, url: String, table: String, cols: Seq[String],
+      createIfAbsent: Boolean, keep: Option[String] = None)(
+      deletes: String => Seq[String]): (Long, Seq[Long]) = {
     // Spark's JDBC writer emits the TABLE name raw (the DB folds its
     // case) but quotes COLUMN names exact-case — mirror both here or
     // the staging identifiers won't resolve
-    def qid(s: String) = dialect.quoteIdentifier(s)
+    val q = cols.map(JdbcDialects.get(url).quoteIdentifier).mkString(", ")
     val staging = table + "_stg_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val props = new java.util.Properties()
-    props.setProperty("batchsize", batchSize.toString)
-    // leg 1: distributed append into staging (Spark creates it with
-    // the dialect's type mapping)
-    df.write.mode(SaveMode.Append).jdbc(url, staging, props)
     val conn = java.sql.DriverManager.getConnection(url)
     try {
-      val cols = df.schema.fieldNames.map(qid).mkString(", ")
-      val exists = tableExists(conn, table)
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      val inserted = try {
-        if (!exists)
-          // empty clone of staging → target inherits the exact
-          // dialect-mapped column types Spark just created
-          st.executeUpdate(
-            s"CREATE TABLE $table AS SELECT $cols FROM $staging WITH NO DATA")
-        // leg 2: the atomic swap — delete + insert in one transaction
-        deletePredicate.foreach(p => st.executeUpdate(s"DELETE FROM $table WHERE $p"))
-        val n = st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
-        conn.commit()
-        n.toLong
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-      // leg 3: best-effort cleanup
       try {
-        conn.setAutoCommit(true)
-        val drop = conn.createStatement()
-        try drop.executeUpdate(s"DROP TABLE $staging") finally drop.close()
-      } catch { case _: java.sql.SQLException => () }
-      inserted
+        val props = new java.util.Properties()
+        props.setProperty("batchsize", BatchSize.toString)
+        rows.write.mode(SaveMode.Append).jdbc(url, staging, props)
+        conn.setAutoCommit(false)
+        val st = conn.createStatement()
+        try {
+          if (createIfAbsent && !tableExists(conn, table))
+            st.executeUpdate(s"CREATE TABLE $table AS SELECT $q FROM $staging WITH NO DATA")
+          val deleted = deletes(staging).map(st.executeUpdate(_).toLong)
+          val inserted = st.executeUpdate(s"INSERT INTO $table ($q) SELECT $q FROM $staging" +
+            keep.map(k => s" WHERE $k").getOrElse(""))
+          conn.commit()
+          (inserted.toLong, deleted)
+        } catch {
+          case e: Throwable => conn.rollback(); throw e
+        } finally st.close()
+      } finally {
+        try {
+          conn.setAutoCommit(true)
+          val drop = conn.createStatement()
+          try drop.executeUpdate(s"DROP TABLE $staging") finally drop.close()
+        } catch { case _: java.sql.SQLException => () }
+      }
     } finally conn.close()
   }
 

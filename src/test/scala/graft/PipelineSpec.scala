@@ -289,7 +289,7 @@ class SourcesSpec extends SparkSpec {
       val rs = conn.getMetaData.getTables(null, null, null, Array("TABLE"))
       val names = Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
       rs.close()
-      assert(!names.exists(_.toLowerCase.contains("_mrg_")), s"staging leak: $names")
+      assert(!names.exists(_.toLowerCase.contains("_stg_")), s"staging leak: $names")
     } finally conn.close()
   }
 
@@ -378,6 +378,64 @@ class SourcesSpec extends SparkSpec {
     val after = spark.read.jdbc(url, "mart_pr", new java.util.Properties())
     assert(after.count() == 189)
     assert(after.filter(col("user_id") === 100L).collect().head.getAs[Long]("n") == 999L)
+  }
+
+  /** The user tables of a Derby database, upper-cased as Derby folds them. */
+  private def tablesIn(url: String): Seq[String] = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, null, Array("TABLE"))
+      try Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList.sorted
+      finally rs.close()
+    } finally conn.close()
+  }
+
+  /** A one-date (user_id, n) mart keyed on (user_id, event_date). */
+  private def dayMart(rows: (Long, Long)*) = {
+    import spark.implicits._
+    rows.toDF("user_id", "n").withColumn("event_date", lit(java.sql.Date.valueOf("2024-01-01")))
+  }
+
+  test("a failed merge swap rolls back its deletes and drops its staging table") {
+    import spark.implicits._
+    val url = s"jdbc:derby:memory:graft_failed_swap${System.nanoTime};create=true"
+    val keys = Seq("user_id", "event_date")
+    assert(MartSink.mergeJdbc(dayMart((1L, 5L), (2L, 7L)), url, "mart_ck", keys) ==
+      MartSink.MergeStats(2, 0, 2))
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.executeUpdate("ALTER TABLE mart_ck ADD CONSTRAINT n_small CHECK (\"n\" < 100)")
+      finally st.close()
+    } finally conn.close()
+    // the changed row's DELETE succeeds, its INSERT violates the check
+    intercept[java.sql.SQLException] {
+      MartSink.mergeJdbc(dayMart((1L, 5L), (2L, 999L)), url, "mart_ck", keys,
+        scopePredicate = Some("\"event_date\" = DATE('2024-01-01')"), deleteVanished = true)
+    }
+    val back = spark.read.jdbc(url, "mart_ck", new java.util.Properties())
+      .select("user_id", "n").as[(Long, Long)].collect().sorted.toSeq
+    assert(back == Seq((1L, 5L), (2L, 7L)), "the rolled-back DELETE must leave the old row")
+    assert(tablesIn(url) == Seq("MART_CK"), "staging leak")
+  }
+
+  test("a rerun merge with vanished keys stages its rows in one JDBC write") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.SaveIntoDataSourceCommand
+    val url = s"jdbc:derby:memory:graft_one_stage${System.nanoTime};create=true"
+    val keys = Seq("user_id", "event_date")
+    MartSink.mergeJdbc(dayMart((1L, 5L), (2L, 7L), (3L, 2L)), url, "mart_once", keys)
+    // user 2 changes, user 3 vanishes
+    val (stats, plans) = SparkSpec.queriesRun(spark) {
+      MartSink.mergeJdbc(dayMart((1L, 5L), (2L, 9L)), url, "mart_once", keys,
+        scopePredicate = Some("\"event_date\" = DATE('2024-01-01')"), deleteVanished = true)
+    }
+    assert(stats == MartSink.MergeStats(1, 1, 2))
+    assert(plans.count(_.isInstanceOf[SaveIntoDataSourceCommand]) == 1,
+      s"staging writes: ${plans.map(_.nodeName)}")
+    assert(spark.read.jdbc(url, "mart_once", new java.util.Properties())
+      .select("user_id", "n").as[(Long, Long)].collect().sorted.toSeq == Seq((1L, 5L), (2L, 9L)))
+    assert(tablesIn(url) == Seq("MART_ONCE"), "staging leak")
   }
 
   test("DB-backed check log: per-date idempotent upsert, trend matches the parquet path") {
@@ -1504,6 +1562,40 @@ class PipelineSpec extends SparkSpec {
     assert(days.map(_.date) == dates.sorted)
     assert(days.forall(_.checks.length == 7))
     assert(Reporting.qualityDashboard(days).contains(dates.head))
+  }
+
+  test("the check-log aggregate runs once for both logs and their date scope") {
+    val db = Files.createTempDirectory("graft_derby_once").resolve("oncedb")
+    val url = s"jdbc:derby:$db;create=true"
+    val log = Files.createTempDirectory("graft_qlog_once").toString
+    val out = Files.createTempDirectory("graft_qlog_once_marts").toString
+    val d = twoDates().head
+    val (_, plans) = SparkSpec.queriesRun(spark) {
+      Pipeline.run(spark, Sf, out, dates = Seq(d), checkLogDir = Some(log),
+        checkLogJdbc = Some((url, "quality_check_log")))
+    }
+    // the per-date aggregate is the one plan that aggregates the
+    // consistency check AND yields a run_date column
+    val aggregates = plans.count { p =>
+      val nodes = SparkSpec.planNodes(p)
+      nodes.exists {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+          a.output.exists(_.name == "cons_failed")
+        case _ => false
+      } && nodes.exists(_.output.exists(_.name == "run_date"))
+    }
+    assert(aggregates == 1, s"the check-log aggregate ran $aggregates times")
+    val cols = Seq("run_date", "check_name", "check_type", "total_records", "failed_records",
+      "pass_rate", "status")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_(1))
+    val expected = rows(operators.Quality.perDateChecks(operators.EventMarts.enriched(spark, Sf)
+        .filter(col("event_date") === java.sql.Date.valueOf(d)))
+      .withColumnRenamed("event_date", "run_date"))
+    assert(expected.length == 7)
+    spark.catalog.refreshByPath(log)
+    assert(rows(spark.read.parquet(log)) == expected)
+    assert(rows(spark.read.jdbc(url, "quality_check_log", new java.util.Properties())) == expected)
   }
 
   test("dq_daily_trend covers all 7 checks with sane rates") {
